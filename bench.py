@@ -282,7 +282,7 @@ def main() -> None:
         )
         with open(side_path, "w") as fh:
             json.dump(side, fh, indent=1)
-    except OSError:
+    except (OSError, TypeError, ValueError):
         pass  # attribution is best-effort; never break the bench line
     # Key order matters: the driver's capture keeps the TAIL of the
     # line when it overflows its window (BENCH_r09 lost the first 13

@@ -9,14 +9,15 @@ dataset.py:312-453, numba kernels :1064-1349).
 
 Spark mapping:
   * offsets        → window prefix-sum over the (small) catalog
-  * GroupID        → broadcast-searchsorted Pandas UDF over uid
-                     (the catalog is ~1e6 rows ≪ particles ~1e10; a
+  * GroupID,       → one interval table per catalog (halo spans, and
+    SubhaloID        subhalo spans nested in them), assigned by ONE
+                     dispatcher: a broadcast-searchsorted Pandas UDF over
+                     uid (the catalog is ~1e6 rows ≪ particles ~1e10; a
                      broadcast numpy array + vectorized searchsorted is
                      the same physical strategy the reference uses by
                      rechunking the small side to one block,
-                     dataset.py:1147-1149) — with a range-join fallback
-                     for catalogs too large to broadcast
-  * SubhaloID      → same kernel nested within halos + Column arithmetic
+                     dataset.py:1147-1149), or a bucketed range join for
+                     catalogs too large to broadcast
   * group→particle attribute copy → broadcast equi-join
   * grouped()      → groupBy().agg() / applyInPandas
 
@@ -47,6 +48,8 @@ _BROADCAST_ROW_LIMIT = 20_000_000
 # catalog. ~1e7 matches the WindowExec comfort bound documented in
 # operators/prefix_sum.py.
 GROUP_OFFSETS_WINDOW_LIMIT = 10_000_000
+# order_col span of one bucket on group_offsets' two-phase path.
+_OFFSETS_BUCKET_WIDTH = 1_000_000
 
 
 def group_offsets(
@@ -54,37 +57,31 @@ def group_offsets(
     length_col: str,
     order_col: str,
     offset_col: str = "offset",
-    *,
-    window_limit: int | None = None,
-    bucket_width: int = 1_000_000,
 ) -> DataFrame:
     """offsets = concat([0], cumsum(lengths))[:-1] per catalog row.
 
     Reference: GroupOffsetsType construction (arepo/dataset.py:342-352).
 
-    Auto-switched (r15, closes r14 VERDICT next #7, mirroring the
-    :func:`add_group_ids_auto` gate): at reference-like catalog sizes
-    (~1e6 rows — the reference materializes them to the driver
-    outright, dataset.py:555-575) the exclusive prefix runs as ONE
-    global-ordering window; past ``window_limit`` rows (default
-    :data:`GROUP_OFFSETS_WINDOW_LIMIT`) that window would serialize
-    the whole catalog through a single task, so the same computation
-    reruns as the two-phase bucketed form (the
-    ``prefix_sum.exclusive_key_prefix`` trick, inlined to keep every
-    catalog column): bucket by ``floor(order/width)``, prefix-sum the
-    per-bucket TOTALS over the tiny bucket table (the only remaining
+    Auto-switched (r15, closes r14 VERDICT next #7): at reference-like
+    catalog sizes (~1e6 rows — the reference materializes them to the
+    driver outright, dataset.py:555-575) the exclusive prefix runs as
+    ONE global-ordering window; past :data:`GROUP_OFFSETS_WINDOW_LIMIT`
+    rows that window would serialize the whole catalog through a single
+    task, so the same computation reruns as the two-phase bucketed form
+    (the ``prefix_sum.exclusive_key_prefix`` trick, inlined to keep
+    every catalog column): bucket by ``floor(order/width)``, prefix-sum
+    the per-bucket TOTALS over the tiny bucket table (the only remaining
     single-task window — |catalog|/width rows), and run the
     within-bucket exclusive prefix partitioned by bucket — parallel at
     any catalog size, and value-identical because long addition
     reassociates exactly. A non-numeric ``order_col`` can't bucket
     order-preservingly and stays on the single window."""
-    limit = GROUP_OFFSETS_WINDOW_LIMIT if window_limit is None else window_limit
     numeric = dict(catalog.dtypes).get(order_col) in (
         "tinyint", "smallint", "int", "bigint", "float", "double",
     )
-    if numeric and catalog.count() > limit:
+    if numeric and catalog.count() > GROUP_OFFSETS_WINDOW_LIMIT:
         bkt = catalog.withColumn(
-            "__bkt", F.floor(F.col(order_col) / F.lit(int(bucket_width)))
+            "__bkt", F.floor(F.col(order_col) / F.lit(_OFFSETS_BUCKET_WIDTH))
         )
         w_b = W.orderBy("__bkt").rowsBetween(W.unboundedPreceding, -1)
         boffs = (
@@ -118,131 +115,13 @@ def group_offsets(
     )
 
 
-def _collect_offsets(catalog: DataFrame, length_col: str, order_col: str) -> np.ndarray:
-    """Boundary array [0, c0, c0+c1, ...] (len = ngroups+1) on the driver.
-
-    The catalog is the *small* side (≲1e6 rows → 8 MB); collecting and
-    broadcasting it mirrors the reference's eager offsets compute
-    (dataset.py:555-575) and is the scale-correct choice: the big side
-    (particles) never shuffles.
-    """
-    pdf = catalog.select(order_col, length_col).orderBy(order_col).toPandas()
-    lengths = pdf[length_col].to_numpy(dtype=np.int64)
-    return np.concatenate([[0], np.cumsum(lengths)])
-
-
-def add_group_ids(
-    particles: DataFrame,
-    catalog: DataFrame,
-    length_col: str = "GroupLen",
-    group_order_col: str = "GroupID",
-    uid_col: str = "uid",
-    out_col: str = "GroupID",
-) -> DataFrame:
-    """Assign each particle its halo index from contiguous uid ranges.
-
-    Vectorized ``np.searchsorted`` over a broadcast boundary array —
-    the Spark analog of the reference's ``get_hidx`` numba kernel
-    (arepo/dataset.py:1064-1103). Rows past the last boundary are
-    "unbound" → SENTINEL.
-    """
-    bounds = _collect_offsets(catalog, length_col, group_order_col)
-    sc = particles.sparkSession.sparkContext
-    b_bounds = sc.broadcast(bounds)
-
-    @F.pandas_udf("long")
-    def _hidx(uid: pd.Series) -> pd.Series:
-        bnd = b_bounds.value
-        u = uid.to_numpy(dtype=np.int64)
-        idx = np.searchsorted(bnd, u, side="right") - 1
-        out = idx.astype(np.int64)
-        out[u >= bnd[-1]] = SENTINEL
-        out[u < 0] = SENTINEL
-        return pd.Series(out)
-
-    return particles.withColumn(out_col, _hidx(F.col(uid_col)))
-
-
-def add_subhalo_ids(
-    particles: DataFrame,
-    group_catalog: DataFrame,
-    subhalo_catalog: DataFrame,
-    *,
-    group_length_col: str = "GroupLen",
-    group_order_col: str = "GroupID",
-    group_firstsub_col: str = "GroupFirstSub",
-    group_nsubs_col: str = "GroupNsubs",
-    sub_length_col: str = "SubhaloLen",
-    sub_order_col: str = "SubhaloID",
-    uid_col: str = "uid",
-) -> DataFrame:
-    """Assign LocalSubhaloID and SubhaloID per particle.
-
-    Within each halo, the first sum(SubhaloLenType) particles belong to
-    its subhalos in order; the remainder ("inner fuzz") and unbound
-    particles get the sentinel. Mirrors the reference's
-    ``get_localshidx`` nested-interval walk (arepo/dataset.py:1164-1258)
-    and the SubhaloID composition ``firstsub + local`` (:445-449), as
-    one broadcast of three small arrays + one vectorized kernel.
-    """
-    g_bounds = _collect_offsets(group_catalog, group_length_col, group_order_col)
-    gpdf = (
-        group_catalog.select(group_order_col, group_firstsub_col, group_nsubs_col)
-        .orderBy(group_order_col)
-        .toPandas()
+def _group_intervals(catalog: DataFrame, length_col: str, order_col: str) -> DataFrame:
+    """Each halo's uid span ``[__start, __end) = [offset, offset+len)``,
+    every catalog column kept. The halo membership rule lives here
+    only; :func:`subhalo_intervals` nests its spans inside these."""
+    return group_offsets(catalog, length_col, order_col, "__start").withColumn(
+        "__end", (F.col("__start") + F.col(length_col)).cast("long")
     )
-    firstsub = gpdf[group_firstsub_col].to_numpy(dtype=np.int64)
-    nsubs = gpdf[group_nsubs_col].to_numpy(dtype=np.int64)
-    spdf = subhalo_catalog.select(sub_order_col, sub_length_col).orderBy(sub_order_col).toPandas()
-    sublen = spdf[sub_length_col].to_numpy(dtype=np.int64)
-    # Per-subhalo start uid = its halo's offset + cumsum of prior sibling
-    # lengths — fully vectorized (no Python loop over the catalog; this
-    # runs on the driver for ~1e6-row catalogs):
-    #   halo_of_sub: which halo owns each subhalo (subhalos are stored
-    #   grouped by halo in SubhaloID order — the reference's layout)
-    ngroups = len(g_bounds) - 1
-    nsub_total = int(nsubs.sum())
-    if nsub_total != len(sublen):
-        raise ValueError(
-            f"sum(GroupNsubs)={nsub_total} != len(subhalo catalog)={len(sublen)}"
-        )
-    halo_of_sub = np.repeat(np.arange(ngroups, dtype=np.int64), nsubs)
-    cs = np.concatenate([[0], np.cumsum(sublen)])[:-1]  # global prefix
-    first_idx = np.concatenate([[0], np.cumsum(nsubs)])[:-1]  # first sub per halo
-    base_cs = np.repeat(cs[first_idx] if ngroups else np.empty(0, np.int64), nsubs)
-    sub_start = g_bounds[halo_of_sub] + cs - base_cs
-    sub_end = sub_start + sublen
-
-    sc = particles.sparkSession.sparkContext
-    b = sc.broadcast((g_bounds, firstsub, nsubs, sub_start[: len(sublen)], sub_end))
-
-    @F.pandas_udf("local_subhalo_id long, subhalo_id long")
-    def _shidx(uid: pd.Series) -> pd.DataFrame:
-        g_bnd, fsub, nsub, s_start, s_end = b.value
-        u = uid.to_numpy(dtype=np.int64)
-        gid = np.searchsorted(g_bnd, u, side="right") - 1
-        unbound = (u >= g_bnd[-1]) | (u < 0)
-        # Global subhalo index via searchsorted on subhalo start uids:
-        # valid iff the particle lies inside that subhalo's [start, end).
-        sid = np.searchsorted(s_start, u, side="right") - 1
-        valid = (sid >= 0) & (sid < len(s_start)) & ~unbound
-        inside = np.zeros_like(valid)
-        inside[valid] = u[valid] < s_end[sid[valid]]
-        # Also require the subhalo to belong to the particle's halo.
-        gid_safe = np.clip(gid, 0, len(fsub) - 1)
-        has_sub = nsub[gid_safe] > 0
-        local = sid - fsub[gid_safe]
-        in_halo = inside & has_sub & (local >= 0) & (local < nsub[gid_safe])
-        out_local = np.where(in_halo, local, SENTINEL).astype(np.int64)
-        out_global = np.where(in_halo, sid, SENTINEL).astype(np.int64)
-        out_local[unbound] = SENTINEL
-        out_global[unbound] = SENTINEL
-        return pd.DataFrame({"local_subhalo_id": out_local, "subhalo_id": out_global})
-
-    res = particles.withColumn("__sh", _shidx(F.col(uid_col)))
-    return res.withColumn("LocalSubhaloID", F.col("__sh.local_subhalo_id")).withColumn(
-        "SubhaloID", F.col("__sh.subhalo_id")
-    ).drop("__sh")
 
 
 def subhalo_intervals(
@@ -256,26 +135,31 @@ def subhalo_intervals(
     sub_length_col: str = "SubhaloLen",
     sub_order_col: str = "SubhaloID",
 ) -> DataFrame:
-    """Per-subhalo ``[__sstart, __send)`` uid interval plus its local
-    index within the owning halo — fully distributed, no driver
-    materialization.
+    """Per-subhalo ``[__start, __end)`` uid interval with its SubhaloID
+    ``__sid`` and its index ``__local`` within the owning halo — fully
+    distributed, no driver materialization.
 
-    Construction: explode ``sequence(0, nsubs-1)`` on the group catalog
-    to enumerate (halo, global subhalo id = firstsub + k) pairs, equi-
-    join the subhalo catalog on that id (one catalog-sized shuffle),
-    then a *partitioned* window cumsum of sibling lengths within each
-    halo gives the start offsets. Because the intervals are derived
-    from each halo's own offset, a particle uid falling inside an
-    interval is in the right halo by construction — the membership
-    check the broadcast kernel does explicitly (reference
-    arepo/dataset.py:1164-1258) is implicit here.
-    """
-    g = group_offsets(group_catalog, group_length_col, group_order_col)
-    pairs = (
-        g.filter(F.col(group_nsubs_col) > 0)
+    Within each halo the first sum(SubhaloLen) particles belong to its
+    subhalos in order; the rest is inner fuzz (reference
+    ``get_localshidx``, arepo/dataset.py:1164-1258, and SubhaloID =
+    firstsub + local, :445-449). Construction: explode
+    ``sequence(0, nsubs-1)`` on the halo spans to enumerate each halo's
+    claims (SubhaloID = firstsub + k), FULL-join the subhalo catalog on
+    that id, then a window cumsum of sibling lengths partitioned by halo
+    gives the starts. Every interval is clipped to its halo's span, so
+    the intervals stay disjoint whatever SubhaloLen says.
+
+    The catalogs disagree when a claim has no catalog row, a catalog
+    row has no claim, or two halos claim one SubhaloID. The first two
+    come out with a null bound and the third as a repeated ``__sid``;
+    :func:`_assign_ids` rejects both."""
+    claims = (
+        _group_intervals(group_catalog, group_length_col, group_order_col)
+        .filter(F.col(group_nsubs_col) > 0)
         .select(
             F.col(group_order_col).alias("__gid"),
-            F.col("offset").alias("__goff"),
+            F.col("__start").alias("__gstart"),
+            F.col("__end").alias("__gend"),
             F.col(group_firstsub_col).alias("__fsub"),
             F.explode(
                 F.sequence(F.lit(0).cast("long"), F.col(group_nsubs_col) - 1)
@@ -287,156 +171,123 @@ def subhalo_intervals(
         F.col(sub_order_col).alias("__sid"),
         F.col(sub_length_col).alias("__slen"),
     )
-    j = pairs.join(sub, "__sid")
+    j = claims.join(sub, "__sid", "full")
     w = W.partitionBy("__gid").orderBy("__sid").rowsBetween(W.unboundedPreceding, -1)
-    j = j.withColumn("__prior", F.coalesce(F.sum("__slen").over(w), F.lit(0)))
+    j = j.withColumn(
+        "__s", F.col("__gstart") + F.coalesce(F.sum("__slen").over(w), F.lit(0))
+    )
+
+    def clip(c):  # a null bound stays null
+        return F.when(c > F.col("__gend"), F.col("__gend")).otherwise(c).cast("long")
+
     return j.select(
         "__sid",
         "__local",
-        (F.col("__goff") + F.col("__prior")).cast("long").alias("__sstart"),
-        (F.col("__goff") + F.col("__prior") + F.col("__slen"))
-        .cast("long")
-        .alias("__send"),
+        clip(F.col("__s")).alias("__start"),
+        clip(F.col("__s") + F.col("__slen")).alias("__end"),
     )
 
 
-def add_subhalo_ids_rangejoin(
-    particles: DataFrame,
-    group_catalog: DataFrame,
-    subhalo_catalog: DataFrame,
-    *,
-    group_length_col: str = "GroupLen",
-    group_order_col: str = "GroupID",
-    group_firstsub_col: str = "GroupFirstSub",
-    group_nsubs_col: str = "GroupNsubs",
-    sub_length_col: str = "SubhaloLen",
-    sub_order_col: str = "SubhaloID",
-    uid_col: str = "uid",
-) -> DataFrame:
-    """Distributed LocalSubhaloID/SubhaloID: range-join particles
-    against per-subhalo uid intervals (``subhalo_intervals``). Same
-    output contract as :func:`add_subhalo_ids` — inner-fuzz and unbound
-    particles match no interval and get the sentinel via left-join miss.
-    Routed through the same bucketed equi-join as
-    :func:`add_group_ids_rangejoin` (see its docstring for the
-    BroadcastNestedLoopJoin → BroadcastHashJoin rationale and the
-    equivalence argument; subhalo intervals are likewise disjoint).
-    """
-    iv = subhalo_intervals(
-        group_catalog,
-        subhalo_catalog,
-        group_length_col=group_length_col,
-        group_order_col=group_order_col,
-        group_firstsub_col=group_firstsub_col,
-        group_nsubs_col=group_nsubs_col,
-        sub_length_col=sub_length_col,
-        sub_order_col=sub_order_col,
-    )
-    joined = _bucketed_range_join(
-        particles, uid_col, iv, "__sstart", "__send", None
-    )
-    return (
-        joined.withColumn(
-            "LocalSubhaloID",
-            F.coalesce(F.col("__local"), F.lit(SENTINEL)).cast("long"),
+def _require_consistent(n_bad: int) -> None:
+    if n_bad:
+        raise ValueError(
+            f"catalogs disagree: {n_bad} uid interval(s) lack a bound or "
+            "repeat an ID (a subhalo claimed by no halo or by two halos, "
+            "or missing from the subhalo catalog)"
         )
-        .withColumn(
-            "SubhaloID", F.coalesce(F.col("__sid"), F.lit(SENTINEL)).cast("long")
-        )
-        .drop("__sid", "__local", "__sstart", "__send")
-    )
 
 
-def add_subhalo_ids_auto(
-    particles: DataFrame,
-    group_catalog: DataFrame,
-    subhalo_catalog: DataFrame,
-    *,
-    broadcast_limit: int = 50_000_000,
-    n_catalog: int | None = None,
-    **kwargs,
-) -> DataFrame:
-    """Pick the subhalo-ID strategy by combined catalog size, mirroring
-    :func:`add_group_ids_auto`: the broadcast-searchsorted kernel (one
-    narrow map over the particles, zero shuffle) while both catalogs fit
-    comfortably on the driver (~40 bytes x rows of numpy), else the
-    fully distributed interval range join. The golden semantics are
-    identical through both paths (pytest-pinned).
-
-    ``n_catalog`` lets callers who already know the combined catalog
-    row count skip the two count jobs (a snapshot's ngroups+nsubs is in
-    its header); counting is the fallback."""
-    n = (
-        n_catalog
-        if n_catalog is not None
-        else group_catalog.count() + subhalo_catalog.count()
-    )
-    if n <= broadcast_limit:
-        return add_subhalo_ids(particles, group_catalog, subhalo_catalog, **kwargs)
-    return add_subhalo_ids_rangejoin(
-        particles, group_catalog, subhalo_catalog, **kwargs
-    )
-
-
-def add_group_ids_rangejoin(
-    particles: DataFrame,
-    catalog_with_offsets: DataFrame,
-    *,
-    offset_col: str = "offset",
-    length_col: str = "GroupLen",
-    group_id_col: str = "GroupID",
-    uid_col: str = "uid",
-    out_col: str = "GroupID",
-    bucket_width: int | None = None,
-) -> DataFrame:
-    """Range-join fallback: ``uid >= offset AND uid < offset+len``.
-
-    For catalogs too large to broadcast to the driver AS AN ARRAY.
-    r15 rewrite (guide §3.1/§1.2): the pure range condition planned a
-    BroadcastNestedLoopJoin — every particle row probed every catalog
-    row, O(particles x groups) predicate evaluations (measured 1.6 s
-    for 600k x 2k at sf0.1, and quadratic in principle). Bucketing the
-    uid axis turns it into an EQUI-join: each group row is exploded to
-    the ``floor(off/B)..floor((end-1)/B)`` buckets its span overlaps
-    (with B = the average group span, that is ~2 rows per group), each
-    particle computes its single ``floor(uid/B)`` bucket, and the join
-    keys on the bucket with the range predicate as a residual filter.
-    Spark plans a BroadcastHashJoin — and on a catalog too large to
-    broadcast at all, the same shape degrades gracefully to a
-    shuffled hash/sort-merge join on the bucket key, which the old
-    nested-loop form never could (the true 100 TB path). Group spans
-    are disjoint and a particle carries ONE bucket, so each particle
-    still matches at most one group row — row-for-row identical
-    output, unmatched uids → SENTINEL via the left-join miss.
-    ``bucket_width=None`` derives B from one tiny catalog aggregate.
-    """
-    cat = catalog_with_offsets.select(
-        F.col(group_id_col).alias("__gid"),
-        F.col(offset_col).alias("__off"),
-        (F.col(offset_col) + F.col(length_col)).alias("__end"),
-    )
-    joined = _bucketed_range_join(
-        particles, uid_col, cat, "__off", "__end", bucket_width
-    )
-    return joined.withColumn(
-        out_col, F.coalesce(F.col("__gid"), F.lit(SENTINEL)).cast("long")
-    ).drop("__gid", "__off", "__end")
-
-
-def _bucketed_range_join(
+def _assign_ids(
     particles: DataFrame,
     uid_col: str,
     intervals: DataFrame,
-    start_col: str,
-    end_col: str,
-    bucket_width: int | None,
+    key: str,
+    ids: dict[str, str],
+    broadcast: bool,
 ) -> DataFrame:
-    """LEFT-join ``particles`` to disjoint half-open ``[start, end)``
-    intervals as a bucketed EQUI-join (see add_group_ids_rangejoin's
-    docstring for the rationale and the equivalence argument). Returns
-    the joined frame with the interval columns attached (null on
-    miss); the caller applies its sentinel coalesce. ``bucket_width``
-    None derives B = average interval span from one tiny aggregate.
+    """Give each particle the ID columns of the interval
+    ``[__start, __end)`` holding its uid, :data:`SENTINEL` where none
+    does (unbound particles and inner fuzz). ``ids`` maps each output
+    column to an interval column; ``key`` names the interval's own ID.
+
+    The intervals must be disjoint, which :func:`_group_intervals` and
+    :func:`subhalo_intervals` guarantee, and complete and uniquely
+    identified, which is checked here (ValueError otherwise). Two
+    strategies, one result:
+
+    * ``broadcast``: collect the interval table once, sort it by start
+      and ship it to a vectorized ``np.searchsorted`` Pandas UDF — one
+      narrow map over the particles, zero shuffle. The Spark analog of
+      the reference's ``get_hidx`` numba kernel (arepo/dataset.py:
+      1064-1103), which likewise rechunks the small catalog to one
+      block (:1147-1149).
+    * otherwise: :func:`_bucketed_range_join`, for catalogs too large
+      for the driver."""
+    iv = intervals.select(
+        "__start", "__end", F.col(key).alias("__key"),
+        *[F.col(c).alias(f"__id{k}") for k, c in enumerate(ids.values())],
+    )
+    keys = [f"__id{k}" for k in range(len(ids))]
+    if not broadcast:
+        joined = _bucketed_range_join(particles, uid_col, iv)
+        return joined.withColumns(
+            {
+                out: F.coalesce(F.col(k), F.lit(SENTINEL)).cast("long")
+                for out, k in zip(ids, keys)
+            }
+        ).drop("__start", "__end", "__key", *keys)
+    pdf = iv.toPandas()
+    _require_consistent(
+        int(pdf[["__start", "__end"]].isna().any(axis=1).sum())
+        + len(pdf) - pdf["__key"].nunique()
+    )
+    pdf = pdf[pdf["__end"] > pdf["__start"]].sort_values("__start")
+    b = particles.sparkSession.sparkContext.broadcast(
+        (
+            pdf["__start"].to_numpy(np.int64),
+            pdf["__end"].to_numpy(np.int64),
+            pdf[keys].to_numpy(np.int64).T.copy(),
+        )
+    )
+
+    @F.pandas_udf(", ".join(f"{k} long" for k in keys))
+    def _lookup(uid: pd.Series) -> pd.DataFrame:
+        starts, ends, vals = b.value
+        u = uid.to_numpy(dtype=np.int64)
+        i = np.searchsorted(starts, u, side="right") - 1
+        hit = i >= 0
+        hit[hit] = u[hit] < ends[i[hit]]
+        out = np.full((len(keys), len(u)), SENTINEL, dtype=np.int64)
+        out[:, hit] = vals[:, i[hit]]
+        return pd.DataFrame(dict(zip(keys, out)))
+
+    res = particles.withColumn("__ids", _lookup(F.col(uid_col)))
+    return res.withColumns(
+        {out: F.col("__ids").getField(k) for out, k in zip(ids, keys)}
+    ).drop("__ids")
+
+
+def _bucketed_range_join(
+    particles: DataFrame, uid_col: str, intervals: DataFrame
+) -> DataFrame:
+    """LEFT-join ``particles`` to disjoint half-open ``[__start, __end)``
+    intervals identified by ``__key``. Returns the joined
+    frame with the interval columns attached (null on miss); the caller
+    applies its sentinel coalesce. Raises ValueError, like the broadcast
+    path, on an incomplete or repeated interval.
+
+    r15 rewrite (guide §3.1/§1.2): the pure range condition planned a
+    BroadcastNestedLoopJoin — every particle row probed every interval,
+    O(particles x intervals) predicate evaluations (measured 1.6 s for
+    600k x 2k at sf0.1, and quadratic in principle). Bucketing the uid
+    axis turns it into an EQUI-join: each interval is exploded to the
+    ``floor(start/B)..floor((end-1)/B)`` buckets its span overlaps (with
+    B = the average span, derived from one tiny aggregate, that is ~2
+    rows per interval), each particle computes its single
+    ``floor(uid/B)`` bucket, and the join keys on the bucket with the
+    range predicate as a residual filter. The intervals are disjoint and
+    a particle carries ONE bucket, so each particle still matches at
+    most one interval — unmatched uids come back null.
 
     Join strategy (r16, closes the r15 ADVICE item): the broadcast
     hint is CONDITIONAL on the measured interval count — Spark honors
@@ -445,42 +296,38 @@ def _bucketed_range_join(
     catalogs (the overwhelmingly common case — halo catalogs are ~1e3x
     smaller than their particle tables) get the hint because
     size-in-bytes estimates after the explode are unreliable; past
-    ``_BROADCAST_ROW_LIMIT`` exploded rows the hint is omitted and the
+    ``_BROADCAST_ROW_LIMIT`` intervals the hint is omitted and the
     planner/AQE picks a shuffled hash or sort-merge join on the bucket
-    key — the graceful 100 TB degradation the docstring promises."""
-    n_intervals = None
-    if bucket_width is None:
-        row = intervals.agg(
-            F.min(start_col).alias("lo"),
-            F.max(end_col).alias("hi"),
-            F.count("*").alias("n"),
-        ).first()
-        if row is None or not row["n"] or row["hi"] is None:
-            bucket_width = 1
-        else:
-            bucket_width = max(1, int((row["hi"] - row["lo"]) // row["n"]))
-        n_intervals = 0 if row is None else int(row["n"] or 0)
-    b = F.lit(int(bucket_width))
-    bcat = intervals.filter(F.col(end_col) > F.col(start_col)).withColumn(
+    key — the graceful 100 TB degradation."""
+    row = intervals.agg(
+        F.min("__start").alias("lo"),
+        F.max("__end").alias("hi"),
+        F.count("*").alias("n"),
+        F.count_if(F.col("__start").isNull() | F.col("__end").isNull()).alias("open"),
+        F.count_distinct("__key").alias("ids"),
+    ).first()
+    n = int(row["n"])
+    _require_consistent(int(row["open"]) + n - int(row["ids"]))
+    width = max(1, int((row["hi"] - row["lo"]) // n)) if n else 1
+    b = F.lit(width)
+    bcat = intervals.filter(F.col("__end") > F.col("__start")).withColumn(
         "__cb",
         F.explode(
             F.sequence(
-                F.floor(F.col(start_col) / b),
-                F.floor((F.col(end_col) - 1) / b),
+                F.floor(F.col("__start") / b),
+                F.floor((F.col("__end") - 1) / b),
             )
         ),
     )
     # B = average span => ~2 exploded rows per interval; hint only
-    # when that clearly fits an executor-side hash relation. With an
-    # explicit bucket_width there is no measured count — leave the
-    # strategy to the planner (parquet-derived stats + AQE).
-    if n_intervals is not None and n_intervals <= _BROADCAST_ROW_LIMIT:
+    # when that clearly fits an executor-side hash relation.
+    if n <= _BROADCAST_ROW_LIMIT:
         bcat = F.broadcast(bcat)
     pb = particles.withColumn("__pb", F.floor(F.col(uid_col) / b))
     cond = (
         (F.col("__pb") == F.col("__cb"))
-        & (F.col(uid_col) >= F.col(start_col))
-        & (F.col(uid_col) < F.col(end_col))
+        & (F.col(uid_col) >= F.col("__start"))
+        & (F.col(uid_col) < F.col("__end"))
     )
     return pb.join(bcat, cond, "left").drop("__pb", "__cb")
 
@@ -495,22 +342,54 @@ def add_group_ids_auto(
     out_col: str = "GroupID",
     broadcast_limit: int = 50_000_000,
 ) -> DataFrame:
-    """Pick the catalog-ID strategy by catalog size: broadcast
-    searchsorted (fast path — one narrow map over the particles) while
-    the boundary array fits comfortably in driver/executor memory
-    (~8 bytes x rows), else the range-join fallback. Mirrors Spark's
-    own broadcast-threshold logic, applied to our custom kernel.
-    """
-    n = catalog.count()
-    if n <= broadcast_limit:
-        return add_group_ids(
-            particles, catalog, length_col=length_col,
-            group_order_col=group_order_col, uid_col=uid_col, out_col=out_col,
-        )
-    cat = group_offsets(catalog, length_col, group_order_col)
-    return add_group_ids_rangejoin(
-        particles, cat, length_col=length_col, group_id_col=group_order_col,
-        uid_col=uid_col, out_col=out_col,
+    """Assign each particle its halo ID from contiguous uid ranges
+    (reference ``get_hidx``); unbound particles get :data:`SENTINEL`.
+    Catalogs of at most ``broadcast_limit`` rows go through the
+    broadcast-searchsorted kernel, larger ones through the range join
+    (:func:`_assign_ids`) — Spark's own broadcast-threshold logic,
+    applied to our custom kernel."""
+    return _assign_ids(
+        particles,
+        uid_col,
+        _group_intervals(catalog, length_col, group_order_col),
+        group_order_col,
+        {out_col: group_order_col},
+        catalog.count() <= broadcast_limit,
+    )
+
+
+def add_subhalo_ids_auto(
+    particles: DataFrame,
+    group_catalog: DataFrame,
+    subhalo_catalog: DataFrame,
+    *,
+    broadcast_limit: int = 50_000_000,
+    n_catalog: int | None = None,
+    **kwargs,
+) -> DataFrame:
+    """Assign LocalSubhaloID and SubhaloID per particle from the
+    :func:`subhalo_intervals` (``kwargs`` name the catalog columns and
+    ``uid_col``); inner fuzz and unbound particles get
+    :data:`SENTINEL`. Raises ValueError when the two catalogs disagree.
+    The strategy is picked as in :func:`add_group_ids_auto`, by the
+    combined catalog row count.
+
+    ``n_catalog`` lets callers who already know the combined catalog
+    row count skip the two count jobs (a snapshot's ngroups+nsubs is in
+    its header); counting is the fallback."""
+    uid_col = kwargs.pop("uid_col", "uid")
+    n = (
+        n_catalog
+        if n_catalog is not None
+        else group_catalog.count() + subhalo_catalog.count()
+    )
+    return _assign_ids(
+        particles,
+        uid_col,
+        subhalo_intervals(group_catalog, subhalo_catalog, **kwargs),
+        "__sid",
+        {"LocalSubhaloID": "__local", "SubhaloID": "__sid"},
+        n <= broadcast_limit,
     )
 
 

@@ -110,16 +110,20 @@ def scida_groupid_searchsorted(spark, sf_dir):
     """
     parts = _particles(spark, sf_dir)
     cat = _group_catalog(spark, sf_dir)
-    out = C.add_group_ids(parts, cat, length_col="GroupLen", group_order_col="GroupID")
+    out = C.add_group_ids_auto(
+        parts, cat, length_col="GroupLen", group_order_col="GroupID"
+    )
     return out.select("uid", F.col("GroupID").alias("group_id"))
 
 
 def scida_groupid_rangejoin(spark, sf_dir):
     """Same assignment as a range join (uid ∈ [offset, offset+len)) —
-    the fallback when the catalog exceeds broadcast size (SURVEY §2.4)."""
+    the fallback when the catalog exceeds broadcast size (SURVEY §2.4),
+    forced here with ``broadcast_limit=0``."""
     parts = _particles(spark, sf_dir)
-    cat = C.group_offsets(_group_catalog(spark, sf_dir), "GroupLen", "GroupID")
-    out = C.add_group_ids_rangejoin(parts, cat, length_col="GroupLen")
+    out = C.add_group_ids_auto(
+        parts, _group_catalog(spark, sf_dir), length_col="GroupLen", broadcast_limit=0
+    )
     return out.select("uid", F.col("GroupID").alias("group_id"))
 
 
@@ -141,7 +145,7 @@ def scida_groupid_rangejoin(spark, sf_dir):
     """,
 )
 # r16 (closes the r15 ADVICE item): fingerprint BOTH inputs — the
-# memoized plan embeds a driver-collected boundary array and a bucket
+# memoized plan embeds a driver-collected interval table and a bucket
 # width derived from orders via _group_catalog, so regenerating orders
 # without touching lineitem must invalidate the memo too.
 @_memo_slot("lineitem", "orders")
@@ -200,8 +204,8 @@ def scida_groupid_assign(spark, sf_dir):
     """,
 )
 def scida_subhalo_ids(spark, sf_dir):
-    """LocalSubhaloID/SubhaloID via the nested searchsorted kernel
-    (reference ``get_localshidx`` arepo/dataset.py:1164-1258 and
+    """LocalSubhaloID/SubhaloID via the subhalo uid intervals nested in
+    each halo's span (reference ``get_localshidx`` arepo/dataset.py:1164-1258 and
     SubhaloID = GroupFirstSub + local, :445-449).
 
     Synthetic subhalo structure: each order (halo) splits its lineitems

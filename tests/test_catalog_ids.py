@@ -68,10 +68,17 @@ def _expected_local(uid):
     return SENT
 
 
+# Both ID strategies: the default limit takes the broadcast-searchsorted
+# kernel, 0 forces the bucketed range join.
+_LIMITS = pytest.mark.parametrize(
+    "limit", [50_000_000, 0], ids=["broadcast", "rangejoin"]
+)
+
+
 @pytest.mark.parametrize("npartitions", [1, 3, 7])
 def test_group_ids_golden(spark, npartitions):
     particles, groups, _ = _fixture(spark, npartitions)
-    out = C.add_group_ids(particles, groups).orderBy("uid").collect()
+    out = C.add_group_ids_auto(particles, groups).orderBy("uid").collect()
     assert len(out) == 100
     for row in out:
         assert row["GroupID"] == _expected_gid(row["uid"]), row
@@ -80,8 +87,12 @@ def test_group_ids_golden(spark, npartitions):
 @pytest.mark.parametrize("npartitions", [1, 4])
 def test_group_ids_rangejoin_golden(spark, npartitions):
     particles, groups, _ = _fixture(spark, npartitions)
-    cat = C.group_offsets(groups, "GroupLen", "GroupID")
-    out = C.add_group_ids_rangejoin(particles, cat, length_col="GroupLen").orderBy("uid").collect()
+    out = (
+        C.add_group_ids_auto(particles, groups, broadcast_limit=0)
+        .orderBy("uid")
+        .collect()
+    )
+    assert len(out) == 100
     for row in out:
         assert row["GroupID"] == _expected_gid(row["uid"]), row
 
@@ -96,14 +107,11 @@ def test_group_ids_rangejoin_degrades_past_broadcast_limit(
     of the catalog — a shuffled hash / sort-merge join on the bucket
     key — and stay row-identical to the broadcast-hinted plan."""
     particles, groups, _ = _fixture(spark, 4)
-    cat = C.group_offsets(groups, "GroupLen", "GroupID")
     monkeypatch.setattr(C, "_BROADCAST_ROW_LIMIT", 0)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out_df = C.add_group_ids_rangejoin(
-            particles, cat, length_col="GroupLen"
-        )
+        out_df = C.add_group_ids_auto(particles, groups, broadcast_limit=0)
         plan = out_df._sc._jvm.PythonSQLUtils.explainString(
             out_df._jdf.queryExecution(), "formatted"
         )
@@ -116,22 +124,27 @@ def test_group_ids_rangejoin_degrades_past_broadcast_limit(
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-_SUBHALO_IMPLS = [C.add_subhalo_ids, C.add_subhalo_ids_rangejoin]
+def _subhalo_rows(particles, groups, subs, limit):
+    return (
+        C.add_subhalo_ids_auto(particles, groups, subs, broadcast_limit=limit)
+        .orderBy("uid")
+        .collect()
+    )
 
 
-@pytest.mark.parametrize("impl", _SUBHALO_IMPLS, ids=["broadcast", "rangejoin"])
+@_LIMITS
 @pytest.mark.parametrize("npartitions", [1, 3, 7])
-def test_subhalo_ids_golden(spark, npartitions, impl):
+def test_subhalo_ids_golden(spark, npartitions, limit):
     particles, groups, subs = _fixture(spark, npartitions)
-    out = impl(particles, groups, subs).orderBy("uid").collect()
+    out = _subhalo_rows(particles, groups, subs, limit)
     assert len(out) == 100
     for row in out:
         assert row["SubhaloID"] == _expected_sid(row["uid"]), row
         assert row["LocalSubhaloID"] == _expected_local(row["uid"]), row
 
 
-@pytest.mark.parametrize("impl", _SUBHALO_IMPLS, ids=["broadcast", "rangejoin"])
-def test_subhalo_inner_fuzz(spark, impl):
+@_LIMITS
+def test_subhalo_inner_fuzz(spark, limit):
     """Particles beyond a halo's subhalo span but inside the halo get the
     sentinel (reference 'inner fuzz' semantics)."""
     particles = spark.range(50).withColumnRenamed("id", "uid")
@@ -141,13 +154,66 @@ def test_subhalo_inner_fuzz(spark, impl):
     subs = spark.createDataFrame(
         [(0, 25, 0)], "SubhaloID long, SubhaloLen long, SubhaloGrNr long"
     )
-    out = impl(particles, groups, subs).orderBy("uid").collect()
-    for row in out:
+    for row in _subhalo_rows(particles, groups, subs, limit):
         uid = row["uid"]
         if uid < 25:
             assert row["SubhaloID"] == 0 and row["LocalSubhaloID"] == 0
         else:  # fuzz (25-39) and unbound (40-49)
             assert row["SubhaloID"] == SENT and row["LocalSubhaloID"] == SENT
+
+
+@_LIMITS
+def test_subhalo_ids_trailing_halos_without_subhalos(spark, limit):
+    """Halos with GroupNsubs=0 after the last subhalo-bearing halo: their
+    particles are inner fuzz, and the catalog must not be indexed past
+    its end (the broadcast kernel raised IndexError here)."""
+    particles = spark.range(110).withColumnRenamed("id", "uid").repartition(3)
+    groups = spark.createDataFrame(
+        [(0, 40, 0, 2), (1, 30, 2, 1), (2, 20, 3, 1), (3, 5, -1, 0), (4, 5, -1, 0)],
+        "GroupID long, GroupLen long, GroupFirstSub long, GroupNsubs long",
+    )
+    _, _, subs = _fixture(spark, 1)
+    out = _subhalo_rows(particles, groups, subs, limit)
+    assert len(out) == 110
+    for row in out:
+        uid = row["uid"]
+        want_sid = _expected_sid(uid) if uid < 90 else SENT
+        want_local = _expected_local(uid) if uid < 90 else SENT
+        assert (row["SubhaloID"], row["LocalSubhaloID"]) == (want_sid, want_local), row
+
+
+def test_subhalo_ids_clip_overflowing_subhalo(spark):
+    """A SubhaloLen past its halo's end is clipped to the halo span: one
+    row per particle (the range join used to duplicate the overlap) and
+    the same IDs from both strategies."""
+    particles, groups, _ = _fixture(spark, 3)
+    subs = spark.createDataFrame(
+        [(0, 20, 0), (1, 25, 0), (2, 30, 1), (3, 20, 2)],
+        "SubhaloID long, SubhaloLen long, SubhaloGrNr long",
+    )
+    got = {lim: _subhalo_rows(particles, groups, subs, lim) for lim in (50_000_000, 0)}
+    assert got[50_000_000] == got[0]
+    assert [r["uid"] for r in got[0]] == list(range(100))
+    for row in got[0]:
+        assert row["SubhaloID"] == _expected_sid(row["uid"]), row
+        assert row["LocalSubhaloID"] == _expected_local(row["uid"]), row
+
+
+@_LIMITS
+@pytest.mark.parametrize(
+    "nsubs", [[2, 1, 0], [2, 1, 2], [2, 2, 1]], ids=["unclaimed", "missing", "twice"]
+)
+def test_subhalo_ids_reject_disagreeing_catalogs(spark, limit, nsubs):
+    """The group and subhalo catalogs must agree: every subhalo claimed
+    by exactly one halo's [GroupFirstSub, GroupFirstSub+GroupNsubs)
+    range, and every claim present in the subhalo catalog."""
+    particles, _, subs = _fixture(spark, 2)
+    groups = spark.createDataFrame(
+        [(0, 40, 0, nsubs[0]), (1, 30, 2, nsubs[1]), (2, 20, 3, nsubs[2])],
+        "GroupID long, GroupLen long, GroupFirstSub long, GroupNsubs long",
+    )
+    with pytest.raises(ValueError, match="catalogs disagree"):
+        _subhalo_rows(particles, groups, subs, limit)
 
 
 def test_subhalo_ids_auto_dispatch(spark):
@@ -174,8 +240,8 @@ def test_offsets(spark):
     assert out == {0: 0, 1: 40, 2: 70}
 
 
-def test_offsets_two_phase_matches_window(spark):
-    """Forcing the catalog over the window_limit routes group_offsets
+def test_offsets_two_phase_matches_window(spark, monkeypatch):
+    """Forcing the catalog over GROUP_OFFSETS_WINDOW_LIMIT routes group_offsets
     through the two-phase bucketed prefix (r15 auto-switch): values
     identical to the single-window form on irregular lengths, sparse /
     non-contiguous ids, and a zero-length group; the big-side window
@@ -187,16 +253,16 @@ def test_offsets_two_phase_matches_window(spark):
     rows = []
     gid = 0
     for _ in range(500):
-        gid += random.randint(1, 97)  # sparse, non-contiguous ids
+        # sparse, non-contiguous ids spread over ~250 offset buckets
+        gid += random.randint(1, 97) * 10_007
         rows.append((gid, random.choice([0, 1, 3, 17, 1000])))
     groups = spark.createDataFrame(rows, "GroupID long, GroupLen long")
     base = {
         r["GroupID"]: r["offset"]
         for r in C.group_offsets(groups, "GroupLen", "GroupID").collect()
     }
-    two = C.group_offsets(
-        groups, "GroupLen", "GroupID", window_limit=1, bucket_width=1000
-    )
+    monkeypatch.setattr(C, "GROUP_OFFSETS_WINDOW_LIMIT", 1)
+    two = C.group_offsets(groups, "GroupLen", "GroupID")
     got = {r["GroupID"]: r["offset"] for r in two.collect()}
     assert got == base
     # schema contract: same columns as the window form
@@ -209,8 +275,8 @@ def test_offsets_two_phase_matches_window(spark):
 
 def test_selectors(spark):
     particles, groups, subs = _fixture(spark, 3)
-    df = C.add_subhalo_ids(
-        C.add_group_ids(particles, groups), groups, subs
+    df = C.add_subhalo_ids_auto(
+        C.add_group_ids_auto(particles, groups), groups, subs
     )
     assert C.select_halo(df, 1).count() == 30
     assert C.select_subhalo(df, 2, "SubhaloID").count() == 30
@@ -222,7 +288,7 @@ def test_selectors(spark):
 
 def test_grouped_builtin(spark):
     particles, groups, _ = _fixture(spark, 2)
-    df = C.add_group_ids(particles, groups).withColumn("m", F.col("uid").cast("double"))
+    df = C.add_group_ids_auto(particles, groups).withColumn("m", F.col("uid").cast("double"))
     res = {
         r["GroupID"]: (r["sum_m"], r["max_m"])
         for r in C.grouped(df, ["m"]).sum().max().evaluate().collect()
@@ -235,7 +301,7 @@ def test_grouped_builtin(spark):
 
 def test_grouped_nmax_idxlist(spark):
     particles, groups, _ = _fixture(spark, 2)
-    df = C.add_group_ids(particles, groups).withColumn("m", F.lit(1.0))
+    df = C.add_group_ids_auto(particles, groups).withColumn("m", F.lit(1.0))
     res = C.grouped(df, ["m"]).count().evaluate(nmax=2).collect()
     assert {r["GroupID"] for r in res} == {0, 1}
     res = C.grouped(df, ["m"]).count().evaluate(idxlist=[0, 2]).collect()
@@ -246,7 +312,7 @@ def test_grouped_apply(spark):
     import pandas as pd
 
     particles, groups, _ = _fixture(spark, 2)
-    df = C.add_group_ids(particles, groups).withColumn("m", F.col("uid").cast("double"))
+    df = C.add_group_ids_auto(particles, groups).withColumn("m", F.col("uid").cast("double"))
 
     def spread(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame(
@@ -262,7 +328,7 @@ def test_grouped_apply(spark):
 
 def test_add_group_quantity(spark):
     particles, groups, _ = _fixture(spark, 2)
-    df = C.add_group_ids(particles, groups)
+    df = C.add_group_ids_auto(particles, groups)
     cat = groups.withColumn("GroupMass", F.col("GroupLen") * 2.5)
     out = C.add_group_quantity(df, cat, ["GroupMass"])
     rows = out.filter(F.col("uid").isin([0, 45, 75, 95])).orderBy("uid").collect()

@@ -25,7 +25,7 @@ def snapshot_dir(spark, tmp_path):
         [(0, 40, 0, 2), (1, 30, 2, 1), (2, 20, 3, 1)],
         "GroupID long, GroupLen long, GroupFirstSub long, GroupNsubs long",
     )
-    parts = C.add_group_ids(particles, groups)
+    parts = C.add_group_ids_auto(particles, groups)
     root = FieldContainer(name="snap")
     pc = FieldContainer(parts, name="PartType0")
     pc.field_units["Masses"] = "code_mass"

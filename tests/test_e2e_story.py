@@ -51,7 +51,7 @@ def test_full_story(spark, snapshot, tmp_path):
     cat = spark.createDataFrame(
         [(i, l) for i, l in enumerate(GROUP_LENS)], "GroupID long, GroupLen long"
     )
-    parts = C.add_group_ids(df, cat)
+    parts = C.add_group_ids_auto(df, cat)
     gids = [r.GroupID for r in parts.orderBy("uid").collect()]
     expect = [0] * 40 + [1] * 30 + [2] * 20 + [C.SENTINEL] * N_UNBOUND
     assert gids == expect
