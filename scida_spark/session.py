@@ -12,15 +12,32 @@ Scale posture (100 TB): every knob here is chosen to survive a
     reference src/scida/customs/arepo/dataset.py:1381-1445).
   * Arrow execution for the Pandas-UDF escape hatches.
   * UTC session timezone so results are engine-independent.
+
+Python workers: sessions from ``get_spark`` fork their workers from the
+``scida_spark._pydaemon`` daemon, which stops every Python task from
+re-reading pyspark.zip and the spark-core jar. Before CPython 3.13,
+PySpark's per-task ``importlib.invalidate_caches()`` makes each of a
+worker's 16 zipimporters re-read its whole archive directory: 160-240
+ms per task measured on a 4-core host, which took a traced benchmark's
+gas read to 11-14 s of worker start-up against 2-4 s of run time.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+# The directory holding the scida_spark package: the workers must import
+# scida_spark._pydaemon and the closures' scida_spark modules even when
+# the driver found the package only through a sys.path insert.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Serialises local_df's set/restore of the session-wide Arrow conf.
+_ARROW_CONF_LOCK = threading.Lock()
 
 
 def get_spark(
@@ -71,8 +88,13 @@ def get_spark(
         # (sim_topk builds ~10k Column expressions) this is ~10% of
         # wall time and buys nothing outside interactive debugging.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Workers fork from our daemon: see scida_spark/_pydaemon.py.
+        .config("spark.python.daemon.module", "scida_spark._pydaemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join([_PACKAGE_PARENT] + [p for p in [conf.get(key)] if p])
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -85,6 +107,11 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     The driver hands ``queries()`` callables its own session; pin the
     configs that affect result *values* (timezone, AQE) — these are all
     runtime-mutable SQL confs.
+
+    ``spark.python.daemon.module`` is a static conf, so this cannot set
+    it: an externally-created session keeps stock PySpark workers, which
+    re-read their zip archives on every Python task (see get_spark and
+    scida_spark/_pydaemon.py). Results are the same either way.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -180,16 +207,21 @@ def local_df(spark: SparkSession, data, schema=None):
                 # Arrow conversion scoped to THIS call (not pinned
                 # session-wide): set/restore around createDataFrame —
                 # the conversion happens eagerly inside the call.
+                # The lock keeps a local_df call in another thread from
+                # restoring the old value while this conversion still
+                # needs "true". Conversions outside local_df do not take
+                # it and can still see the toggle.
                 key = "spark.sql.execution.arrow.pyspark.enabled"
-                old = spark.conf.get(key, None)
-                spark.conf.set(key, "true")
-                try:
-                    return spark.createDataFrame(pdf, st).coalesce(1)
-                finally:
-                    if old is None:
-                        spark.conf.unset(key)
-                    else:
-                        spark.conf.set(key, old)
+                with _ARROW_CONF_LOCK:
+                    old = spark.conf.get(key, None)
+                    spark.conf.set(key, "true")
+                    try:
+                        return spark.createDataFrame(pdf, st).coalesce(1)
+                    finally:
+                        if old is None:
+                            spark.conf.unset(key)
+                        else:
+                            spark.conf.set(key, old)
         except Exception:  # noqa: BLE001 — fidelity over speed
             pass
     return spark.createDataFrame(data, schema).coalesce(1)

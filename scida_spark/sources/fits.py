@@ -116,14 +116,14 @@ def _require_astropy():
 def read_fits_splits(spark, path: str, hdu: int, splits, columns: list[str], schema,
                      backend: str | None = None):
     """Distributed BINTABLE read: one mapInArrow task per row-range split,
-    memmap per task (projection: only ``columns``)."""
+    memmap per task (projection: only ``columns``). Planned over
+    ``spark.range`` like ``sources.hdf5.read_splits_arrow``: partition i
+    holds the id i of the split it reads."""
     backend_name = backend or _FITS_BACKEND
     if backend_name == "astropy.io.fits":
         _require_astropy()
     plan = [(s.row_start, s.row_stop, s.uid_start) for s in splits]
-    plan_df = spark.createDataFrame(
-        plan, "row_start long, row_stop long, uid_start long"
-    ).repartition(max(1, len(plan)))
+    plan_df = spark.range(0, len(plan), 1, max(1, len(plan)))
 
     fields_by_name = {f.name: f for f in schema.fields}
 
@@ -136,13 +136,13 @@ def read_fits_splits(spark, path: str, hdu: int, splits, columns: list[str], sch
 
         fits = _fits_module(backend_name)
         for batch in iterator:
-            for row in batch.to_pylist():
-                lo, hi = row["row_start"], row["row_stop"]
+            for i in batch.column("id").to_pylist():
+                lo, hi, uid_start = plan[i]
                 with fits.open(path, memmap=True) as hdul:
                     rec = hdul[hdu].data[lo:hi]
                     data = {
                         "uid": pa.array(np.arange(
-                            row["uid_start"], row["uid_start"] + hi - lo, dtype=np.int64
+                            uid_start, uid_start + hi - lo, dtype=np.int64
                         ))
                     }
                     for c in columns:

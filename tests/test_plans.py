@@ -268,3 +268,28 @@ def test_scd2_single_id_exchange(spark):
     # window's — the (id, run) groupBy rides it (superset-key reuse),
     # and the only other exchange is the 1-row vmax SinglePartition.
     assert p.count("hashpartitioning") == 1, p
+
+
+def test_h5_read_plans_over_range_without_shuffle(spark, tmp_path):
+    """The HDF5 read kernel runs over ``spark.range(0, n, 1, n)``: one
+    task per split and no round-robin Exchange of a parallelized split
+    table in front of the mapInArrow."""
+    import numpy as np
+
+    from scida_spark.sources.hdf5 import load_hdf5_dataset
+
+    pt0 = tmp_path / "snap" / "PartType0"
+    pt0.mkdir(parents=True)
+    masses = np.arange(100, dtype=np.float64)
+    np.save(pt0 / "Masses.npy", masses)
+    ds = load_hdf5_dataset(str(tmp_path / "snap"), spark, rows_per_split=16,
+                           backend="scida_spark.sources.h5_shim")
+    df = ds["PartType0"].df
+    p = _plan(spark, df)
+    assert "MapInArrow" in p, p
+    assert "RoundRobinPartitioning" not in p, p
+    assert "Exchange" not in p, p
+    assert df.rdd.getNumPartitions() == 7
+    rows = df.orderBy("uid").select("uid", "Masses").collect()
+    assert [r.uid for r in rows] == list(range(100))
+    assert [r.Masses for r in rows] == masses.tolist()
