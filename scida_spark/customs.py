@@ -62,29 +62,19 @@ _probe_cache: dict[tuple[str, int], "Hdf5Probe | None"] = {}
 def _first_store(path: str) -> str | None:
     """The first file/store of an HDF5-like path, or None if the path
     is not HDF5-shaped (extension gate only — no open)."""
-    exts = (".hdf5", ".h5", ".h5dir")
-    if path.rstrip("/").endswith(exts):
-        return path
-    if os.path.isdir(path):
-        from scida_spark.sources.convert import natural_sort_key
+    from scida_spark.sources.hdf5 import series_stores
 
-        cand = sorted(
-            (e for e in os.listdir(path) if e.endswith(exts)),
-            key=natural_sort_key,
-        )
-        if cand:
-            return os.path.join(path, cand[0])
-    return None
+    stores = series_stores(path)
+    return stores[0] if stores else None
 
 
 _SHIM = "scida_spark.sources.h5_shim"
 
 
-def backend_for(store: str) -> str | None:
+def backend_for(store: str) -> str:
     """h5 backend module for a store: ``.h5dir`` directory stores read
-    through the shim; real ``.hdf5``/``.h5`` files use the session
-    default (h5py where installed)."""
-    return _SHIM if store.rstrip("/").endswith(".h5dir") else None
+    through the shim; real ``.hdf5``/``.h5`` files through h5py."""
+    return _SHIM if store.rstrip("/").endswith(".h5dir") else "h5py"
 
 
 def hdf5_probe(path: str) -> Hdf5Probe | None:

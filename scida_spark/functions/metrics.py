@@ -68,14 +68,8 @@ def auc_exact(
     else:
         from scida_spark.operators.prefix_sum import exclusive_key_prefix
 
-        offs = exclusive_key_prefix(
-            cnt.select(score_col, "__n"),
-            score_col,
-            "__n",
-            bucket_width=score_bucket_width,
-        ).withColumnRenamed(score_col, "__sc2")
-        cum = cnt.join(
-            offs, F.col(score_col).eqNullSafe(F.col("__sc2"))
+        cum = exclusive_key_prefix(
+            cnt, score_col, "__n", bucket_width=score_bucket_width
         ).select(
             "__n", "__np", (F.col("__off") + F.col("__n")).alias("__cum")
         )

@@ -120,13 +120,6 @@ def bpe_tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(BPE_ISH_PATTERN), 0)
 
 
-def punct_ratio_from_tokens(tok_col: Column) -> Column:
-    """Fraction of BPE-ish tokens that are punctuation (quality-scoring
-    component: high punctuation density flags low-quality text)."""
-    n_punct = F.size(F.filter(tok_col, lambda t: t.rlike(r"^[^A-Za-z0-9]$")))
-    return n_punct.cast("double") / F.size(tok_col)
-
-
 def md5_fingerprint(text: Column, nhex: int = 16) -> Column:
     """Portable content fingerprint: first ``nhex`` hex chars of md5."""
     return F.substring(F.md5(text), 1, nhex)

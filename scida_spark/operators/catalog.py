@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from scida_spark.operators.prefix_sum import exclusive_key_prefix
+
 SENTINEL = np.iinfo(np.int64).max  # 9223372036854775807
 
 # _bucketed_range_join only hints broadcast when the measured interval
@@ -68,51 +70,21 @@ def group_offsets(
     ONE global-ordering window; past :data:`GROUP_OFFSETS_WINDOW_LIMIT`
     rows that window would serialize the whole catalog through a single
     task, so the same computation reruns as the two-phase bucketed form
-    (the ``prefix_sum.exclusive_key_prefix`` trick, inlined to keep
-    every catalog column): bucket by ``floor(order/width)``, prefix-sum
-    the per-bucket TOTALS over the tiny bucket table (the only remaining
-    single-task window — |catalog|/width rows), and run the
-    within-bucket exclusive prefix partitioned by bucket — parallel at
-    any catalog size, and value-identical because long addition
-    reassociates exactly. A non-numeric ``order_col`` can't bucket
+    of :func:`prefix_sum.exclusive_key_prefix` (parallel at any catalog
+    size, and value-identical because long addition reassociates
+    exactly). A non-numeric ``order_col`` can't bucket
     order-preservingly and stays on the single window."""
     numeric = dict(catalog.dtypes).get(order_col) in (
         "tinyint", "smallint", "int", "bigint", "float", "double",
     )
-    if numeric and catalog.count() > GROUP_OFFSETS_WINDOW_LIMIT:
-        bkt = catalog.withColumn(
-            "__bkt", F.floor(F.col(order_col) / F.lit(_OFFSETS_BUCKET_WIDTH))
-        )
-        w_b = W.orderBy("__bkt").rowsBetween(W.unboundedPreceding, -1)
-        boffs = (
-            bkt.groupBy("__bkt")
-            .agg(F.sum(length_col).alias("__btot"))
-            .withColumn(
-                "__boff", F.coalesce(F.sum("__btot").over(w_b), F.lit(0))
-            )
-            .select(F.col("__bkt").alias("__bkt2"), "__boff")
-        )
-        w_in = (
-            W.partitionBy("__bkt")
-            .orderBy(order_col)
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        return (
-            bkt.withColumn(
-                "__in", F.coalesce(F.sum(F.col(length_col)).over(w_in), F.lit(0))
-            )
-            .join(
-                F.broadcast(boffs), F.col("__bkt").eqNullSafe(F.col("__bkt2"))
-            )
-            .withColumn(
-                offset_col, (F.col("__boff") + F.col("__in")).cast("long")
-            )
-            .drop("__bkt", "__bkt2", "__boff", "__in")
-        )
-    w = W.orderBy(order_col).rowsBetween(W.unboundedPreceding, -1)
-    return catalog.withColumn(
-        offset_col, F.coalesce(F.sum(F.col(length_col)).over(w), F.lit(0)).cast("long")
-    )
+    two_phase = numeric and catalog.count() > GROUP_OFFSETS_WINDOW_LIMIT
+    return exclusive_key_prefix(
+        catalog,
+        order_col,
+        length_col,
+        bucket_width=_OFFSETS_BUCKET_WIDTH if two_phase else None,
+        out_col=offset_col,
+    ).withColumn(offset_col, F.col(offset_col).cast("long"))
 
 
 def _group_intervals(catalog: DataFrame, length_col: str, order_col: str) -> DataFrame:
@@ -679,8 +651,9 @@ def select_zoom_target(
     ``targets`` columns: target_id, offset, length, fuzz_offset,
     fuzz_length. The single target row is collected (the target table is
     O(targets) ≈ tiny) and the selection becomes uid-range predicates —
-    exactly what the source-level split pruning consumes (npy/HDF5
-    readers skip non-overlapping splits without opening files). The
+    exactly what the source-level split pruning consumes (the npy and
+    zarr Data Sources skip non-overlapping splits without opening
+    files; the HDF5 and FITS readers read every split and filter). The
     reference instead rewrites every field recipe to slice its output
     (:114-170); with Catalyst the filter pushes through derived columns
     automatically, so no rewrite machinery is needed.

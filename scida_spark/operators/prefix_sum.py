@@ -39,7 +39,9 @@ def exclusive_key_prefix(
 ) -> DataFrame:
     """Exclusive prefix of ``sum_col`` over ascending ``key_col`` order
     on a one-row-per-key table — the shared phase-1 of every two-phase
-    global form (uid assignment, running sums).
+    global form (uid assignment, running sums, catalog offsets, AUC
+    ranks). Returns ``totals`` with ``out_col`` added: every input
+    column is kept.
 
     ``bucket_width=None`` is the single-window plan: fine to ~1e7 keys,
     but it serializes |keys| rows through one task (WindowExec warns).
@@ -60,7 +62,7 @@ def exclusive_key_prefix(
         w_off = W.orderBy(key_col).rowsBetween(W.unboundedPreceding, -1)
         return totals.withColumn(
             out_col, F.coalesce(F.sum(sum_col).over(w_off), zero)
-        ).select(key_col, out_col)
+        )
     # fractional widths are legal (float keys — e.g. AUC score
     # vocabularies); integral widths keep the exact literal form
     bw = float(bucket_width)
@@ -83,7 +85,8 @@ def exclusive_key_prefix(
     return (
         bkt.withColumn("__in", F.coalesce(F.sum(sum_col).over(w_in), zero))
         .join(F.broadcast(boffs), F.col("__bkt").eqNullSafe(F.col("__bkt2")))
-        .select(key_col, (F.col("__boff") + F.col("__in")).alias(out_col))
+        .withColumn(out_col, F.col("__boff") + F.col("__in"))
+        .drop("__bkt", "__bkt2", "__boff", "__in")
     )
 
 
@@ -116,7 +119,7 @@ def global_running_sum(
             out_col,
             (F.sum(F.col(value_col).cast(DEC)).over(w_local) + F.col("__off")),
         )
-        .drop("__off")
+        .drop("__off", "__tot")
     )
 
 

@@ -61,7 +61,7 @@ def with_uid_by_order(
     return (
         df.join(F.broadcast(offsets), key_col)
         .withColumn(uid_col, F.row_number().over(w_local).cast("long") + F.col("__offset") - 1)
-        .drop("__offset")
+        .drop("__offset", "__cnt")
     )
 
 
@@ -96,7 +96,6 @@ def uid_range_filter(
     offsets = exclusive_key_prefix(
         counts, key_col, "__cnt", bucket_width=key_bucket_width, out_col="__offset"
     )
-    offc = offsets.join(counts, key_col)
     key_keep = F.lit(False)
     uid_keep = F.lit(False)
     for lo, hi in ranges:
@@ -105,7 +104,7 @@ def uid_range_filter(
             (F.col("__offset") < hi) & (F.col("__offset") + F.col("__cnt") > lo)
         )
         uid_keep = uid_keep | ((F.col(uid_col) >= lo) & (F.col(uid_col) < hi))
-    sel = offc.filter(key_keep).select(key_col, "__offset")
+    sel = offsets.filter(key_keep).select(key_col, "__offset")
     w_local = W.partitionBy(key_col).orderBy(*(tiebreak_cols or (key_col,)))
     return (
         df.join(F.broadcast(sel), key_col)

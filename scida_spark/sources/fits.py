@@ -6,13 +6,14 @@ a FITS BINTABLE record array becomes one column per field; record
 the record array become the lazy partitions. The reference marks its
 own FITS support WIP (io/_base.py:112).
 
-Spark mapping: the same split-planning framework as the HDF5/npy
-sources — (file, row-range) splits executed via ``mapInArrow``, each
-task opening the file with astropy and reading its row slice
-(memory-mapped: only the requested rows touch disk). astropy is not
-installed in this container, so the byte-reading kernel is gated; the
-pure-Python parts — BINTABLE TFORM parsing → Spark schema, row-count
-extraction from header cards, split planning — are real and tested.
+Spark mapping: a format adapter over the shared split layer
+(``sources/convert.py``) — (file, row-range) splits executed by the
+shared ``mapInArrow`` kernel, each task opening the file with astropy
+and reading its row slice (memory-mapped: only the requested rows touch
+disk). This module adds BINTABLE TFORM parsing → Spark schema, row
+counts from header cards, and the per-split record-array read. Without
+astropy the read is gated; the record-array shim (``fits_shim``) runs
+the same adapter in tests.
 """
 
 from __future__ import annotations
@@ -108,53 +109,9 @@ def _require_astropy():
             "FITS reading requires astropy, which is not installed in this "
             "environment. TFORM parsing (parse_tform), header→schema "
             "(schema_from_bintable_header) and split planning "
-            "(scida_spark.sources.hdf5.plan_splits) are importable and "
+            "(scida_spark.sources.convert.plan_splits) are importable and "
             "tested; install astropy to enable load_fits_dataset()."
         )
-
-
-def read_fits_splits(spark, path: str, hdu: int, splits, columns: list[str], schema,
-                     backend: str | None = None):
-    """Distributed BINTABLE read: one mapInArrow task per row-range split,
-    memmap per task (projection: only ``columns``). Planned over
-    ``spark.range`` like ``sources.hdf5.read_splits_arrow``: partition i
-    holds the id i of the split it reads."""
-    backend_name = backend or _FITS_BACKEND
-    if backend_name == "astropy.io.fits":
-        _require_astropy()
-    plan = [(s.row_start, s.row_stop, s.uid_start) for s in splits]
-    plan_df = spark.range(0, len(plan), 1, max(1, len(plan)))
-
-    fields_by_name = {f.name: f for f in schema.fields}
-
-    def read_one(iterator):
-        import numpy as np
-        import pyarrow as pa
-
-        from scida_spark.sources.convert import to_arrow_column
-        from scida_spark.sources.fits import _fits_module
-
-        fits = _fits_module(backend_name)
-        for batch in iterator:
-            for i in batch.column("id").to_pylist():
-                lo, hi, uid_start = plan[i]
-                with fits.open(path, memmap=True) as hdul:
-                    rec = hdul[hdu].data[lo:hi]
-                    data = {
-                        "uid": pa.array(np.arange(
-                            uid_start, uid_start + hi - lo, dtype=np.int64
-                        ))
-                    }
-                    for c in columns:
-                        # Cast to the DECLARED type: record arrays hold
-                        # 'S' bytes for 'A' columns and big-endian
-                        # numerics — raw Arrow conversion mistypes both.
-                        data[c] = to_arrow_column(
-                            np.asarray(rec[c]), fields_by_name[c]
-                        )
-                    yield pa.RecordBatch.from_pydict(data)
-
-    return plan_df.mapInArrow(read_one, schema)
 
 
 def load_fits_dataset(path: str, spark, hdu: int = 1, rows_per_split: int = 1 << 20,
@@ -169,14 +126,21 @@ def load_fits_dataset(path: str, spark, hdu: int = 1, rows_per_split: int = 1 <<
 
     from scida_spark.dataset import Dataset
     from scida_spark.fields import FieldContainer
-    from scida_spark.sources.hdf5 import plan_splits
+    from scida_spark.sources.convert import plan_splits, read_splits
     from scida_spark.units import UnitRegistry
 
     with fits_mod.open(path, memmap=True) as hdul:
         cards = dict(hdul[hdu].header)
-    schema, nrows, columns = schema_from_bintable_header(cards)
+    schema, nrows, _ = schema_from_bintable_header(cards)
+
+    def read_split(split, names):
+        with _fits_module(backend_name).open(path, memmap=True) as hdul:
+            rec = hdul[hdu].data[split.row_start:split.row_stop]
+            for c in names:
+                yield rec[c]
+
     splits = plan_splits([(path, nrows)], f"hdu{hdu}", rows_per_split)
-    df = read_fits_splits(spark, path, hdu, splits, columns, schema, backend=backend_name)
+    df = read_splits(spark, splits, schema, read_split)
     ureg = UnitRegistry()
     name = os.path.basename(path)
     root = FieldContainer(name=name)

@@ -1,26 +1,36 @@
-"""HDF5 source: split-planned distributed reader.
+"""HDF5 source: a format adapter over the shared split layer
+(``sources/convert.py``).
 
 The reference builds one lazy dask array per HDF5 dataset with
 ``da.from_array(h5py.Dataset, chunks=...)`` and merges ``prefix.N.hdf5``
 file series into a virtual HDF5 file (reference io/_base.py:172-264,
 :348-599, helpers_hdf5.py:165-359). Spark reads file lists natively, so
-the virtual-merge machinery dissolves; what remains — and is implemented
-here — is the *semantics*:
+the virtual-merge machinery dissolves; what remains is the *semantics*.
+This module holds the HDF5 half of it:
 
+  * series discovery: the natural-sorted ``.hdf5/.h5/.h5dir`` stores
+    of a path (:func:`series_stores`)
   * metadata walk → (path, shape, dtype) per dataset → StructType per
-    container (schema discovery, reference helpers_hdf5.py:55-135)
-  * per-file row counts → cumulative offsets → global ``uid``
-    (reference io/_base.py:734-750)
-  * split planning: (file, container, row_start, row_stop) tasks sized
-    by ``target_rows_per_split``, executed via ``mapInArrow`` so each
-    task reads its row range with h5py directly — the Spark analog of
-    "workers read HDF5 chunks directly" (docs/largedatasets.md:85)
-  * projection pushdown: only requested columns are read per split
-    (the custom-reader obligation from SURVEY §4 'column pruning')
+    container (schema discovery, reference helpers_hdf5.py:55-135);
+    a container missing from some files of the series contributes 0
+    rows for those files
+  * the per-split read: the requested datasets' row range, read with
+    the h5 backend inside the shared ``mapInArrow`` kernel
+    (``convert.read_splits``) — the Spark analog of "workers read HDF5
+    chunks directly" (docs/largedatasets.md:85)
 
-h5py is not installed in this container: :func:`plan_splits` and the
-schema walk are pure-Python and unit-tested against synthetic layouts;
-the actual byte-reading kernel raises ImportError with instructions.
+Per-file row counts → cumulative offsets → global ``uid`` and the split
+plan come from ``convert.plan_splits``. The reader does not prune
+splits: a uid filter runs over every split of the container (only the
+npy and zarr Data Sources prune).
+
+The backend is the NAME of a module exposing the h5py File API
+(``File(path, "r")`` → mapping of groups/datasets with .shape/.dtype and
+slice reads), passed as ``backend=``; the default is ``"h5py"``. Tests
+pass ``scida_spark.sources.h5_shim``, so the FULL read kernel — the
+exact code that runs with h5py — executes in CI against
+directory-backed stores. A module name (not object) because executors
+re-import it in each worker process.
 """
 
 from __future__ import annotations
@@ -35,25 +45,34 @@ try:
 except ImportError:
     HAS_H5PY = False
 
-# Pluggable backend: the name of a module exposing the h5py File API
-# (``File(path, "r")`` → mapping of groups/datasets with .shape/.dtype
-# and slice reads). Default "h5py"; tests inject
-# ``scida_spark.sources.h5_shim`` so the FULL read kernel — the exact
-# code that runs with h5py — executes in CI against directory-backed
-# stores. A module NAME (not object) because executors re-import it in
-# each worker process.
-_H5_BACKEND = "h5py"
-
-
-def set_h5_backend(module_name: str) -> None:
-    global _H5_BACKEND
-    _H5_BACKEND = module_name
+_H5_EXTS = (".hdf5", ".h5", ".h5dir")
 
 
 def _h5_module(name: str | None = None):
+    """The h5 backend module ``name`` (``None`` means h5py)."""
     import importlib
 
-    return importlib.import_module(name or _H5_BACKEND)
+    name = name or "h5py"
+    if name == "h5py":
+        _require_backend()
+    return importlib.import_module(name)
+
+
+def series_stores(path: str) -> list[str]:
+    """The stores of an HDF5 file series, in order: a directory's
+    natural-sorted ``.hdf5``/``.h5``/``.h5dir`` children (``.h5dir`` =
+    a directory acting as one shim file; reference io/_base.py:974-1045),
+    else ``[path]`` when the path itself has one of those extensions,
+    else ``[]`` (not HDF5-shaped)."""
+    from scida_spark.sources.convert import natural_sort_key
+
+    if os.path.isdir(path):
+        cand = sorted(
+            (e for e in os.listdir(path) if e.endswith(_H5_EXTS)), key=natural_sort_key
+        )
+        if cand:
+            return [os.path.join(path, e) for e in cand]
+    return [path] if path.rstrip("/").endswith(_H5_EXTS) else []
 
 
 @dataclass(frozen=True)
@@ -67,58 +86,15 @@ class DatasetInfo:
     dtype: str
 
 
-@dataclass(frozen=True)
-class Split:
-    file: str
-    container: str
-    row_start: int  # file-local
-    row_stop: int
-    uid_start: int  # global (cumulative across the file series)
-
-
-def plan_splits(
-    file_rows: list[tuple[str, int]], container: str, target_rows_per_split: int
-) -> list[Split]:
-    """Plan (file, row-range) splits with global uid bookkeeping.
-
-    ``file_rows`` = [(path, nrows), ...] in series order (numeric-sorted
-    file discovery, reference io/_base.py:974-1045). Replaces the
-    virtual-HDF5 concat: per-file counts → cumulative offsets.
-    """
-    splits: list[Split] = []
-    uid = 0
-    for path, nrows in file_rows:
-        start = 0
-        while start < nrows:
-            stop = min(start + target_rows_per_split, nrows)
-            splits.append(Split(path, container, start, stop, uid + start))
-            start = stop
-        uid += nrows
-    return splits
-
-
-def prune_splits_for_uid_range(
-    splits: list[Split], uid_lo: int, uid_hi: int
-) -> list[Split]:
-    """uid-range predicate → split pruning (SURVEY §4: the one
-    pushdown worth hand-writing — selector queries touch contiguous uid
-    ranges, so most splits are skipped without opening the file)."""
-    out = []
-    for s in splits:
-        n = s.row_stop - s.row_start
-        if s.uid_start < uid_hi and s.uid_start + n > uid_lo:
-            out.append(s)
-    return out
-
-
 def _require_backend():
-    if _H5_BACKEND == "h5py" and not HAS_H5PY:
+    if not HAS_H5PY:
         raise ImportError(
             "HDF5 reading requires h5py, which is not installed in this "
-            "environment. The split planner (plan_splits), uid/pruning "
-            "logic, AND the full read kernel are tested via the "
-            "h5_shim backend (set_h5_backend); install h5py to read "
-            "real HDF5 files with the identical code path."
+            "environment. The split planner (convert.plan_splits), "
+            "uid/pruning logic, AND the full read kernel are tested via "
+            'the h5_shim backend (backend="scida_spark.sources.h5_shim"); '
+            "install h5py to read real HDF5 files with the identical code "
+            "path."
         )
 
 
@@ -152,6 +128,21 @@ def _resolve_group(h5file, container: str):
     """Group lookup with the root spelled as ``""``/``"/"`` — flat
     stores (rockstar catalogs) keep their datasets at the file root."""
     return h5file if container in ("", "/") else h5file[container]
+
+
+def _containers(h5file) -> list[str]:
+    """One file's containers: its top-level groups, sorted, then ``""``
+    when 1-D/2-D datasets sit at the file root (flat stores — rockstar
+    catalogs — walked as the root pseudo-container)."""
+    keys = sorted(h5file.keys())
+    out = [k for k in keys if hasattr(h5file[k], "keys")]
+    if any(
+        not hasattr(h5file[k], "keys")
+        and len(getattr(h5file[k], "shape", ()) or ()) in (1, 2)
+        for k in keys
+    ):
+        out.append("")
+    return out
 
 
 def walk_container(
@@ -264,52 +255,28 @@ def reconcile_attrs(per_file: list[dict[str, dict]]) -> dict[str, dict]:
     return out
 
 
-def read_splits_arrow(spark, splits: list[Split], columns: list[str], schema,
+def read_splits_arrow(spark, splits, columns: list[str], schema,
                       backend: str | None = None):
-    """Distributed read: one task per split, mapInArrow each split to
-    Arrow batches read with the h5 backend (projection: only
-    ``columns``). The kernel body is identical for h5py and the tested
-    shim — only the imported module differs.
+    """Distributed read: one ``mapInArrow`` task per split
+    (``convert.read_splits``), each reading ``columns`` — a projection
+    of ``schema`` — from its row range with the h5 backend. The read is
+    identical for h5py and the tested shim; only the imported module
+    differs."""
+    from pyspark.sql.types import StructType
 
-    The plan is ``spark.range(0, n, 1, n)``: partition i holds the one
-    id i, and the kernel looks split i up in the list its closure
-    captured. Parallelizing the split rows instead would add a
-    pickled-RDD leaf stage and a round-robin Exchange to every read."""
-    backend_name = backend or _H5_BACKEND
-    if backend_name == "h5py":
-        _require_backend()
-    split_rows = [(s.file, s.container, s.row_start, s.row_stop, s.uid_start) for s in splits]
-    plan_df = spark.range(0, len(split_rows), 1, max(1, len(split_rows)))
+    from scida_spark.sources.convert import read_splits
 
-    fields_by_name = {f.name: f for f in schema.fields}
+    _h5_module(backend)  # fail at plan time if the backend is missing
+    projected = StructType([schema["uid"]] + [schema[c] for c in columns])
 
-    def read_one(iterator):
-        import numpy as np
-        import pyarrow as pa
+    def read_split(split, names):
+        _h5 = _h5_module(backend)
+        with _h5.File(split.file, "r") as fh:
+            grp = _resolve_group(fh, split.container)
+            for c in names:
+                yield grp[c][split.row_start:split.row_stop]
 
-        from scida_spark.sources.convert import to_arrow_column
-
-        _h5 = _h5_module(backend_name)
-        for batch in iterator:
-            for i in batch.column("id").to_pylist():
-                file, container, lo, hi, uid_start = split_rows[i]
-                with _h5.File(file, "r") as fh:
-                    grp = _resolve_group(fh, container)
-                    data = {
-                        "uid": pa.array(np.arange(
-                            uid_start, uid_start + hi - lo, dtype=np.int64
-                        ))
-                    }
-                    for c in columns:
-                        # Cast to the DECLARED type: on-disk data is
-                        # uint64 IDs / float32 coordinates etc., which
-                        # raw Arrow conversion rejects or mistypes.
-                        data[c] = to_arrow_column(
-                            np.asarray(grp[c][lo:hi]), fields_by_name[c]
-                        )
-                    yield pa.RecordBatch.from_pydict(data)
-
-    return plan_df.mapInArrow(read_one, schema)
+    return read_splits(spark, splits, projected, read_split)
 
 
 def load_hdf5_dataset(path: str, spark, rows_per_split: int = 1 << 20,
@@ -321,121 +288,70 @@ def load_hdf5_dataset(path: str, spark, rows_per_split: int = 1 << 20,
     are numeric-sorted and concatenated via uid bookkeeping
     (reference io/_base.py:974-1045 + virtual concat §2.1).
 
+    A series' containers are the union over its files: Arepo and Gadget
+    writers leave a ``PartTypeN`` group out of a file that holds none of
+    that type. A file without a container contributes 0 rows to it; the
+    schema and per-field attrs come from the first file that has it.
+
+    ``backend`` is the h5 backend module name (``None`` means h5py).
     ``units=False`` skips ALL unit attachment (curated unit files and
     per-field attrs alike — the reference's load(units=False) contract,
     docs/units.md); cosmology/simulation identification still runs."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        FloatType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from scida_spark.dataset import Dataset
     from scida_spark.fields import FieldContainer
+    from scida_spark.sources.convert import plan_splits, struct_schema
     from scida_spark.units import UnitRegistry
 
-    backend_name = backend or _H5_BACKEND
-    if backend_name == "h5py":
-        _require_backend()
-    _h5 = _h5_module(backend_name)
-    dtype_map = {
-        "float32": FloatType(), "float64": DoubleType(),
-        "int32": IntegerType(), "int64": LongType(),
-        "uint32": LongType(), "uint64": LongType(),
-    }
-    # Multi-file series: numeric-sorted *.hdf5/*.h5 children (".h5dir"
-    # = a directory acting as one shim file). A path that is itself one
-    # file (or shim store) stays a single-element list.
-    from scida_spark.sources.convert import natural_sort_key
-
-    files = [path]
-    if os.path.isdir(path):
-        cand = sorted(
-            (e for e in os.listdir(path) if e.endswith((".hdf5", ".h5", ".h5dir"))),
-            key=natural_sort_key,
-        )
-        if cand:
-            files = [os.path.join(path, e) for e in cand]
+    _h5 = _h5_module(backend)
+    files = series_stores(path) or [path]
     ureg = UnitRegistry()
     root = FieldContainer(name=os.path.basename(path.rstrip("/")))
-    # Containers discovered from the first file; per-file row counts per
-    # container accumulate into the global uid.
-    with _h5.File(files[0], "r") as fh:
-        containers = [k for k in sorted(fh.keys()) if hasattr(fh[k], "keys")]
-        # Flat stores (rockstar catalogs) keep 1-D/2-D datasets at the
-        # file root: walk them as the "" pseudo-container.
-        has_root_data = any(
-            not hasattr(fh[k], "keys")
-            and len(getattr(fh[k], "shape", ()) or ()) in (1, 2)
-            for k in fh.keys()
-        )
-    if has_root_data:
-        containers.append("")
-    # Attribute pass: per-file group attrs + 0-d datasets demoted to
-    # attrs, reconciled across the series (equal keeps one value,
-    # differing becomes the per-file list — reference
-    # helpers_hdf5.py:301-359).
+    # One pass over the series: per-file group attrs + 0-d datasets
+    # demoted to attrs, and each container's schema walk (with its
+    # per-field unit attrs) in the files that hold it.
     per_file_attrs: list[dict] = []
+    walks: dict[str, list[tuple[str, list[DatasetInfo], dict]]] = {}
     for f in files:
         with _h5.File(f, "r") as fh:
             d = collect_attrs(fh)
-            for cont_name in containers:
+            for cont_name in _containers(fh):
                 scalars: dict = {}
-                walk_container(fh, cont_name, attrs_out=scalars)
+                field_attrs: dict[str, dict] = {}
+                infos = walk_container(
+                    fh, cont_name, attrs_out=scalars,
+                    # per-field attrs only from the first file holding it
+                    field_attrs_out=None if cont_name in walks else field_attrs,
+                )
                 if scalars:
                     d.setdefault("/" + cont_name, {}).update(scalars)
+                if infos:
+                    walks.setdefault(cont_name, []).append((f, infos, field_attrs))
             per_file_attrs.append(d)
+    # Reconciled across the series: equal keeps one value, differing
+    # becomes the per-file list (reference helpers_hdf5.py:301-359).
     attrs = reconcile_attrs(per_file_attrs)
-    for cont_name in containers:
-        file_rows = []
-        infos = None
-        field_attrs: dict[str, dict] = {}
-        for f in files:
-            with _h5.File(f, "r") as fh:
-                ds_infos = walk_container(
-                    fh,
-                    cont_name,
-                    # Per-field unit attrs from the FIRST file of the
-                    # series (the reference reads them from the merged
-                    # virtual file, whose attrs come from file 0).
-                    field_attrs_out=field_attrs if f == files[0] else None,
+    for cont_name in sorted(walks, key=lambda c: (c == "", c)):
+        present = walks[cont_name]
+        _, infos, field_attrs = present[0]
+        rows: dict[str, int] = {}
+        for f, ds_infos, _ in present:
+            # All datasets of a container must share the leading dim
+            # (clear error at load time, not an opaque executor crash;
+            # mirrors npy/zarr discovery validation).
+            if len({i.rows for i in ds_infos}) > 1:
+                raise ValueError(
+                    f"{f}:{cont_name}: datasets disagree on rows: "
+                    + ", ".join(f"{i.name}={i.rows}" for i in ds_infos)
                 )
-                # All datasets of a container must share the leading dim
-                # (clear error at load time, not an opaque executor
-                # crash; mirrors npy/zarr discovery validation).
-                rowset = {i.rows for i in ds_infos}
-                if len(rowset) > 1:
-                    raise ValueError(
-                        f"{f}:{cont_name}: datasets disagree on rows: "
-                        + ", ".join(f"{i.name}={i.rows}" for i in ds_infos)
-                    )
-                if infos is None:
-                    infos = ds_infos
-                elif {i.name for i in ds_infos} != {i.name for i in infos}:
-                    raise ValueError(
-                        f"{f}:{cont_name}: dataset names differ from the "
-                        f"first file of the series"
-                    )
-                file_rows.append((f, ds_infos[0].rows if ds_infos else 0))
-        if not infos:
-            continue
-        fields = [StructField("uid", LongType(), False)]
-        cols = []
-        for info in infos:
-            t = dtype_map.get(info.dtype)
-            if t is None:
-                continue  # skip unsupported (reference io/_base.py:706-714)
-            fields.append(
-                StructField(info.name, ArrayType(t, False) if info.width > 1 else t, False)
-            )
-            cols.append(info.name)
-        schema = StructType(fields)
-        splits = plan_splits(file_rows, cont_name, rows_per_split)
-        df = read_splits_arrow(spark, splits, cols, schema, backend=backend_name)
+            if {i.name for i in ds_infos} != {i.name for i in infos}:
+                raise ValueError(
+                    f"{f}:{cont_name}: dataset names differ from the "
+                    f"first file of the series that holds the container"
+                )
+            rows[f] = ds_infos[0].rows
+        schema = struct_schema((i.name, i.width, i.dtype) for i in infos)
+        splits = plan_splits([(f, rows.get(f, 0)) for f in files], cont_name, rows_per_split)
+        df = read_splits_arrow(spark, splits, schema.fieldNames()[1:], schema, backend=backend)
         # Root-level datasets surface under a named container: "halos"
         # for rockstar catalogs (their rows ARE halos), "data" otherwise.
         display = cont_name or ("halos" if family == "rockstar" else "data")

@@ -1,8 +1,8 @@
-"""npy-dir source: a complete Spark 4 Python Data Source for directories
-of ``.npy`` arrays — the runnable exemplar of the engine's custom-source
-framework (HDF5/Zarr/FITS share the same split-planning semantics but
-are gated on libraries absent from this container; numpy is installed,
-so this source runs end-to-end and is fully tested).
+"""npy-dir source: a Spark 4 Python Data Source for directories of
+``.npy`` arrays. It is a format adapter over the shared split layer
+(``sources/convert.py``): this module discovers the schema from the
+numpy headers and reads a field's row range; split planning, uid
+pushdown and the Arrow read come from ``RowRangeReader``.
 
 Layout: ``<dir>/<field>.npy`` — one C-order array per field, all sharing
 the leading dimension (the container row count), mirroring the
@@ -37,28 +37,12 @@ Usage::
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.datasource import DataSource
+from pyspark.sql.types import StructType
 
-_DTYPE_MAP = {
-    "float32": FloatType(),
-    "float64": DoubleType(),
-    "int32": IntegerType(),
-    "int64": LongType(),
-    "uint32": LongType(),  # widen unsigned (reference coerces oddballs up,
-    "uint64": LongType(),  # helpers_hdf5.py:36-47)
-}
+from scida_spark.sources.convert import RowRangeReader, spark_type, struct_schema
 
 
 def read_npy_header(path: str) -> tuple[tuple[int, ...], str]:
@@ -77,8 +61,7 @@ def discover_schema(path: str) -> tuple[StructType, int, list[str]]:
     Unsupported dtypes are skipped, matching the reference's policy for
     vlen/void columns (io/_base.py:706-714, io/fits.py:49-52).
     """
-    fields: list[StructField] = [StructField("uid", LongType(), False)]
-    names: list[str] = []
+    columns: list[tuple[str, int, str]] = []
     nrows: int | None = None
     for entry in sorted(os.listdir(path)):
         # Skip hidden/tmp files (same convention Spark's file sources
@@ -86,9 +69,8 @@ def discover_schema(path: str) -> tuple[StructType, int, list[str]]:
         # `.field.tmp.npy` in-place before os.replace.
         if not entry.endswith(".npy") or entry.startswith((".", "_")):
             continue
-        name = entry[: -len(".npy")]
         shape, dtype = read_npy_header(os.path.join(path, entry))
-        if dtype not in _DTYPE_MAP or len(shape) > 2:
+        if spark_type(dtype) is None or len(shape) > 2:
             continue
         if nrows is None:
             nrows = shape[0]
@@ -96,21 +78,10 @@ def discover_schema(path: str) -> tuple[StructType, int, list[str]]:
             raise ValueError(
                 f"{entry}: leading dim {shape[0]} != container rows {nrows}"
             )
-        t = _DTYPE_MAP[dtype]
-        if len(shape) == 2:
-            fields.append(StructField(name, ArrayType(t, False), False))
-        else:
-            fields.append(StructField(name, t, False))
-        names.append(name)
+        columns.append((entry[: -len(".npy")], shape[1] if len(shape) == 2 else 1, dtype))
     if nrows is None:
         raise ValueError(f"no readable .npy arrays under {path}")
-    return StructType(fields), nrows, names
-
-
-@dataclass
-class RowRange(InputPartition):
-    start: int  # global row / uid
-    stop: int
+    return struct_schema(columns), nrows, [c[0] for c in columns]
 
 
 class NpyDataSource(DataSource):
@@ -127,55 +98,16 @@ class NpyDataSource(DataSource):
                          int(self.options.get("rows_per_split", 1 << 20)))
 
 
-class NpyReader(DataSourceReader):
+class NpyReader(RowRangeReader):
     def __init__(self, path: str, schema: StructType, rows_per_split: int):
         self.path = path
         self.schema = schema
         self.rows_per_split = max(1, rows_per_split)
         _, self.nrows, _ = discover_schema(path)
-        # uid bounds narrowed by pushed filters (split pruning).
-        self._uid_lo = 0
-        self._uid_hi = self.nrows
 
-    def pushFilters(self, filters):  # noqa: N802 (Spark API name)
-        # Prune-only: every filter is yielded back for Spark to
-        # re-apply, so correctness never depends on this path.
-        from scida_spark.sources.convert import narrow_uid_bounds
-
-        kept, self._uid_lo, self._uid_hi = narrow_uid_bounds(
-            filters, self._uid_lo, self._uid_hi
-        )
-        yield from kept
-
-    def partitions(self):
-        lo = (self._uid_lo // self.rows_per_split) * self.rows_per_split
-        out = []
-        start = lo
-        while start < self._uid_hi:
-            stop = min(start + self.rows_per_split, self.nrows)
-            out.append(RowRange(start, stop))
-            start = stop
-        return out or [RowRange(0, 0)]
-
-    def read(self, partition: RowRange):
-        import pyarrow as pa
-
-        from scida_spark.sources.convert import to_arrow_column
-
-        lo, hi = partition.start, partition.stop
-        if hi <= lo:
-            return
-        cols: dict[str, object] = {}
-        for field in self.schema.fields:
-            if field.name == "uid":
-                cols["uid"] = pa.array(np.arange(lo, hi, dtype=np.int64))
-                continue
-            # Memory-map → only the requested row range touches disk;
-            # convert to the DECLARED Arrow type (unsigned ints widen).
-            arr = np.load(os.path.join(self.path, field.name + ".npy"),
-                          mmap_mode="r")[lo:hi]
-            cols[field.name] = to_arrow_column(arr, field)
-        yield pa.RecordBatch.from_pydict(cols)
+    def read_rows(self, name: str, lo: int, hi: int) -> np.ndarray:
+        # Memory-map → only the requested row range touches disk.
+        return np.load(os.path.join(self.path, name + ".npy"), mmap_mode="r")[lo:hi]
 
 
 def register(spark) -> None:

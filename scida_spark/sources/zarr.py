@@ -9,15 +9,13 @@ filters) covers the scientific-array use the reference reads zarr for
 (reference io/_base.py:267-345); anything fancier (blosc, filters,
 F-order) raises with a clear message rather than mis-reading.
 
-Same architecture as sources/npy.py (the Spark 4 Python Data Source):
+Like sources/npy.py, a format adapter over the shared Data Source
+reader (``sources/convert.py::RowRangeReader``, which brings the global
+``uid``, uid pushdown → split pruning and the Arrow read). This module
+adds:
   * schema discovery from metadata only (.zarray JSON — no data I/O)
-  * chunk-grid-aligned row-range partitions (chunk ≙ input split;
-    each task decompresses only the chunks overlapping its range)
-  * global ``uid`` injection from split bookkeeping
-  * uid-range filter pushdown → split pruning (I/O only; Spark
-    re-applies the filters, so results can never change)
-  * column projection: only fields in the schema Spark hands the
-    reader are opened
+  * chunk-grid-aligned splits (chunk ≙ input split; each task
+    decompresses only the chunks overlapping its range)
 
 A matching minimal writer (:func:`write_zarr_array`) exists so tests
 exercise the full path end-to-end.
@@ -32,25 +30,13 @@ import zlib
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.datasource import DataSource
+from pyspark.sql.types import StructType
 
-_DTYPE_MAP = {
-    "<f4": (FloatType(), np.dtype("<f4")),
-    "<f8": (DoubleType(), np.dtype("<f8")),
-    "<i4": (IntegerType(), np.dtype("<i4")),
-    "<i8": (LongType(), np.dtype("<i8")),
-    "<u4": (LongType(), np.dtype("<u4")),  # widened (reference coerces
-    "<u8": (LongType(), np.dtype("<u8")),  # oddballs up, helpers_hdf5.py:36-47)
-}
+from scida_spark.sources.convert import RowRangeReader, struct_schema
+
+# Little-endian numeric zarr dtypes (each also a numpy dtype string).
+_ZARR_DTYPES = ("<f4", "<f8", "<i4", "<i8", "<u4", "<u8")
 
 _SUPPORTED_COMPRESSORS = (None, "zlib", "gzip")
 
@@ -81,7 +67,7 @@ def read_zarray_meta(array_dir: str) -> ZarrArrayMeta:
         raise ValueError(
             f"{array_dir}: compressor {comp_id!r} unsupported (null/zlib/gzip only)"
         )
-    if z["dtype"] not in _DTYPE_MAP:
+    if z["dtype"] not in _ZARR_DTYPES:
         raise ValueError(f"{array_dir}: dtype {z['dtype']!r} unsupported")
     # Only row-chunked 2-D arrays: a second chunk axis would mean
     # multiple files per row chunk ("i.j" grid) — reject rather than
@@ -118,7 +104,7 @@ def read_zarr_rows(meta: ZarrArrayMeta, lo: int, hi: int) -> np.ndarray:
     """Rows [lo, hi) of a 1-D/2-D zarr array: open only the overlapping
     chunk files, decompress, assemble, slice. Missing chunk file →
     fill_value (zarr semantics for never-written chunks)."""
-    np_dtype = _DTYPE_MAP[meta.dtype][1]
+    np_dtype = np.dtype(meta.dtype)
     crows = meta.chunks[0]
     width = meta.shape[1] if len(meta.shape) == 2 else None
     c0, c1 = lo // crows, (hi - 1) // crows
@@ -146,7 +132,6 @@ def read_zarr_rows(meta: ZarrArrayMeta, lo: int, hi: int) -> np.ndarray:
 def discover_zarr_container(path: str) -> tuple[StructType, int, list[ZarrArrayMeta]]:
     """All arrays directly under ``path`` sharing the leading dim →
     (schema incl. uid, nrows, metas). Metadata-only."""
-    fields = [StructField("uid", LongType(), False)]
     metas: list[ZarrArrayMeta] = []
     nrows: int | None = None
     for entry in sorted(os.listdir(path)):
@@ -160,21 +145,13 @@ def discover_zarr_container(path: str) -> tuple[StructType, int, list[ZarrArrayM
             nrows = m.shape[0]
         elif m.shape[0] != nrows:
             raise ValueError(f"{entry}: leading dim {m.shape[0]} != {nrows}")
-        t = _DTYPE_MAP[m.dtype][0]
-        if len(m.shape) == 2:
-            fields.append(StructField(m.name, ArrayType(t, False), False))
-        else:
-            fields.append(StructField(m.name, t, False))
         metas.append(m)
     if nrows is None:
         raise ValueError(f"no zarr arrays under {path}")
-    return StructType(fields), nrows, metas
-
-
-@dataclass
-class ZarrRowRange(InputPartition):
-    start: int
-    stop: int
+    schema = struct_schema(
+        (m.name, m.shape[1] if len(m.shape) == 2 else 1, m.dtype) for m in metas
+    )
+    return schema, nrows, metas
 
 
 class ZarrDataSource(DataSource):
@@ -191,9 +168,8 @@ class ZarrDataSource(DataSource):
                           int(self.options.get("chunks_per_split", 8)))
 
 
-class ZarrReader(DataSourceReader):
+class ZarrReader(RowRangeReader):
     def __init__(self, path: str, schema: StructType, chunks_per_split: int):
-        self.path = path
         self.schema = schema
         _, self.nrows, metas = discover_zarr_container(path)
         self.metas = {m.name: m for m in metas}
@@ -201,44 +177,9 @@ class ZarrReader(DataSourceReader):
         # never re-reads a chunk another task also needs.
         max_chunk = max(m.chunks[0] for m in metas)
         self.rows_per_split = max_chunk * max(1, chunks_per_split)
-        self._uid_lo = 0
-        self._uid_hi = self.nrows
 
-    def pushFilters(self, filters):  # noqa: N802 (Spark API name)
-        # Prune-only: every filter is yielded back for Spark to re-apply.
-        from scida_spark.sources.convert import narrow_uid_bounds
-
-        kept, self._uid_lo, self._uid_hi = narrow_uid_bounds(
-            filters, self._uid_lo, self._uid_hi
-        )
-        yield from kept
-
-    def partitions(self):
-        lo = (self._uid_lo // self.rows_per_split) * self.rows_per_split
-        out = []
-        start = lo
-        while start < self._uid_hi:
-            stop = min(start + self.rows_per_split, self.nrows)
-            out.append(ZarrRowRange(start, stop))
-            start = stop
-        return out or [ZarrRowRange(0, 0)]
-
-    def read(self, partition: ZarrRowRange):
-        import pyarrow as pa
-
-        from scida_spark.sources.convert import to_arrow_column
-
-        lo, hi = partition.start, partition.stop
-        if hi <= lo:
-            return
-        cols: dict[str, object] = {}
-        for field in self.schema.fields:
-            if field.name == "uid":
-                cols["uid"] = pa.array(np.arange(lo, hi, dtype=np.int64))
-                continue
-            arr = read_zarr_rows(self.metas[field.name], lo, hi)
-            cols[field.name] = to_arrow_column(arr, field)
-        yield pa.RecordBatch.from_pydict(cols)
+    def read_rows(self, name: str, lo: int, hi: int) -> np.ndarray:
+        return read_zarr_rows(self.metas[name], lo, hi)
 
 
 def register(spark) -> None:
@@ -256,8 +197,8 @@ def write_zarr_array(
     """Minimal zarr v2 writer (tests + the save path's zarr option)."""
     os.makedirs(array_dir, exist_ok=True)
     dt = data.dtype.newbyteorder("<")
-    zdtype = {v[1]: k for k, v in _DTYPE_MAP.items()}.get(np.dtype(dt))
-    if zdtype is None:
+    zdtype = np.dtype(dt).str
+    if zdtype not in _ZARR_DTYPES:
         raise ValueError(f"unsupported dtype {data.dtype}")
     shape = list(data.shape)
     chunk_shape = [chunks] + shape[1:]

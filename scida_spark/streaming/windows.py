@@ -6,8 +6,7 @@ semantics are oracle-checked in queries_pipeline.py (same F.window
 calls on the bounded table).
 
 Scale posture: watermark bounds state size (state per open window per
-key only); sliding windows share state via Spark's native window
-exploding; session windows use the built-in ``session_window`` operator
+key only); session windows use the built-in ``session_window`` operator
 (state merges adjacent sessions under the gap).
 """
 
@@ -49,22 +48,6 @@ def tumbling_counts(
             "n",
             "sum_value",
         )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    events = ensure_event_time(events, ts_col)
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-        .select(F.col("window.start").alias("window_start"), "n", "sum_value")
     )
 
 

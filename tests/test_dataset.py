@@ -111,7 +111,8 @@ def test_info_surfaces(spark, snapshot_dir, tmp_path, capsys):
 
 
 def test_hdf5_gated(spark, tmp_path):
-    from scida_spark.sources.hdf5 import HAS_H5PY, plan_splits, prune_splits_for_uid_range
+    from scida_spark.sources.convert import plan_splits, prune_splits_for_uid_range
+    from scida_spark.sources.hdf5 import HAS_H5PY
 
     # split planning is pure-Python and always available
     splits = plan_splits([("a.0.hdf5", 100), ("a.1.hdf5", 50)], "PartType0", 40)

@@ -10,7 +10,7 @@ from scida_spark.sources.fits import (
     parse_tform,
     schema_from_bintable_header,
 )
-from scida_spark.sources.hdf5 import plan_splits, prune_splits_for_uid_range
+from scida_spark.sources.convert import plan_splits, prune_splits_for_uid_range
 
 
 def test_parse_tform():

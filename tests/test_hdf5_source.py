@@ -8,9 +8,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from scida_spark.sources.convert import plan_splits
 from scida_spark.sources.hdf5 import (
     load_hdf5_dataset,
-    plan_splits,
     read_splits_arrow,
     walk_container,
 )
@@ -78,6 +78,37 @@ def test_multi_file_series_concat_uid(spark, tmp_path):
     assert rows[119].Masses == pytest.approx(ref[119])
     assert rows[120].Masses == pytest.approx(ref[120])
     assert rows[249].Masses == pytest.approx(ref[249])
+
+
+def _two_file_series(tmp_path, pt1_in):
+    """A 2-file series (120 + 80 PartType0 rows) whose PartType1 group
+    exists only in the files listed in ``pt1_in``, the way Arepo and
+    Gadget writers leave out a type a file holds no particles of."""
+    series = tmp_path / "series"
+    series.mkdir()
+    for i, n in enumerate([120, 80]):
+        _make_snapshot(series / f"snap.{i}.h5dir", n, 30 + i, with_pt1=i in pt1_in)
+    return series
+
+
+def test_series_container_missing_from_later_file(spark, tmp_path):
+    series = _two_file_series(tmp_path, pt1_in={0})
+    ds = load_hdf5_dataset(str(series), spark, rows_per_split=32, backend=SHIM)
+    assert ds["PartType0"].df.count() == 200
+    pt1 = ds["PartType1"].df.orderBy("uid").collect()
+    assert [r.uid for r in pt1] == list(range(60))
+    assert all(r.Masses == 0.5 for r in pt1)
+
+
+def test_series_container_missing_from_first_file(spark, tmp_path):
+    series = _two_file_series(tmp_path, pt1_in={1})
+    ds = load_hdf5_dataset(str(series), spark, rows_per_split=32, backend=SHIM)
+    assert list(ds.keys())[:2] == ["PartType0", "PartType1"]
+    pt1 = ds["PartType1"].df.orderBy("uid").collect()
+    assert [r.uid for r in pt1] == list(range(40))
+    assert all(r.Masses == 0.5 for r in pt1)
+    pt0 = ds["PartType0"].df.orderBy("uid").collect()
+    assert [r.uid for r in pt0] == list(range(200))
 
 
 def test_split_count_invariance(spark, tmp_path):

@@ -7,7 +7,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from scida_spark.sources.hdf5 import plan_splits, prune_splits_for_uid_range
+from scida_spark.sources.convert import plan_splits, prune_splits_for_uid_range
 from scida_spark.units import Unit, UnitRegistry
 
 
