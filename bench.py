@@ -26,62 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 RUNS = 5
 
-# r15 note (optimization round): four MORE slots joined the r14
-# plan-memoization protocol — text_train_eval_split,
-# multimodal_features, stream_batch_windows, scida_groupid_assign —
-# so their medians, like the r14 four, now measure serve steady state
-# (sample 1 pays construction + lazy-checkpoint materialization; the
-# per-call construction these slots used to re-pay every sample was
-# 0.7-2.5 s of driver-side Python + eager stats collects, constant in
-# data size). Cross-round comparability: r14 medians for these four
-# include per-sample reconstruction, r15 medians do not.
-# r14 note: the four big composite slots (sim_topk,
-# dedup_signature_pairs, sketch_distinct_rollup, text_quality_lang)
-# now MEMOIZE their constructed DataFrame per (session, sf_dir,
-# content fingerprint) — r13 VERDICT #1: sim_topk's 24-branch union
-# alone cost ~10k py4j round trips ≈ 9-14 s of driver-side Python per
-# call, ~60% of the recorded sf0.1 median and constant in data size.
-# A serving tier constructs a plan once and executes it many times;
-# the 5 bench samples now measure exactly that steady state (sample 1
-# pays construction + lazy-checkpoint materialization; the median
-# reports serve). Cross-round comparability: r13 slot medians include
-# per-sample reconstruction, r14 medians do not — compare __construct
-# (one-time) + per-section marginals instead. Three slots also gained
-# sections this round: sim_topk rm3/rm3s now apply the _RM3_MAXDF
-# expansion ceiling, dedup_signature_pairs gained `esub`
-# (exact-substring dedup), text_quality_lang gained `domcap`
-# (per-registered-domain quota cap).
-# r9-s3 note: five HEADLINE slots gained attested sections —
-# sim_topk (+knn vote, +hardneg mining, +query-likelihood, +RRF
-# fusion: four new value-checked rankers/sections), sketch_distinct_
-# rollup (+cms Count-Min family), text_train_eval_split
-# (+cluster_split leakage-safe assignment, +in_dsir importance
-# selection), text_quality_lang (+lm2_nll bigram LM, +ccnet
-# perplexity buckets), dedup_cc_clusters (+pr_rep fixed-point
-# PageRank canonicalization), and q_corr_stats gained the
-# median/MAD/outlier robust-statistics columns — r8-to-r9 slot totals
-# are therefore not 1:1; compare per-section sub-dicts.
-# r8 note: three HEADLINE slots gained attested sections this round —
-# dedup_signature_pairs (+fuzzy edit-distance pairs),
-# sketch_distinct_rollup (+streaming incremental-rollup equivalence,
-# which re-feeds events through 3 real micro-batches),
-# text_train_eval_split (+in_pareto quality-score keep, adding a text
-# scan) — so their r7-to-r8 slot totals are not 1:1; the per-section
-# sub-dict this bench now emits is the comparable unit.
-# r7 note: several entries are CONSOLIDATED registry slots (the r6
-# names live on as halves of a union query): q_top3_per_order →
-# q_topn, scida_histogram2d → scida_histograms, stream_session_windows
-# + stream_window_counts → stream_batch_windows, scida_groupid_
-# searchsorted → scida_groupid_assign, scida_grouped_fluent →
-# scida_grouped, sim_cosine_topk → sim_topk (now also runs both ANN
-# paths + recall certification AND the BM25 full-text section),
-# dedup_signature_pairs now also runs the exact-pairs baseline for its
-# recall certification, text_train_eval_split now also computes the
-# exact-quota stratified flag (one added stratum-key shuffle),
-# sketch_distinct_rollup now also runs the dataset-card facet section
-# (a grouping-sets documents scan + its rank-contract check) —
-# r6-to-r7 per-query timings are therefore not 1:1 comparable for
-# those slots.
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -198,6 +142,17 @@ def _section_timings(spark, reg, sf_dir, names, errors):
     return out
 
 
+def write_side_file(side: dict, path: str) -> None:
+    """Write the attribution side file. Attribution is best-effort: a
+    value JSON cannot encode or an unwritable path is dropped, so the
+    contract line still prints."""
+    try:
+        with open(path, "w") as fh:
+            json.dump(side, fh, indent=1)
+    except (OSError, TypeError, ValueError):
+        pass
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from scida_spark.session import get_spark
@@ -276,14 +231,12 @@ def main() -> None:
         # attribution only; medians in "queries" remain the headline.
         "sections": sections,
     }
-    try:
-        side_path = os.path.join(
+    write_side_file(
+        side,
+        os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_SECTIONS.json"
-        )
-        with open(side_path, "w") as fh:
-            json.dump(side, fh, indent=1)
-    except (OSError, TypeError, ValueError):
-        pass  # attribution is best-effort; never break the bench line
+        ),
+    )
     # Key order matters: the driver's capture keeps the TAIL of the
     # line when it overflows its window (BENCH_r09 lost the first 13
     # medians this way), so the headline "queries" dict is emitted

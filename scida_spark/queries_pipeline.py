@@ -6,6 +6,8 @@ additionally pytest-verified against exact ground truth.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -14,8 +16,10 @@ from scida_spark.functions import multimodal as M
 from scida_spark.functions import similarity as SIM
 from scida_spark.functions import text as TX
 from scida_spark.queries import DEC, dsum, query
-from scida_spark.tables import table
+from scida_spark.tables import table, table_fingerprint
 from scida_spark.session import local_df
+from scida_spark.streaming import storefs
+from scida_spark.streaming.storekit import write_batch_files
 
 
 def _parquet_rows(sf_dir: str, name: str = "embeddings") -> int | None:
@@ -23,8 +27,6 @@ def _parquet_rows(sf_dir: str, name: str = "embeddings") -> int | None:
     catalog would provide at scale, so sizing heuristics (auto_nbits)
     don't need a Spark count job. None if the footer isn't readable
     (callers fall back to counting)."""
-    import os
-
     import pyarrow.parquet as pq
 
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
@@ -45,8 +47,6 @@ def _parquet_col_max(sf_dir: str, name: str, col: str) -> int | None:
     column stats" a real deployment keeps, so sizing/splitting
     heuristics don't need a Spark max() job. None if any row group
     lacks the stat (callers fall back to an aggregate)."""
-    import os
-
     import pyarrow.parquet as pq
 
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
@@ -75,53 +75,17 @@ def _parquet_col_max(sf_dir: str, name: str, col: str) -> int | None:
 
 
 def _events_stream_copy(spark, sf_dir: str) -> str:
-    """Stream-readable copy of the events table (normalized TIMESTAMP,
-    written once per (sf_dir, source-mtime)) — file-stream replay needs
-    a directory source; the cache key's mtime component invalidates the
-    copy when the driver regenerates testdata."""
-    import hashlib
-    import os
-    import tempfile
+    """Stream-readable copy of the events table (normalized TIMESTAMP)
+    — file-stream replay needs a directory source. A derived store
+    keyed by the events table's fingerprint."""
 
-    src = f"{sf_dir.rstrip('/')}/events.parquet"
-    try:
-        mtime = int(os.stat(src).st_mtime)
-    except OSError:
-        mtime = 0
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}|{mtime}".encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"scida_spark_evstream_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        table(spark, sf_dir, "events").write.mode("overwrite").parquet(path)
-    return path
+    def build(tmp):
+        table(spark, sf_dir, "events").write.parquet(os.path.join(tmp, "events"))
 
-
-def _corpus_fingerprint(sf_dir: str, name: str = "documents") -> str:
-    """Content key of a testdata table: md5 over the sorted
-    (relpath, size, mtime_ns) of its parquet file(s). Stat-only — no
-    data read — and invalidates whenever the driver regenerates the
-    table (the `_events_stream_copy` mtime convention, hardened for
-    multi-file tables)."""
-    import hashlib
-    import os
-
-    root = os.path.join(sf_dir, f"{name}.parquet")
-    parts = [os.path.abspath(root)]
-    try:
-        if os.path.isdir(root):
-            for dirpath, _dirs, files in os.walk(root):
-                for fn in files:
-                    p = os.path.join(dirpath, fn)
-                    st = os.stat(p)
-                    parts.append(
-                        f"{os.path.relpath(p, root)}:{st.st_size}:"
-                        f"{st.st_mtime_ns}"
-                    )
-        else:
-            st = os.stat(root)
-            parts.append(f".:{st.st_size}:{st.st_mtime_ns}")
-    except OSError:
-        parts.append("missing")
-    return hashlib.md5("\n".join(sorted(parts)).encode()).hexdigest()
+    path, _ = storefs.derived_store(
+        "evstream", {"events": table_fingerprint(sf_dir, "events")}, build
+    )
+    return os.path.join(path, "events")
 
 
 _INGEST_STATS_MEMO: dict = {}
@@ -136,7 +100,7 @@ def _ingest_stat(sf_dir: str, table_name: str, key: str, compute):
     naturally. Only small driver-side values (tuples / lists) are
     memoized — never DataFrames — so every query execution still runs
     the full distributed plan."""
-    k = (table_name, key, _corpus_fingerprint(sf_dir, table_name))
+    k = (table_name, key, table_fingerprint(sf_dir, table_name))
     if k not in _INGEST_STATS_MEMO:
         _INGEST_STATS_MEMO[k] = compute()
     return _INGEST_STATS_MEMO[k]
@@ -162,7 +126,6 @@ def _memo_slot(*tables: str):
     applicationId so a new SparkSession never sees plans bound to a
     stopped JVM context."""
     import functools
-    import os as _os
 
     def deco(fn):
         @functools.wraps(fn)
@@ -170,8 +133,8 @@ def _memo_slot(*tables: str):
             k = (
                 fn.__name__,
                 spark.sparkContext.applicationId,
-                _os.path.abspath(sf_dir),
-                tuple(_corpus_fingerprint(sf_dir, t) for t in tables),
+                os.path.abspath(sf_dir),
+                table_fingerprint(sf_dir, *tables),
             )
             if k not in _SLOT_DF_MEMO:
                 _SLOT_DF_MEMO[k] = fn(spark, sf_dir)
@@ -182,26 +145,26 @@ def _memo_slot(*tables: str):
     return deco
 
 
+def _id_thirds(col: str, hi: int) -> list:
+    """The three id-range batch conditions the cert streams replay:
+    ``<= hi//3``, ``<= 2*hi//3``, and the rest."""
+    c, c1, c2 = F.col(col), hi // 3, 2 * hi // 3
+    return [c <= c1, (c > c1) & (c <= c2), c > c2]
+
+
 def _postings_cert_store(spark, docs_dt, sf_dir: str, hi_doc_id: int):
-    """The streaming-retrieval-index attestation store, built ONCE per
-    (sf_dir, documents content) and reused across calls and processes
-    (r12, closes r11 VERDICT #1 — rebuilding a deterministic fixed
-    point 7× per bench run measured harness, not operators).
+    """The streaming-retrieval-index attestation store, a derived store
+    built ONCE per documents content and reused across calls and
+    processes (r12, closes r11 VERDICT #1 — rebuilding a deterministic
+    fixed point 7× per bench run measured harness, not operators).
 
     The one-time build is the full r11 attestation: the corpus split
     into 3 id-range batch files, ingested through a REAL availableNow
     file stream (maxFilesPerTrigger=1 → 3 genuine micro-batches) into
-    postings/doclen/stats partials, served PRE-compaction (rankings
+    postings/doclen/stats partials (plus the forward substore rm3s
+    serves feedback vectors from), served PRE-compaction (rankings
     saved to ``pre/`` as the attested fixed-point baseline), then
-    compacted. A ``_CERT_OK.json`` sentinel carrying the corpus
-    fingerprint commits the store; a stale or missing sentinel
-    triggers a clean rebuild. Returns ``(store_dir, pre_dir)``."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from scida_spark.streaming import storefs
+    compacted. Returns ``(store_dir, pre_dir)``."""
     from scida_spark.streaming.postings import (
         bm25_topk_from_store,
         compact_postings,
@@ -209,83 +172,48 @@ def _postings_cert_store(spark, docs_dt, sf_dir: str, hi_doc_id: int):
         ql_topk_from_store,
     )
 
-    fp = _corpus_fingerprint(sf_dir)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    pbase = os.path.join(tempfile.gettempdir(), f"ss_postidx_cert_{tag}")
-    sentinel = os.path.join(pbase, "_CERT_OK.json")
-    pstore = os.path.join(pbase, "store")
-    pre_dir = os.path.join(pbase, "pre")
-    if os.path.isfile(sentinel):
-        try:
-            _js = storefs.read_json(sentinel)
-            # "fwd" gates on the r13 forward-substore build — an older
-            # store without it cannot serve rm3s and must rebuild once
-            if _js.get("fingerprint") == fp and _js.get("fwd") is True:
-                return pstore, pre_dir
-        except Exception:
-            pass  # torn/stale sentinel → rebuild
-    shutil.rmtree(pbase, ignore_errors=True)
-    pinp = os.path.join(pbase, "input")
-    os.makedirs(pinp)
-    _c1, _c2 = hi_doc_id // 3, 2 * hi_doc_id // 3
-    for _k, _cond in enumerate(
-        [
-            F.col("doc_id") <= _c1,
-            (F.col("doc_id") > _c1) & (F.col("doc_id") <= _c2),
-            F.col("doc_id") > _c2,
-        ]
-    ):
-        _part = os.path.join(pbase, f"_stage{_k}")
-        docs_dt.filter(_cond).coalesce(1).write.mode("overwrite").parquet(_part)
-        _src = next(f for f in os.listdir(_part) if f.endswith(".parquet"))
-        os.rename(
-            os.path.join(_part, _src), os.path.join(pinp, f"b{_k}.parquet")
-        )
-        shutil.rmtree(_part)
-    pq_q = incremental_postings_ingest(
-        spark,
-        pinp,
-        docs_dt.schema,
-        store_dir=pstore,
-        checkpoint_dir=os.path.join(pbase, "ckpt"),
-        max_files_per_trigger=1,
-        with_forward=True,  # r13: rm3s serves feedback vectors from it
+    def build(base):
+        pstore = os.path.join(base, "store")
+        pre_dir = os.path.join(base, "pre")
+        pinp = os.path.join(base, "input")
+        write_batch_files(docs_dt, _id_thirds("doc_id", hi_doc_id), pinp)
+        incremental_postings_ingest(
+            spark,
+            pinp,
+            docs_dt.schema,
+            store_dir=pstore,
+            checkpoint_dir=os.path.join(base, "ckpt"),
+            max_files_per_trigger=1,
+            with_forward=True,  # r13: rm3s serves feedback vectors from it
+        ).awaitTermination()
+        _nb = len(storefs.list_batches(os.path.join(pstore, "postings")))
+        if _nb != 3:  # pragma: no cover - layout regression guard
+            raise AssertionError(
+                f"postings ingest: expected 3 micro-batch partials, got {_nb}"
+            )
+        # Pre-compaction serve, MATERIALIZED to parquet: compaction
+        # deletes the batch dirs this plan reads, and later processes
+        # diff their live post-compaction serve against exactly these
+        # saved rankings.
+        bm25_topk_from_store(
+            spark, pstore, _BM25_QUERIES, k=10, k1=_BM25_K1, b=_BM25_B
+        ).write.parquet(os.path.join(pre_dir, "bm25s"))
+        ql_topk_from_store(
+            spark, pstore, _BM25_QUERIES, k=10, mu=_QL_MU
+        ).write.parquet(os.path.join(pre_dir, "qls"))
+        compact_postings(spark, pstore)
+
+    base, _ = storefs.derived_store(
+        "postings", {"documents": table_fingerprint(sf_dir, "documents")}, build
     )
-    pq_q.awaitTermination()
-    _nb = len(
-        [
-            d
-            for d in os.listdir(os.path.join(pstore, "postings"))
-            if d.startswith("batch_id=")
-        ]
-    )
-    if _nb != 3:  # pragma: no cover - layout regression guard
-        raise AssertionError(
-            f"postings ingest: expected 3 micro-batch partials, got {_nb}"
-        )
-    # Pre-compaction serve, MATERIALIZED to parquet: compaction deletes
-    # the batch dirs this plan reads, and later processes diff their
-    # live post-compaction serve against exactly these saved rankings.
-    bm25_topk_from_store(
-        spark, pstore, _BM25_QUERIES, k=10, k1=_BM25_K1, b=_BM25_B
-    ).write.mode("overwrite").parquet(os.path.join(pre_dir, "bm25s"))
-    ql_topk_from_store(
-        spark, pstore, _BM25_QUERIES, k=10, mu=_QL_MU
-    ).write.mode("overwrite").parquet(os.path.join(pre_dir, "qls"))
-    compact_postings(spark, pstore)
-    # sentinel LAST (atomic tmp+rename) — a crash mid-build leaves no
-    # sentinel and the next call rebuilds from scratch
-    storefs.write_json_atomic(
-        sentinel, {"fingerprint": fp, "batches": 3, "fwd": True}
-    )
-    return pstore, pre_dir
+    return os.path.join(base, "store"), os.path.join(base, "pre")
 
 
 def _esub_cert_store(spark, esub_corpus, sf_dir: str, hi_doc_id: int):
     """The incremental exact-substring-index attestation store (r14)
     — the ``_postings_cert_store`` pattern applied to
-    :mod:`scida_spark.streaming.esubindex`: built ONCE per (sf_dir,
-    documents content) and reused across calls and processes.
+    :mod:`scida_spark.streaming.esubindex`: a derived store built ONCE
+    per documents content and reused across calls and processes.
 
     One-time build: the esub section corpus (documents + the 2^41
     planted excerpts), REP-COLLAPSED by the caller (r14 — exact dedup
@@ -296,85 +224,44 @@ def _esub_cert_store(spark, esub_corpus, sf_dir: str, hi_doc_id: int):
     the third — so the ingest's anchors-vs-history join provably fires
     on real cross-batch shares; ingested through a REAL availableNow
     file stream (maxFilesPerTrigger=1 → 3 genuine micro-batches of
-    map-only winnowing). A ``_CERT_OK.json`` sentinel carrying the
-    corpus fingerprint commits the store. Per call, serving is ONE
-    partial read + distinct (``read_esub_pairs``) — the driver oracle
-    then value-checks the served pair set against the direct
-    L-gram-join SQL, which certifies incremental == batch == SQL in
-    one row family."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from scida_spark.streaming import storefs
+    map-only winnowing). Per call, serving is ONE partial read +
+    distinct (``read_esub_pairs``) — the driver oracle then
+    value-checks the served pair set against the direct L-gram-join
+    SQL, which certifies incremental == batch == SQL in one row
+    family."""
     from scida_spark.streaming.esubindex import incremental_esub_ingest
 
-    fp = _corpus_fingerprint(sf_dir, "documents")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    ebase = os.path.join(tempfile.gettempdir(), f"ss_esubidx_cert_{tag}")
-    sentinel = os.path.join(ebase, "_CERT_OK.json")
-    estore = os.path.join(ebase, "store")
-    if os.path.isfile(sentinel):
-        try:
-            _js = storefs.read_json(sentinel)
-            # "grain" gates on the rep-collapsed ingest (r14): a store
-            # built over the raw corpus serves a different (expanded)
-            # pair grain and must rebuild once
-            if _js.get("fingerprint") == fp and _js.get("grain") == "reps":
-                return estore
-        except Exception:
-            pass  # torn/stale sentinel → rebuild
-    shutil.rmtree(ebase, ignore_errors=True)
-    einp = os.path.join(ebase, "input")
-    os.makedirs(einp)
-    _c1, _c2 = hi_doc_id // 3, 2 * hi_doc_id // 3
-    for _k, _cond in enumerate(
-        [
-            F.col("doc_id") <= _c1,
-            (F.col("doc_id") > _c1) & (F.col("doc_id") <= _c2),
-            F.col("doc_id") > _c2,  # includes every 2^41 planted doc
-        ]
-    ):
-        _part = os.path.join(ebase, f"_stage{_k}")
-        esub_corpus.filter(_cond).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(_part)
-        _src = next(f for f in os.listdir(_part) if f.endswith(".parquet"))
-        os.rename(
-            os.path.join(_part, _src), os.path.join(einp, f"b{_k}.parquet")
-        )
-        shutil.rmtree(_part)
-    eq = incremental_esub_ingest(
-        spark,
-        einp,
-        esub_corpus.schema,
-        index_dir=estore,
-        checkpoint_dir=os.path.join(ebase, "ckpt"),
-        min_len=_ESUB_L,
-        k=_ESUB_K,
+    def build(base):
+        estore = os.path.join(base, "store")
+        einp = os.path.join(base, "input")
+        # the last third includes every 2^41 planted doc
+        write_batch_files(esub_corpus, _id_thirds("doc_id", hi_doc_id), einp)
+        incremental_esub_ingest(
+            spark,
+            einp,
+            esub_corpus.schema,
+            index_dir=estore,
+            checkpoint_dir=os.path.join(base, "ckpt"),
+            min_len=_ESUB_L,
+            k=_ESUB_K,
+        ).awaitTermination()
+        _nb = len(storefs.list_batches(os.path.join(estore, "pairs")))
+        if _nb != 3:  # pragma: no cover - layout regression guard
+            raise AssertionError(
+                f"esub ingest: expected 3 micro-batch partials, got {_nb}"
+            )
+
+    base, _ = storefs.derived_store(
+        "esub", {"documents": table_fingerprint(sf_dir, "documents")}, build
     )
-    eq.awaitTermination()
-    _nb = len(
-        [
-            d
-            for d in os.listdir(os.path.join(estore, "pairs"))
-            if d.startswith("batch_id=")
-        ]
-    )
-    if _nb != 3:  # pragma: no cover - layout regression guard
-        raise AssertionError(
-            f"esub ingest: expected 3 micro-batch partials, got {_nb}"
-        )
-    storefs.write_json_atomic(sentinel, {"fingerprint": fp, "grain": "reps"})
-    return estore
+    return os.path.join(base, "store")
 
 
 def _vecindex_cert_store(spark, emb, sf_dir: str, n_vectors: int):
     """The streaming VECTOR-index attestation store (r13, the r12
     verdict's streaming-story item) — the ``_postings_cert_store``
-    pattern applied to ANN: built ONCE per (sf_dir, embeddings
-    content) and reused across calls and processes.
+    pattern applied to ANN: a derived store built ONCE per embeddings
+    content and reused across calls and processes.
 
     One-time build: train the IVF quantizer from the full corpus
     (deterministic seeded sample), create the store, split the
@@ -385,7 +272,7 @@ def _vecindex_cert_store(spark, emb, sf_dir: str, n_vectors: int):
 
     * ASSERT pre-delete serve == its batch twin
       (``ivf_topk(corpus, centroids=same)``) — a failure aborts
-      before the sentinel, so a bad store can never be reused;
+      before the store commits, so a bad store is never reused;
     * tombstone ``vec_id % 17 == 3`` (``delete_vectors`` — O(deletes)
       partials), ASSERT the masked serve == the batch twin over
       corpus-minus-deleted, and SAVE that twin to ``pre/batch_del``;
@@ -396,13 +283,7 @@ def _vecindex_cert_store(spark, emb, sf_dir: str, n_vectors: int):
     pre-compaction masked twin — the cross-process replay check, one
     serve + one diff per call. Returns ``(store_dir, pre_dir,
     nprobe)``."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from scida_spark.functions.similarity import auto_nprobe, build_ivf_index
-    from scida_spark.streaming import storefs
     from scida_spark.streaming.vecindex import (
         compact_vector_store,
         create_vector_store,
@@ -412,106 +293,74 @@ def _vecindex_cert_store(spark, emb, sf_dir: str, n_vectors: int):
         vector_store_meta,
     )
 
-    fp = _corpus_fingerprint(sf_dir, "embeddings")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    vbase = os.path.join(tempfile.gettempdir(), f"ss_vecidx_cert_{tag}")
-    sentinel = os.path.join(vbase, "_CERT_OK.json")
-    vstore = os.path.join(vbase, "store")
-    pre_dir = os.path.join(vbase, "pre")
-    if os.path.isfile(sentinel):
-        try:
-            meta = storefs.read_json(sentinel)
-            if meta.get("fingerprint") == fp:
-                return vstore, pre_dir, int(meta["nprobe"])
-        except Exception:
-            pass  # torn/stale sentinel → rebuild
-    shutil.rmtree(vbase, ignore_errors=True)
-    vinp = os.path.join(vbase, "input")
-    os.makedirs(vinp)
-    cent = build_ivf_index(emb, nlist=None, n_vectors=n_vectors)
-    nprobe = auto_nprobe(len(cent))
-    create_vector_store(spark, vstore, cent)
-    _vhi = _parquet_col_max(sf_dir, "embeddings", "vec_id")
-    if _vhi is None:
-        _vhi = emb.agg(F.max("vec_id")).first()[0]
-    _c1, _c2 = _vhi // 3, 2 * _vhi // 3
-    for _k, _cond in enumerate(
-        [
-            F.col("vec_id") <= _c1,
-            (F.col("vec_id") > _c1) & (F.col("vec_id") <= _c2),
-            F.col("vec_id") > _c2,
-        ]
-    ):
-        _part = os.path.join(vbase, f"_stage{_k}")
-        emb.select("vec_id", "embedding").filter(_cond).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(_part)
-        _src = next(f for f in os.listdir(_part) if f.endswith(".parquet"))
-        os.rename(
-            os.path.join(_part, _src), os.path.join(vinp, f"b{_k}.parquet")
+    def build(base):
+        vstore = os.path.join(base, "store")
+        pre_dir = os.path.join(base, "pre")
+        vinp = os.path.join(base, "input")
+        cent = build_ivf_index(emb, nlist=None, n_vectors=n_vectors)
+        nprobe = auto_nprobe(len(cent))
+        create_vector_store(spark, vstore, cent)
+        _vhi = _parquet_col_max(sf_dir, "embeddings", "vec_id")
+        if _vhi is None:
+            _vhi = emb.agg(F.max("vec_id")).first()[0]
+        vecs = emb.select("vec_id", "embedding")
+        write_batch_files(vecs, _id_thirds("vec_id", _vhi), vinp)
+        incremental_vector_ingest(
+            spark,
+            vinp,
+            vecs.schema,
+            store_dir=vstore,
+            checkpoint_dir=os.path.join(base, "ckpt"),
+            max_files_per_trigger=1,
+        ).awaitTermination()
+        _nb = len(storefs.list_batches(os.path.join(vstore, "vectors")))
+        if _nb != 3:  # pragma: no cover - layout regression guard
+            raise AssertionError(
+                f"vector ingest: expected 3 micro-batch partials, got {_nb}"
+            )
+        vmeta = vector_store_meta(vstore)
+        qv = emb.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
+        # Build-time equivalences, asserted BEFORE the store commits (a
+        # failure leaves no store → loud rebuild, never a silently bad
+        # store): pre-delete serve == batch twin, masked serve == batch
+        # twin over corpus-minus-deleted. The per-call check is then
+        # ONE live post-compaction serve against the saved masked twin
+        # — the cross-process replay leg, without re-diffing build-time
+        # parquet every call.
+        serve0 = ivf_topk_from_store(spark, vstore, qv, k=10, nprobe=nprobe)
+        batch0 = SIM.ivf_topk(emb, qv, k=10, centroids=cent, nprobe=nprobe)
+        _d0 = (
+            serve0.exceptAll(batch0).unionAll(batch0.exceptAll(serve0)).count()
         )
-        shutil.rmtree(_part)
-    vq = incremental_vector_ingest(
-        spark,
-        vinp,
-        emb.select("vec_id", "embedding").schema,
-        store_dir=vstore,
-        checkpoint_dir=os.path.join(vbase, "ckpt"),
-        max_files_per_trigger=1,
-    )
-    vq.awaitTermination()
-    _nb = len(
-        [
-            d
-            for d in os.listdir(os.path.join(vstore, "vectors"))
-            if d.startswith("batch_id=")
-        ]
-    )
-    if _nb != 3:  # pragma: no cover - layout regression guard
-        raise AssertionError(
-            f"vector ingest: expected 3 micro-batch partials, got {_nb}"
+        dead = emb.filter(F.col("vec_id") % 17 == 3).select("vec_id")
+        delete_vectors(spark, vstore, dead, batch_id=1000)
+        serve_del = ivf_topk_from_store(spark, vstore, qv, k=10, nprobe=nprobe)
+        SIM.ivf_topk(
+            emb.join(dead, "vec_id", "left_anti"),
+            qv,
+            k=10,
+            centroids=cent,
+            nprobe=nprobe,
+        ).write.parquet(os.path.join(pre_dir, "batch_del"))
+        batch_del = spark.read.parquet(os.path.join(pre_dir, "batch_del"))
+        _dd = (
+            serve_del.exceptAll(batch_del)
+            .unionAll(batch_del.exceptAll(serve_del))
+            .count()
         )
-    vmeta = vector_store_meta(vstore)
-    qv = emb.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
-    # Build-time equivalences, asserted BEFORE the sentinel commits
-    # (a failure leaves no sentinel → loud rebuild, never a silently
-    # bad store): pre-delete serve == batch twin, masked serve ==
-    # batch twin over corpus-minus-deleted. The per-call check is then
-    # ONE live post-compaction serve against the saved masked twin —
-    # the cross-process replay leg, without re-diffing build-time
-    # parquet every call.
-    serve0 = ivf_topk_from_store(spark, vstore, qv, k=10, nprobe=nprobe)
-    batch0 = SIM.ivf_topk(emb, qv, k=10, centroids=cent, nprobe=nprobe)
-    _d0 = (
-        serve0.exceptAll(batch0).unionAll(batch0.exceptAll(serve0)).count()
+        if _d0 or _dd:  # pragma: no cover - contract regression guard
+            raise AssertionError(
+                f"vecindex cert build: serve != batch (pre-delete diff "
+                f"{_d0}, masked diff {_dd})"
+            )
+        compact_vector_store(spark, vstore)
+        assert vmeta.get("n_lists") == len(cent)
+        return {"nprobe": int(nprobe)}
+
+    base, man = storefs.derived_store(
+        "vecindex", {"embeddings": table_fingerprint(sf_dir, "embeddings")}, build
     )
-    dead = emb.filter(F.col("vec_id") % 17 == 3).select("vec_id")
-    delete_vectors(spark, vstore, dead, batch_id=1000)
-    serve_del = ivf_topk_from_store(spark, vstore, qv, k=10, nprobe=nprobe)
-    SIM.ivf_topk(
-        emb.join(dead, "vec_id", "left_anti"),
-        qv,
-        k=10,
-        centroids=cent,
-        nprobe=nprobe,
-    ).write.mode("overwrite").parquet(os.path.join(pre_dir, "batch_del"))
-    batch_del = spark.read.parquet(os.path.join(pre_dir, "batch_del"))
-    _dd = (
-        serve_del.exceptAll(batch_del)
-        .unionAll(batch_del.exceptAll(serve_del))
-        .count()
-    )
-    if _d0 or _dd:  # pragma: no cover - contract regression guard
-        raise AssertionError(
-            f"vecindex cert build: serve != batch (pre-delete diff {_d0}, "
-            f"masked diff {_dd})"
-        )
-    compact_vector_store(spark, vstore)
-    assert vmeta.get("n_lists") == len(cent)
-    storefs.write_json_atomic(
-        sentinel, {"fingerprint": fp, "batches": 3, "nprobe": int(nprobe)}
-    )
-    return vstore, pre_dir, nprobe
+    return os.path.join(base, "store"), os.path.join(base, "pre"), man["nprobe"]
 
 
 _MEMSINK_SEQ = [0]
@@ -1254,8 +1103,8 @@ def dedup_signature_pairs(spark, sf_dir):
     # written entirely on storekit): 3 real availableNow micro-batches
     # with the planted excerpts landing in the LAST batch, so the
     # anchors-vs-history join provably fires on real cross-batch
-    # shares. The store build is a content-fingerprint-memoized
-    # fixed point (_esub_cert_store); the per-call serve is one pairs
+    # shares. The store build is a derived-store fixed point
+    # (_esub_cert_store); the per-call serve is one pairs
     # partial read + distinct. The oracle is the same direct
     # L-gram-join replay as esub, so one green row certifies
     # incremental == batch == SQL.
@@ -1954,49 +1803,22 @@ def stream_dedup_keys(spark, sf_dir):
     )
 
     # --- ingest (r8): streaming corpus ingest + persisted dedup index
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scida_spark.streaming.ingest import incremental_dedup_ingest
 
-    ibase = _os.path.join(
-        _tempfile.gettempdir(),
-        "ss_ingest_cert_" + _os.path.basename(sf_dir.rstrip("/")),
-    )
-    _shutil.rmtree(ibase, ignore_errors=True)
-    iinp = _os.path.join(ibase, "input")
-    icorpus = _os.path.join(ibase, "corpus")
-    _os.makedirs(iinp)
+    ibase = storefs.scratch("ingest")
+    iinp = os.path.join(ibase, "input")
+    icorpus = os.path.join(ibase, "corpus")
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     hi = docs.agg(F.max("doc_id")).first()[0]
-    cut1, cut2 = hi // 3, 2 * hi // 3
-    # Three id-range batch files written OLDEST-FIRST (the file stream
-    # orders by modification time; maxFilesPerTrigger=1 gives one
-    # batch per file) so "history" is exactly the lower id ranges.
-    for k, cond in enumerate(
-        [
-            F.col("doc_id") <= cut1,
-            (F.col("doc_id") > cut1) & (F.col("doc_id") <= cut2),
-            F.col("doc_id") > cut2,
-        ]
-    ):
-        part = _os.path.join(ibase, f"_stage{k}")
-        docs.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
-        src_file = next(
-            f for f in _os.listdir(part) if f.endswith(".parquet")
-        )
-        _os.rename(
-            _os.path.join(part, src_file), _os.path.join(iinp, f"b{k}.parquet")
-        )
-        _shutil.rmtree(part)
+    # "history" is exactly the lower id ranges
+    write_batch_files(docs, _id_thirds("doc_id", hi), iinp)
     iq = incremental_dedup_ingest(
         spark,
         iinp,
         docs.schema,
         corpus_dir=icorpus,
-        index_dir=_os.path.join(ibase, "index"),
-        checkpoint_dir=_os.path.join(ibase, "ckpt"),
+        index_dir=os.path.join(ibase, "index"),
+        checkpoint_dir=os.path.join(ibase, "ckpt"),
         id_col="doc_id",
         text_col="text",
         threshold=1.01,  # near-dup off: accepted set = exact-dedup SQL form
@@ -2027,7 +1849,7 @@ def stream_dedup_keys(spark, sf_dir):
         read_accepted_corpus,
     )
 
-    iindex = _os.path.join(ibase, "index")
+    iindex = os.path.join(ibase, "index")
     _dels = (
         spark.read.parquet(icorpus)
         .filter(F.col("doc_id") % 7 == 3)
@@ -2070,14 +1892,9 @@ def stream_dedup_keys(spark, sf_dir):
     # CC edges); twins doc_id%5==2 get ids ABOVE the last batch cut,
     # GUARANTEEING batch 3 verifies candidates against the persisted
     # band/shingle index (the cross-batch join under test).
-    i2base = _os.path.join(
-        _tempfile.gettempdir(),
-        "ss_ingest2_cert_" + _os.path.basename(sf_dir.rstrip("/")),
-    )
-    _shutil.rmtree(i2base, ignore_errors=True)
-    i2inp = _os.path.join(i2base, "input")
-    i2corpus = _os.path.join(i2base, "corpus")
-    _os.makedirs(i2inp)
+    i2base = storefs.scratch("ingest2")
+    i2inp = os.path.join(i2base, "input")
+    i2corpus = os.path.join(i2base, "corpus")
     derived = (
         docs.select((F.col("doc_id") * 2).alias("doc_id"), "text")
         .unionAll(
@@ -2095,31 +1912,14 @@ def stream_dedup_keys(spark, sf_dir):
     )
     n_xbatch_twins = docs.filter(F.col("doc_id") % 5 == 2).count()
     assert n_xbatch_twins > 0, "ingest2: no cross-batch twins planted"
-    hi2 = 3 * hi + 2
-    c1, c2 = hi2 // 3, 2 * hi2 // 3
-    for k, cond in enumerate(
-        [
-            F.col("doc_id") <= c1,
-            (F.col("doc_id") > c1) & (F.col("doc_id") <= c2),
-            F.col("doc_id") > c2,
-        ]
-    ):
-        part = _os.path.join(i2base, f"_stage{k}")
-        derived.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
-        src_file = next(
-            f for f in _os.listdir(part) if f.endswith(".parquet")
-        )
-        _os.rename(
-            _os.path.join(part, src_file), _os.path.join(i2inp, f"b{k}.parquet")
-        )
-        _shutil.rmtree(part)
+    write_batch_files(derived, _id_thirds("doc_id", 3 * hi + 2), i2inp)
     iq2 = incremental_dedup_ingest(
         spark,
         i2inp,
         docs.schema,
         corpus_dir=i2corpus,
-        index_dir=_os.path.join(i2base, "index"),
-        checkpoint_dir=_os.path.join(i2base, "ckpt"),
+        index_dir=os.path.join(i2base, "index"),
+        checkpoint_dir=os.path.join(i2base, "ckpt"),
         id_col="doc_id",
         text_col="text",
         threshold=0.999,  # near-dup ON; only set-equality can verify
@@ -2147,34 +1947,14 @@ def stream_dedup_keys(spark, sf_dir):
     from scida_spark.functions import expectations as DQX
     from scida_spark.streaming.gate import gated_ingest, read_reports
 
-    gbase = _os.path.join(
-        _tempfile.gettempdir(),
-        "ss_gate_cert_" + _os.path.basename(sf_dir.rstrip("/")),
-    )
-    _shutil.rmtree(gbase, ignore_errors=True)
-    ginp = _os.path.join(gbase, "input")
-    _os.makedirs(ginp)
+    gbase = storefs.scratch("gate")
+    ginp = os.path.join(gbase, "input")
     evg = table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
     ehi = evg.agg(F.max("event_id")).first()[0]
-    ecut1, ecut2 = ehi // 3, (2 * ehi) // 3
-    for k, cond in enumerate(
-        [
-            F.col("event_id") <= ecut1,
-            (F.col("event_id") > ecut1) & (F.col("event_id") <= ecut2),
-            F.col("event_id") > ecut2,
-        ]
-    ):
-        part = _os.path.join(gbase, f"_stage{k}")
-        evg.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
-        src_file = next(
-            f for f in _os.listdir(part) if f.endswith(".parquet")
-        )
-        _os.rename(
-            _os.path.join(part, src_file), _os.path.join(ginp, f"b{k}.parquet")
-        )
-        _shutil.rmtree(part)
+    ecut2 = (2 * ehi) // 3
+    write_batch_files(evg, _id_thirds("event_id", ehi), ginp)
     gq = gated_ingest(
         spark,
         ginp,
@@ -2183,15 +1963,15 @@ def stream_dedup_keys(spark, sf_dir):
             DQX.not_null("value", 0.99),
             DQX.in_range("event_id", 0, int(ecut2), 1.0),
         ],
-        admit_dir=_os.path.join(gbase, "admit"),
-        quarantine_dir=_os.path.join(gbase, "quar"),
-        report_dir=_os.path.join(gbase, "reports"),
-        checkpoint_dir=_os.path.join(gbase, "ckpt"),
+        admit_dir=os.path.join(gbase, "admit"),
+        quarantine_dir=os.path.join(gbase, "quar"),
+        report_dir=os.path.join(gbase, "reports"),
+        checkpoint_dir=os.path.join(gbase, "ckpt"),
         max_files_per_trigger=1,
     )
     gq.awaitTermination()
     gate_report_rows = read_reports(
-        spark, _os.path.join(gbase, "reports")
+        spark, os.path.join(gbase, "reports")
     ).select(
         F.lit("gate").alias("section"),
         F.concat(
@@ -2223,43 +2003,22 @@ def stream_dedup_keys(spark, sf_dir):
     # of the same operator).
     from scida_spark.streaming.cc import incremental_cc_ingest, read_labels
 
-    cbase = _os.path.join(
-        _tempfile.gettempdir(),
-        "ss_cc_cert_" + _os.path.basename(sf_dir.rstrip("/")),
-    )
-    _shutil.rmtree(cbase, ignore_errors=True)
-    cinp = _os.path.join(cbase, "input")
-    _os.makedirs(cinp)
+    cbase = storefs.scratch("cc")
+    cinp = os.path.join(cbase, "input")
     cdocs = table(spark, sf_dir, "documents").select("doc_id", "text")
     chi = cdocs.agg(F.max("doc_id")).first()[0]
-    ccut1, ccut2 = chi // 3, (2 * chi) // 3
-    for k, cond in enumerate(
-        [
-            F.col("doc_id") <= ccut1,
-            (F.col("doc_id") > ccut1) & (F.col("doc_id") <= ccut2),
-            F.col("doc_id") > ccut2,
-        ]
-    ):
-        part = _os.path.join(cbase, f"_stage{k}")
-        cdocs.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
-        src_file = next(
-            f for f in _os.listdir(part) if f.endswith(".parquet")
-        )
-        _os.rename(
-            _os.path.join(part, src_file), _os.path.join(cinp, f"b{k}.parquet")
-        )
-        _shutil.rmtree(part)
+    write_batch_files(cdocs, _id_thirds("doc_id", chi), cinp)
     cq = incremental_cc_ingest(
         spark,
         cinp,
         cdocs.schema,
-        labels_dir=_os.path.join(cbase, "labels"),
-        index_dir=_os.path.join(cbase, "index"),
-        checkpoint_dir=_os.path.join(cbase, "ckpt"),
+        labels_dir=os.path.join(cbase, "labels"),
+        index_dir=os.path.join(cbase, "index"),
+        checkpoint_dir=os.path.join(cbase, "ckpt"),
         threshold=1.01,  # exact-digest edges only: SQL-replayable
     )
     cq.awaitTermination()
-    cc_rows = read_labels(spark, _os.path.join(cbase, "labels")).select(
+    cc_rows = read_labels(spark, os.path.join(cbase, "labels")).select(
         F.lit("cclabel").alias("section"),
         F.col("doc").cast("string").alias("k1"),
         F.col("label").cast("string").alias("k2"),
@@ -2293,13 +2052,8 @@ def stream_dedup_keys(spark, sf_dir):
         read_drift_reports as _dg_reports,
     )
 
-    dgbase = _os.path.join(
-        _tempfile.gettempdir(),
-        "ss_driftgate_cert_" + _os.path.basename(sf_dir.rstrip("/")),
-    )
-    _shutil.rmtree(dgbase, ignore_errors=True)
-    dginp = _os.path.join(dgbase, "input")
-    _os.makedirs(dginp)
+    dgbase = storefs.scratch("driftgate")
+    dginp = os.path.join(dgbase, "input")
     dgq1, dgq2, dgq3 = ehi // 4, ehi // 2, (3 * ehi) // 4
     dgdrop = evg.agg(F.min("event_type")).first()[0]
     dg_rows = evg.select(
@@ -2315,39 +2069,32 @@ def stream_dedup_keys(spark, sf_dir):
         .cast("long")
         .alias("bv"),
     )
-    for k, cond in enumerate(
+    write_batch_files(
+        dg_rows,
         [
             F.col("event_id") <= dgq1,
             (F.col("event_id") > dgq1) & (F.col("event_id") <= dgq2),
             (F.col("event_id") > dgq2) & (F.col("event_id") <= dgq3),
             (F.col("event_id") > dgq3) & (F.col("facet") != dgdrop),
-        ]
-    ):
-        part = _os.path.join(dgbase, f"_stage{k}")
-        dg_rows.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
-        src_file = next(
-            f for f in _os.listdir(part) if f.endswith(".parquet")
-        )
-        _os.rename(
-            _os.path.join(part, src_file), _os.path.join(dginp, f"b{k}.parquet")
-        )
-        _shutil.rmtree(part)
+        ],
+        dginp,
+    )
     dgq = _dg_ingest(
         spark,
         dginp,
         dg_rows.schema,
         bucketer=lambda df: df.select("facet", F.col("bv").alias("b")),
-        hist_dir=_os.path.join(dgbase, "hist"),
-        admit_dir=_os.path.join(dgbase, "admit"),
-        quarantine_dir=_os.path.join(dgbase, "quar"),
-        report_dir=_os.path.join(dgbase, "reports"),
-        checkpoint_dir=_os.path.join(dgbase, "ckpt"),
+        hist_dir=os.path.join(dgbase, "hist"),
+        admit_dir=os.path.join(dgbase, "admit"),
+        quarantine_dir=os.path.join(dgbase, "quar"),
+        report_dir=os.path.join(dgbase, "reports"),
+        checkpoint_dir=os.path.join(dgbase, "ckpt"),
         threshold=0.4,
         max_files_per_trigger=1,
     )
     dgq.awaitTermination()
     driftgate_report_rows = _dg_reports(
-        spark, _os.path.join(dgbase, "reports")
+        spark, os.path.join(dgbase, "reports")
     ).select(
         F.lit("driftgate").alias("section"),
         F.concat(
@@ -2366,8 +2113,8 @@ def stream_dedup_keys(spark, sf_dir):
     driftgate_route_rows = None
     for tag in ("admit", "quar"):
         rows = (
-            spark.read.option("basePath", _os.path.join(dgbase, tag))
-            .parquet(_os.path.join(dgbase, tag))
+            spark.read.option("basePath", os.path.join(dgbase, tag))
+            .parquet(os.path.join(dgbase, tag))
             .groupBy("batch_id")
             .agg(F.count("*").alias("__c"), F.sum("event_id").alias("__s"))
             .select(
@@ -2391,8 +2138,8 @@ def stream_dedup_keys(spark, sf_dir):
     gate_route_rows = None
     for tag, d in (("admit", "admit"), ("quar", "quar")):
         rows = (
-            spark.read.option("basePath", _os.path.join(gbase, d))
-            .parquet(_os.path.join(gbase, d))
+            spark.read.option("basePath", os.path.join(gbase, d))
+            .parquet(os.path.join(gbase, d))
             .groupBy("batch_id")
             .agg(
                 F.count("*").alias("__c"), F.sum("event_id").alias("__s")
@@ -3411,23 +3158,15 @@ def sketch_distinct_rollup(spark, sf_dir):
     # pins it against a plain GROUP BY over events; compact-then-merge
     # must serve the identical view (checked driver-side, folded into
     # within_tol together with the HLL distinct bound).
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from scida_spark.streaming.rollup import (
         compact_rollup,
         incremental_rollup_ingest,
         read_rollup,
     )
 
-    rbase = _os.path.join(
-        _tempfile.gettempdir(),
-        "ss_rollup_cert_" + _os.path.basename(sf_dir.rstrip("/")),
-    )
-    _shutil.rmtree(rbase, ignore_errors=True)
-    rinp = _os.path.join(rbase, "input")
-    rstore = _os.path.join(rbase, "store")
+    rbase = storefs.scratch("rollup")
+    rinp = os.path.join(rbase, "input")
+    rstore = os.path.join(rbase, "store")
     evr = ev.select("event_type", "user_id", "value")
     evr.repartition(3).write.mode("overwrite").parquet(rinp)
     # ONE streaming pass feeds BOTH stores (rollup partials + the r10
@@ -3441,12 +3180,12 @@ def sketch_distinct_rollup(spark, sf_dir):
         rollup_writer,
     )
 
-    res_store = _os.path.join(rbase, "res_store")
+    res_store = os.path.join(rbase, "res_store")
     sq = incremental_multi_store_ingest(
         spark,
         rinp,
         evr.schema,
-        checkpoint_dir=_os.path.join(rbase, "ckpt"),
+        checkpoint_dir=os.path.join(rbase, "ckpt"),
         writers=[
             rollup_writer(rstore, ["event_type"], "value", "user_id"),
             reservoir_writer(
@@ -5233,10 +4972,9 @@ def sim_topk(spark, sf_dir):
             "rank",
             F.lit(True).alias("ok"),
         )
-        import os as _os2
 
-        pre_b = spark.read.parquet(_os2.path.join(pre_dir, "bm25s"))
-        pre_q = spark.read.parquet(_os2.path.join(pre_dir, "qls"))
+        pre_b = spark.read.parquet(os.path.join(pre_dir, "bm25s"))
+        pre_q = spark.read.parquet(os.path.join(pre_dir, "qls"))
         # Multiset equality via SIGNED-COUNT aggregation (r15, guide
         # §1.2/§2.4): the old form was four exceptAll legs, which
         # executed each LIVE serve twice (once per direction) on every
@@ -5278,7 +5016,7 @@ def sim_topk(spark, sf_dir):
     # tombstones, compaction) is a deterministic fixed point of the
     # corpus, built ONCE per content fingerprint
     # (_vecindex_cert_store; serve==batch twins asserted AT BUILD,
-    # before the sentinel commits). Per call: ONE live post-compaction
+    # before the store commits). Per call: ONE live post-compaction
     # serve from the store (probed list_id partitions only) diffed
     # against the SAVED pre-compaction masked batch twin —
     # serve == batch == post-compaction serve, a cross-process replay
@@ -5303,14 +5041,12 @@ def sim_topk(spark, sf_dir):
         from scida_spark.streaming.vecindex import ivf_topk_from_store
 
         vstore, vpre, _np = _vecindex_cert_store(spark, emb, sf_dir, _n_vec)
-        import os as _os3
-
         # lazy checkpoint: the serve materializes once and feeds both
         # exceptAll legs within one execution
         _live = ivf_topk_from_store(
             spark, vstore, q.select("vec_id", "embedding"), k=10, nprobe=_np
         ).localCheckpoint(eager=False)
-        _bd = spark.read.parquet(_os3.path.join(vpre, "batch_del"))
+        _bd = spark.read.parquet(os.path.join(vpre, "batch_del"))
         _vdiff = _live.exceptAll(_bd).unionAll(_bd.exceptAll(_live))
         ivfs_rows = _vdiff.agg(F.count("*").alias("nd")).select(
             F.lit("ivfs").alias("method"),
@@ -6442,16 +6178,11 @@ def text_quality_lang(spark, sf_dir):
     # 56-bit md5 fingerprints) in pure SQL — so a hash match proves
     # the bytes on disk hold exactly the right rows in the right
     # shards (operators/export.py).
-    import os as _os
     import re as _re
-    import tempfile as _tempfile
 
     from scida_spark.operators.export import export_training_shards, verify_shards
 
-    dst = _os.path.join(
-        _tempfile.gettempdir(),
-        "ss_export_cert_" + _os.path.basename(sf_dir.rstrip("/")),
-    )
+    dst = os.path.join(storefs.scratch("export"), "shards")
     # Adaptive shard size (r10): rows_per_shard = max(150, ceil(n/32))
     # caps the export at ~32 shard FILES at any SF — the fixed 150 was
     # writing 3,333 directories at the x100 corpus and the eager write
@@ -6622,10 +6353,7 @@ def text_quality_lang(spark, sf_dir):
         )
         .localCheckpoint(eager=True)
     )
-    tp_dst = _os.path.join(
-        _tempfile.gettempdir(),
-        "ss_tokpack_cert_" + _os.path.basename(sf_dir.rstrip("/")),
-    )
+    tp_dst = os.path.join(storefs.scratch("tokpack"), "shards")
     # Adaptive shard size (the exp8 rule): max(32, ceil(nseq/16)) caps
     # the tokpack export at ~16 shard files at any SF; <= 512
     # sequences (every driver SF) keeps rps = 32 unchanged.

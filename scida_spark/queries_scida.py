@@ -11,6 +11,9 @@ hash match validates the kernels, not a reimplementation.
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -20,7 +23,8 @@ from scida_spark.operators import spatial as S
 from scida_spark.operators.uid import with_uid_by_order
 from scida_spark.queries import DEC, dsum, query
 from scida_spark.queries_pipeline import _memo_slot
-from scida_spark.tables import table
+from scida_spark.streaming import storefs
+from scida_spark.tables import table, table_fingerprint
 from scida_spark.session import local_df
 
 SENT = C.SENTINEL
@@ -403,34 +407,33 @@ _PBC_ORACLE = """
     """
 
 
-def _spatial_partitioned_pts(spark, sf_dir, ncells=10):
-    """Cell-partitioned copy of the synthetic (x, y) point table, built
-    once per (sf_dir, source-mtime) and reused — the ingest-time layout
-    a spatial workload would pay for once (save_spatial_partitioned).
-    The cache key includes the source parquet's mtime so a regenerated
-    testdata dir invalidates the copy instead of serving stale cells.
-    """
-    import hashlib
-    import os
-    import tempfile
+def _spatial_pts(spark, sf_dir, zorder: bool, ncells=10):
+    """Cell-partitioned copy of the synthetic (x, y) point table
+    (``save_spatial_partitioned``, or with ``zorder`` the Morton-clustered
+    ``save_spatial_partitioned_zordered``): the ingest-time layout a
+    spatial workload pays for once. A derived store keyed by the
+    lineitem table's fingerprint, so regenerated testdata rebuilds it."""
+    save = (
+        S.save_spatial_partitioned_zordered
+        if zorder
+        else S.save_spatial_partitioned
+    )
 
-    src = f"{sf_dir.rstrip('/')}/lineitem.parquet"
-    try:
-        mtime = int(os.stat(src).st_mtime)
-    except OSError:
-        mtime = 0
-    key = f"{os.path.abspath(sf_dir)}|{mtime}|{ncells}"
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"scida_spark_cells_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(tmp):
         li = table(spark, sf_dir, "lineitem")
         pts = li.select(
             "l_orderkey",
             (F.col("l_extendedprice") % 100.0).alias("x"),
             ((F.col("l_quantity") * 7.0) % 100.0).alias("y"),
         )
-        S.save_spatial_partitioned(pts, ["x", "y"], 100.0, ncells, path)
-    return path
+        save(pts, ["x", "y"], 100.0, ncells, os.path.join(tmp, "pts"))
+
+    path, _ = storefs.derived_store(
+        "zcells" if zorder else "cells",
+        {"lineitem": table_fingerprint(sf_dir, "lineitem"), "ncells": ncells},
+        build,
+    )
+    return os.path.join(path, "pts")
 
 
 @query(
@@ -490,34 +493,44 @@ def _bucketed_cached(
     spark, sf_dir: str, name: str, cols: list, bucket_col: str, sort_cols: list,
     num_buckets: int = 16,
 ) -> str:
-    """Build (or reuse) a saveAsTable bucketed copy of ``name`` keyed by
-    source path+mtime, returning the table name. A fresh session doesn't
-    know tables a previous one wrote, but the warehouse directory
-    persists — stale locations are cleared and rebuilt (it's a derived
-    cache; rebuilding is the correct recovery)."""
-    import hashlib
-    import os
+    """A bucketed copy of ``name``'s ``cols``, returning the name of a
+    catalog table over it. The files are a derived store keyed by the
+    table's fingerprint and the layout; the bucket spec lives in the
+    catalog, so each session registers the stored files as an external
+    table with the same spec instead of rewriting them."""
+    spec = (
+        f"CLUSTERED BY ({bucket_col}) SORTED BY ({', '.join(sort_cols)}) "
+        f"INTO {num_buckets} BUCKETS"
+    )
 
-    from scida_spark.operators.layout import save_bucketed
-
-    src = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    try:
-        mtime = int(os.stat(src).st_mtime)
-    except OSError:
-        mtime = 0
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}|{mtime}".encode()).hexdigest()[:10]
-    tbl = f"{name}_bucketed_{tag}"
-    if not spark.catalog.tableExists(tbl):
-        import shutil
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-        loc = os.path.join(wh.path or wh.netloc or "spark-warehouse", tbl)
-        if os.path.isdir(loc):
-            shutil.rmtree(loc, ignore_errors=True)
+    def build(tmp):
         df = table(spark, sf_dir, name).select(*cols)
-        save_bucketed(df, tbl, bucket_col, num_buckets=num_buckets,
-                      sort_cols=sort_cols)
+        build_tbl = "build" + re.sub(r"\W", "_", os.path.basename(tmp))
+        (
+            df.write.bucketBy(num_buckets, bucket_col)
+            .sortBy(*sort_cols)
+            .format("parquet")
+            .option("path", os.path.join(tmp, "data"))
+            .saveAsTable(build_tbl)
+        )
+        spark.sql(f"DROP TABLE {build_tbl}")  # external: the files stay
+        return {
+            "ddl": ", ".join(
+                f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema
+            )
+        }
+
+    path, man = storefs.derived_store(
+        f"bucketed_{name}",
+        {name: table_fingerprint(sf_dir, name), "cols": cols, "spec": spec},
+        build,
+    )
+    tbl = f"{name}_bucketed_{path.rsplit('-', 1)[1]}"
+    if not spark.catalog.tableExists(tbl):
+        spark.sql(
+            f"CREATE TABLE {tbl} ({man['ddl']}) USING parquet {spec} "
+            f"LOCATION '{os.path.join(path, 'data')}'"
+        )
     return tbl
 
 
@@ -529,40 +542,13 @@ def scida_pbc_cutout_pruned(spark, sf_dir):
     oracle SQL is identical to the full-scan query's: a hash match
     proves partition pruning loses no rows.
     """
-    path = _spatial_partitioned_pts(spark, sf_dir)
+    path = _spatial_pts(spark, sf_dir, zorder=False)
     cut = S.rect_cutout_pruned(
         spark, path, ["x", "y"], [10.0, 50.0], [30.0, 40.0], 100.0, 10
     )
     return cut.agg(
         F.count("*").alias("n_inside"), dsum(F.col("x"), "sum_x"), dsum(F.col("y"), "sum_y")
     )
-
-
-def _spatial_zordered_pts(spark, sf_dir, ncells=10):
-    """Z-ordered cell-partitioned copy of the synthetic point table
-    (``save_spatial_partitioned_zordered``), built once per
-    (sf_dir, source-mtime) like ``_spatial_partitioned_pts``."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = f"{sf_dir.rstrip('/')}/lineitem.parquet"
-    try:
-        mtime = int(os.stat(src).st_mtime)
-    except OSError:
-        mtime = 0
-    key = f"{os.path.abspath(sf_dir)}|{mtime}|{ncells}|z"
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"scida_spark_zcells_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        li = table(spark, sf_dir, "lineitem")
-        pts = li.select(
-            "l_orderkey",
-            (F.col("l_extendedprice") % 100.0).alias("x"),
-            ((F.col("l_quantity") * 7.0) % 100.0).alias("y"),
-        )
-        S.save_spatial_partitioned_zordered(pts, ["x", "y"], 100.0, ncells, path)
-    return path
 
 
 def scida_zorder_cutout(spark, sf_dir):
@@ -572,7 +558,7 @@ def scida_zorder_cutout(spark, sf_dir):
     the coordinate predicates skip parquet row groups via min/max stats
     — the second tier of the spatial layout story. Within-file monotone
     Morton order is separately pinned in tests/test_spatial_layout.py."""
-    path = _spatial_zordered_pts(spark, sf_dir)
+    path = _spatial_pts(spark, sf_dir, zorder=True)
     cut = S.rect_cutout_pruned(
         spark, path, ["x", "y"], [10.0, 50.0], [30.0, 40.0], 100.0, 10
     )

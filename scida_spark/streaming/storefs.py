@@ -74,15 +74,30 @@ batch dirs retired, base not yet renamed) — run maintenance in a
 quiet window if serve-time blips matter; the store itself is never
 durably inconsistent.
 
+DERIVED STORES: on-disk state derived from the input tables (the
+query layer's cert stores, stream copies and layout copies) is located,
+keyed, committed and reused by :func:`derived_store` alone. Every
+store lives under one root, ``<tempfile.gettempdir()>/scida_spark_stores``,
+at ``<name>-<sha(inputs)[:12]>``, and is served only while its
+``_STORE.json`` records this code version (:func:`code_digest`) and
+the same inputs; anything else (a torn manifest, another code
+version, a half-built scratch dir) is rebuilt, never served. Deleting
+the root forces every store to rebuild. Per-call working dirs come
+from :func:`scratch`, under the same root.
+
 Net-new surface (no reference counterpart; SURVEY §2.7).
 """
 
 from __future__ import annotations
 
+import atexit
 import contextlib
+import functools
+import hashlib
 import json
 import os
 import shutil
+import tempfile
 
 __all__ = [
     "TMP_DIR",
@@ -98,6 +113,10 @@ __all__ = [
     "maintenance_lock",
     "write_json_atomic",
     "read_json",
+    "STORE_MANIFEST",
+    "code_digest",
+    "derived_store",
+    "scratch",
     "LocalBackend",
     "backend_for",
     "register_backend",
@@ -262,6 +281,115 @@ def _pid_alive(pid: int) -> bool:
     except PermissionError:  # pragma: no cover - other-user pid
         return True
     return True
+
+
+STORE_MANIFEST = "_STORE.json"
+
+
+def _store_root() -> str:
+    root = os.path.join(tempfile.gettempdir(), "scida_spark_stores")
+    os.makedirs(root, exist_ok=True)
+    return root
+
+
+@functools.cache
+def code_digest() -> str:
+    """sha256 over the package's ``.py`` sources (relative path and
+    bytes, in sorted order): the code version a derived store records.
+    Computed on first use, once per process."""
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    h = hashlib.sha256()
+    for dirpath, dirs, files in os.walk(pkg):
+        dirs.sort()
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                p = os.path.join(dirpath, fn)
+                h.update(os.path.relpath(p, pkg).encode() + b"\0")
+                with open(p, "rb") as f:
+                    h.update(f.read())
+    return h.hexdigest()
+
+
+def _new_scratch(root: str, name: str) -> str:
+    """A fresh ``_<name>-<pid>-<random>`` dir under ``root``. The
+    underscore keeps it out of every store path, and the pid lets the
+    sweep here remove the dirs of processes that are gone (a killed
+    build, a call whose process exited without cleanup)."""
+    for d in os.listdir(root):
+        parts = d.rsplit("-", 2)
+        if d.startswith("_") and len(parts) == 3 and parts[1].isdigit():
+            if not _pid_alive(int(parts[1])):
+                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"_{name}-{os.getpid()}-", dir=root)
+
+
+def scratch(name: str) -> str:
+    """A working dir of its own for one call, under the store root. It
+    lasts until this process exits (lazy frames may still read it), and
+    is removed then, or by a later sweep if the process was killed."""
+    d = _new_scratch(_store_root(), name)
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
+def _served(path: str, inputs) -> dict | None:
+    """The manifest of the store at ``path`` if it may be served: it
+    parses and records this code version and these inputs."""
+    try:
+        man = read_json(os.path.join(path, STORE_MANIFEST))
+    except (OSError, ValueError):
+        return None
+    if (
+        isinstance(man, dict)
+        and man.get("code") == code_digest()
+        and man.get("inputs") == inputs
+    ):
+        return man
+    return None
+
+
+def derived_store(name: str, inputs, build) -> tuple[str, dict]:
+    """Locate, and build if needed, the derived store ``name`` for
+    ``inputs`` (a JSON value naming everything the store depends on,
+    e.g. table fingerprints and build parameters). Returns
+    ``(path, manifest)``.
+
+    The store at ``<root>/<name>-<sha(inputs)[:12]>`` is served as is
+    when its manifest matches (:func:`_served`). Otherwise
+    ``build(tmp)`` fills a fresh scratch dir and returns extra manifest
+    fields (or None); the manifest is written atomically inside it and
+    the dir is renamed into place, so a store is never visible half
+    built. Stores must not record their own absolute path. If another
+    process commits a valid store first, that one is used and ours is
+    dropped; a stale or torn store in the way is retired first."""
+    blob = json.dumps(inputs, sort_keys=True)
+    inputs = json.loads(blob)  # the form the manifest round-trips to
+    root = _store_root()
+    key = hashlib.sha256(blob.encode()).hexdigest()[:12]
+    path = os.path.join(root, f"{name}-{key}")
+    man = _served(path, inputs)
+    if man is not None:
+        return path, man
+    tmp = _new_scratch(root, name)
+    try:
+        man = {**(build(tmp) or {}), "code": code_digest(), "inputs": inputs}
+        write_json_atomic(os.path.join(tmp, STORE_MANIFEST), man)
+        for _ in range(3):
+            try:
+                os.rename(tmp, path)
+                return path, man
+            except OSError:  # the path is taken
+                theirs = _served(path, inputs)
+                if theirs is not None:
+                    return path, theirs
+            aside = _new_scratch(root, name)
+            with contextlib.suppress(FileNotFoundError):
+                os.rename(path, os.path.join(aside, "stale"))
+            shutil.rmtree(aside, ignore_errors=True)
+        os.rename(tmp, path)  # raises whatever keeps blocking the commit
+        return path, man
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _lock_owner(path: str) -> int:

@@ -35,6 +35,7 @@ read → rewrite → scratch write, partition layout preserved via
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 from typing import Callable
 
@@ -174,6 +175,20 @@ def run_file_ingest(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def write_batch_files(df: DataFrame, conds: list, dst: str) -> None:
+    """Write ``df.filter(conds[k])`` as the single file
+    ``<dst>/b{k}.parquet``, in order: a file stream orders its backlog
+    by modification time, so with ``maxFilesPerTrigger=1`` batch k is
+    exactly ``conds[k]`` and every earlier batch is its history."""
+    os.makedirs(dst, exist_ok=True)
+    for k, cond in enumerate(conds):
+        part = os.path.join(dst, f"_part{k}")
+        df.filter(cond).coalesce(1).write.mode("overwrite").parquet(part)
+        src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
+        os.rename(os.path.join(part, src), os.path.join(dst, f"b{k}.parquet"))
+        shutil.rmtree(part)
 
 
 def read_partials(spark: SparkSession, root: str) -> DataFrame:

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -32,3 +35,32 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
+
+
+def table_fingerprint(sf_dir: str, *names: str) -> str:
+    """Content key of the named tables under ``sf_dir``: md5 over each
+    table's absolute path and the sorted (relpath, size, mtime_ns) of
+    its parquet file(s). Stat-only (no data is read), and it changes
+    whenever a table is rewritten or the same tables are read from
+    another directory."""
+    parts = []
+    for name in names:
+        root = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+        files = []
+        try:
+            if os.path.isdir(root):
+                for dirpath, _dirs, fns in os.walk(root):
+                    for fn in fns:
+                        p = os.path.join(dirpath, fn)
+                        st = os.stat(p)
+                        files.append(
+                            f"{os.path.relpath(p, root)}:{st.st_size}:"
+                            f"{st.st_mtime_ns}"
+                        )
+            else:
+                st = os.stat(root)
+                files.append(f".:{st.st_size}:{st.st_mtime_ns}")
+        except OSError:
+            files.append("missing")
+        parts += [root, *sorted(files)]
+    return hashlib.md5("\n".join(parts).encode()).hexdigest()
