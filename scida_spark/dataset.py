@@ -6,13 +6,16 @@ Format dispatch (determine_loader, reference io/_base.py:757-791):
   * directory of ``*.parquet`` → one container per file (our native
     layout; also what ``Dataset.save`` writes)
   * ``*.zarr`` / zarr store dir → native zarr v2 Python Data Source
-    (scida_spark.sources.zarr — pure-Python reader/writer, runnable)
-  * ``*.hdf5``                 → gated custom source (h5py not
-    installed here; split planning is real and tested)
+    (scida_spark.sources.zarr — pure-Python reader/writer)
+  * directory of ``*.npy``     → npy Python Data Source
+  * ``*.hdf5``                 → HDF5 source (h5py, or the h5_shim
+    backend)
 
 Detection ladder: candidate dataset classes vote with (Confidence,
 Specificity) and the max wins (reference discovertypes.py:59-155,
 :238-343) — kept as plain Python over metadata, no I/O beyond footers.
+``load()`` and ``load_metadata()`` both act on the winner: its
+``load_dataset`` opens the path, its ``format`` names the layout.
 """
 
 from __future__ import annotations
@@ -73,19 +76,22 @@ class DatasetType:
         return len([c for c in cls.__mro__ if issubclass(c, DatasetType)])
 
 
-def determine_type(path: str) -> type["DatasetType"]:
-    """Run the detection ladder over all registered dataset types."""
-    votes = [
-        (c.validate_path(path), c)
-        for c in DatasetType.registry
-    ]
+def _ranked_votes(path: str) -> list[tuple[CandidateStatus, type[DatasetType]]]:
+    """Every non-UNSUPPORTED vote for a path, winner first."""
+    votes = [(c.validate_path(path), c) for c in DatasetType.registry]
     votes = [(s, c) for s, c in votes if s.confidence > Confidence.UNSUPPORTED]
-    if not votes:
-        raise ValueError(f"no dataset type recognizes {path!r}")
     votes.sort(
         key=lambda t: (int(t[0].confidence), t[1].mro_depth(), t[0].specificity),
         reverse=True,
     )
+    return votes
+
+
+def determine_type(path: str) -> type["DatasetType"]:
+    """Run the detection ladder over all registered dataset types."""
+    votes = _ranked_votes(path)
+    if not votes:
+        raise ValueError(f"no dataset type recognizes {path!r}")
     return votes[0][1]
 
 
@@ -93,24 +99,17 @@ def explain_detection(path: str) -> list[str]:
     """Human-readable ranking of every non-UNSUPPORTED vote for a path
     (winner first) with each vote's evidence — the diagnosability
     surface of the reference's DetectionResult (discovertypes.py)."""
-    votes = [
-        (c.validate_path(path), c)
-        for c in DatasetType.registry
-    ]
-    votes = [(s, c) for s, c in votes if s.confidence > Confidence.UNSUPPORTED]
-    votes.sort(
-        key=lambda t: (int(t[0].confidence), t[1].mro_depth(), t[0].specificity),
-        reverse=True,
-    )
     return [
         f"{c.__name__}: {s.confidence.name} (specificity {s.specificity})"
         + (f" — {', '.join(s.evidence)}" if s.evidence else "")
-        for s, c in votes
+        for s, c in _ranked_votes(path)
     ]
 
 
 class ParquetDirType(DatasetType):
     """Generic engine-native layout: directory of <container>.parquet."""
+
+    format = "parquet_dir"
 
     @classmethod
     def validate_path(cls, path: str) -> CandidateStatus:
@@ -119,6 +118,33 @@ class ParquetDirType(DatasetType):
         ):
             return CandidateStatus(Confidence.CERTAIN, specificity=1)
         return CandidateStatus(Confidence.UNSUPPORTED)
+
+    @classmethod
+    def load_dataset(cls, path: str, spark, units: bool | str = True, **kwargs):
+        root = FieldContainer(name=os.path.basename(path.rstrip("/")))
+        metadata: dict = {}
+        ureg = UnitRegistry()
+        meta_path = os.path.join(path, "_metadata.json")
+        if os.path.exists(meta_path):
+            with open(meta_path) as fh:
+                metadata = json.load(fh)
+        for entry in sorted(os.listdir(path)):
+            if not entry.endswith(".parquet"):
+                continue
+            name = entry[: -len(".parquet")]
+            df = spark.read.parquet(os.path.join(path, entry))
+            cont = FieldContainer(df, name=name, ureg=ureg)
+            if units:
+                for f_ in df.schema.fields:
+                    u = (f_.metadata or {}).get("unit")
+                    if u:
+                        cont.field_units[f_.name] = u
+            root[name] = cont
+        register_default_aliases(root)
+        ds = Dataset(path=path, data=root, metadata=metadata, ureg=ureg)
+        if units:
+            apply_simulation_config(ds)
+        return ds
 
 
 class CatalogAwareParquetType(ParquetDirType):
@@ -140,6 +166,8 @@ class CatalogAwareParquetType(ParquetDirType):
 
 
 class ZarrType(DatasetType):
+    format = "zarr"
+
     @classmethod
     def validate_path(cls, path: str) -> CandidateStatus:
         if not os.path.isdir(path):
@@ -157,8 +185,16 @@ class ZarrType(DatasetType):
             return CandidateStatus(Confidence.LIKELY, specificity=1)
         return CandidateStatus(Confidence.UNSUPPORTED)
 
+    @classmethod
+    def load_dataset(cls, path: str, spark, **kwargs):
+        from scida_spark.sources.zarr import load_zarr_dataset
+
+        return load_zarr_dataset(path, spark, **kwargs)
+
 
 class NpyDirType(DatasetType):
+    format = "npy_dir"
+
     @classmethod
     def validate_path(cls, path: str) -> CandidateStatus:
         if not os.path.isdir(path):
@@ -172,8 +208,16 @@ class NpyDirType(DatasetType):
             return CandidateStatus(Confidence.LIKELY, specificity=1)
         return CandidateStatus(Confidence.UNSUPPORTED)
 
+    @classmethod
+    def load_dataset(cls, path: str, spark, **kwargs):
+        from scida_spark.sources.npy import load_npy_dataset
+
+        return load_npy_dataset(path, spark, **kwargs)
+
 
 class Hdf5Type(DatasetType):
+    format = "hdf5"
+
     @classmethod
     def validate_path(cls, path: str) -> CandidateStatus:
         if path.endswith((".hdf5", ".h5")):
@@ -183,6 +227,12 @@ class Hdf5Type(DatasetType):
         ):
             return CandidateStatus(Confidence.LIKELY, specificity=1)
         return CandidateStatus(Confidence.UNSUPPORTED)
+
+    @classmethod
+    def load_dataset(cls, path: str, spark, **kwargs):
+        from scida_spark.sources.hdf5 import load_hdf5_dataset
+
+        return load_hdf5_dataset(path, spark, **kwargs)
 
 
 @dataclass
@@ -587,33 +637,13 @@ def merge_catalog(snapshot: Dataset, catalog: Dataset) -> Dataset:
     return snapshot
 
 
-def _sniff_format(path: str) -> str:
-    if path.endswith((".hdf5", ".h5")):
-        return "hdf5"
-    if path.endswith(".zarr") or os.path.isfile(os.path.join(path, ".zgroup")):
-        return "zarr"
-    if os.path.isdir(path):
-        entries = os.listdir(path)
-        if any(e.endswith(".parquet") for e in entries):
-            return "parquet_dir"
-        if any(e.endswith((".hdf5", ".h5")) for e in entries):
-            return "hdf5_multi"
-        if any(e.endswith(".npy") for e in entries) or any(
-            os.path.isdir(os.path.join(path, e))
-            and any(f.endswith(".npy") for f in os.listdir(os.path.join(path, e)))
-            for e in entries
-        ):
-            return "npy_dir"
-    raise ValueError(f"cannot determine format of {path!r}")
-
-
 def load_metadata(path: str, spark: SparkSession | None = None) -> dict:
     """Metadata-only scan: attrs + per-container schemas without reading
     data (reference ``load_metadata``/``load_metadata_all``,
     io/_base.py:794-832). Parquet → footer read only; npy → header-only
-    walk; HDF5/Zarr → gated loaders' metadata path.
+    walk; HDF5/Zarr → the format only (no container scan).
     """
-    fmt = _sniff_format(path)
+    fmt = determine_type(path).format
     out: dict = {"path": path, "format": fmt, "containers": {}}
     if fmt == "parquet_dir":
         meta_path = os.path.join(path, "_metadata.json")
@@ -661,55 +691,7 @@ def load(path: str, spark: SparkSession | None = None, units: bool | str = True,
 
         spark = get_spark()
     path = resolve_path(path)
-    # Detection ladder first (class-level vote); _sniff_format keeps the
-    # same answer for format dispatch and errors on unknown layouts.
-    dtype = determine_type(path)
-    if hasattr(dtype, "load_dataset"):  # custom types bring their own loader
-        return dtype.load_dataset(path, spark, units=units, **kwargs)
-    fmt = {
-        ParquetDirType: "parquet_dir",
-        CatalogAwareParquetType: "parquet_dir",
-        ZarrType: "zarr",
-        NpyDirType: "npy_dir",
-        Hdf5Type: "hdf5",
-    }.get(dtype) or _sniff_format(path)
-    root = FieldContainer(name=os.path.basename(path.rstrip("/")))
-    metadata: dict = {}
-    ureg = UnitRegistry()
-    if fmt == "parquet_dir":
-        meta_path = os.path.join(path, "_metadata.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as fh:
-                metadata = json.load(fh)
-        for entry in sorted(os.listdir(path)):
-            if not entry.endswith(".parquet"):
-                continue
-            name = entry[: -len(".parquet")]
-            df = spark.read.parquet(os.path.join(path, entry))
-            cont = FieldContainer(df, name=name, ureg=ureg)
-            if units:
-                for f_ in df.schema.fields:
-                    u = (f_.metadata or {}).get("unit")
-                    if u:
-                        cont.field_units[f_.name] = u
-            root[name] = cont
-        register_default_aliases(root)
-    elif fmt in ("hdf5", "hdf5_multi"):
-        from scida_spark.sources.hdf5 import load_hdf5_dataset
-
-        return load_hdf5_dataset(path, spark, units=units, **kwargs)
-    elif fmt == "zarr":
-        from scida_spark.sources.zarr import load_zarr_dataset
-
-        return load_zarr_dataset(path, spark, units=units, **kwargs)
-    elif fmt == "npy_dir":
-        from scida_spark.sources.npy import load_npy_dataset
-
-        return load_npy_dataset(path, spark, units=units, **kwargs)
-    ds = Dataset(path=path, data=root, metadata=metadata, ureg=ureg)
-    if units:
-        apply_simulation_config(ds)
-    return ds
+    return determine_type(path).load_dataset(path, spark, units=units, **kwargs)
 
 
 # Simulation-family voters (arepo/gizmo/swift/eagle/rockstar) register

@@ -175,50 +175,6 @@ def shingle_hash_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) ->
     )
 
 
-def ngram_candidate_pairs(
-    sh: DataFrame, max_df: int | None, warn_hot: bool = False
-) -> DataFrame:
-    """Distinct candidate (doc_a, doc_b) pairs from the shingle inverted
-    index of a ``shingle_hash_table`` result, excluding shingles with
-    document frequency > max_df from the self-join (each hot shingle
-    would contribute O(df²) join rows). Exposed separately so tests and
-    capacity planning can bound the candidate count directly.
-
-    ``warn_hot=True`` materializes the (vocabulary-sized) df table and
-    emits a warning with the count of excluded hot shingles, so
-    divergence from the exact-pairwise baseline is observable on real
-    data instead of silent (the cap changes results only when it
-    actually drops shingles).
-    """
-    ex = sh.select("doc", F.explode("sh").alias("g"))
-    if max_df is not None:
-        dfs = ex.groupBy("g").agg(F.count("*").alias("_df"))
-        if warn_hot:
-            import warnings
-
-            dfs = dfs.localCheckpoint(eager=True)
-            n_hot = dfs.filter(F.col("_df") > max_df).count()
-            if n_hot:
-                warnings.warn(
-                    f"ngram_candidate_pairs: {n_hot} hot shingles "
-                    f"(df > {max_df}) excluded from candidate generation; "
-                    "pairs whose every shared shingle is hot will be "
-                    "missed (run exact_dedup first for replica clusters, "
-                    "or pass max_df=None for the exact quadratic join)",
-                    UserWarning,
-                )
-        kept = dfs.filter(F.col("_df") <= max_df).select("g")
-        ex = ex.join(kept, "g")
-    a = ex.select(F.col("doc").alias("doc_a"), "g")
-    b = ex.select(F.col("doc").alias("doc_b"), "g")
-    return (
-        a.join(b, "g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -865,20 +821,6 @@ def signature_table(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_perm: int = 64, seed: int = 42
-) -> DataFrame:
-    """Per-doc MinHash signature (array<long>, length num_perm).
-
-    Shingle → blake2b-64 hash → per-permutation fmix64(x ^ seed_i)
-    minima (exact bijections of the 64-bit universe — see _perm_seeds
-    for why modular affine families failed here), vectorized in a
-    Pandas UDF over the hash array. One narrow pass, no shuffle.
-    """
-    sh = shingle_hash_table(df, id_col, text_col, n)
-    return minhash_signatures_from_shingles(sh, num_perm, seed)
-
-
 def minhash_signatures_from_shingles(
     sh: DataFrame, num_perm: int = 64, seed: int = 42
 ) -> DataFrame:
@@ -1328,13 +1270,13 @@ def ngram_overlap_pairs(
 
 
 # --------------------------------------------------------------------------
-# Incremental MinHash dedup: new batch vs a persisted signature index
+# Banded MinHash signatures for the persisted streaming indexes
 # --------------------------------------------------------------------------
 
 
 def _band_signatures(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     """(doc, bucket) banded form of a signature table (shared by the
-    self-join and incremental paths)."""
+    streaming ingest and CC indexes, streaming/ingest.py and cc.py)."""
     band_cols = []
     for bi in range(bands):
         lo = bi * rows_per_band + 1
@@ -1344,53 +1286,6 @@ def _band_signatures(sig: DataFrame, bands: int, rows_per_band: int) -> DataFram
             ).alias(f"b{bi}")
         )
     return sig.select("doc", F.explode(F.array(*band_cols)).alias("bucket"))
-
-
-def minhash_incremental_pairs(
-    existing_sh: DataFrame,
-    new_sh: DataFrame,
-    *,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup pairs BETWEEN a new batch and the existing corpus —
-    the daily-ingest dedup path: signatures for the (small) new batch
-    only, banded equi-join against the persisted historical banding,
-    exact-Jaccard verify of the candidates. Cost is O(new × bands) +
-    O(matches) — the history is never re-signed, never self-joined,
-    and at 100 TB the banded history is the ingest-time index you keep
-    next to the corpus (same seed/num_perm/bands must be used for both
-    sides; mismatched parameters silently produce disjoint buckets).
-
-    Inputs are (doc, sh) shingle tables (``shingle_hash_table`` /
-    ``signature_table``); returns (new_doc, old_doc, jaccard).
-    """
-    rows_per_band = num_perm // bands
-    old_sig = minhash_signatures_from_shingles(existing_sh, num_perm, seed)
-    new_sig = minhash_signatures_from_shingles(new_sh, num_perm, seed)
-    old_b = _band_signatures(old_sig, bands, rows_per_band)
-    new_b = _band_signatures(new_sig, bands, rows_per_band)
-    cands = (
-        new_b.alias("n")
-        .join(old_b.alias("o"), F.col("n.bucket") == F.col("o.bucket"))
-        .select(F.col("n.doc").alias("new_doc"), F.col("o.doc").alias("old_doc"))
-        .distinct()
-    )
-    a = new_sh.select(F.col("doc").alias("new_doc"), F.col("sh").alias("sh_a"))
-    b = existing_sh.select(F.col("doc").alias("old_doc"), F.col("sh").alias("sh_b"))
-    return (
-        cands.join(a, "new_doc")
-        .join(b, "old_doc")
-        .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("n_union", F.size("sh_a") + F.size("sh_b") - F.col("n_inter"))
-        .withColumn(
-            "jaccard", F.col("n_inter").cast("double") / F.col("n_union").cast("double")
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_doc", "old_doc", "jaccard")
-    )
 
 
 def pagerank_fixed_point(

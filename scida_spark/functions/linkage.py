@@ -18,24 +18,16 @@ Pipeline shape (all existing machinery composes in):
      SORTED field order (the repo's float-fold rule) the score is
      engine-reproducible; with weights passed as precomputed double
      literals it is bit-exact without any libm dependence.
-  4. :func:`fs_classify` applies the two-threshold decision: match /
-     possible (clerical review) / non-match.
 
-Parameter estimation: ``m`` is a data-owner prior (how often a true
-duplicate preserves the field — OCR noise, nicknames); ``u`` is
-estimable from data because random pairs are overwhelmingly
-non-matches: :func:`estimate_u` measures field agreement over the
-cross-pairs of a deterministic hash sample (md5-ordered smallest-N —
-layout-independent, no rand()). Full EM fitting is deliberately out
-of scope: on corpora this engine targets, labeled m-priors +
-estimated u is the operating regime (EM's latent-class fit needs the
-match prevalence to be non-vanishing in the candidate set).
+Parameters: ``m`` is a data-owner prior (how often a true duplicate
+preserves the field — OCR noise, nicknames) and ``u`` the agreement
+rate of random pairs; both are caller-supplied. Full EM fitting is
+deliberately out of scope (EM's latent-class fit needs the match
+prevalence to be non-vanishing in the candidate set).
 
 Scale: step 2 is two broadcast-or-shuffle equi-joins of the pair list
 against the record table (pairs come from a blocker, so |pairs| <<
-|records|²); steps 3-4 are map-only Column arithmetic. u-estimation
-collects a fixed-size sample (default 256 rows → ≤32640 local pairs)
-once per field config.
+|records|²); step 3 is map-only Column arithmetic.
 """
 
 from __future__ import annotations
@@ -112,67 +104,3 @@ def fs_score(
             F.lit(wd)
         )
     return agreements.withColumn(out_col, score)
-
-
-def fs_classify(
-    scored: DataFrame,
-    upper: float,
-    lower: float,
-    score_col: str = "fs_score",
-    out_col: str = "link_class",
-) -> DataFrame:
-    """Fellegi-Sunter two-threshold decision: score >= upper ->
-    'match', <= lower -> 'non_match', else 'possible' (clerical
-    review band). Thresholds trade false-match vs false-non-match
-    rates; upper >= lower is required."""
-    if upper < lower:
-        raise ValueError("upper threshold must be >= lower")
-    return scored.withColumn(
-        out_col,
-        F.when(F.col(score_col) >= float(upper), F.lit("match"))
-        .when(F.col(score_col) <= float(lower), F.lit("non_match"))
-        .otherwise(F.lit("possible")),
-    )
-
-
-def estimate_u(
-    records: DataFrame,
-    id_col: str,
-    fields: dict,
-    sample_n: int = 256,
-    salt: str = "fsu",
-) -> dict:
-    """u_f = P(field f agrees | different entities), estimated from
-    the C(n,2) cross-pairs of a DETERMINISTIC sample (smallest-n by
-    md5(id||salt) — layout/run-independent): random pairs are
-    non-matches with overwhelming probability, so their agreement
-    rate estimates u. Laplace-smoothed so a never-agreeing field
-    yields a small positive u instead of a degenerate 0. Returns
-    {field: u_hat}; pair with owner-supplied m priors for
-    :func:`fs_weights`."""
-    from scida_spark.functions.sampling import hash_bucket
-
-    rows = (
-        records.select(
-            id_col, *fields, hash_bucket(F.col(id_col), salt).alias("__hb")
-        )
-        .orderBy("__hb", id_col)
-        .limit(int(sample_n))
-        .collect()
-    )
-    n = len(rows)
-    n_pairs = n * (n - 1) // 2
-    out = {}
-    for f, cmp_ in fields.items():
-        if cmp_ is not None:
-            raise ValueError(
-                "estimate_u supports exact-equality fields only; supply u "
-                f"for comparator field {f!r} directly"
-            )
-        agree = 0
-        for i in range(n):
-            for j in range(i + 1, n):
-                if rows[i][f] == rows[j][f]:
-                    agree += 1
-        out[f] = (agree + 1.0) / (n_pairs + 2.0)
-    return out

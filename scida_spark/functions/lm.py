@@ -389,35 +389,3 @@ def score_nll2(
         )
         .filter(F.col("n_pairs") >= 1)
     )
-
-
-def save_bigram_lm(spark, model: BigramLM, path: str) -> None:
-    """Bigram model → parquet (u, v, c2) + a vocab row per token + one
-    totals row — same persist-once pattern as :func:`save_unigram_lm`
-    (ctx_counts are derived on load, so they cannot drift)."""
-    rows: list[tuple] = [
-        (u, v, int(c), None) for (u, v), c in sorted(model.pair_counts.items())
-    ]
-    rows += [(t, None, None, None) for t in sorted(model.vocab)]
-    rows.append((None, None, None, model.vocab_size))
-    local_df(spark, 
-        rows, "u string, v string, c2 long, vocab_size long"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_bigram_lm(spark, path: str) -> BigramLM:
-    """Inverse of :func:`save_bigram_lm` — identical scores after a
-    roundtrip (integer state only)."""
-    pair_counts: dict[tuple[str, str], int] = {}
-    vocab: list[str] = []
-    vocab_size = None
-    for r in spark.read.parquet(path).collect():
-        if r["u"] is not None and r["v"] is not None:
-            pair_counts[(r["u"], r["v"])] = int(r["c2"])
-        elif r["u"] is not None:
-            vocab.append(r["u"])
-        else:
-            vocab_size = int(r["vocab_size"])
-    if vocab_size is None:
-        raise ValueError(f"no totals row in persisted bigram LM at {path}")
-    return BigramLM(sorted(vocab), pair_counts, vocab_size)

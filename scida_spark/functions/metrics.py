@@ -100,51 +100,6 @@ def auc_exact(
     )
 
 
-def confusion_at_threshold(
-    df: DataFrame,
-    score_col: str,
-    label_col: str,
-    threshold: float,
-    group_cols=(),
-) -> DataFrame:
-    """(tp, fp, fn, tn) plus derived precision/recall/f1 at
-    ``score >= threshold`` — one aggregation pass, mergeable counts.
-    Zero-denominator metrics emit NULL (undefined, not 0)."""
-    group_cols = list(group_cols)
-    pred = F.col(score_col) >= float(threshold)
-    lab = F.col(label_col)
-    # coalesce: an empty (ungrouped) input still yields one row, and
-    # its SUMs are NULL — report zero counts with NULL derived metrics
-    agg = df.groupBy(*group_cols).agg(
-        F.coalesce(F.sum(F.when(pred & lab, 1).otherwise(0)), F.lit(0)).alias("tp"),
-        F.coalesce(F.sum(F.when(pred & ~lab, 1).otherwise(0)), F.lit(0)).alias("fp"),
-        F.coalesce(F.sum(F.when(~pred & lab, 1).otherwise(0)), F.lit(0)).alias("fn"),
-        F.coalesce(F.sum(F.when(~pred & ~lab, 1).otherwise(0)), F.lit(0)).alias("tn"),
-    )
-    prec = F.when(
-        F.col("tp") + F.col("fp") > 0,
-        F.col("tp").cast("double") / (F.col("tp") + F.col("fp")),
-    )
-    rec = F.when(
-        F.col("tp") + F.col("fn") > 0,
-        F.col("tp").cast("double") / (F.col("tp") + F.col("fn")),
-    )
-    f1 = F.when(
-        2 * F.col("tp") + F.col("fp") + F.col("fn") > 0,
-        2.0 * F.col("tp") / (2 * F.col("tp") + F.col("fp") + F.col("fn")),
-    )
-    return agg.select(
-        *group_cols,
-        "tp",
-        "fp",
-        "fn",
-        "tn",
-        prec.alias("precision"),
-        rec.alias("recall"),
-        f1.alias("f1"),
-    )
-
-
 def isotonic_calibration(
     df: DataFrame, score_col: str, label_col: str
 ) -> DataFrame:

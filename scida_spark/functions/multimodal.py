@@ -485,19 +485,6 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     return media.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per (media, frame idx).
-
-    Decode is stubbed; the exploded plan shape (media_id × frame_no) is
-    the real contract a downstream decoder consumes.
-    """
-    n_frames = (F.col("meta.n_bytes") / 100).cast("int") + 1  # fake duration proxy
-    frames = F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-    return media.select(
-        "media_id", F.explode(frames).alias("frame_no"), F.col("meta.n_bytes").alias("n_bytes")
-    )
-
-
 # --------------------------------------------------------------------------
 # Perceptual-hash image dedup (r9): joins the multimodal columns to the
 # dedup family — near-duplicate IMAGES found with the same pigeonhole

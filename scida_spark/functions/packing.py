@@ -141,17 +141,3 @@ def pack_sequences_by(
         F.col(token_count_col).cast("long").alias("_tok"),
     )
     return sel.groupBy("_dom").applyInPandas(_pack_group, schema=PACK_SCHEMA)
-
-
-def packing_efficiency(packed: DataFrame, budget: int) -> DataFrame:
-    """One-row density report: fraction of the token budget actually
-    used across non-oversize sequences (the number training-throughput
-    dashboards watch)."""
-    return packed.filter(~F.col("oversize")).agg(
-        F.count("*").alias("n_sequences"),
-        F.sum("total_tokens").alias("tokens_packed"),
-        (
-            F.sum("total_tokens").cast("double")
-            / (F.count("*") * F.lit(budget)).cast("double")
-        ).alias("density"),
-    )

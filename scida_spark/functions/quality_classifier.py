@@ -1,132 +1,22 @@
-"""ML-assisted quality filtering: the trained-classifier complement to
-the heuristic filters in text.py.
+"""Stochastic quality keep: the score-dependent, soft-threshold keep of
+the published pipeline shape (GPT-3 appendix A, CCNet, Gopher §A1.2),
+where documents are kept with a score-dependent probability so the kept
+set is not a hard cliff at the threshold.
 
-The published pipeline shape (GPT-3 appendix A, CCNet, Gopher §A1.2):
-train a lightweight linear classifier to distinguish a high-quality
-reference corpus from raw crawl, score every document, then keep
-documents stochastically with a score-dependent probability (so the
-kept set is not a hard cliff at the threshold). Re-expressed for
-Spark:
-
-* **Features are the signals this engine already computes** — token
-  count, lexical diversity, mean token length, stopword ratio, and
-  the Gopher repetition stats — assembled in one pass over the corpus
-  (Column expressions + the one Arrow-batched repetition UDF; zero
-  shuffle).
-* **Training is pyspark.ml LogisticRegression** — distributed L-BFGS:
-  each iteration is one map pass with tree-aggregated gradients, and
-  the fitted model is O(features) — broadcastable no matter the
-  corpus size.
-* **Scoring is map-only**: the model transform rides the existing
-  partitioning; no shuffle.
-* **The stochastic keep is DETERMINISTIC** (the sampling.py rule — no
-  rand()): the per-document uniform comes from the md5 hash bucket of
-  the id, so re-runs, engines, and partitionings agree row-for-row.
-  GPT-3 keeps a document when ``score >= 1 - pareto_sample(alpha)``;
-  with u = hash-uniform the Pareto sample is ``u**(-1/alpha) - 1``
-  (inverse-CDF of Pareto(alpha) - 1 on [0, inf)).
+The keep is DETERMINISTIC (the sampling.py rule — no rand()): the
+per-document uniform comes from the md5 hash bucket of the id, so
+re-runs, engines, and partitionings agree row-for-row. GPT-3 keeps a
+document when ``score >= 1 - pareto_sample(alpha)``; with u =
+hash-uniform the Pareto sample is ``u**(-1/alpha) - 1`` (inverse-CDF of
+Pareto(alpha) - 1 on [0, inf)).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from scida_spark.functions.sampling import BUCKET_SPACE, hash_bucket
-from scida_spark.functions.text import (
-    LANG_STOPWORDS,
-    repetition_stats,
-    stopword_hits,
-    tokens,
-)
-
-FEATURE_COLS = (
-    "f_log_ntok",
-    "f_distinct_ratio",
-    "f_mean_len",
-    "f_stopword_ratio",
-    "f_top_bigram_frac",
-    "f_max_run_frac",
-)
-
-
-def doc_features(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One pass: the quality-signal feature columns for every doc.
-    All JVM Column expressions except the repetition kernel's single
-    Arrow UDF; no shuffle."""
-    t = tokens(F.col(text_col))
-    n = F.size(t).cast("double")
-    sw = sum(
-        (stopword_hits(F.col(text_col), words) for words in LANG_STOPWORDS.values()),
-        F.lit(0),
-    )
-    rep = repetition_stats(docs, id_col, text_col).select(
-        id_col, "top_bigram_n", "n_bigrams", "max_run"
-    )
-    base = docs.select(
-        F.col(id_col),
-        F.col(text_col),
-        F.log1p(n).alias("f_log_ntok"),
-        (F.size(F.array_distinct(t)) / n).alias("f_distinct_ratio"),
-        (
-            F.aggregate(t, F.lit(0).cast("long"), lambda a, x: a + F.length(x)) / n
-        ).alias("f_mean_len"),
-        (sw.cast("double") / n).alias("f_stopword_ratio"),
-    )
-    return base.join(rep, id_col).select(
-        id_col,
-        text_col,
-        "f_log_ntok",
-        "f_distinct_ratio",
-        "f_mean_len",
-        "f_stopword_ratio",
-        (F.col("top_bigram_n") / F.greatest(F.col("n_bigrams"), F.lit(1))).alias(
-            "f_top_bigram_frac"
-        ),
-        (F.col("max_run") / F.greatest(F.col("n_bigrams") + 1, F.lit(1))).alias(
-            "f_max_run_frac"
-        ),
-    )
-
-
-def train_quality_classifier(
-    labeled: DataFrame,
-    id_col: str,
-    text_col: str,
-    label_col: str,
-    max_iter: int = 50,
-):
-    """Fit the linear quality model on a labeled corpus (1.0 =
-    high-quality reference, 0.0 = raw). Returns the fitted
-    LogisticRegressionModel (save/load via its own .save()/.load())."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
-
-    feats = doc_features(labeled.select(id_col, text_col), id_col, text_col)
-    data = feats.join(labeled.select(id_col, label_col), id_col)
-    va = VectorAssembler(inputCols=list(FEATURE_COLS), outputCol="features")
-    lr = LogisticRegression(
-        maxIter=max_iter, labelCol=label_col, featuresCol="features"
-    )
-    return lr.fit(va.transform(data))
-
-
-def score_quality(
-    docs: DataFrame, model, id_col: str, text_col: str, out_col: str = "q_score"
-) -> DataFrame:
-    """P(high-quality) per document — map-only after the O(features)
-    model broadcast."""
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.functions import vector_to_array
-
-    feats = doc_features(docs, id_col, text_col)
-    va = VectorAssembler(inputCols=list(FEATURE_COLS), outputCol="features")
-    scored = model.transform(va.transform(feats))
-    return scored.select(
-        id_col,
-        text_col,
-        F.element_at(vector_to_array("probability"), 2).alias(out_col),
-    )
 
 
 def pareto_keep(
@@ -140,19 +30,3 @@ def pareto_keep(
     u = (hash_bucket(id_col, salt) + 0.5) / F.lit(float(BUCKET_SPACE))
     pareto = F.pow(u, F.lit(-1.0 / alpha)) - 1.0
     return score_col >= (1.0 - pareto)
-
-
-def classifier_filter(
-    docs: DataFrame,
-    model,
-    id_col: str,
-    text_col: str,
-    alpha: float = 9.0,
-    salt: str = "",
-) -> DataFrame:
-    """Score + stochastic keep in one go: the production filter stage.
-    Adds ``q_score`` and keeps the Pareto-surviving rows."""
-    scored = score_quality(docs, model, id_col, text_col)
-    return scored.filter(
-        pareto_keep(F.col("q_score"), F.col(id_col), alpha=alpha, salt=salt)
-    )

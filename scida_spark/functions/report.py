@@ -1,30 +1,19 @@
-"""Dataset card: the one-page corpus audit a pipeline runs before
-training — facet counts, token budgets, quality, duplication.
+"""Corpus facets: the per-facet half of a pre-training corpus audit —
+doc counts, token budgets, quality and token-count quantiles.
 
-Everything here is COMPOSITION of the existing operator surface
-(text.py quality/token stats, sketches.py KLL quantiles, dedup.py's
-exact-hash grain), arranged to touch the corpus the minimum number of
-times:
-
-* **One GROUPING SETS scan** computes every facet — overall, by
-  language, by source — in a single shuffle: Catalyst expands the
-  grouping sets over one pass of partial aggregates, so adding a
-  facet costs no extra scan. Token-count quantiles ride the same
-  pass as KLL sketch partials (mergeable, ~3 KB each), never a
-  per-facet sort.
-* **One exact-dup scan**: groupBy(md5(text)) → two-level partial agg
-  to (n_docs, n_distinct_texts, n_docs_in_dup_clusters). The md5
-  grain is the same canonical content hash exact_duplicates() uses.
-
-At 100 TB the report is therefore 2 corpus scans + 2 shuffles whose
-outputs are O(facets) and O(distinct texts) — and the KLL/HLL columns
-make every number mergeable across partitioned runs (shard the corpus,
-report per shard, merge the cards).
+Composition of the existing operator surface (text.py quality/token
+stats, sketches.py KLL quantiles), arranged to touch the corpus once:
+one GROUPING SETS scan computes every facet — overall, by language, by
+source — in a single shuffle. Catalyst expands the grouping sets over
+one pass of partial aggregates, so adding a facet costs no extra scan.
+Token-count quantiles ride the same pass as KLL sketch partials
+(mergeable, ~3 KB each), never a per-facet sort, so every number merges
+across partitioned runs (shard the corpus, report per shard, merge).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scida_spark.functions.text import quality_score, token_count
@@ -73,79 +62,3 @@ def corpus_facets(
         )
     )
     return g
-
-
-def duplication_stats(docs: DataFrame, text_col: str = "text") -> Row:
-    """Exact-duplication summary in one two-level aggregation:
-    (n_docs, n_distinct_texts, n_dup_docs) where ``n_dup_docs`` counts
-    documents living in a >1-member md5 cluster. The md5 shuffle
-    output is O(distinct texts); the second level is O(1)."""
-    per_text = docs.groupBy(F.md5(F.col(text_col)).alias("_h")).agg(
-        F.count("*").alias("c")
-    )
-    # coalesce: SUM over zero rows is NULL — an empty corpus must card
-    # as zeros, not crash the report
-    return per_text.agg(
-        F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_docs"),
-        F.count("*").cast("long").alias("n_distinct_texts"),
-        F.coalesce(
-            F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(F.lit(0))), F.lit(0)
-        )
-        .cast("long")
-        .alias("n_dup_docs"),
-    ).first()
-
-
-def dataset_card(
-    docs: DataFrame,
-    text_col: str = "text",
-    lang_col: str = "lang",
-    source_col: str = "source",
-) -> dict:
-    """The merged report as a plain dict (JSON-ready): overall totals,
-    duplication rate, and per-language / per-source breakdowns."""
-    facets = corpus_facets(docs, text_col, lang_col, source_col).collect()
-    dup = duplication_stats(docs, text_col)
-
-    def _entry(r: Row) -> dict:
-        qs = list(r["tok_quantiles"] or [])
-        return {
-            "n_docs": r["n_docs"],
-            "n_tokens": r["n_tokens"] or 0,
-            "mean_quality": (
-                round(float(r["mean_quality"]), 6)
-                if r["mean_quality"] is not None
-                else None
-            ),
-            "tokens_p50": qs[0] if qs else None,
-            "tokens_p95": qs[1] if len(qs) > 1 else None,
-        }
-
-    # An empty corpus yields ZERO facet rows (grouping sets emit no
-    # groups over empty input, including the global one) — default the
-    # overall entry so the card is still well-formed.
-    card: dict = {
-        "overall": {
-            "n_docs": 0,
-            "n_tokens": 0,
-            "mean_quality": None,
-            "tokens_p50": None,
-            "tokens_p95": None,
-        },
-        "languages": {},
-        "sources": {},
-    }
-    for r in facets:
-        if r["facet"] == "all":
-            card["overall"] = _entry(r)
-        elif r["facet"] == "lang":
-            card["languages"][r["key"]] = _entry(r)
-        else:
-            card["sources"][r["key"]] = _entry(r)
-    card["duplication"] = {
-        "n_docs": dup["n_docs"],
-        "n_distinct_texts": dup["n_distinct_texts"],
-        "n_dup_docs": dup["n_dup_docs"],
-        "dup_rate": round(dup["n_dup_docs"] / max(dup["n_docs"], 1), 6),
-    }
-    return card

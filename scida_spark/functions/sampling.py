@@ -80,30 +80,6 @@ def hash_sample(df: DataFrame, id_col: str, fraction: float, salt: str = "") -> 
     return df.filter(hash_bucket(F.col(id_col), salt) < int(fraction * BUCKET_SPACE))
 
 
-def hash_sample_exact_n(
-    df: DataFrame, id_col: str, n: int, salt: str = ""
-) -> DataFrame:
-    """EXACTLY ``n`` rows, deterministically: the n smallest ids under
-    the (hash-bucket, id) total order — the fixed-size complement to
-    ``hash_sample``'s fixed-fraction filter (eval sets and debugging
-    samples want an exact N, not a binomial spread around it).
-
-    Same guarantees as the rest of this module: pure function of
-    (id, salt) → identical membership on any engine/partitioning, and
-    PREFIX-monotone — the N-sample is a subset of the M-sample for
-    N < M at the same salt (so a 1k debug set is always inside the
-    10k eval set).
-
-    Scale: ``orderBy(...).limit(n)`` plans as TakeOrderedAndProject —
-    per-partition size-n heaps + a driver merge of n·partitions rows,
-    never a global sort (the q_global_topn plan contract). Keep n
-    driver-sized; for huge exact samples use ``stratified_exact_sample``
-    with one stratum instead."""
-    return df.orderBy(
-        hash_bucket(F.col(id_col), salt).asc(), F.col(id_col).asc()
-    ).limit(int(n))
-
-
 # --------------------------------------------------------------------------
 # Domain mixing (corpus composition control)
 # --------------------------------------------------------------------------

@@ -1791,36 +1791,6 @@ def srp_signature(
     return out.drop(*[f"__p{j}" for j in range(n_bits)])
 
 
-def srp_near_pairs(
-    embeddings: DataFrame,
-    n_bits: int = 62,
-    dim: int = 64,
-    max_hamming: int = 4,
-    salt: str = "srp",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding near-dup candidate pairs by SRP-signature Hamming
-    distance — the fourth rider on the generalized pigeonhole blocking
-    (text simhash, image phash, audio afp, and now raw vectors): one
-    equi-join on chunk-subset keys, complete for distance <=
-    ``max_hamming``, never all-pairs. Candidates only (Charikar bits
-    approximate angle); exact-verify survivors with ``cosine`` where
-    the use case needs it.
-
-    Keep ``n_bits`` near 62: the blocking kernel chunks a 64-bit
-    space, so unpopulated high bits are constants that weaken their
-    chunks' keys (fewer distinguishing bits per bucket)."""
-    from scida_spark.functions.dedup import simhash_near_pairs
-
-    sig = srp_signature(
-        embeddings, n_bits, dim, salt, vec_col=vec_col
-    ).select(F.col(id_col).alias("doc"), F.col("srp_sig").alias("simhash"))
-    return simhash_near_pairs(sig, max_hamming=max_hamming).select(
-        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"), "hamming"
-    )
-
-
 # --------------------------------------------------------------------------
 # SQ8 — per-dimension 8-bit scalar quantization (oracle-exact codes)
 # --------------------------------------------------------------------------
@@ -1998,22 +1968,6 @@ def _kmeans_assigned(xi, cent_rows, id_col, lit_max: int | None = None):
         F.col("_a.cluster").alias("cluster"),
         F.col("_a.dist2").alias("dist2"),
     )
-
-
-def save_kmeans_centroids(spark, centroids: list[list[int]], path: str) -> None:
-    """Integer centroid matrix → parquet (cluster, centroid
-    array<bigint>) — the persistable ingest artifact (the
-    ``save_ivf_index`` convention), so serving tiers call
-    :func:`kmeans_assign` with ``centroids=`` and never retrain."""
-    rows = [(int(i), [int(v) for v in c]) for i, c in enumerate(centroids)]
-    local_df(spark, 
-        rows, "cluster int, centroid array<bigint>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_kmeans_centroids(spark, path: str) -> list[list[int]]:
-    rows = spark.read.parquet(path).orderBy("cluster").collect()
-    return [[int(v) for v in r["centroid"]] for r in rows]
 
 
 def kmeans_assign(

@@ -89,29 +89,6 @@ def hot_spans(
     )
 
 
-def hot_span_examples(
-    docs: DataFrame, hot: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
-    """Reporting helper: (span_h, n_docs, example) with the
-    lexicographically-smallest matching span text. A second scan that
-    materializes span TEXT only for hot hits (Catalyst prunes the text
-    column from the detection path, so the hot path never pays it)."""
-    st = docs.select(
-        F.posexplode(_span_hashes(F.col(text_col), k)).alias("p0", "span_h"),
-        F.col(text_col).alias("_txt"),
-    ).select(
-        "span_h",
-        F.array_join(
-            F.slice(tokens(F.col("_txt")), F.col("p0") + 1, k), " "
-        ).alias("span"),
-    )
-    return (
-        st.join(hot, "span_h")
-        .groupBy("span_h", "n_docs")
-        .agg(F.min("span").alias("example"))
-    )
-
-
 def mask_hot_spans(
     docs: DataFrame,
     hot: DataFrame,

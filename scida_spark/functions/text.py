@@ -1,8 +1,10 @@
-"""Text analysis: tokenization, quality scoring, language ID, fingerprints.
+"""Text analysis: tokenization, quality scoring, language ID, PII
+redaction, repetition and Unicode normalization.
 
-All hot-path logic is JVM-side Column expressions (split / filter /
-transform / size) so it stays inside whole-stage codegen; only the
-rolling-hash fingerprint uses an Arrow-batched Pandas UDF.
+Hot-path logic is JVM-side Column expressions (split / filter /
+transform / size) so it stays inside whole-stage codegen; only what
+Columns cannot express (repetition stats, Unicode normalization) runs
+as an Arrow-batched Pandas UDF.
 """
 
 from __future__ import annotations
@@ -38,11 +40,6 @@ def stopword_hits(text: Column, words: tuple[str, ...]) -> Column:
     """Count of tokens that are in the stopword set."""
     wl = list(words)
     return F.size(F.filter(tokens(text), lambda t: t.isin(wl)))
-
-
-def distinct_token_ratio(text: Column) -> Column:
-    t = tokens(text)
-    return F.size(F.array_distinct(t)).cast("double") / F.size(t)
 
 
 def mean_token_length(text: Column) -> Column:
@@ -120,59 +117,16 @@ def bpe_tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(BPE_ISH_PATTERN), 0)
 
 
-def md5_fingerprint(text: Column, nhex: int = 16) -> Column:
-    """Portable content fingerprint: first ``nhex`` hex chars of md5."""
-    return F.substring(F.md5(text), 1, nhex)
-
-
-MOD = (1 << 61) - 1
-BASE = 257
-
-
-def rolling_hash_fingerprint(df: DataFrame, text_col: str, out_col: str = "fingerprint") -> DataFrame:
-    """Polynomial rolling hash over bytes, mod 2^61-1 (Karp-Rabin).
-
-    Arrow-batched Pandas UDF (vectorized per batch with numpy on the
-    byte array) — the UDF escape hatch for logic Columns can't express.
-    """
-
-    @F.pandas_udf("long")
-    def _rh(s: pd.Series) -> pd.Series:
-        out = np.empty(len(s), dtype=np.int64)
-        for i, txt in enumerate(s):
-            h = 0
-            for b in (txt or "").encode("utf-8"):
-                h = (h * BASE + b) % MOD
-            out[i] = h
-        return pd.Series(out)
-
-    return df.withColumn(out_col, _rh(F.col(text_col)))
-
-
 # --------------------------------------------------------------------------
 # Text cleaning (pre-training corpus hygiene)
 # --------------------------------------------------------------------------
-# All pure Column expressions: whole-stage codegen, zero shuffle, and
-# they compose — clean_text() is the standard chain. Patterns are Java
-# regex (executed JVM-side by regexp_replace).
+# All pure Column expressions: whole-stage codegen, zero shuffle.
+# Patterns are Java regex (executed JVM-side by regexp_replace).
 
 _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _URL_RE = r"(?:https?://|www\.)[^\s]+"
 _IPV4_RE = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"
 _PHONE_RE = r"\+?\d[\d\s().-]{7,}\d"
-_CONTROL_RE = r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]"
-
-
-def strip_control_chars(text: Column) -> Column:
-    """Remove C0/C1 control characters except newline and tab."""
-    return F.regexp_replace(text, _CONTROL_RE, "")
-
-
-def normalize_whitespace(text: Column) -> Column:
-    """Collapse whitespace runs to one space and trim — canonical form
-    for tokenizers and exact-dedup hashing (two docs differing only in
-    spacing hash identically after this)."""
-    return F.trim(F.regexp_replace(text, r"\s+", " "))
 
 
 def redact_pii(text: Column) -> Column:
@@ -185,41 +139,6 @@ def redact_pii(text: Column) -> Column:
     out = F.regexp_replace(out, _IPV4_RE, "<IP>")
     out = F.regexp_replace(out, _PHONE_RE, "<PHONE>")
     return out
-
-
-BOILERPLATE_MARKERS = (
-    "all rights reserved",
-    "cookie policy",
-    "terms of service",
-    "subscribe to our newsletter",
-)
-
-
-def remove_boilerplate_lines(
-    text: Column, markers: tuple[str, ...] = BOILERPLATE_MARKERS
-) -> Column:
-    """Drop lines containing any boilerplate marker (case-insensitive
-    substring match) — the line-level filter CCNet/RefinedWeb-style
-    pipelines apply before document-level dedup. ONE multiline
-    case-insensitive regexp_replace, not split→filter(lambda)→join:
-    higher-order functions run interpreted and break the codegen span
-    (measured in SCALE.md), while this stays a single whole-stage-
-    codegen'd projection."""
-    import re as _re
-
-    alternation = "|".join(_re.escape(m) for m in markers)
-    return F.regexp_replace(
-        text, f"(?im)^.*(?:{alternation}).*(?:\n|$)", ""
-    )
-
-
-def clean_text(text: Column) -> Column:
-    """Standard cleaning chain: strip control chars → drop boilerplate
-    lines → redact PII → normalize whitespace. One projection, fully
-    codegen'd — cleaning 100 TB is a map-only scan."""
-    return normalize_whitespace(
-        redact_pii(remove_boilerplate_lines(strip_control_chars(text)))
-    )
 
 
 def repetition_kernel(texts) -> "tuple[np.ndarray, np.ndarray]":
@@ -294,8 +213,8 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Corpus-wide line-level dedup (CCNet / RefinedWeb paragraph dedup)
 # --------------------------------------------------------------------------
-# The marker-based remove_boilerplate_lines above needs a curated list;
-# the frequency-based pair below DISCOVERS boilerplate: any line that
+# The frequency-based pair below DISCOVERS boilerplate (no curated
+# marker list): any line that
 # occurs in >= min_docs distinct documents is removed from every
 # document (nav bars, cookie banners, footers — CCNet, Wenzek+ 2019
 # §4.1 dedups at the paragraph level against corpus-wide hashes).

@@ -19,7 +19,7 @@ Spark mapping:
                      dataset.py:1147-1149), or a bucketed range join for
                      catalogs too large to broadcast
   * group→particle attribute copy → broadcast equi-join
-  * grouped()      → groupBy().agg() / applyInPandas
+  * grouped()      → groupBy().agg() / segmented_apply
 
 Sentinel: unbound rows get int64 max (reference dataset.py:323-324,
 docs/halocatalogs.md:57-60).
@@ -442,10 +442,12 @@ class GroupAwareOperation:
 
     Mirrors the reference's ``GroupAwareOperation`` chain
     (arepo/dataset.py:826-1016). Built-in reductions compile to
-    ``groupBy().agg()`` (shuffle with map-side combine); arbitrary
-    ``apply(func)`` chains fall back to ``applyInPandas`` where Spark's
-    shuffle + AQE replace the reference's chunk cost model
-    (dataset.py:1381-1445).
+    ``groupBy().agg()`` (shuffle with map-side combine); chains with
+    ``half()`` or ``apply(func)`` run per group through
+    :func:`segmented_apply` (one shuffle on the group key, then one
+    Python call per Arrow batch that loops over the batch's contiguous
+    groups), where Spark's shuffle + AQE replace the reference's chunk cost
+    model (dataset.py:1381-1445).
     """
 
     _BUILTIN = {"sum", "min", "max", "mean", "count"}
@@ -541,23 +543,26 @@ class GroupAwareOperation:
                         out_units[f"{op}_{f}"] = in_units.get(f)
                     # count is dimensionless → no unit metadata
             return self._attach_units(df.groupBy(g).agg(*aggs), out_units)
-        # Chained / custom ops: applyInPandas per group. Ops apply
-        # SEQUENTIALLY on this path (half → sum means "sum of the first
-        # half"), mirroring the reference's ChainOps composition
-        # (arepo/dataset.py:789-823); the pure-builtin fast path above
-        # instead evaluates each reduction independently in one agg.
+        # Chained / custom ops: one pandas call per group, run by
+        # segmented_apply's per-block loop (rows whose group key is null
+        # form no group here). Ops apply SEQUENTIALLY on this path
+        # (half → sum means "sum of the first half"), mirroring the
+        # reference's ChainOps composition (arepo/dataset.py:789-823);
+        # the pure-builtin fast path above instead evaluates each
+        # reduction independently in one agg.
         ops = self._ops
         fields = self._fields
+        # The declared frame (group key + fields): other columns would
+        # not match the default output schema of non-reducing chains
+        # like half(), and need not cross into Python.
+        frame = df.select(g, *[f for f in fields if f != g])
 
         applies = [p for o, p in ops if o == "apply"]
         last_apply = applies[-1] if applies else None
         has_apply = last_apply is not None
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            # Restrict to the declared frame (group key + fields): the
-            # input carries every df column, which would not match the
-            # default output schema for non-reducing chains like half().
-            out = pdf[[g, *[f for f in fields if f != g]]]
+            out = pdf.reset_index(drop=True)  # funcs see a 0..n-1 index per group
             for op, payload in ops:
                 if op == "half":
                     out = out.iloc[: max(1, len(out) // 2)]
@@ -580,7 +585,7 @@ class GroupAwareOperation:
             # builtin/half chain → (key, fields-as-double)
             schema = ", ".join([f"{g} long"] + [f"{f} double" for f in fields])
             units_decl = None
-        result = df.groupBy(g).applyInPandas(run, schema=schema)
+        result = segmented_apply(frame, g, run, schema)
         if not has_apply:
             # half/builtin chains keep each field's input unit (every
             # op on this path is unit-preserving: slicing rows or
@@ -590,7 +595,7 @@ class GroupAwareOperation:
             # Reference-style eager probe (arepo/dataset.py:1529-1576):
             # run the declared func driver-side on a one-group sample
             # and read the returned frame's attrs["units"] mapping.
-            sample = df.select(g, *[f for f in fields if f != g]).limit(256).toPandas()
+            sample = frame.limit(256).toPandas()
             unit_map: dict[str, str] = {}
             if len(sample):
                 one = sample[sample[g] == sample[g].iloc[0]]

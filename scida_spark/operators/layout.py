@@ -8,10 +8,8 @@ layout**: write once clustered by the group key, and every subsequent
 ``groupBy(key)`` / self-join / catalog-join on that key runs without a
 shuffle (Spark's bucketing metadata proves co-location to the planner).
 
-``save_bucketed`` is the ingest-time option (one shuffle now,
-amortized over every later query); ``cluster_by_key`` is the
-in-session equivalent (repartition + sortWithinPartitions) whose
-partitioning AQE can reuse across stages of one plan.
+``save_bucketed`` is the ingest-time option: one shuffle now,
+amortized over every later query.
 """
 
 from __future__ import annotations
@@ -36,16 +34,3 @@ def save_bucketed(
 
 def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
     return spark.table(table_name)
-
-
-def cluster_by_key(df: DataFrame, key_col: str, *sort_cols: str,
-                   num_partitions: int | None = None) -> DataFrame:
-    """In-session clustering: range-partition by key + sort within
-    partitions (the layout the reference's chunk planner hand-builds,
-    arepo/dataset.py:1381-1445 — here one declarative line)."""
-    rp = (
-        df.repartitionByRange(num_partitions, key_col)
-        if num_partitions
-        else df.repartitionByRange(key_col)
-    )
-    return rp.sortWithinPartitions(key_col, *sort_cols)

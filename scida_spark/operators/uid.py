@@ -6,16 +6,13 @@ scida injects ``uid = da.arange(nparts)`` per container at load
 by contiguous uid ranges. Spark relations are unordered, so the engine
 makes the index explicit and persists it as a column.
 
-Two strategies:
-
-* :func:`with_uid_by_order` — deterministic uid from a total ordering
-  (sort keys). Scale-safe: ``row_number`` over a partitioned window
-  would need a single task for a global ordering, so we use the
-  two-phase form — per-partition local ranks + broadcast partition
-  offsets (classic zipWithIndex, but in DataFrame terms).
-* :func:`with_uid_ingest_order` — uid from physical ingest order
-  (file/split order). Matches scida's "file order is the order"
-  assumption; valid for sources that enumerate splits in order.
+The file readers assign uid from split offsets (``sources/convert.py``).
+For a relation without one, :func:`with_uid_by_order` derives a
+deterministic uid from a total ordering (sort keys). Scale-safe:
+``row_number`` over a partitioned window would need a single task for a
+global ordering, so it uses the two-phase form — per-partition local
+ranks + broadcast partition offsets (classic zipWithIndex, but in
+DataFrame terms).
 """
 
 from __future__ import annotations
@@ -25,7 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from scida_spark.operators.prefix_sum import exclusive_key_prefix
-from scida_spark.session import local_df
 
 
 def with_uid_by_order(
@@ -114,36 +110,4 @@ def uid_range_filter(
         )
         .drop("__offset")
         .filter(uid_keep)
-    )
-
-
-def with_uid_ingest_order(df: DataFrame, uid_col: str = "uid") -> DataFrame:
-    """Assign uid from physical partition order (split order ≙ file order).
-
-    Uses monotonically_increasing_id's partition-prefix layout only to
-    rank *within* a partition; offsets between partitions come from
-    exact per-partition counts, so uids are dense 0..N-1.
-    """
-    pid = F.spark_partition_id()
-    # localCheckpoint pins ONE physical materialization: the per-pid
-    # counts (job 1) and the uid assignment (job 2) must see identical
-    # partition ids / row order, which AQE re-planning or shuffle-fetch
-    # nondeterminism would otherwise break between jobs.
-    local = (
-        df.withColumn("__pid", pid)
-        .withColumn("__mono", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
-    )
-    counts = local.groupBy("__pid").count().orderBy("__pid").collect()
-    acc = 0
-    rows = []
-    for r in counts:
-        rows.append((r["__pid"], acc))
-        acc += r["count"]
-    off_df = local_df(df.sparkSession, rows, "__pid int, __offset long")
-    w = W.partitionBy("__pid").orderBy("__mono")
-    return (
-        local.join(F.broadcast(off_df), "__pid")
-        .withColumn(uid_col, F.row_number().over(w).cast("long") + F.col("__offset") - 1)
-        .drop("__pid", "__mono", "__offset")
     )

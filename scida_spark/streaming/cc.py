@@ -126,10 +126,7 @@ def incremental_cc_ingest(
         # broadcast the batch bands against the PERSISTED bands index,
         # and exact-verify candidates against old shingles only — the
         # ingest.py pattern. History is never re-signed: per-batch cost
-        # is O(batch × bands + matches), not O(history). (r9 ADVICE:
-        # the old path called minhash_incremental_pairs over the FULL
-        # historical shingle table, re-signing the corpus every
-        # micro-batch while the persisted bands index sat unread.)
+        # is O(batch × bands + matches), not O(history).
         new_sig = minhash_signatures_from_shingles(sh, num_perm, seed)
         new_bands = _band_signatures(
             new_sig, bands, rows_per_band

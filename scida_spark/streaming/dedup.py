@@ -1,21 +1,13 @@
-"""Streaming deduplication and custom stateful operators.
+"""Streaming deduplication.
 
-* :func:`dedup_stream` — exactly-once-per-key emission inside the
-  watermark horizon via ``dropDuplicatesWithinWatermark`` (bounded
-  state: keys expire with the watermark).
-* :func:`running_user_stats` — custom stateful operator via
-  ``applyInPandasWithState``: per-user running aggregates emitted on
-  every trigger (the streaming analog of the reference's per-group
-  ``map_group_operation``; state is one tiny tuple per key).
+:func:`dedup_stream` — exactly-once-per-key emission inside the
+watermark horizon via ``dropDuplicatesWithinWatermark`` (bounded state:
+keys expire with the watermark).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
 def dedup_stream(
@@ -28,94 +20,3 @@ def dedup_stream(
 
     events = ensure_event_time(events, ts_col)
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
-
-
-OUT_SCHEMA = "user_id long, n_events long, total_value double"
-STATE_SCHEMA = "n long, total double"
-
-
-def _update_user_stats(
-    key, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        n, total = state.get
-    else:
-        n, total = 0, 0.0
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({"user_id": [user_id], "n_events": [n], "total_value": [total]})
-
-
-def running_user_stats(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum) maintained as keyed state."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _update_user_stats,
-            outputStructType=OUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def write_stream_foreach_batch(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):
-    """foreachBatch parquet sink: per-micro-batch idempotent write keyed
-    by batch_id (the standard exactly-once-to-storage pattern — replays
-    of a batch after failure overwrite the same directory instead of
-    duplicating rows). Returns the started StreamingQuery.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def running_user_stats_tws(events: DataFrame) -> DataFrame:
-    """Per-user running (count, sum) on Spark 4's arbitrary-state API
-    (``transformWithStateInPandas`` + StatefulProcessor) — the
-    successor to ``applyInPandasWithState`` above: typed value state,
-    explicit handle lifecycle, and state-format evolution support.
-    Same semantics as :func:`running_user_stats`; both are kept so the
-    engine runs on either API generation. State remains one tiny tuple
-    per user — bounded at any scale."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.groupBy("user_id")
-        .transformWithStateInPandas(
-            _UserStats(),
-            outputStructType=OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

@@ -52,7 +52,6 @@ pair with itself).
 from __future__ import annotations
 
 import os
-import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,13 +72,6 @@ __all__ = [
 ]
 
 DEFAULT_BUCKETS = 16
-
-
-def anchor_bucket(h: str, n_buckets: int = DEFAULT_BUCKETS) -> int:
-    """Python twin of the JVM shard function (crc32 of the hex hash's
-    UTF-8 bytes — the postings ``term_bucket`` convention), so a
-    targeted serve can prune to its probe anchors' buckets."""
-    return zlib.crc32(h.encode("utf-8")) % n_buckets
 
 
 def esub_store_meta(store_dir: str) -> dict:

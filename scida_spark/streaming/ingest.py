@@ -14,9 +14,7 @@ index (bucket key, never all-pairs) + an exact-Jaccard verify that
 touches only the shingle rows of candidate old docs. At 100 TB the
 bands/shingles store is the ingest-time index kept next to the corpus
 (partitioned by batch; the per-batch band join's small side is the new
-batch, which broadcasts), exactly the shape
-``functions/dedup.py::minhash_incremental_pairs`` benchmarks in batch
-form — this module is its Structured Streaming driver.
+batch, which broadcasts).
 
 All foreachBatch writes are keyed by ``batch_id`` subdirectory with
 ``mode("overwrite")`` — the standard idempotent exactly-once-to-storage
@@ -30,9 +28,9 @@ masks apply immediately at every read (the doc drops from
 blocking resubmissions), and :func:`compact_dedup_index` makes the
 removal physical — corpus purge first as its own crash-safe unit, then
 all three index substores folded + tombstones cleared in ONE storefs
-transaction. With this, all four incremental stores (text postings,
-vector lists, span counts, near-dup signatures) share the same
-tombstone + transactional-compaction contract.
+transaction. With this, the incremental stores (text postings, vector
+lists, near-dup signatures) share the same tombstone +
+transactional-compaction contract.
 
 Net-new surface (no reference counterpart; the reference is a
 batch-only astrophysics engine — SURVEY §2.7).
@@ -414,126 +412,4 @@ def vector_index_ingest(
     return storekit.run_file_ingest(
         spark, input_dir, schema, process, checkpoint_dir,
         available_now=available_now, max_files_per_trigger=1,
-    )
-
-
-def span_index_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    *,
-    corpus_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    available_now: bool = True,
-):
-    """Rolling-ingest half of repeated-span dedup (Lee et al. 2021
-    regime over a GROWING corpus — completes functions/spans.py, whose
-    batch operators assume the corpus is final).
-
-    A span's hotness is a GLOBAL property: the k-window that crosses
-    the ``min_docs`` line in batch 12 retroactively makes every batch-3
-    document containing it maskable. Rewriting history per batch is
-    write-amplified nonsense at 100 TB, so the streaming side persists
-    only the MERGEABLE partial — per-batch distinct-document span
-    counts, a monoid under +, the sketch-rollup-store pattern
-    (streaming/rollup.py) — and masking happens at READ time against
-    the summed index (:func:`read_masked_corpus`). That makes N-batch
-    ingest ≡ batch-mode ``mask_hot_spans`` of the concatenation EXACT
-    (pytest-pinned), not an approximation: per-batch counts of
-    distinct docs sum to the global count because each doc arrives in
-    exactly one batch.
-
-    Writes are idempotent per ``batch_id`` directory (overwrite), the
-    standard exactly-once-to-storage pattern; ``min_docs`` is a READ
-    parameter, not baked into the index — the same persisted counts
-    serve any threshold. ``k`` MUST stay fixed for the index's life
-    (same contract as the minhash index's num_perm/bands/seed).
-    """
-    from scida_spark.functions.spans import _span_hashes
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        counts = (
-            batch.select(
-                F.explode(
-                    F.array_distinct(_span_hashes(F.col(text_col), k))
-                ).alias("span_h")
-            )
-            .groupBy("span_h")
-            .agg(F.count("*").alias("n_docs"))
-        )
-        batch.write.mode("overwrite").parquet(
-            f"{corpus_dir}/batch_id={batch_id}"
-        )
-        counts.write.mode("overwrite").parquet(
-            f"{index_dir}/spans/batch_id={batch_id}"
-        )
-
-    return storekit.run_file_ingest(
-        spark, input_dir, schema, process, checkpoint_dir,
-        available_now=available_now, max_files_per_trigger=1,
-    )
-
-
-def hot_spans_from_index(
-    spark: SparkSession, index_dir: str, min_docs: int = 2
-) -> DataFrame:
-    """(span_h, n_docs) with GLOBAL counts >= ``min_docs``, summed from
-    the per-batch partials — one partial-agg shuffle over hash keys."""
-    partials = spark.read.parquet(os.path.join(index_dir, "spans"))
-    return (
-        partials.groupBy("span_h")
-        .agg(F.sum("n_docs").alias("n_docs"))
-        .where(F.col("n_docs") >= F.lit(int(min_docs)))
-    )
-
-
-def read_masked_corpus(
-    spark: SparkSession,
-    corpus_dir: str,
-    index_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    min_docs: int = 2,
-    out_col: str = "masked",
-) -> DataFrame:
-    """The corpus with every globally-hot k-window masked — identical
-    to batch-mode ``mask_hot_spans`` over the full concatenation (the
-    read-time half of :func:`span_index_ingest`'s contract). The hot
-    set derives from the summed index, NOT a corpus re-scan."""
-    from scida_spark.functions.spans import mask_hot_spans
-
-    docs = spark.read.parquet(corpus_dir).drop("batch_id")
-    hot = hot_spans_from_index(spark, index_dir, min_docs=min_docs)
-    return mask_hot_spans(docs, hot, id_col, text_col, k, out_col=out_col)
-
-
-def compact_span_index(spark: SparkSession, index_dir: str) -> None:
-    """Fold all per-batch span partials into one summed partition
-    (batch_id=-1) — the rollup-store compaction move: read cost stays
-    O(distinct spans) instead of O(batches x distinct spans). Safe to
-    run any time; the summed row IS the monoid element, so subsequent
-    batches keep appending partials on top. Crash-safe via
-    ``streaming/storefs`` (scratch + manifest + recover); single-
-    writer under ``storefs.maintenance_lock``."""
-    path = os.path.join(index_dir, "spans")
-    # absorb_base: this fold reads the directory PLAIN (no basePath),
-    # so an existing batch_id=-1 base folds in and must be retired
-    # alongside the batch partials rather than left to double-count;
-    # sever_lineage: the fold reads the very files the promote deletes.
-    storekit.compact_monoid_store(
-        spark,
-        path,
-        lambda: (
-            spark.read.parquet(path)
-            .groupBy("span_h")
-            .agg(F.sum("n_docs").alias("n_docs"))
-        ),
-        absorb_base=True,
-        sever_lineage=True,
     )

@@ -114,92 +114,6 @@ def compact_rollup(
     return storekit.compact_monoid_store(spark, store_dir, _base)
 
 
-# ---------------------------------------------------------------------------
-# Incremental heavy-hitters store (Misra-Gries partials per batch, r9)
-# ---------------------------------------------------------------------------
-
-
-def incremental_freq_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    *,
-    store_dir: str,
-    checkpoint_dir: str,
-    group_cols: list[str],
-    value_col: str,
-    k: int = 32,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Maintain a streaming heavy-hitters store: each micro-batch is
-    reduced to Misra-Gries partials (functions/sketches.py::
-    freq_partials — O(k) rows per batch-group, the same mergeable-
-    summaries algebra as the count/sum/HLL rollup above) and appended
-    under its own ``batch_id=N`` dir (idempotent overwrite). Serving
-    merges partials; history is never re-scanned."""
-    from scida_spark.functions.sketches import freq_partials
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        part = freq_partials(batch_df, group_cols, value_col, k)
-        part.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_id={batch_id}")
-        )
-
-    return storekit.run_file_ingest(
-        spark, input_dir, schema, process, checkpoint_dir,
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-
-
-def read_freq(
-    spark: SparkSession, store_dir: str, group_cols: list[str], k: int = 32
-) -> DataFrame:
-    """Serve the heavy hitters: merge every stored partial into one
-    ``(group..., item, w, err)`` summary per group (functions/
-    sketches.py::freq_merge). All Misra-Gries guarantees hold against
-    the FULL ingested history: ``w <= true <= w + err``, completeness
-    above ``err``, ``err <= n/(k+1)``."""
-    from scida_spark.functions.sketches import freq_merge
-
-    partials = storekit.read_partials(spark, store_dir)
-    return freq_merge(
-        partials.select(*group_cols, "item", "w"), group_cols, k
-    )
-
-
-def _freq_summary_to_partials(summary: DataFrame, group_cols: list[str]):
-    """A merged summary is itself a valid partial: its item rows plus
-    one err row (item NULL) per group re-enter freq_merge unchanged —
-    with <= k items the re-compression threshold is 0, so
-    serve-after-compact is BIT-IDENTICAL to serve (a fixed point, not
-    just guarantee-preserving)."""
-    items = summary.filter(F.col("item").isNotNull()).select(
-        *group_cols, "item", "w"
-    )
-    errs = (
-        summary.groupBy(*group_cols)
-        .agg(F.max("err").alias("w"))
-        .select(*group_cols, F.lit(None).cast("string").alias("item"), "w")
-    )
-    return items.unionByName(errs)
-
-
-def compact_freq(
-    spark: SparkSession, store_dir: str, group_cols: list[str], k: int = 32
-) -> int:
-    """Fold all heavy-hitter partials into one base partial
-    (``batch_id=-1``) via :func:`storekit.compact_monoid_store`."""
-    return storekit.compact_monoid_store(
-        spark,
-        store_dir,
-        lambda: _freq_summary_to_partials(
-            read_freq(spark, store_dir, group_cols, k), group_cols
-        ),
-    )
-
-
 # --------------------------------------------------------------------------
 # Deterministic streaming reservoir (min-k-by-hash uniform sample)
 # --------------------------------------------------------------------------
@@ -229,50 +143,6 @@ def _reservoir_partial(
         keyed.withColumn("_r", F.row_number().over(w))
         .filter(F.col("_r") <= int(k))
         .drop("_r")
-    )
-
-
-def incremental_reservoir_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    *,
-    store_dir: str,
-    checkpoint_dir: str,
-    group_cols: list[str],
-    id_col: str,
-    k: int = 64,
-    salt: str = "res",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Maintain a DETERMINISTIC streaming reservoir: a uniform
-    without-replacement sample of k ids per group over the whole
-    ingested history, kept incrementally — the dataset-card /
-    eyeball-sample primitive at 100 TB (you never rescan the corpus to
-    draw a sample).
-
-    Determinism is the whole design (the sampling.py no-rand() rule):
-    the "random" priority of an id is md5(id || salt), so the
-    reservoir is min-k over a pure function of the data — a mergeable
-    MONOID (merge = union, keep k smallest), which makes the streaming
-    store EXACTLY equal to a batch top-k over all distinct ids: no
-    probabilistic reservoir state, no replay sensitivity, idempotent
-    per-batch overwrite like every store here. Each batch writes O(k x
-    groups) rows; serving merges partials; compaction folds to one
-    base partial and is a FIXED POINT (serve-after-compact is
-    bit-identical — min-k of a min-k is itself)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        part = _reservoir_partial(batch_df, group_cols, id_col, k, salt)
-        part.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_id={batch_id}")
-        )
-
-    return storekit.run_file_ingest(
-        spark, input_dir, schema, process, checkpoint_dir,
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -365,7 +235,7 @@ def incremental_multi_store_ingest(
     micro-batch is persisted once and each writer derives its partial
     from the same in-memory batch — the production shape at 100 TB,
     where the event stream is read once per trigger no matter how many
-    materializations (rollup, heavy hitters, reservoir, ...) ride it.
+    materializations (rollup, reservoir, ...) ride it.
     Each writer keeps the idempotent ``batch_id=N`` overwrite
     contract, so replay safety composes."""
 

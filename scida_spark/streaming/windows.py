@@ -29,28 +29,6 @@ def ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
     return df
 
 
-def tumbling_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    events = ensure_event_time(events, ts_col)
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window), key_col)
-        .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            key_col,
-            "n",
-            "sum_value",
-        )
-    )
-
-
 def session_windows(
     events: DataFrame,
     gap: str = "30 minutes",

@@ -3,8 +3,8 @@
 raw corpus → quality + repetition filters → exact dedup → near-dup
 cleaned corpus (pairs → CC → canonical) → benchmark decontamination →
 deterministic train/eval/test split → per-split sketch rollup →
-corpus-wide line dedup → shard export with audit → dataset card →
-BPE tokenizer + packing → trained quality filter.
+corpus-wide line dedup → shard export with audit → BPE tokenizer +
+packing → repeated-span dedup → chunking.
 Every stage is an operator the registry exposes individually; this
 test pins that they COMPOSE — the "a user could run their whole
 pipeline here" contract — with planted documents whose fate is known
@@ -111,17 +111,7 @@ def test_pipeline_composes_end_to_end(spark, corpus):
     }
     assert back_ids == {r["doc_id"] for r in train.select("doc_id").collect()}
 
-    # 9) the dataset card's totals reconcile with the pipeline output
-    from scida_spark.functions.report import dataset_card
-
-    card = dataset_card(
-        kept3.withColumn("lang", F.lit("en")).withColumn("source", F.lit("story"))
-    )
-    assert card["overall"]["n_docs"] == kept3.count()
-    assert card["duplication"]["n_dup_docs"] == 0  # dedup stages did their job
-    assert set(card["languages"]) == {"en"}
-
-    # 10) learn a BPE tokenizer ON the cleaned corpus, encode, and pack
+    # 9) learn a BPE tokenizer ON the cleaned corpus, encode, and pack
     # sequences by the REAL learned token counts — tokenizer feeds packer
     from scida_spark.functions.bpe import bpe_encode, learn_bpe, word_counts
     from scida_spark.functions.packing import pack_sequences
@@ -134,25 +124,7 @@ def test_pipeline_composes_end_to_end(spark, corpus):
     assert all_docs == {r["doc_id"] for r in kept3.collect()}  # every doc packed once
     assert all(r["total_tokens"] <= 64 or r["oversize"] for r in packed_rows)
 
-    # 11) the TRAINED quality filter agrees with the heuristic one:
-    # fit on the corpus labeled by the stage-1 outcome, then the model
-    # must keep every clean doc and reject the stutter doc
-    from scida_spark.functions.quality_classifier import (
-        classifier_filter,
-        train_quality_classifier,
-    )
-
-    labeled = corpus.join(
-        kept1.select("doc_id").withColumn("label", F.lit(1.0)), "doc_id", "left"
-    ).withColumn("label", F.coalesce(F.col("label"), F.lit(0.0)))
-    qmodel = train_quality_classifier(labeled, "doc_id", "text", "label")
-    kept_ml = {
-        r["doc_id"]
-        for r in classifier_filter(corpus, qmodel, "doc_id", "text").collect()
-    }
-    assert 0 in kept_ml and 102 not in kept_ml
-
-    # 12) repeated-span dedup catches a license paragraph pasted into
+    # 10) repeated-span dedup catches a license paragraph pasted into
     # several docs (doc-level dedup passed them — they differ overall)
     from scida_spark.functions import spans as SP
 
@@ -172,7 +144,7 @@ def test_pipeline_composes_end_to_end(spark, corpus):
             assert license_blurb not in got_m[did]["masked"]
             assert got_m[did]["n_masked"] >= len(license_blurb.split())
 
-    # 13) chunk the cleaned corpus for an embedding pipeline: every
+    # 11) chunk the cleaned corpus for an embedding pipeline: every
     # token lands in a chunk, chunks respect the window
     from scida_spark.functions.chunking import chunk_documents
 

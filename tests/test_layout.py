@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from scida_spark.operators.layout import cluster_by_key, read_bucketed, save_bucketed
+from scida_spark.operators.layout import read_bucketed, save_bucketed
 
 
 @pytest.fixture(scope="module")
@@ -57,23 +57,6 @@ def test_values_identical_to_unbucketed(spark, bucketed):
     a = t.groupBy("GroupID").agg(F.sum("mass").alias("m"))
     b = df.groupBy("GroupID").agg(F.sum("mass").alias("m"))
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_cluster_by_key_sorts_within_partitions(spark):
-    df = spark.range(0, 1000).select(
-        (F.col("id") % 37).alias("k"), F.col("id").alias("uid")
-    )
-    c = cluster_by_key(df, "k", "uid", num_partitions=4)
-    # Every partition is sorted by (k, uid) and keys do not straddle
-    # range-partition boundaries out of order.
-    def check(it):
-        rows = list(it)
-        keys = [(r.k, r.uid) for r in rows]
-        assert keys == sorted(keys)
-        yield len(rows)
-
-    sizes = c.rdd.mapPartitions(lambda it: check(it)).collect()
-    assert sum(sizes) == 1000
 
 
 def test_two_table_bucketed_join_no_exchange(spark, bucketed):

@@ -60,28 +60,6 @@ def test_field_agreement_and_score(spark):
     assert scored[(3, 4)] == pytest.approx(want34, abs=0)
 
 
-def test_fs_classify_bands(spark):
-    from scida_spark.functions.linkage import (
-        field_agreement,
-        fs_classify,
-        fs_score,
-    )
-
-    recs = _records(spark)
-    pairs = spark.createDataFrame(
-        [(1, 2), (3, 4), (5, 6)], "id_a long, id_b long"
-    )
-    fields = {"name": None, "addr": lambda a, b: F.levenshtein(a, b) <= 1, "city": None}
-    scored = fs_score(field_agreement(pairs, recs, "rid", fields), M_U)
-    cls = {
-        (r["id_a"], r["id_b"]): r["link_class"]
-        for r in fs_classify(scored, upper=4.0, lower=-4.0).collect()
-    }
-    assert cls[(1, 2)] == "match"
-    assert cls[(3, 4)] == "non_match"
-    assert cls[(5, 6)] == "possible"  # 2 agrees + 1 disagree lands mid-band
-
-
 def test_fs_weights_validation():
     from scida_spark.functions.linkage import fs_weights
 
@@ -89,15 +67,3 @@ def test_fs_weights_validation():
         fs_weights({"f": (0.5, 0.6)})  # u > m is nonsense
 
 
-def test_estimate_u_deterministic_and_sane(spark):
-    from scida_spark.functions.linkage import estimate_u
-
-    rows = [(k, f"city{k % 4}") for k in range(300)]
-    df = spark.createDataFrame(rows, "rid long, city string")
-    u1 = estimate_u(df, "rid", {"city": None}, sample_n=64)
-    u2 = estimate_u(df.repartition(13), "rid", {"city": None}, sample_n=64)
-    assert u1 == u2  # layout-independent
-    # 4 uniform city values -> random agreement ~ 1/4
-    assert 0.15 < u1["city"] < 0.35
-    with pytest.raises(ValueError):
-        estimate_u(df, "rid", {"city": lambda a, b: a == b})

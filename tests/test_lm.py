@@ -192,25 +192,3 @@ def test_bigram_short_docs_dropped(spark):
     assert [r["doc_id"] for r in rows] == [0]
 
 
-def test_bigram_persistence_roundtrip(spark, tmp_path):
-    from scida_spark.functions.lm import (
-        load_bigram_lm,
-        save_bigram_lm,
-        score_nll2,
-        train_bigram_lm,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"the cat sat tok{i % 5} on the mat") for i in range(30)],
-        "doc_id long, text string",
-    )
-    m = train_bigram_lm(docs, vocab_size=6)
-    p = str(tmp_path / "lm2")
-    save_bigram_lm(spark, m, p)
-    m2 = load_bigram_lm(spark, p)
-    assert m2.vocab == sorted(m.vocab)
-    assert m2.pair_counts == m.pair_counts
-    assert m2.ctx_counts == m.ctx_counts
-    a = {r["doc_id"]: r["nll2"] for r in score_nll2(docs, m).collect()}
-    b = {r["doc_id"]: r["nll2"] for r in score_nll2(docs, m2).collect()}
-    assert a == b

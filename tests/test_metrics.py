@@ -76,28 +76,6 @@ def test_auc_layout_independent(spark):
     assert a == b
 
 
-def test_confusion_at_threshold(spark):
-    from scida_spark.functions.metrics import confusion_at_threshold
-
-    rows = [
-        (1, 0.9, True),   # tp
-        (2, 0.8, False),  # fp
-        (3, 0.2, True),   # fn
-        (4, 0.1, False),  # tn
-        (5, 0.5, True),   # tp (>= boundary)
-    ]
-    df = spark.createDataFrame(rows, "id long, s double, y boolean")
-    [r] = confusion_at_threshold(df, "s", "y", 0.5).collect()
-    assert (r["tp"], r["fp"], r["fn"], r["tn"]) == (2, 1, 1, 1)
-    assert r["precision"] == pytest.approx(2 / 3, abs=0)
-    assert r["recall"] == pytest.approx(2 / 3, abs=0)
-    assert r["f1"] == pytest.approx(2 * 2 / (2 * 2 + 1 + 1), abs=0)
-    # empty input -> NULL metrics, zero counts
-    empty = spark.createDataFrame([], "id long, s double, y boolean")
-    [e] = confusion_at_threshold(empty, "s", "y", 0.5).collect()
-    assert (e["tp"], e["precision"]) == (0, None)
-
-
 def test_auc_randomized_reference_multi_seed(spark):
     """Randomized agreement with the pure-Python midrank reference
     across several seeds and heavy-tie regimes (bucketed scores)."""

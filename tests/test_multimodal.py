@@ -49,14 +49,6 @@ def test_resize_rewrites_payload_and_meta(media):
     assert bytes(r.payload) == ("payload number 4 " * 5).encode()[:32]
 
 
-def test_frame_sample_plan_shape(media):
-    plan = M.frame_sample_plan(media, every_n=2)
-    rows = plan.filter(F.col("media_id") == 10).collect()
-    n_bytes = len("payload number 10 " * 11)
-    n_frames = n_bytes // 100 + 1
-    assert [r.frame_no for r in rows] == list(range(0, n_frames, 2))
-
-
 def test_decode_stub_raises():
     with pytest.raises(NotImplementedError, match="PIL"):
         M.decode_image(b"\x89PNG")

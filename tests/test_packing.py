@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from scida_spark.functions.packing import pack_sequences, packing_efficiency
+from scida_spark.functions.packing import pack_sequences
 
 
 def _docs(spark, n=2000, seed_mod=97):
@@ -62,15 +62,6 @@ def test_packing_deterministic(spark):
     ar = sorted((r.seq_id, tuple(r.doc_ids)) for r in a.collect())
     br = sorted((r.seq_id, tuple(r.doc_ids)) for r in b.collect())
     assert ar == br
-
-
-def test_packing_efficiency_density(spark):
-    docs = _docs(spark)
-    packed = pack_sequences(docs, "doc_id", "n_tokens", budget=512, num_partitions=8)
-    eff = packing_efficiency(packed, 512).first()
-    # Greedy first-fit over ~60-token docs should fill sequences well.
-    assert eff["density"] > 0.8
-    assert eff["tokens_packed"] <= eff["n_sequences"] * 512
 
 
 def test_pack_sequences_by_explicit_domain(spark):

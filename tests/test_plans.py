@@ -169,52 +169,6 @@ def test_contamination_broadcasts_bench_side(spark, sf_dir, reg):
     assert "CartesianProduct" not in p
 
 
-def test_runtime_bloom_semi_join_reduction(spark, sf_dir):
-    """Fact-fact join with a selective filter on one side: Catalyst
-    must inject a runtime bloom filter (semi-join reduction — the
-    selective side's keys prune the big side's rows BEFORE the shuffle
-    write). Pinned both ways: injected for a shuffle join, and
-    correctly NOT injected when the small side broadcasts (the build
-    side subsumes the filter)."""
-    from pyspark.sql import functions as F
-
-    from scida_spark.operators.runtime_filter import (
-        has_runtime_bloom,
-        runtime_bloom_for_tests,
-    )
-    from scida_spark.tables import table
-
-    li = table(spark, sf_dir, "lineitem")
-    orders = table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    join = lambda: (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_orderpriority")
-        .count()
-    )
-    with runtime_bloom_for_tests(spark):
-        old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            shuffled = join()
-            assert has_runtime_bloom(shuffled), "bloom filter not injected"
-            # the filter must actually apply to the fact side
-            plan = shuffled._jdf.queryExecution().optimizedPlan().toString()
-            assert "might_contain" in plan
-            # and the reduced join still returns correct results
-            n_bloom = shuffled.collect()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-        broadcasted = join()
-        assert not has_runtime_bloom(broadcasted), (
-            "bloom filter should be subsumed by broadcast join"
-        )
-        assert sorted(map(tuple, n_bloom)) == sorted(
-            map(tuple, broadcasted.collect())
-        )
-
-
 def test_q18_aggregates_lineitem_once(spark, sf_dir, reg):
     """Q18 is ONE lineitem aggregation joined to orders — the classic
     rejoin-and-reaggregate formulation scans + shuffles lineitem twice

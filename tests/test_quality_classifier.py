@@ -1,71 +1,26 @@
-"""Trained quality classifier: features, separation on a constructed
-corpus, deterministic Pareto keep, save/load roundtrip."""
+"""Deterministic Pareto keep: layout-invariant membership, high scores
+always survive, alpha controls the low-score tail."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from scida_spark.functions.quality_classifier import (
-    FEATURE_COLS,
-    classifier_filter,
-    doc_features,
-    pareto_keep,
-    score_quality,
-    train_quality_classifier,
-)
+from scida_spark.functions.quality_classifier import pareto_keep
 
 
-def _corpus(spark):
-    """20 'good' docs (varied vocabulary, English stopwords) vs 20
-    'bad' docs (stuttering spam) — separable on the engine's quality
-    signals."""
-    rows = []
-    for i in range(20):
-        body = " ".join(f"the quick w{i}x{j} and of lazy dog" for j in range(4))
-        rows.append((i, body, 1.0))
-    for i in range(20, 40):
-        rows.append((i, "spam spam spam buy now " * 5, 0.0))
-    return spark.createDataFrame(rows, "doc_id long, text string, label double")
+def test_pareto_keep_deterministic_and_monotone(spark):
+    # 20 high-score docs (score 1) and 20 low-score docs (score 0)
+    scored = spark.createDataFrame(
+        [(i, 1.0 if i < 20 else 0.0) for i in range(40)],
+        "doc_id long, q_score double",
+    )
 
+    def kept(df):
+        keep = pareto_keep(F.col("q_score"), F.col("doc_id"), salt="s")
+        return {r["doc_id"] for r in df.filter(keep).collect()}
 
-@pytest.fixture(scope="module")
-def model_and_corpus(spark):
-    corpus = _corpus(spark)
-    model = train_quality_classifier(corpus, "doc_id", "text", "label")
-    return model, corpus
-
-
-def test_features_one_row_per_doc(spark):
-    corpus = _corpus(spark)
-    f = doc_features(corpus.select("doc_id", "text"), "doc_id", "text")
-    assert f.count() == 40
-    assert set(FEATURE_COLS) <= set(f.columns)
-    r = f.filter(F.col("doc_id") == 0).first()
-    assert 0 < r["f_distinct_ratio"] <= 1 and r["f_stopword_ratio"] > 0
-
-
-def test_classifier_separates_good_from_bad(spark, model_and_corpus):
-    model, corpus = model_and_corpus
-    scored = score_quality(corpus, model, "doc_id", "text")
-    rows = {r["doc_id"]: r["q_score"] for r in scored.collect()}
-    good = [rows[i] for i in range(20)]
-    bad = [rows[i] for i in range(20, 40)]
-    assert min(good) > 0.9 and max(bad) < 0.1
-
-
-def test_pareto_keep_deterministic_and_monotone(spark, model_and_corpus):
-    model, corpus = model_and_corpus
-    kept1 = {
-        r["doc_id"]
-        for r in classifier_filter(corpus, model, "doc_id", "text", salt="s").collect()
-    }
-    kept2 = {
-        r["doc_id"]
-        for r in classifier_filter(
-            corpus.repartition(5), model, "doc_id", "text", salt="s"
-        ).collect()
-    }
+    kept1 = kept(scored)
+    kept2 = kept(scored.repartition(5))
     assert kept1 == kept2  # layout-invariant
     assert set(range(20)) <= kept1  # high scores always survive
     # a handful of low-score docs may survive the Pareto tail — at
@@ -88,21 +43,3 @@ def test_pareto_alpha_controls_leniency(spark):
     assert strict < lenient
     # alpha=1: P(keep | score 0.05) = P(pareto >= 0.95) = (1.95)^-1 ~ 0.51
     assert abs(lenient / 4000 - 1 / 1.95) < 0.05
-
-
-def test_model_save_load_roundtrip(spark, model_and_corpus, tmp_path):
-    from pyspark.ml.classification import LogisticRegressionModel
-
-    model, corpus = model_and_corpus
-    path = str(tmp_path / "qmodel")
-    model.save(path)
-    back = LogisticRegressionModel.load(path)
-    a = sorted(
-        (r["doc_id"], round(r["q_score"], 10))
-        for r in score_quality(corpus, model, "doc_id", "text").collect()
-    )
-    b = sorted(
-        (r["doc_id"], round(r["q_score"], 10))
-        for r in score_quality(corpus, back, "doc_id", "text").collect()
-    )
-    assert a == b

@@ -1,16 +1,12 @@
-"""Dataset card: single grouping-sets facet pass + exact-dup grain,
-checked value-for-value against independently computed expectations."""
+"""Corpus facets: single grouping-sets facet pass, checked
+value-for-value against independently computed expectations."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from scida_spark.functions.report import (
-    corpus_facets,
-    dataset_card,
-    duplication_stats,
-)
+from scida_spark.functions.report import corpus_facets
 
 ROWS = [
     # doc_id, text, lang, source
@@ -56,44 +52,9 @@ def test_facet_pass_is_one_shuffle(spark, docs):
     assert tree.count("Expand") == 1  # grouping-sets expansion, not re-scans
 
 
-def test_duplication_stats(spark, docs):
-    d = duplication_stats(docs)
-    assert (d["n_docs"], d["n_distinct_texts"], d["n_dup_docs"]) == (5, 4, 2)
-
-
-def test_dataset_card_shape(spark, docs):
-    card = dataset_card(docs)
-    assert card["overall"]["n_docs"] == 5
-    assert card["duplication"]["dup_rate"] == pytest.approx(0.4)
-    assert set(card["languages"]) == {"en", "de", "es"}
-    assert set(card["sources"]) == {"web", "books"}
-    assert card["languages"]["de"]["n_tokens"] == 2
-    import json
-
-    json.dumps(card)  # JSON-ready end to end
-
-
 def test_null_lang_bucketed_as_question_mark(spark):
     df = spark.createDataFrame(
         [(0, "a b", None, "web")], "doc_id long, text string, lang string, source string"
     )
-    card = dataset_card(df)
-    assert card["languages"] == {"?": card["languages"]["?"]}
-
-
-def test_dataset_card_on_empty_corpus(spark):
-    """An empty corpus cards as zeros (NULL-aggregate coalescing), not
-    a crash — pipelines hit empty partitions/filters routinely."""
-    empty = spark.createDataFrame(
-        [], "doc_id long, text string, lang string, source string"
-    )
-    card = dataset_card(empty)
-    assert card["overall"]["n_docs"] == 0
-    assert card["overall"]["n_tokens"] == 0
-    assert card["duplication"] == {
-        "n_docs": 0,
-        "n_distinct_texts": 0,
-        "n_dup_docs": 0,
-        "dup_rate": 0.0,
-    }
-    assert card["languages"] == {} and card["sources"] == {}
+    langs = {r["key"] for r in corpus_facets(df).collect() if r["facet"] == "lang"}
+    assert langs == {"?"}

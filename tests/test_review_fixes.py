@@ -39,7 +39,7 @@ def test_minhash_short_docs_produce_no_signature(spark):
         [(1, "one two"), (2, "a b"), (3, "alpha beta gamma delta")],
         "doc_id long, text string",
     )
-    sigs = D.minhash_signatures(df, "doc_id", "text", n=3)
+    sigs = D.minhash_signatures_from_shingles(D.shingle_hash_table(df, "doc_id", "text", 3))
     assert [r.doc for r in sigs.collect()] == [3]
     # Short docs therefore generate no LSH candidates (no quadratic
     # sentinel-collision blow-up).

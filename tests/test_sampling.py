@@ -180,33 +180,6 @@ def test_stratified_exact_sample_one_exchange(spark):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_hash_sample_exact_n_deterministic_and_prefix_monotone(spark):
-    from scida_spark.functions.sampling import hash_sample_exact_n
-
-    df = spark.range(0, 500).select(F.col("id").alias("doc_id"))
-    a = {r["doc_id"] for r in hash_sample_exact_n(df, "doc_id", 50, "s").collect()}
-    b = {
-        r["doc_id"]
-        for r in hash_sample_exact_n(
-            df.repartition(7), "doc_id", 50, "s"
-        ).collect()
-    }
-    assert len(a) == 50 and a == b  # exact N, layout-invariant
-    big = {r["doc_id"] for r in hash_sample_exact_n(df, "doc_id", 200, "s").collect()}
-    assert a <= big  # prefix-monotone
-    other = {r["doc_id"] for r in hash_sample_exact_n(df, "doc_id", 50, "t").collect()}
-    assert a != other  # salt changes membership
-
-
-def test_hash_sample_exact_n_plans_as_take_ordered(spark):
-    from scida_spark.functions.sampling import hash_sample_exact_n
-
-    df = spark.range(0, 100).select(F.col("id").alias("doc_id"))
-    s = hash_sample_exact_n(df, "doc_id", 10)
-    p = s._sc._jvm.PythonSQLUtils.explainString(s._jdf.queryExecution(), "formatted")
-    assert "TakeOrderedAndProject" in p  # heaps + driver merge, no global sort
-
-
 # ---------------------------------------------------------------------------
 # cluster_hash_split (r9): leakage-safe splits
 # ---------------------------------------------------------------------------

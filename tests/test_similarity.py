@@ -750,31 +750,6 @@ def test_srp_angle_monotonicity(spark):
     assert d_far >= 10
 
 
-def test_srp_near_pairs_finds_planted_twins(spark):
-    """Planted perturbed twins recovered through the pigeonhole
-    blocking; unrelated vectors stay unpaired at the cutoff."""
-    import numpy as np
-
-    from scida_spark.functions.similarity import srp_near_pairs
-
-    rng = np.random.RandomState(7)
-    dim = 16
-    rows = []
-    for k in range(20):
-        v = rng.randn(dim)
-        rows.append((2 * k, [float(x) for x in v]))
-        rows.append((2 * k + 1, [float(x) for x in v + rng.randn(dim) * 0.01]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in srp_near_pairs(df, max_hamming=4, dim=dim).collect()
-    }
-    planted = {(2 * k, 2 * k + 1) for k in range(20)}
-    found = len(planted & pairs)
-    assert found >= 18  # tiny perturbations survive the 62-bit hash
-    assert len(pairs - planted) <= 2  # independent gaussians stay apart
-
-
 def test_sq8_codes_match_reference(spark):
     """SQ8 codes are the closed form clamp(floor(((v-lo)*255)/(hi-lo)))
     over per-dim corpus min/max — recompute in numpy-free Python and
@@ -890,36 +865,6 @@ def test_kmeans_assign_empty_and_truncdiv():
     assert _truncdiv(7, 2) == 3 and _truncdiv(-7, 2) == -3
     assert (-7) // 2 == -4  # the Python-floor trap the helper avoids
     assert _truncdiv(-8, 2) == -4 and _truncdiv(0, 5) == 0
-
-
-def test_kmeans_centroid_persistence_roundtrip(spark, tmp_path):
-    """Trained centroids persist/load exactly, and assignment from the
-    loaded artifact is bit-identical to assignment from training."""
-    from scida_spark.functions.similarity import (
-        kmeans_assign,
-        kmeans_train,
-        load_kmeans_centroids,
-        save_kmeans_centroids,
-    )
-
-    df = spark.createDataFrame(
-        [(i, [float((i * 7 + j) % 13) / 13 for j in range(8)]) for i in range(50)],
-        "vec_id long, embedding array<double>",
-    )
-    cents = kmeans_train(df, k=3, iters=2)
-    path = str(tmp_path / "km")
-    save_kmeans_centroids(spark, cents, path)
-    assert load_kmeans_centroids(spark, path) == cents
-    a = sorted(map(tuple, kmeans_assign(df, centroids=cents).collect()))
-    b = sorted(
-        map(
-            tuple,
-            kmeans_assign(
-                df, centroids=load_kmeans_centroids(spark, path)
-            ).collect(),
-        )
-    )
-    assert a == b
 
 
 def test_kmeans_assign_arrow_fallback_matches_literal(spark, monkeypatch):

@@ -1,9 +1,7 @@
-"""Salted aggregation: identical values to plain groupBy, salt spreads
-the hot key across partial groups."""
+"""Skewed keys: a hash salt spreads the hot key across partial groups,
+and AQE splits the hot partition of a skewed sort-merge join."""
 
 from pyspark.sql import functions as F
-
-from scida_spark.operators.skew import salted_agg, salted_sum_count
 
 
 def _skewed(spark):
@@ -12,22 +10,6 @@ def _skewed(spark):
         F.when(F.col("id") % 10 < 9, 0).otherwise(F.col("id") % 100).alias("k"),
         (F.col("id") * 0.25).alias("v"),
     )
-
-
-def test_salted_matches_plain_groupby(spark):
-    df = _skewed(spark)
-    got = {
-        r.k: (round(r.sum_value, 6), r.n, round(r.avg_value, 9))
-        for r in salted_sum_count(df, "k", "v", nsalt=8).collect()
-    }
-    expect = {
-        r.k: (round(r.s, 6), r.n, round(r.a, 9))
-        for r in df.groupBy("k")
-        .agg(F.sum("v").alias("s"), F.count("*").alias("n"),
-             (F.sum("v") / F.count("*")).alias("a"))
-        .collect()
-    }
-    assert got == expect
 
 
 def test_salt_splits_hot_key(spark):
@@ -41,21 +23,6 @@ def test_salt_splits_hot_key(spark):
     assert len(per_salt) == 8
     counts = [r["count"] for r in per_salt]
     assert max(counts) < 2 * min(counts)
-
-
-def test_salted_agg_min_max(spark):
-    df = _skewed(spark)
-    out = salted_agg(
-        df, "k",
-        partial_aggs=[F.min("v").alias("__pmin"), F.max("v").alias("__pmax")],
-        merge_aggs=[F.min("__pmin").alias("min_v"), F.max("__pmax").alias("max_v")],
-    )
-    got = {r.k: (r.min_v, r.max_v) for r in out.collect()}
-    expect = {
-        r.k: (r.mn, r.mx)
-        for r in df.groupBy("k").agg(F.min("v").alias("mn"), F.max("v").alias("mx")).collect()
-    }
-    assert got == expect
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):

@@ -8,11 +8,9 @@ import random
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from scida_spark.functions.dedup import exact_substring_pairs
 from scida_spark.streaming.esubindex import (
-    anchor_bucket,
     compact_esub_index,
     delete_esub_docs,
     incremental_esub_ingest,
@@ -144,15 +142,6 @@ def test_meta_validated_on_reopen(spark, dirs):
             raise RuntimeError(str(exc)) from exc
         finally:
             q.stop()
-
-
-def test_anchor_bucket_jvm_python_twin(spark):
-    hs = ["00ff", "deadbeef", "a" * 32, "0123456789abcdef"]
-    df = spark.createDataFrame([(h,) for h in hs], "h string").select(
-        "h", (F.crc32(F.col("h").cast("binary")) % 16).cast("int").alias("b")
-    )
-    got = {r["h"]: r["b"] for r in df.collect()}
-    assert got == {h: anchor_bucket(h, 16) for h in hs}
 
 
 def test_esub_probe_targeted_serve(spark, dirs):

@@ -271,87 +271,6 @@ def test_vector_index_compaction_preserves_query_results(spark, tmp_path):
     assert before == after and len(after) == 15
 
 
-# ---------------------------------------------------------------------------
-# Streaming span-dedup (r9): rolling ingest of span-count partials +
-# read-time masking == batch-mode mask_hot_spans of the concatenation.
-# ---------------------------------------------------------------------------
-
-BOILER = "all rights reserved this page is licensed under creative commons attribution"
-
-
-def _span_rows():
-    """3 waves; the boilerplate span appears once per wave — hot only
-    once the corpus is concatenated (cross-batch hotness)."""
-    return [
-        [(1, "alpha beta gamma " + BOILER + " delta epsilon"),
-         (2, "totally unrelated words about query engines and parquet scans here")],
-        [(3, BOILER + " plus some unique trailing content of its own"),
-         (4, "another independent document mentioning executors and shuffles")],
-        [(5, "prefix words then " + BOILER + " and a suffix"),
-         (6, "final unrelated filler document with enough tokens to matter")],
-    ]
-
-
-def test_span_ingest_equals_batch_mode(spark, dirs):
-    """N-batch ingest + read_masked_corpus ≡ batch-mode mask_hot_spans
-    over the concatenation — the Lee-et-al rolling regime, exact."""
-    import os
-
-    from scida_spark.functions.spans import hot_spans, mask_hot_spans
-    from scida_spark.streaming.ingest import (
-        compact_span_index,
-        read_masked_corpus,
-        span_index_ingest,
-    )
-
-    waves = _span_rows()
-    k = 8
-    for i, rows in enumerate(waves):
-        _write_wave(os.path.join(dirs["input"], f"wave{i}.parquet"), rows)
-        q = span_index_ingest(
-            spark, dirs["input"], SCHEMA,
-            corpus_dir=dirs["corpus"], index_dir=dirs["index"],
-            checkpoint_dir=dirs["ckpt"], k=k,
-        )
-        q.awaitTermination(120)
-        assert not q.isActive
-
-    got = {
-        (r["doc_id"], r["masked"], r["n_masked"])
-        for r in read_masked_corpus(
-            spark, dirs["corpus"], dirs["index"], k=k, min_docs=2
-        ).select("doc_id", "masked", "n_masked").collect()
-    }
-    all_docs = spark.createDataFrame(
-        [t for w in waves for t in w], SCHEMA
-    )
-    hot = hot_spans(all_docs, "text", k, min_docs=2)
-    want = {
-        (r["doc_id"], r["masked"], r["n_masked"])
-        for r in mask_hot_spans(all_docs, hot, "doc_id", "text", k)
-        .select("doc_id", "masked", "n_masked").collect()
-    }
-    assert got == want
-    # the boilerplate actually got masked (hot only across batches:
-    # once per wave, never twice within one)
-    masked_docs = {d for d, m, n in got if n > 0}
-    assert masked_docs == {1, 3, 5}
-
-    # compaction folds partials without changing the answer
-    compact_span_index(spark, dirs["index"])
-    after = {
-        (r["doc_id"], r["masked"], r["n_masked"])
-        for r in read_masked_corpus(
-            spark, dirs["corpus"], dirs["index"], k=k, min_docs=2
-        ).select("doc_id", "masked", "n_masked").collect()
-    }
-    assert after == got
-    spans_root = os.path.join(dirs["index"], "spans")
-    assert os.listdir(spans_root) == ["batch_id=-1"] or sorted(
-        d for d in os.listdir(spans_root) if d.startswith("batch_id=")
-    ) == ["batch_id=-1"]
-
-
 # --------------------------------------------------------------------------
 # Takedown deletions + transactional compaction of the signature index
 # --------------------------------------------------------------------------

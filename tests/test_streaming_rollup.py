@@ -122,114 +122,21 @@ def test_replayed_batch_is_idempotent(spark, dirs):
     assert _served(spark, dirs) == before
 
 
-# ---------------------------------------------------------------------------
-# Streaming heavy-hitters store (incremental_freq_ingest, r9)
-# ---------------------------------------------------------------------------
-
-
-def _fwave(path: str, start: int, n: int, seed: int) -> None:
-    import random
-
-    rng = random.Random(seed)
-    rows = []
-    for i in range(n):
-        v = (
-            f"hot{rng.randint(0, 1)}"
-            if rng.random() < 0.35
-            else f"cold{rng.randint(0, 300)}"
-        )
-        rows.append((start + i, ("click", "view")[i % 2], v))
-    pd.DataFrame(rows, columns=["event_id", "event_type", "item"]).to_parquet(
-        path
-    )
-
-
-FREQ_SCHEMA = "event_id long, event_type string, item string"
-
-
-def _frun(spark, dirs, k=16):
-    from scida_spark.streaming.rollup import incremental_freq_ingest
-
-    q = incremental_freq_ingest(
-        spark,
-        dirs["input"],
-        FREQ_SCHEMA,
-        store_dir=dirs["store"],
-        checkpoint_dir=dirs["ckpt"],
-        group_cols=["event_type"],
-        value_col="item",
-        k=k,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
-    assert not q.isActive
-
-
-def _freq_guarantees_hold(spark, dirs, res, k):
-    truth = {}
-    raw = spark.read.schema(FREQ_SCHEMA).parquet(dirs["input"]).collect()
-    for r in raw:
-        truth.setdefault(r["event_type"], {}).setdefault(r["item"], 0)
-        truth[r["event_type"]][r["item"]] += 1
-    for g, counts in truth.items():
-        n = sum(counts.values())
-        items = {r.item: r.w for r in res if r[0] == g and r.item is not None}
-        err = next(r.err for r in res if r[0] == g)
-        assert err * (k + 1) <= n
-        for it, w in items.items():
-            assert 0 <= counts[it] - w <= err, (g, it)
-        for it, c in counts.items():
-            if c > err:
-                assert it in items, (g, it, c, err)
-        assert {"hot0", "hot1"} <= set(items), g
-
-
-def test_freq_store_guarantees_over_three_batches(spark, dirs):
-    from scida_spark.streaming.rollup import read_freq
-
-    for i in range(3):
-        _fwave(os.path.join(dirs["input"], f"w{i}.parquet"), 1000 * i, 900, i)
-    _frun(spark, dirs)
-    res = read_freq(spark, dirs["store"], ["event_type"], k=16).collect()
-    _freq_guarantees_hold(spark, dirs, res, 16)
-
-
-def test_freq_compact_then_serve_is_identical(spark, dirs):
-    from scida_spark.streaming.rollup import compact_freq, read_freq
-
-    for i in range(3):
-        _fwave(os.path.join(dirs["input"], f"w{i}.parquet"), 1000 * i, 700, 10 + i)
-    _frun(spark, dirs)
-    before = sorted(
-        map(tuple, read_freq(spark, dirs["store"], ["event_type"], k=16).collect())
-    )
-    folded = compact_freq(spark, dirs["store"], ["event_type"], k=16)
-    assert folded >= 3  # one dir per micro-batch
-    after = sorted(
-        map(tuple, read_freq(spark, dirs["store"], ["event_type"], k=16).collect())
-    )
-    assert after == before  # fixed point, not just guarantee-preserving
-    _freq_guarantees_hold(
-        spark,
-        dirs,
-        read_freq(spark, dirs["store"], ["event_type"], k=16).collect(),
-        16,
-    )
-
-
 def _run_res(spark, dirs, k=4):
-    from scida_spark.streaming.rollup import incremental_reservoir_ingest
+    from scida_spark.streaming.rollup import (
+        incremental_multi_store_ingest,
+        reservoir_writer,
+    )
 
-    q = incremental_reservoir_ingest(
+    q = incremental_multi_store_ingest(
         spark,
         dirs["input"],
         SCHEMA,
-        store_dir=dirs["store"] + "_res",
         checkpoint_dir=dirs["ckpt"] + "_res",
-        group_cols=["event_type"],
-        id_col="user_id",
-        k=k,
-        salt="t",
+        writers=[
+            reservoir_writer(dirs["store"] + "_res", ["event_type"], "user_id",
+                             k=k, salt="t"),
+        ],
         max_files_per_trigger=1,
     )
     q.awaitTermination(120)

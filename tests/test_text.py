@@ -1,12 +1,9 @@
 """Text analysis functions vs plain-Python ground truth."""
 
-import hashlib
-
 import pytest
 from pyspark.sql import functions as F
 
 from scida_spark.functions import text as TX
-from scida_spark.functions.text import BASE, MOD
 
 
 @pytest.fixture(scope="module")
@@ -30,28 +27,6 @@ def test_stopword_hits_and_langid(spark, docs):
     assert out[0] == "en"
     assert out[1] == "de"
     assert out[2] == "en"  # zero hits everywhere → tie-break picks en
-
-
-def test_distinct_ratio(spark, docs):
-    got = {
-        r["doc_id"]: r["d"]
-        for r in docs.select("doc_id", TX.distinct_token_ratio(F.col("text")).alias("d")).collect()
-    }
-    assert got[3] == pytest.approx(2 / 5)
-
-
-def test_rolling_hash_matches_python(spark, docs):
-    out = {r["doc_id"]: r["fingerprint"] for r in TX.rolling_hash_fingerprint(docs, "text").collect()}
-    for did, text in [(0, "the quick brown fox and the lazy dog"), (2, "one two three")]:
-        h = 0
-        for b in text.encode():
-            h = (h * BASE + b) % MOD
-        assert out[did] == h
-
-
-def test_md5_fingerprint(spark, docs):
-    out = {r["doc_id"]: r["f"] for r in docs.select("doc_id", TX.md5_fingerprint(F.col("text")).alias("f")).collect()}
-    assert out[2] == hashlib.md5(b"one two three").hexdigest()[:16]
 
 
 def test_repetition_stats_kernel(spark):

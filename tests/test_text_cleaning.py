@@ -1,29 +1,11 @@
-"""Text cleaning: control chars, boilerplate lines, PII redaction,
-whitespace normalization — all JVM Column expressions (plan-checked:
-no exchange, no Python UDF)."""
+"""Text cleaning: PII redaction and corpus-wide frequency-based line
+dedup (hot_lines / remove_hot_lines)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from scida_spark.functions import text as T
-
-
-def _clean(spark, s: str) -> str:
-    df = spark.createDataFrame([(s,)], "text string")
-    return df.select(T.clean_text(F.col("text")).alias("c")).first()["c"]
-
-
-def test_strip_control_chars(spark):
-    df = spark.createDataFrame([("a\x00b\x07c\td\ne",)], "text string")
-    got = df.select(T.strip_control_chars(F.col("text")).alias("c")).first()["c"]
-    assert got == "abc\td\ne"
-
-
-def test_normalize_whitespace(spark):
-    df = spark.createDataFrame([("  a \t b\n\n c  ",)], "text string")
-    got = df.select(T.normalize_whitespace(F.col("text")).alias("c")).first()["c"]
-    assert got == "a b c"
 
 
 def test_redact_pii_each_kind(spark):
@@ -43,49 +25,6 @@ def test_email_not_eaten_by_url_rule(spark):
     df = spark.createDataFrame([("a@b.com www.b.com",)], "text string")
     got = df.select(T.redact_pii(F.col("text")).alias("c")).first()["c"]
     assert got == "<EMAIL> <URL>"
-
-
-def test_remove_boilerplate_lines(spark):
-    txt = "real content\nCopyright 2024. All Rights Reserved.\nmore content\nAccept our Cookie Policy\nend"
-    df = spark.createDataFrame([(txt,)], "text string")
-    got = df.select(
-        T.remove_boilerplate_lines(F.col("text")).alias("c")
-    ).first()["c"]
-    assert got == "real content\nmore content\nend"
-
-
-def test_clean_text_chain(spark):
-    txt = "Hello\x07  world\nvisit www.spam.io/buy now\nAll rights reserved\n  final   line"
-    got = _clean(spark, txt)
-    assert got == "Hello world visit <URL> now final line"
-
-
-def test_clean_text_plan_is_jvm_only(spark):
-    """The cleaning chain must stay inside whole-stage codegen: no
-    exchange, no Python worker (a UDF would show BatchEvalPython /
-    ArrowEvalPython in the plan)."""
-    df = spark.range(100).select(F.concat(F.lit("doc "), F.col("id")).alias("text"))
-    out = df.select(T.clean_text(F.col("text")).alias("c"))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "EvalPython" not in plan
-    # "*(n)" is toString's whole-stage-codegen marker; the projection
-    # must carry it (a higher-order lambda would demote it to a bare
-    # interpreted Project).
-    assert "*(1) Project" in plan, plan
-
-
-def test_clean_then_dedup_canonicalizes_spacing(spark):
-    """Two docs differing only in whitespace/PII form dedup to one
-    after cleaning — the intended composition with exact_dedup."""
-    from scida_spark.functions.dedup import exact_dedup
-
-    df = spark.createDataFrame(
-        [(1, "contact a@b.com  for   info"), (2, "contact c@d.org for info")],
-        "doc_id long, text string",
-    )
-    cleaned = df.withColumn("text", T.clean_text(F.col("text")))
-    assert exact_dedup(cleaned, "doc_id", "text").count() == 1
 
 
 # --------------------------------------------------------------------------

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from scida_spark.operators.uid import with_uid_by_order, with_uid_ingest_order
+from scida_spark.operators.uid import with_uid_by_order
 
 
 @pytest.mark.parametrize("npartitions", [1, 3, 8])
@@ -25,13 +25,6 @@ def test_uid_by_order_dense_and_deterministic(spark, npartitions):
     # deterministic across re-evaluation
     rows2 = out.orderBy("uid").collect()
     assert rows == rows2
-
-
-def test_uid_ingest_order_dense(spark):
-    df = spark.range(100).select(F.col("id").alias("v"))
-    out = with_uid_ingest_order(df)
-    uids = sorted(r["uid"] for r in out.collect())
-    assert uids == list(range(100))
 
 
 @pytest.mark.parametrize("width", [None, 16])
