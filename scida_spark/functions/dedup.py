@@ -15,6 +15,10 @@ Scale design (100 TB):
     scale path: cost is O(docs × K) + O(candidates).
   * SimHash — 64-bit signature; near-dups = small Hamming distance.
   * embedding cosine — see functions/similarity.py.
+
+The pair operators take an already-materialized (doc, sh) shingle
+table (``shingle_hash_table`` / ``signature_table``), so one corpus
+scan feeds every family.
 """
 
 from __future__ import annotations
@@ -49,7 +53,7 @@ def jaccard_accept(n_inter, n_union, threshold: float):
     """THE acceptance predicate for near-dup verify joins:
     ``n_inter / n_union >= threshold`` in this exact IEEE form
     (cast-to-double division FIRST, then compare). Every verify site —
-    batch (``ngram_jaccard_pairs*``, minhash/prefix verifies) and
+    batch (the Jaccard, minhash and prefix verifies) and
     streaming (``streaming/ingest.py``, ``streaming/cc.py``) — must go
     through this helper: the algebraically-equal multiplied form
     ``n_inter >= threshold * n_union`` can disagree at exact-threshold
@@ -86,42 +90,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Shingles + exact n-gram Jaccard
 # --------------------------------------------------------------------------
-
-
-def shingles_from_tokens(tok_col, n: int = 3) -> F.Column:
-    """Distinct word n-gram shingles from a pre-split token array column.
-
-    The token array MUST be a materialized column (not an inline split
-    expression): Catalyst does not CSE subexpressions inside lambda
-    bodies, so an inlined split would re-tokenize the text once per
-    element_at — ~10x slower on 50-token docs.
-    """
-    t = F.col(tok_col) if isinstance(tok_col, str) else tok_col
-    idx = F.sequence(F.lit(0), F.size(t) - n)
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(t, (i + k + 1).cast("int")) for k in range(n)])
-    )
-    # sequence(0, negative) is DESCENDING in Spark, not empty — guard
-    # short docs (fewer than n tokens) to an empty shingle set.
-    grams = F.when(F.size(t) >= n, grams).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
-def shingles(text_col: str, n: int = 3) -> F.Column:
-    """Distinct word n-gram shingles of a single-space-tokenized text.
-
-    Prefer ``_shingle_table`` / ``shingles_from_tokens`` in hot paths —
-    this inline form re-splits the text per element access (see above).
-    """
-    return shingles_from_tokens(F.split(F.trim(F.col(text_col)), " "), n)
-
-
-def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(doc, sh) with tokens materialized as a column before shingling."""
-    toks = df.select(
-        F.col(id_col).alias("doc"), F.split(F.trim(F.col(text_col)), " ").alias("_t")
-    )
-    return toks.select("doc", shingles_from_tokens("_t", n).alias("sh"))
 
 
 def shingle_hash_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -175,74 +143,6 @@ def shingle_hash_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) ->
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = 256,
-    collapse_exact: bool = False,
-) -> DataFrame:
-    """Exact pairwise Jaccard over word n-gram shingle sets, with a
-    hot-shingle document-frequency cap on candidate generation.
-
-    Candidates come from an inverted-index self-join over shingles with
-    document frequency ≤ ``max_df`` only — a stop-phrase shingle shared
-    by df docs would otherwise contribute O(df²) join rows, the classic
-    quadratic hot-key blow-up. Every candidate is then verified with
-    the EXACT intersection/union over the full (uncapped) shingle sets,
-    so reported jaccard values are exact ratios of integers.
-
-    Completeness contract: a qualifying pair is reported iff it shares
-    at least one shingle with df ≤ max_df. A pair ALL of whose common
-    shingles are hot is missed — that requires ≥ max_df near-copies of
-    the pair's entire shared text, i.e. an identical-replica cluster
-    larger than max_df (handle those with ``exact_dedup`` first, which
-    is exact and linear) or a corpus-wide boilerplate phrase (which is
-    precisely the non-signal the cap exists to drop). ``max_df=None``
-    disables the cap and restores the full exact join.
-
-    ``collapse_exact=True`` runs the whole computation over ONE
-    representative per distinct text and expands the answer through the
-    replica-clique map (Jaccard is a pure function of the text;
-    identical shingled texts score 1.0 >= any threshold, shingle-less
-    texts never pair). On replica-heavy corpora this removes the
-    clique-squared cost from shingling, the inverted index, AND the
-    verify join — measured at x100 (100-clique corpus): the direct
-    form ran past a 580 s cap, the collapsed form finishes in seconds.
-    Note the df cap then counts DISTINCT-text frequencies, so pairs a
-    replica-inflated hot shingle would have hidden are FOUND — strictly
-    more complete, which is why it is opt-in rather than the default
-    (the raw-df contract above stays pinned for existing callers).
-    """
-    if collapse_exact:
-        clique = exact_clique_map(df, id_col, text_col).localCheckpoint(
-            eager=True
-        )
-        reps = df.join(
-            clique.filter(F.col("doc") == F.col("rep")).select(
-                F.col("doc").alias(id_col)
-            ),
-            id_col,
-            "left_semi",
-        )
-        shr = shingle_hash_table(reps, id_col, text_col, n).localCheckpoint(
-            eager=True
-        )
-        rep_pairs = ngram_jaccard_pairs_from_shingles(
-            shr, threshold=threshold, max_df=max_df
-        )
-        shingled = shr.filter(F.size("sh") > 0).select("doc")
-        return expand_rep_pairs(
-            rep_pairs, clique, "jaccard", self_score=1.0, self_reps=shingled
-        )
-    # One shingle scan, three consumers (inverted index + both verify
-    # sides): materialize the Pandas-UDF kernel exactly once.
-    sh = shingle_hash_table(df, id_col, text_col, n).localCheckpoint(eager=True)
-    return ngram_jaccard_pairs_from_shingles(sh, threshold=threshold, max_df=max_df)
-
-
 def _jaccard_pairs_counted(sh: DataFrame, ex: DataFrame, threshold: float) -> DataFrame:
     """Jaccard pairs where n_inter comes from COUNTING shared shingles
     in the inverted-index join (one groupBy on the pair key) instead of
@@ -281,12 +181,29 @@ def _jaccard_pairs_counted(sh: DataFrame, ex: DataFrame, threshold: float) -> Da
 def ngram_jaccard_pairs_from_shingles(
     sh: DataFrame, threshold: float = 0.5, max_df: int | None = 256
 ) -> DataFrame:
-    """Exact pairwise Jaccard from an ALREADY-MATERIALIZED (doc, sh)
-    shingle table (``shingle_hash_table`` / ``signature_table``) —
-    lets a pipeline that computed the corpus scan once reuse it for the
-    exact baseline too (e.g. the minhash recall certification in
-    queries_pipeline). The caller must have localCheckpointed ``sh``;
-    semantics and the completeness contract are ``ngram_jaccard_pairs``'s.
+    """Exact pairwise Jaccard over word n-gram shingle sets from an
+    ALREADY-MATERIALIZED (doc, sh) shingle table (``shingle_hash_table``
+    / ``signature_table``), with a hot-shingle document-frequency cap on
+    candidate generation. A pipeline that computed the corpus scan once
+    reuses it for the exact baseline too (e.g. the minhash recall
+    certification in queries_pipeline). The caller must have
+    localCheckpointed ``sh``.
+
+    Candidates come from an inverted-index self-join over shingles with
+    document frequency ≤ ``max_df`` only — a stop-phrase shingle shared
+    by df docs would otherwise contribute O(df²) join rows, the classic
+    quadratic hot-key blow-up. Every candidate is then verified with
+    the EXACT intersection/union over the full (uncapped) shingle sets,
+    so reported jaccard values are exact ratios of integers.
+
+    Completeness contract: a qualifying pair is reported iff it shares
+    at least one shingle with df ≤ max_df. A pair ALL of whose common
+    shingles are hot is missed — that requires ≥ max_df near-copies of
+    the pair's entire shared text, i.e. an identical-replica cluster
+    larger than max_df (handle those with ``exact_dedup`` first, which
+    is exact and linear) or a corpus-wide boilerplate phrase (which is
+    precisely the non-signal the cap exists to drop). ``max_df=None``
+    disables the cap and restores the full exact join.
 
     Physical strategy is picked from the measured shingle-df profile:
     when the df cap excludes NOTHING (n_hot == 0, the common case on a
@@ -307,7 +224,8 @@ def ngram_jaccard_pairs_from_shingles(
     import warnings
 
     warnings.warn(
-        f"ngram_jaccard_pairs: {n_hot} hot shingles (df > {max_df}) "
+        f"ngram_jaccard_pairs_from_shingles: {n_hot} hot shingles "
+        f"(df > {max_df}) "
         "excluded from candidate generation; pairs whose every shared "
         "shingle is hot will be missed (run exact_dedup first for "
         "replica clusters, or pass max_df=None for the exact quadratic "
@@ -340,22 +258,19 @@ def ngram_jaccard_pairs_from_shingles(
     )
 
 
-def ngram_containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    max_df: int | None = 256,
+def ngram_containment_pairs_from_shingles(
+    sh: DataFrame, threshold: float = 0.8, max_df: int | None = 256
 ) -> DataFrame:
-    """DIRECTED containment pairs (r12): C(A→B) = |sh(A) ∩ sh(B)| /
-    |sh(A)| — one row (src_doc, dst_doc, containment) per direction
-    clearing ``threshold``. The asymmetric complement of
-    :func:`ngram_jaccard_pairs`: a short quote/excerpt inside a long
-    document has containment ≈ 1 while its Jaccard ≈ |A|/|B| ≈ 0, so
-    threshold-Jaccard dedup is structurally blind to exactly the
-    subset relationships (quotes, boilerplate inclusion, chunk-of-
-    document leaks) containment exists to catch.
+    """DIRECTED containment pairs from an ALREADY-MATERIALIZED (doc, sh)
+    shingle table: C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)| — one row
+    (src_doc, dst_doc, containment) per direction clearing
+    ``threshold``. The asymmetric complement of
+    :func:`ngram_jaccard_pairs_from_shingles`: a short quote/excerpt
+    inside a long document has containment ≈ 1 while its Jaccard ≈
+    |A|/|B| ≈ 0, so threshold-Jaccard dedup is structurally blind to
+    exactly the subset relationships (quotes, boilerplate inclusion,
+    chunk-of-document leaks) containment exists to catch. The caller
+    must have localCheckpointed ``sh``.
 
     Same candidate-generation contract as the Jaccard family (shared
     shingle with df ≤ ``max_df``; for a contained A every shingle of A
@@ -366,21 +281,6 @@ def ngram_containment_pairs(
     candidates. Both directions derive from ONE undirected
     intersection count — no second join. Values are exact integer
     ratios (one IEEE division), oracle-replayable."""
-    sh = shingle_hash_table(df, id_col, text_col, n).localCheckpoint(eager=True)
-    return ngram_containment_pairs_from_shingles(
-        sh, threshold=threshold, max_df=max_df
-    )
-
-
-def ngram_containment_pairs_from_shingles(
-    sh: DataFrame, threshold: float = 0.8, max_df: int | None = 256
-) -> DataFrame:
-    """:func:`ngram_containment_pairs` from an ALREADY-MATERIALIZED
-    (doc, sh) shingle table — the ``_from_shingles`` convention
-    (``ngram_jaccard_pairs_from_shingles``): a pipeline that paid the
-    corpus scan once reuses it here. The caller must have
-    localCheckpointed ``sh``; semantics, the completeness contract,
-    and the counted-vs-verify physical split are the parent's."""
     ex = sh.select("doc", F.explode("sh").alias("g"))
     sizes = sh.select("doc", F.size("sh").alias("_sz"))
 
@@ -438,7 +338,8 @@ def ngram_containment_pairs_from_shingles(
     import warnings
 
     warnings.warn(
-        f"ngram_containment_pairs: {n_hot} hot shingles (df > {max_df}) "
+        f"ngram_containment_pairs_from_shingles: {n_hot} hot shingles "
+        f"(df > {max_df}) "
         "excluded from candidate generation; a contained doc whose EVERY "
         "shingle is hot will be missed (run exact_dedup first, or pass "
         "max_df=None)",
@@ -467,18 +368,16 @@ def ngram_containment_pairs_from_shingles(
     return _directed(_with_sizes(ni))
 
 
-def jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
+def jaccard_pairs_prefix_from_shingles(
+    sh: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """COMPLETE exact set-similarity self-join at Jaccard >=
-    ``threshold`` via prefix filtering (All-Pairs / PPJoin family,
-    Bayardo et al. 2007; the symmetric MapReduce form is Vernica et
-    al., SIGMOD 2010) — the no-caveat complement of
-    :func:`ngram_jaccard_pairs`'s df-capped inverted index.
+    ``threshold`` from a materialized (doc, sh) table, via prefix
+    filtering (All-Pairs / PPJoin family, Bayardo et al. 2007; the
+    symmetric MapReduce form is Vernica et al., SIGMOD 2010) — the
+    no-caveat complement of :func:`ngram_jaccard_pairs_from_shingles`'s
+    df-capped inverted index. The caller must have localCheckpointed
+    ``sh``.
 
     Order every document's shingles by a GLOBAL canonical order
     (document frequency asc, then hash — rare first) and index only
@@ -496,19 +395,10 @@ def jaccard_pairs_prefix(
     equi-join on prefix shingles (join volume ~ (1-t) of the full
     inverted index, skew-capped by the canonical order), exact
     array_intersect verify on candidates only. Like every exact
-    pairwise operator here: run ``exact_dedup`` / ``collapse_exact``
-    first on replica-heavy corpora — identical texts have identical
-    prefixes and pay clique^2 in ANY complete join."""
-    sh = shingle_hash_table(df, id_col, text_col, n).localCheckpoint(eager=True)
-    return jaccard_pairs_prefix_from_shingles(sh, threshold=threshold)
-
-
-def jaccard_pairs_prefix_from_shingles(
-    sh: DataFrame, threshold: float = 0.5
-) -> DataFrame:
-    """Prefix-filtered complete Jaccard join from a materialized
-    (doc, sh) table — see :func:`jaccard_pairs_prefix`. The caller
-    must have localCheckpointed ``sh``."""
+    pairwise operator here: collapse replica cliques first
+    (``exact_clique_map`` / ``expand_rep_pairs``) on replica-heavy
+    corpora — identical texts have identical prefixes and pay clique^2
+    in ANY complete join."""
     from pyspark.sql.window import Window as _W
 
     ex = sh.select("doc", F.explode("sh").alias("g"))
@@ -681,9 +571,9 @@ def _hash_vocab(uniq, hash_name: str = "blake2b") -> np.ndarray:
     )
 
 
-def _tokenize_batch(texts: pd.Series, hash_name: str = "blake2b"):
-    """Vectorized batch tokenization + vocabulary hashing, shared by the
-    simhash and combined-signature kernels.
+def _tokenize_batch(texts: pd.Series):
+    """Vectorized batch tokenization + blake2b vocabulary hashing for the
+    combined-signature kernel.
 
     Returns ``(lens, codes, uniq_hashes, doc_ids, uniq)``: per-doc
     token counts, per-token vocabulary codes over the flattened corpus,
@@ -700,7 +590,7 @@ def _tokenize_batch(texts: pd.Series, hash_name: str = "blake2b"):
         return lens, None, None, None, None
     flat_toks = np.concatenate([t for t, l in zip(tok_lists, lens) if l > 0])
     codes, uniq = pd.factorize(flat_toks)
-    uh = _hash_vocab(uniq, hash_name)
+    uh = _hash_vocab(uniq)
     doc_ids = np.repeat(np.arange(len(texts)), lens)
     return lens, codes, uh, doc_ids, uniq
 
@@ -710,7 +600,14 @@ def _simhash_from_tokens(
     doc_ids: np.ndarray,
 ) -> np.ndarray:
     """Per-doc 64-bit SimHash from a tokenized batch — the vectorized
-    bit-matrix fold documented in ``simhash_signatures``."""
+    bit-matrix fold: per-doc bit sums WITHOUT ``np.add.reduceat``
+    (measured 4 s on a 270 k-token batch — reduceat's segmented axis-0
+    walk is pathologically slow). Small vocabulary → per-doc
+    token-count matrix times the unique-token bit matrix (one BLAS
+    matmul, 0.03 s on the same batch); large vocabulary → 64 bincount
+    scatter-adds over doc ids (vocab-independent, 0.14 s).
+    Little-endian byte view ⇒ bit column b == (hash >> b) & 1 on every
+    platform Spark runs on."""
     ub = np.unpackbits(
         uh.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
     ).astype(np.int32)
@@ -747,8 +644,8 @@ def signature_table(
     side) are unaffected. Same blocking/banding machinery either way —
     the hash family is the only difference.
 
-    ``minhash_dedup_pairs`` and ``simhash_near_pairs`` each need a
-    full-text kernel pass (shingle hashing resp. token hashing); run
+    MinHash pairs and ``simhash_near_pairs`` each need a full-text
+    kernel pass (shingle hashing resp. token hashing); run
     independently they tokenize the same corpus twice. This kernel
     tokenizes once, hashes the batch VOCABULARY once (blake2b-64 per
     unique token), and derives both signatures from the token-hash
@@ -827,7 +724,7 @@ def minhash_signatures_from_shingles(
     """Signatures from an existing ``shingle_hash_table`` result —
     lets a pipeline compute the shingle scan ONCE and reuse it for both
     signature generation and exact-Jaccard verification (the two
-    consumers in ``minhash_dedup_pairs``)."""
+    consumers in ``minhash_dedup_pairs_from_shingles``)."""
     seeds = _perm_seeds(num_perm, seed)
     sc = sh.sparkSession.sparkContext
     bcast = sc.broadcast(seeds)
@@ -880,36 +777,6 @@ def lsh_candidate_pairs(
         a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.doc") < F.col("b.doc")))
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
-    )
-
-
-def minhash_dedup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """Full MinHash-LSH pipeline: candidates → exact-Jaccard verify.
-
-    Returns (doc_a, doc_b, jaccard) for verified near-dup pairs. The
-    exact verification joins shingle sets only for candidate pairs —
-    at scale this is the crucial difference from the all-pairs join.
-    """
-    # ONE shingle scan feeds both signature generation and the verify
-    # join (r2 ran it twice); eager localCheckpoints (not cache())
-    # materialize each stage exactly once — the banded self-join and
-    # the two-sided verify join would otherwise re-run the Pandas-UDF
-    # kernels per side — and truncate lineage with block cleanup tied
-    # to DataFrame lifetime (a cache() here leaked one cached table per
-    # call, the in-session leak 4b336d2 fixed).
-    sh = shingle_hash_table(df, id_col, text_col, n).localCheckpoint(eager=True)
-    return minhash_dedup_pairs_from_shingles(
-        sh, num_perm=num_perm, bands=bands, threshold=threshold, seed=seed
     )
 
 
@@ -1034,45 +901,6 @@ def connected_components(
 # --------------------------------------------------------------------------
 # SimHash
 # --------------------------------------------------------------------------
-
-
-def simhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 64,
-    hash_name: str = "blake2b",
-) -> DataFrame:
-    """64-bit SimHash over token blake2b-64 values (vectorized bit-count).
-
-    Tokenization AND token hashing happen inside the Arrow-batched
-    kernel: the r2 version fed `transform(split(text), xxhash64)` from
-    the JVM, but Spark evaluates higher-order functions interpreted
-    (outside whole-stage codegen) — measured ~1.9 ms/doc, 9.5 s for a
-    5 k-doc corpus, dominating the whole query. Python-side hashing
-    with a per-batch token memo (corpus vocabulary is Zipfian — most
-    token instances repeat) plus the vectorized bit-matrix fold is
-    ~10x faster, and only 8-byte ids ever cross the Arrow boundary.
-    """
-    @F.pandas_udf("long")
-    def _simhash(texts: pd.Series) -> pd.Series:
-        # Vectorized tokenization + batch-level vocabulary factorize
-        # (_tokenize_batch), then per-doc bit sums WITHOUT
-        # np.add.reduceat (measured 4 s on a 270 k-token batch —
-        # reduceat's segmented axis-0 walk is pathologically slow):
-        # small vocabulary → per-doc token-count matrix times the
-        # unique-token bit matrix (one BLAS matmul, 0.03 s on the same
-        # batch); large vocabulary → 64 bincount scatter-adds over doc
-        # ids (vocab-independent, 0.14 s). Little-endian byte view ⇒
-        # bit column b == (hash >> b) & 1 on every platform Spark runs
-        # on. See _simhash_from_tokens.
-        if len(texts) == 0:
-            return pd.Series(np.empty(0, dtype=np.int64))
-        lens, codes, uh, doc_ids, _ = _tokenize_batch(texts, hash_name)
-        if codes is None:
-            return pd.Series(np.zeros(len(texts), dtype=np.int64))
-        return pd.Series(_simhash_from_tokens(len(texts), lens, codes, uh, doc_ids))
-
-    return _spread_small_input(df).select(
-        F.col(id_col).alias("doc"), _simhash(F.col(text_col)).alias("simhash")
-    )
 
 
 def simhash_candidate_pairs(

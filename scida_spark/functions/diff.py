@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-STATUSES = ("added", "removed", "changed", "unchanged")
-
 
 def _digest(cols) -> Column:
     # md5 over an INJECTIVE encoding of the content tuple: each column

@@ -52,18 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from scida_spark.session import local_df
 
-__all__ = ["bucket_counts", "psi_kl", "drift_table", "embedding_drift_table"]
-
-
-def bucket_counts(
-    df: DataFrame, facet_col: str, bucket_col: str
-) -> DataFrame:
-    """(facet, bucket, c) histogram — ONE map-side-combined groupBy;
-    output is facets x buckets rows regardless of corpus size."""
-    return df.groupBy(
-        F.col(facet_col).alias("facet"),
-        F.col(bucket_col).cast("long").alias("bucket"),
-    ).agg(F.count("*").alias("c"))
+__all__ = ["psi_kl", "drift_table"]
 
 
 def psi_kl(
@@ -92,7 +81,8 @@ def drift_table(
     old_counts: DataFrame,
     new_counts: DataFrame,
 ) -> DataFrame:
-    """Per-facet drift from two :func:`bucket_counts` tables:
+    """Per-facet drift from two (facet, bucket, c) histogram tables (one
+    map-side-combined groupBy per version):
     (facet, psi, kl, n_old, n_new, n_buckets). The full-outer bucket
     merge is distributed (tiny x tiny); the fold collects the merged
     count table — metadata-sized by construction — and runs the
@@ -121,54 +111,3 @@ def drift_table(
         "facet string, psi double, kl double, n_old long, n_new long, "
         "n_buckets int",
     )
-
-
-def embedding_drift_table(
-    spark: SparkSession,
-    old_emb: DataFrame,
-    new_emb: DataFrame,
-    centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    facet_col: str | None = None,
-) -> DataFrame:
-    """Semantic (EMBEDDING) drift between two corpus versions — the
-    vector-side counterpart of the scalar monitor (r13): bucket =
-    nearest-centroid list id under a FIXED persisted quantizer (the
-    ``build_ivf_index`` / ``load_ivf_index`` ingest artifact), so the
-    monitored distribution is the IVF-list occupancy profile. A
-    re-crawl that shifts the corpus semantically (a topic flooding in,
-    a language vanishing, an embedding-model change upstream) moves
-    mass between lists even when every scalar feature is steady —
-    exactly the shift scalar buckets are blind to.
-
-    The quantizer must be the SAME artifact for both versions (drift
-    against a retrained quantizer confounds corpus movement with
-    centroid movement); deterministic given it, so a replay with the
-    same parquet reproduces every count. Scale: two map-only
-    ``ivf_assign`` passes + two bounded groupBys (facets x nlist
-    rows), then the standard driver-side replay-contract fold —
-    nothing else touches either corpus. ``facet_col`` (e.g. a language
-    or source column) splits the monitor per facet; default one
-    ``all`` facet."""
-    from scida_spark.functions.similarity import ivf_assign
-
-    def _counts(df: DataFrame) -> DataFrame:
-        a = ivf_assign(df, centroids, 1, id_col, vec_col)
-        if facet_col is not None:
-            a = a.join(
-                df.select(
-                    F.col(id_col).alias("vec_id"),
-                    F.col(facet_col).alias("_facet"),
-                ),
-                "vec_id",
-            )
-            fac = F.col("_facet").cast("string")
-        else:
-            fac = F.lit("all")
-        return a.select(
-            fac.alias("facet"),
-            F.element_at("lists", 1).cast("long").alias("bucket"),
-        ).groupBy("facet", "bucket").agg(F.count("*").alias("c"))
-
-    return drift_table(spark, _counts(old_emb), _counts(new_emb))

@@ -46,9 +46,9 @@ at >420 s; this design runs the same corpus in ~tens of seconds):
   the only corpus-sized shuffles are the content-digest collapse
   and the digest join back to ids.
 * Selection quotas reuse the deterministic (score, id) window
-  machinery; for a GLOBAL quota over an unbounded corpus, route the
-  rank through operators/prefix_sum.py::grouped_ntile instead of a
-  single-partition window.
+  machinery; for a GLOBAL quota over an unbounded corpus, rank with
+  the two-level running count (operators/prefix_sum.py::
+  global_running_sum) instead of a single-partition window.
 """
 
 from __future__ import annotations
@@ -179,7 +179,7 @@ def dsir_select_stratified(
     (same contract as sampling.stratified_exact_sample, ranked by the
     importance weight instead of a hash). Per-stratum windows bound
     task size by the stratum; a single global quota should rank via
-    grouped_ntile's two-level plan instead."""
+    global_running_sum's two-level plan instead."""
     w = W.partitionBy(stratum_col).orderBy(
         F.col(score_col).desc(), F.col(id_col).asc()
     )

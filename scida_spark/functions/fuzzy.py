@@ -1,209 +1,18 @@
-"""Fuzzy string matching: edit-distance pairs with sound q-gram
-count-filter blocking (entity resolution / noisy-duplicate detection).
+"""Fuzzy string matching: edit-distance pairs with PassJoin segment
+blocking (entity resolution / noisy-duplicate detection).
 
-The q-gram lemma (Gravano+ 2001, "Approximate String Joins in a
-Database (Almost) for Free"): if ``edit_distance(a, b) <= d`` then the
-positional-free q-gram multisets of a and b share at least
-``max(|a|,|b|) - q + 1 - d*q`` grams — each edit destroys at most ``q``
-grams. So candidates come from an inverted-index join on q-grams with a
-COUNT filter (the same counted-intersection shape as the n-gram Jaccard
-baseline in functions/dedup.py — one equi-join + one groupBy on the
-pair key, never all-pairs), plus the length filter ``||a|-|b|| <= d``.
-Strings too short for the lemma to prune (the shared-gram bound
-non-positive) fall back to a length-window equi-join — a tiny, bounded
-subset. Every candidate is verified with the built-in JVM
-``levenshtein`` (exact), so results carry true distances.
-
-At 100 TB: both candidate paths are bucketed equi-joins; the count
-filter runs map-side-combinable; hot q-grams (stop-grams) are
-df-capped via ``max_df`` — and unlike the Jaccard shingle cap's
-documented recall degrade, the cap here is COMPLETENESS-PRESERVING:
-dropping a gram both strings contain removes at most one shared
-occurrence, so the count bound is loosened by ``least(hot_a, hot_b)``
-and strings whose own hot-occurrence count erases their pruning margin
-re-route through the length-window fallback (see :func:`fuzzy_pairs`).
+Every candidate comes from one equi-join on exact segment content
+(pigeonhole: ``d`` edits leave one of ``d+1`` segments untouched) and is
+verified with the built-in JVM ``levenshtein`` (exact), so results carry
+true distances. Strings too short to split into ``d+1`` segments fall
+back to a bounded length-window equi-join. See
+:func:`fuzzy_pairs_segment`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def _qgram_table(df: DataFrame, id_col: str, text_col: str, q: int) -> DataFrame:
-    """(id, len, g, pos) exploded q-gram rows. Built with posexplode of
-    a substring transform — all JVM expressions."""
-    n = F.length(F.col(text_col))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - q, F.lit(0))),
-        lambda i: F.col(text_col).substr(i + 1, F.lit(q)),
-    )
-    return df.select(
-        F.col(id_col).alias("id"), n.alias("len"), F.explode(grams).alias("g")
-    )
-
-
-def fuzzy_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_distance: int = 2,
-    q: int = 2,
-    max_df: int | None = None,
-) -> DataFrame:
-    """All (id_a, id_b, distance) pairs with Levenshtein distance
-    ``<= max_distance`` (id_a < id_b), via sound blocking + exact
-    verify. Complete: the q-gram count path covers every pair where the
-    lemma's bound is positive; shorter strings route through the
-    length-window path.
-
-    ``max_df`` (hot-gram cap): q-grams occurring in more than
-    ``max_df`` strings are dropped from the inverted index — a single
-    stop-gram otherwise fans the index join out to df^2 pair rows (the
-    skew that makes q-gram joins quadratic on real corpora). The cap
-    stays COMPLETE, unlike a naive drop:
-
-    * a dropped gram removes at most ``min(hot_a, hot_b)`` shared
-      occurrences from a true pair (it must occur in BOTH strings), so
-      the count filter is loosened to
-      ``shared >= max(la, lb) - (q-1) - d*q - least(hot_a, hot_b)``;
-    * a string whose own hot-occurrence count wipes out its pruning
-      margin (``len - hot <= short_cut``) can no longer be count-
-      pruned against any partner, so it re-routes through the
-      length-window fallback exactly like a short string.
-
-    The trade is therefore COST, not recall: hot-gram-saturated
-    strings join the length-window subset. That subset — short strings
-    (``len <= short_cut``, i.e. ``q-1+d*q+d`` chars) plus re-routed
-    hot strings — is matched all-pairs within a ±d length window: cost
-    O(sum_l n_l * n_[l..l+d]) verify calls, quadratic in the subset's
-    per-length populations and NOT further content-blocked (a d-edit
-    budget on a <=short_cut-char string can rewrite most of it, so no
-    sound content key exists). Callers with heavy short-string
-    populations should pre-aggregate them (collapse-first on the exact
-    value, as queries_pipeline does) — replicas cost one rep each.
-    """
-    d = max_distance
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("t"),
-        F.length(text_col).alias("len"),
-    ).localCheckpoint(eager=True)
-    # Lemma bound: shared >= max(la, lb) - q + 1 - d*q must be > 0 to
-    # prune; with ||a|-|b||<=d, max(la,lb) <= min(la,lb)+d, so strings
-    # with len > short_cut ALWAYS have a positive bound against any
-    # eligible partner; len <= short_cut strings may not.
-    short_cut = q - 1 + d * q + d  # max(la,lb) <= len+d must exceed q-1+d*q
-    long_side = base.filter(F.col("len") > short_cut)
-    short_side = base.filter(F.col("len") <= short_cut)
-
-    # --- q-gram count candidates among long strings -------------------
-    g = _qgram_table(
-        long_side.select(F.col("id").alias(id_col), F.col("t").alias(text_col)),
-        id_col, text_col, q,
-    )
-    if max_df is not None:
-        dfreq = g.groupBy("g").agg(F.count_distinct("id").alias("_df"))
-        hot_grams = dfreq.filter(F.col("_df") > max_df).select("g")
-        # per-string hot-occurrence counts (0 for untouched strings)
-        hotn = (
-            g.join(hot_grams, "g")
-            .groupBy("id")
-            .agg(F.count("*").alias("_hot"))
-        )
-        lh = long_side.join(hotn, "id", "left").fillna(0, subset=["_hot"])
-        strong = lh.filter(F.col("len") - F.col("_hot") > short_cut)
-        rerouted = lh.filter(F.col("len") - F.col("_hot") <= short_cut).drop(
-            "_hot"
-        )
-        g = _qgram_table(
-            strong.select(
-                F.col("id").alias(id_col), F.col("t").alias(text_col)
-            ),
-            id_col, text_col, q,
-        ).join(hot_grams, "g", "left_anti")
-        hot_of = strong.select("id", "_hot")
-        a = (
-            g.select(F.col("id").alias("id_a"), F.col("len").alias("la"), "g")
-            .join(
-                hot_of.select(
-                    F.col("id").alias("id_a"), F.col("_hot").alias("ha")
-                ),
-                "id_a",
-            )
-        )
-        b = (
-            g.select(F.col("id").alias("id_b"), F.col("len").alias("lb"), "g")
-            .join(
-                hot_of.select(
-                    F.col("id").alias("id_b"), F.col("_hot").alias("hb")
-                ),
-                "id_b",
-            )
-        )
-        slack = F.least("ha", "hb")
-        group_extra = ["ha", "hb"]
-    else:
-        rerouted = None
-        a = g.select(F.col("id").alias("id_a"), F.col("len").alias("la"), "g")
-        b = g.select(F.col("id").alias("id_b"), F.col("len").alias("lb"), "g")
-        slack = F.lit(0)
-        group_extra = []
-    cand_long = (
-        a.join(b, "g")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.abs(F.col("la") - F.col("lb")) <= d)
-        )
-        .groupBy("id_a", "id_b", "la", "lb", *group_extra)
-        .agg(F.count("*").alias("shared"))
-        .filter(
-            F.col("shared")
-            >= F.greatest("la", "lb") - F.lit(q - 1) - F.lit(d * q) - slack
-        )
-        .select("id_a", "id_b")
-    )
-    # --- short strings: length-window equi-join -----------------------
-    # Every short (or hot-rerouted) string pairs with strings (any
-    # side) whose length is within ±d. Keys span the FULL len-d..len+d
-    # window: a short string's downward partners are short themselves
-    # (lb <= la <= short_cut) so upward keys would suffice there, but a
-    # hot-REROUTED string is long — its shorter partner can be a strong
-    # string that emits no window keys at all, so the window side must
-    # look both directions itself.
-    window_side = (
-        short_side if rerouted is None else short_side.unionAll(rerouted)
-    )
-    sk = window_side.select(
-        F.col("id").alias("id_a"),
-        F.explode(
-            F.sequence(F.greatest(F.col("len") - d, F.lit(0)), F.col("len") + d)
-        ).alias("lkey"),
-    )
-    other = base.select(F.col("id").alias("id_b"), F.col("len").alias("lkey"))
-    cand_short = (
-        sk.join(other, "lkey")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-        .distinct()
-    )
-    cands = cand_long.unionAll(cand_short).distinct()
-    ta = base.select(F.col("id").alias("id_a"), F.col("t").alias("ta"))
-    tb = base.select(F.col("id").alias("id_b"), F.col("t").alias("tb"))
-    return (
-        cands.join(ta, "id_a")
-        .join(tb, "id_b")
-        # r16: banded verify — the 3-arg levenshtein(l, r, threshold)
-        # computes only the |d|-band of the DP matrix (O(len*d) instead
-        # of O(len^2)) and returns -1 past the threshold; kept rows
-        # carry the identical exact distance.
-        .withColumn("distance", F.levenshtein("ta", "tb", d))
-        .filter(F.col("distance") >= 0)
-        .select("id_a", "id_b", "distance")
-    )
 
 
 def _seg_bounds(length: Column, i: int, k: int) -> tuple[Column, Column]:
@@ -226,8 +35,8 @@ def fuzzy_pairs_segment(
     (Li, Deng, Feng 2011, "PASS-JOIN: a partition-based method for
     similarity joins") + exact JVM ``levenshtein`` verify.
 
-    Why a second blocking scheme: the q-gram count filter
-    (:func:`fuzzy_pairs`) prunes by SHARED-GRAM VOLUME, which collapses
+    Why segments, not q-grams: a q-gram count filter (Gravano+ 2001)
+    prunes by SHARED-GRAM VOLUME, which collapses
     on small-alphabet / repetitive corpora where every string shares
     most grams with every other (measured on the 24-char prefix corpus
     at sf0.1: 26.1M gram-join rows for 4.8k strings — WORSE than
@@ -238,9 +47,7 @@ def fuzzy_pairs_segment(
     partner, shifted by at most the edits before it. Candidates are
     one equi-join on (segment_idx, segment_content): 8-char segments
     are vastly rarer than 5-grams (same corpus: 158k join rows, 165x
-    fewer). Prefer this path for near-uniform-length keys over small
-    alphabets; the q-gram path wins when grams are rare but segment
-    contents are hot.
+    fewer).
 
     Completeness: for a pair (a, b) with ed <= d, partition b into
     d+1 segments; some segment s_i (start p_i in b) appears in a at a
@@ -360,7 +167,7 @@ def fuzzy_pairs_segment(
     )
     # Fallback: strings with len <= d pair only with strings of
     # len <= 2d (length filter) — a tiny population; all-pairs within
-    # the +-d length window, same shape as fuzzy_pairs' short path.
+    # the +-d length window.
     sk = short_side.select(
         F.col("id").alias("id_a"),
         F.explode(

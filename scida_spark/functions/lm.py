@@ -50,14 +50,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from scida_spark.functions import text as TX
-from scida_spark.session import local_df
 
 __all__ = [
     "train_unigram_lm",
     "score_nll",
-    "nll_filter",
-    "save_unigram_lm",
-    "load_unigram_lm",
     "UnigramLM",
 ]
 
@@ -65,8 +61,8 @@ __all__ = [
 class UnigramLM:
     """Trained model artifact: top-V token counts + totals.
 
-    Persistable as a tiny two-column table; ``counts`` is the only
-    state that crosses the driver/executor boundary (broadcast).
+    ``counts`` is the only state that crosses the driver/executor
+    boundary (broadcast).
     """
 
     def __init__(self, counts: dict[str, int], n_total: int, vocab_size: int):
@@ -119,44 +115,11 @@ def train_unigram_lm(
     return UnigramLM({r["tok"]: int(r["c"]) for r in top}, n_total, vocab_size)
 
 
-def save_unigram_lm(spark, model: UnigramLM, path: str) -> None:
-    """Model → parquet (tok, c) + a totals row — the persistable
-    artifact, same pattern as the IVF/PQ index persistence: train once
-    at ingest, reuse across every later scoring pass (the 100 TB shape:
-    the model is a few MB; retraining per query would rescan the
-    training slice)."""
-    rows = [(t, int(c), None, None) for t, c in sorted(model.counts.items())]
-    rows.append((None, None, model.n_total, model.vocab_size))
-    local_df(spark, 
-        rows, "tok string, c long, n_total long, vocab_size long"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_unigram_lm(spark, path: str) -> UnigramLM:
-    """Inverse of :func:`save_unigram_lm` — identical scores after a
-    roundtrip (integer state only)."""
-    rows = spark.read.parquet(path).collect()
-    counts, n_total, vocab_size = {}, None, None
-    for r in rows:
-        if r["tok"] is not None:
-            counts[r["tok"]] = int(r["c"])
-        else:
-            n_total, vocab_size = int(r["n_total"]), int(r["vocab_size"])
-    if n_total is None:
-        raise ValueError(f"no totals row in persisted unigram LM at {path}")
-    return UnigramLM(counts, n_total, vocab_size)
-
-
-def score_nll(
-    docs: DataFrame,
-    model: UnigramLM,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def score_nll(docs: DataFrame, model: UnigramLM) -> DataFrame:
     """Per-document mean negative log-likelihood in nats (plus token /
-    OOV counts) — row-local scoring, zero shuffle.
+    OOV counts) of ``docs``' ``text`` — row-local scoring, zero shuffle.
 
-    Returns ``(id_col, n_tokens, n_oov, nll)``; ``nll`` is the raw
+    Returns ``(doc_id, n_tokens, n_oov, nll)``; ``nll`` is the raw
     double — callers choose the rounding (the registry query applies
     one DECIMAL(38,6) cast to match its oracle bit-for-bit).
     """
@@ -195,29 +158,14 @@ def score_nll(
         return pd.DataFrame({"n_tokens": n_out, "n_oov": oov_out, "nll": nll_out})
 
     return docs.select(
-        F.col(id_col),
-        _score(TX.tokens(F.col(text_col))).alias("_s"),
+        F.col("doc_id"),
+        _score(TX.tokens(F.col("text"))).alias("_s"),
     ).select(
-        id_col,
+        "doc_id",
         F.col("_s.n_tokens").alias("n_tokens"),
         F.col("_s.n_oov").alias("n_oov"),
         F.col("_s.nll").alias("nll"),
     )
-
-
-def nll_filter(
-    docs: DataFrame,
-    model: UnigramLM,
-    max_nll: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Documents whose mean NLL is at most ``max_nll`` (the keep-side
-    of a perplexity filter) — composition of :func:`score_nll` with a
-    row-local filter; survivors keep their original columns."""
-    scored = score_nll(docs, model, text_col=text_col, id_col=id_col)
-    keep = scored.filter(F.col("nll") <= F.lit(max_nll)).select(id_col)
-    return docs.join(keep, id_col, "left_semi")
 
 
 # ---------------------------------------------------------------------------

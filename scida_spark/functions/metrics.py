@@ -7,7 +7,7 @@ AUC is computed EXACTLY via the Mann-Whitney rank-sum identity
 AUC = (sum of positive midranks - n_pos(n_pos+1)/2) / (n_pos * n_neg),
 with tie handling by MIDRANKS (ties between a positive and a negative
 count 1/2, the standard correction). The scale shape is the
-grouped_median_element lesson: aggregate to one row per DISTINCT score
+grouped_median_element_cells lesson: aggregate to one row per DISTINCT score
 value first (counts + positive counts), then run the rank window over
 THAT table — a billion-row corpus with a bounded score vocabulary
 costs its distinct-value count, and no task ever sorts raw rows.
@@ -37,7 +37,7 @@ def auc_exact(
     no negatives emit NULL auc (undefined, surfaced not hidden).
 
     ``score_col`` must be non-NULL (engines disagree where NULLs
-    sort — the grouped_median_element precondition); filter upstream.
+    sort — the grouped_median_element_cells precondition); filter upstream.
 
     The rank window runs over the DISTINCT-score count table. For the
     ungrouped case with an unbounded score vocabulary (raw continuous

@@ -26,26 +26,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("n_bytes", T.LongType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id long, n_bytes long, sha256 string, fingerprint string, "
@@ -322,8 +302,7 @@ def decode_image(payload: bytes) -> np.ndarray:
 
 def encode_ppm(img: np.ndarray) -> bytes:
     """(H, W, 3) uint8 → binary PPM (P6) payload — the inverse of
-    ``decode_image`` for the native path, used by ``resize_images`` to
-    emit decodable output."""
+    ``decode_image`` for the native path."""
     h, w = img.shape[:2]
     return b"P6\n%d %d\n255\n" % (w, h) + np.ascontiguousarray(
         img[:, :, :3], dtype=np.uint8
@@ -425,64 +404,6 @@ def extract_features(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame
             )
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = (
-    "media_id long, payload binary, "
-    "meta struct<mime:string,width:int,height:int,n_bytes:bigint>"
-)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize over binary payloads via mapInPandas.
-
-    Natively decodable payloads (PPM/PGM/BMP) get a REAL
-    nearest-neighbor resample (vectorized index gather over the decoded
-    array) re-encoded as binary PPM with mime rewritten; other payloads
-    fall back to the deterministic truncate/pad fake so the batch
-    plumbing still runs end-to-end on mixed corpora. Swap the fallback
-    for a PIL kernel to cover compressed formats.
-    """
-    target = width * height
-
-    def _fake_resize(b: bytes) -> bytes:
-        b = b or b""
-        return b[:target] if len(b) >= target else b + b"\x00" * (target - len(b))
-
-    def _resize_one(b: bytes, meta) -> tuple[bytes, dict]:
-        mime = meta["mime"] if meta else None
-        if (b or b"")[:2] in _IMAGE_MAGIC:
-            try:
-                img = decode_image(b)
-                ys = (np.arange(height) * img.shape[0]) // height
-                xs = (np.arange(width) * img.shape[1]) // width
-                out = encode_ppm(img[ys[:, None], xs[None, :]])
-                mime = "image/x-portable-pixmap"
-            except (NotImplementedError, ValueError):
-                out = _fake_resize(b)
-        else:
-            out = _fake_resize(b)
-        return out, {
-            "mime": mime,
-            "width": width,
-            "height": height,
-            "n_bytes": len(out),
-        }
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [
-                _resize_one(b, m) for b, m in zip(pdf["payload"], pdf["meta"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [p for p, _ in resized],
-                    "meta": [m for _, m in resized],
-                }
-            )
-
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
 # --------------------------------------------------------------------------

@@ -2,14 +2,13 @@
 training sequences (the "sample packing" step of an LLM data pipeline —
 maximizes tokens-per-sequence so padding doesn't waste compute).
 
-Packing is PARTITION-LOCAL by design: a global optimal bin-packing
+Packing is DOMAIN-LOCAL by design: a global optimal bin-packing
 would serialize the corpus through one node, while greedy first-fit
-within each partition is embarrassingly parallel, deterministic (docs
-are sorted by id within the partition before packing), and loses only
-a sliver of density (each partition wastes at most one partial
-sequence's tail — negligible when partitions hold thousands of docs).
-This is how production pipelines shard the problem at 100 TB: the
-partition is the packing domain.
+within each packing domain is embarrassingly parallel, deterministic
+(docs are sorted by id within the domain before packing), and loses
+only a sliver of density (each domain wastes at most one partial
+sequence's tail — negligible when domains hold thousands of docs).
+This is how production pipelines shard the problem at 100 TB.
 
 Documents longer than the budget are emitted as singleton sequences
 flagged ``oversize`` (the caller decides whether to truncate/split —
@@ -32,10 +31,17 @@ PACK_SCHEMA = (
 def greedy_pack_frames(
     batches: Iterator[pd.DataFrame], budget: int
 ) -> Iterator[pd.DataFrame]:
-    """The partition-local greedy first-fit kernel ``pack_sequences``
-    runs under ``mapInPandas`` — module-level so property tests drive
-    the exact production code path without a SparkSession. Input frames
-    carry (_id, _tok); output frames match ``PACK_SCHEMA``."""
+    """The greedy first-fit kernel ``pack_sequences_by`` runs per
+    packing domain — module-level so property tests drive the exact
+    production code path without a SparkSession. Input frames carry
+    (_id, _tok); output frames match ``PACK_SCHEMA``.
+
+    A doc joins the current sequence if it fits, else the sequence is
+    sealed and a new one starts. ``seq_id`` is "<domain's first doc
+    id>:<seq index>" — stable across runs. Invariants (pinned in
+    tests): every doc appears in exactly one sequence; ``total_tokens
+    <= budget`` unless ``oversize`` (a single doc exceeding the
+    budget)."""
     parts_list = list(batches)
     pdf = pd.concat(parts_list, ignore_index=True) if parts_list else None
     if pdf is None or len(pdf) == 0:
@@ -81,41 +87,6 @@ def greedy_pack_frames(
     )
 
 
-def pack_sequences(
-    df: DataFrame,
-    id_col: str,
-    token_count_col: str,
-    budget: int,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Greedy first-fit packing of (id, token_count) rows into
-    sequences of at most ``budget`` tokens.
-
-    Rows are hash-repartitioned by id (deterministic placement) and
-    sorted by id within each partition, then packed by a vectorized
-    Arrow kernel: a doc joins the current sequence if it fits, else
-    the sequence is sealed and a new one starts. ``seq_id`` is
-    "<partition's first doc id>:<seq index>" — stable across runs.
-
-    Returns one row per sequence. Invariants (pinned in tests):
-    every doc appears in exactly one sequence; ``total_tokens <=
-    budget`` unless ``oversize`` (a single doc exceeding the budget).
-    """
-
-    def _pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from greedy_pack_frames(batches, budget)
-
-    sel = df.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(token_count_col).cast("long").alias("_tok"),
-    )
-    parts = num_partitions or sel.sparkSession.sparkContext.defaultParallelism
-    return (
-        sel.repartition(parts, "_id")
-        .mapInPandas(_pack, schema=PACK_SCHEMA)
-    )
-
-
 def pack_sequences_by(
     df: DataFrame,
     id_col: str,
@@ -123,13 +94,13 @@ def pack_sequences_by(
     budget: int,
     domain_col: str,
 ) -> DataFrame:
-    """Packing with an EXPLICIT packing domain: each distinct
-    ``domain_col`` value is one greedy-first-fit group (same kernel,
-    driven through ``applyInPandas``). Use when the domain must be a
-    pure function of the data — e.g. ``doc_id % K`` — so sequence
-    membership is reproducible by ANY engine, not just one that
-    shares Spark's repartition hash. Scale shape is identical to
-    ``pack_sequences``: one shuffle on the domain key, then
+    """Greedy first-fit packing of (id, token_count) rows into
+    sequences of at most ``budget`` tokens, with an EXPLICIT packing
+    domain: each distinct ``domain_col`` value is one group (the
+    :func:`greedy_pack_frames` kernel, driven through
+    ``applyInPandas``). The domain must be a pure function of the data
+    — e.g. ``doc_id % K`` — so sequence membership is reproducible by
+    ANY engine. Scale shape: one shuffle on the domain key, then
     embarrassingly-parallel per-group kernels."""
 
     def _pack_group(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -148,27 +148,6 @@ def in_mix_column(
     return b < thr
 
 
-def domain_mix(
-    df: DataFrame,
-    id_col: str,
-    domain_col: str,
-    weights: dict[str, int],
-    salt: str = "",
-) -> DataFrame:
-    """Deterministically thin a corpus to a target domain mixture
-    (the Pile/RedPajama-style composition step): one tiny count
-    aggregation (rows = domain cardinality — the ONLY driver-side
-    materialization, safe for any realistic domain count), then a
-    map-only hash filter. Reproducible: membership is a pure function
-    of (id, salt, counts) — re-runs, repartitioning, and engine
-    changes cannot change the selected set."""
-    counts = {r[0]: r[1] for r in df.groupBy(domain_col).count().collect()}
-    thresholds = mix_thresholds(counts, weights)
-    return df.filter(
-        in_mix_column(F.col(id_col), F.col(domain_col), thresholds, salt)
-    )
-
-
 def stratified_exact_sample(
     df: DataFrame,
     id_col: str,
@@ -278,8 +257,8 @@ def weighted_sample_flag(
     The importance-weighted complement of ``stratified_exact_sample``
     (uniform) and the DSIR quota (rank by model score): sample
     PROPORTIONAL to a quality/importance weight while still hitting an
-    exact per-stratum count. Per-stratum windows bound the task; giant
-    strata route through grouped_ntile (operators/prefix_sum.py)."""
+    exact per-stratum count. Per-stratum windows bound the task by the
+    stratum."""
     from pyspark.sql.window import Window as W
 
     u = (hash_bucket(F.col(id_col), salt) + 0.5) / F.lit(float(BUCKET_SPACE))

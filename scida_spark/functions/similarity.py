@@ -764,11 +764,8 @@ def train_pq_codebooks(
 
 
 def pq_code_udf(sc, codebooks: np.ndarray):
-    """The PQ-encode kernel as a reusable Arrow-batched UDF over an
-    ``array<double>`` column (broadcast codebooks) — shared by
-    :func:`pq_encode` and the streaming vector store's writer, so
-    stored codes are bit-identical to batch-encoded ones by
-    construction."""
+    """The PQ-encode kernel of :func:`pq_encode` as an Arrow-batched
+    UDF over an ``array<double>`` column (broadcast codebooks)."""
     m, ksub, dsub = codebooks.shape
     bcast = sc.broadcast(codebooks)
 
@@ -868,8 +865,7 @@ def pq_topk_from_encoded(
 ) -> DataFrame:
     """ADC scan + exact re-rank over an ALREADY-ENCODED corpus — the
     steady-state query path when codes are built once at ingest and
-    persisted (``streaming/ingest.py::vector_index_ingest``):
-    encoding cost is never re-paid per query batch. ``encoded`` is a
+    persisted: encoding cost is never re-paid per query batch. ``encoded`` is a
     (vec_id, code binary) table matching ``pq_encode``'s output;
     ``embeddings`` supplies true vectors for the shortlist re-rank
     (only shortlist members are read — semi-join)."""
@@ -950,39 +946,11 @@ def pq_topk_from_encoded(
     )
 
 
-def save_pq_codebooks(spark, codebooks: np.ndarray, path: str) -> None:
-    """Codebooks → parquet (subspace, centroid_id, centroid) — the
-    persistable PQ index artifact (train once at ingest, load for
-    every query batch; same lifecycle as the IVF centroids)."""
-    m, ksub, dsub = codebooks.shape
-    rows = [
-        (int(i), int(c), [float(x) for x in codebooks[i, c]])
-        for i in range(m)
-        for c in range(ksub)
-    ]
-    local_df(spark, 
-        rows, "subspace int, centroid_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_pq_codebooks(spark, path: str) -> np.ndarray:
-    rows = spark.read.parquet(path).orderBy("subspace", "centroid_id").collect()
-    m = rows[-1]["subspace"] + 1
-    ksub = rows[-1]["centroid_id"] + 1
-    dsub = len(rows[0]["centroid"])
-    out = np.empty((m, ksub, dsub))
-    for r in rows:
-        out[r["subspace"], r["centroid_id"]] = np.asarray(r["centroid"])
-    return out
-
-
 def ivfpq_query_tables(
     qrows, centroids: np.ndarray, codebooks: np.ndarray, nprobe: int
 ):
     """Driver-side query tables for an IVF-PQ serve: (qids, probes,
-    probe_union, LUT). ``qrows`` are collected Rows with (qid, v).
-    Shared by :func:`ivfpq_topk` and the streaming vector store so
-    probes and ADC tables are identical by construction."""
+    probe_union, LUT). ``qrows`` are collected Rows with (qid, v)."""
     mq, ksub, dsub = codebooks.shape
     qids = np.array([r["qid"] for r in qrows], dtype=np.int64)
     qmat = np.stack([np.asarray(r["v"], dtype=np.float64) for r in qrows])
@@ -1071,10 +1039,9 @@ def ivfpq_topk(
     at m=8, nbits=4), each partition emits a local shortlist, and an
     exact cosine re-rank of shortlist members restores precision.
 
-    Both index artifacts are trained once at ingest (deterministic
-    driver-side samples) and persistable (``save_ivf_index`` /
-    ``save_pq_codebooks``); pass ``centroids=``/``codebooks=`` for the
-    steady-state query path. Accuracy is certified the ANN way: a
+    Both index artifacts are trained once (deterministic driver-side
+    samples); pass ``centroids=``/``codebooks=`` for the steady-state
+    query path. Accuracy is certified the ANN way: a
     recall floor vs the exact top-k (pytest + the sim_topk cert row) —
     the ids are the approximation, by design.
     """

@@ -36,12 +36,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def stopword_hits(text: Column, words: tuple[str, ...]) -> Column:
-    """Count of tokens that are in the stopword set."""
-    wl = list(words)
-    return F.size(F.filter(tokens(text), lambda t: t.isin(wl)))
-
-
 def mean_token_length(text: Column) -> Column:
     t = tokens(text)
     return F.aggregate(
@@ -73,10 +67,6 @@ def quality_score(text: Column) -> Column:
     )
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    return {lang: stopword_hits(text, sw) for lang, sw in LANG_STOPWORDS.items()}
-
-
 def lang_id_from_scores(s: dict[str, Column]) -> Column:
     """argmax over pre-computed per-language hit-count columns with fixed
     tie-break (en>de>es>fr>zh) — the CSE-friendly form."""
@@ -96,12 +86,8 @@ def lang_id_from_scores(s: dict[str, Column]) -> Column:
     return expr
 
 
-def lang_id(text: Column) -> Column:
-    """argmax of stopword hit counts with fixed tie-break (en>de>es>fr>zh)."""
-    return lang_id_from_scores(lang_scores(text))
-
-
 def stopword_hits_from_tokens(tok_col: Column, words: tuple[str, ...]) -> Column:
+    """Count of tokens in a materialized token array that are stopwords."""
     wl = list(words)
     return F.size(F.filter(tok_col, lambda t: t.isin(wl)))
 

@@ -66,7 +66,6 @@ __all__ = [
     "canonicalize_url",
     "url_host",
     "registered_domain",
-    "url_registered_domain",
     "with_url_columns",
     "canonical_url_dedup",
     "cap_per_domain",
@@ -215,24 +214,6 @@ def registered_domain(host) -> Column:
     )
 
 
-def url_registered_domain(url) -> Column:
-    """Registered domain straight from a URL column ('' when the URL
-    is scheme-less) — the key per-domain caps and temperature mixing
-    should group on.
-
-    .. warning:: Column-composition form — fine for literal frames and
-       small lookups, WRONG for a corpus scan. It inlines the
-       ``url_host`` regex subtree at every one of ``registered_domain``'s
-       internal references; the generated Java blows past janino's
-       64 KB method limit and whole-stage codegen silently falls back
-       to the interpreter (measured ~8× at 500k docs, SCALE.md). For
-       DataFrame work use :func:`with_url_columns`, which stages the
-       host in its own projection so it is evaluated once per row."""
-    return F.when(url_host(url) == "", F.lit("")).otherwise(
-        registered_domain(url_host(url))
-    )
-
-
 def with_url_columns(
     df: DataFrame,
     url_col: str,
@@ -253,8 +234,8 @@ def with_url_columns(
     zero shuffle; ``canonical_col`` optionally adds the canonical URL
     (a single self-contained expression — no staging needed).
 
-    Semantics match :func:`url_registered_domain` exactly: scheme-less
-    input gets ``'' `` for both host and domain."""
+    The domain is ``registered_domain(url_host(url))``, except that
+    scheme-less input gets ``''`` for both host and domain."""
     clash = {host_col, domain_col} | (
         {canonical_col} if canonical_col is not None else set()
     )

@@ -123,113 +123,6 @@ def global_running_sum(
     )
 
 
-def grouped_ntile(
-    df: DataFrame,
-    k: int,
-    group_col: str,
-    bucket_col: str,
-    *tiebreak_cols: str,
-    out_col: str = "ntile",
-) -> DataFrame:
-    """``NTILE(k) OVER (PARTITION BY group ORDER BY bucket, *tiebreak)``
-    without the coarse-group skew trap.
-
-    A native NTILE partitioned by a low-cardinality group sorts each
-    group's ENTIRE membership on one task (measured: 3 return-flag
-    groups x 20M rows each at the x100 scale = three straggler sorts).
-    Two-level plan instead:
-
-      1. per-(group, bucket) counts; prefix over buckets within each
-         group (window over the SMALL aggregated table) -> the rank
-         offset every (group, bucket) cell starts at;
-      2. rank within (group, bucket) cells (fine partitions, parallel)
-         + offset = the exact rank r within the group;
-      3. NTILE's uneven-split rule applied arithmetically from r and
-         the group size n (first n mod k buckets get the extra row) —
-         bit-identical to the window function's assignment.
-
-    ``bucket_col`` must be the LEADING sort column (ranking inside a
-    cell then only needs the tiebreaks); its per-group cardinality
-    bounds phase 1's window side, and its cell sizes bound the
-    parallel sort. Ideal when the leading sort key is a measure with
-    bounded distinct values (quantities, prices, scores)."""
-    counts = df.groupBy(group_col, bucket_col).agg(F.count("*").alias("__cnt"))
-    w_off = (
-        W.partitionBy(group_col)
-        .orderBy(bucket_col)
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "__off", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).cast("long")
-    ).select(group_col, bucket_col, "__off")
-    totals = df.groupBy(group_col).agg(F.count("*").alias("__n"))
-    w_local = W.partitionBy(group_col, bucket_col).orderBy(
-        *(tiebreak_cols or (bucket_col,))
-    )
-    r = F.row_number().over(w_local).cast("long") + F.col("__off")
-    n, kk = F.col("__n"), F.lit(int(k))
-    q, rem = F.floor(n / kk).cast("long"), (n % kk).cast("long")
-    cut = rem * (q + 1)  # rows covered by the size-(q+1) buckets
-    tile = F.when(r <= cut, F.ceil(r / (q + 1))).otherwise(
-        rem + F.ceil((r - cut) / F.greatest(q, F.lit(1)))
-    )
-    # Null-safe join keys: native NTILE partitions and sorts NULL
-    # group/bucket values like any other (NULLS FIRST under the
-    # ascending window order, matching groupBy's NULL group and the
-    # offset window's sort) — a plain equi-join would silently drop
-    # those rows. EqualNullSafe is still a hash-join key, so both
-    # joins stay broadcast.
-    off2 = offsets.withColumnRenamed(group_col, "__g").withColumnRenamed(
-        bucket_col, "__b"
-    )
-    tot2 = totals.withColumnRenamed(group_col, "__g2")
-    return (
-        df.join(
-            F.broadcast(off2),
-            F.col(group_col).eqNullSafe(F.col("__g"))
-            & F.col(bucket_col).eqNullSafe(F.col("__b")),
-        )
-        .join(F.broadcast(tot2), F.col(group_col).eqNullSafe(F.col("__g2")))
-        .withColumn(out_col, tile.cast("int"))
-        .drop("__g", "__b", "__g2", "__off", "__n")
-    )
-
-
-def grouped_ntile_stats(
-    df: DataFrame,
-    k: int,
-    group_col: str,
-    bucket_col: str,
-    out_col: str = "ntile",
-) -> DataFrame:
-    """Per-(group, tile) row count and bucket-value min/max of
-    ``NTILE(k) OVER (PARTITION BY group ORDER BY bucket, <any
-    tie-break>)`` WITHOUT ranking a single row (r15 — guide §1.2
-    "change the distributed algorithm"): NTILE assigns tiles by rank
-    alone, rows sharing a bucket value occupy one contiguous rank
-    block ``(__off, __off + __cnt]``, and tile ``j`` owns the rank
-    interval ``(start_j, start_j + size_j]`` with ``size_j = q+1`` for
-    ``j <= n % k`` else ``q`` (``q = n div k`` — the uneven-split
-    rule). So the number of a cell's rows landing in tile ``j`` is the
-    interval overlap, and a tile's bucket min/max are the min/max
-    bucket values among cells with positive overlap. Counts, min and
-    max are invariant to the tie-break order (ties share a bucket
-    value), so the result is bit-identical to aggregating
-    :func:`grouped_ntile`'s per-row output — pinned in
-    tests/test_prefix_sum.py — while the plan never shuffles or sorts
-    the raw rows beyond the one cell groupBy.
-
-    Returns ``(group_col, out_col, n_rows, bucket_min, bucket_max)``,
-    one row per non-empty tile."""
-    return grouped_ntile_stats_from_cells(
-        df.groupBy(group_col, bucket_col).agg(F.count("*").alias("__cnt")),
-        k,
-        group_col,
-        bucket_col,
-        out_col=out_col,
-    )
-
-
 def grouped_ntile_stats_from_cells(
     raw_cells: DataFrame,
     k: int,
@@ -239,11 +132,30 @@ def grouped_ntile_stats_from_cells(
     out_col: str = "ntile",
     percentiles: list[tuple[str, float]] | None = None,
 ) -> DataFrame:
-    """:func:`grouped_ntile_stats` from an ALREADY-AGGREGATED
-    ``(group, bucket, cnt)`` cell table — the ``_from_cells``
-    convention: a pipeline that computed the cell counts once reuses
+    """Per-(group, tile) row count and bucket-value min/max of
+    ``NTILE(k) OVER (PARTITION BY group ORDER BY bucket, <any
+    tie-break>)`` from an ALREADY-AGGREGATED ``(group, bucket, cnt)``
+    cell table, WITHOUT ranking a single row (r15 — guide §1.2 "change
+    the distributed algorithm").
+
+    A native NTILE partitioned by a low-cardinality group sorts each
+    group's ENTIRE membership on one task (measured: 3 return-flag
+    groups x 20M rows each at the x100 scale = three straggler sorts).
+    Here NTILE assigns tiles by rank alone, rows sharing a bucket value
+    occupy one contiguous rank block ``(__off, __off + __cnt]``, and
+    tile ``j`` owns the rank interval ``(start_j, start_j + size_j]``
+    with ``size_j = q+1`` for ``j <= n % k`` else ``q`` (``q = n div
+    k`` — the uneven-split rule). So the number of a cell's rows
+    landing in tile ``j`` is the interval overlap, and a tile's bucket
+    min/max are the min/max bucket values among cells with positive
+    overlap. Counts, min and max are invariant to the tie-break order
+    (ties share a bucket value), so the result is bit-identical to
+    aggregating the native window's per-row output — pinned in
+    tests/test_prefix_sum.py — while the plan never shuffles or sorts
+    the raw rows. A pipeline that computed the cell counts once reuses
     the IDENTICAL DataFrame here, so the one cell shuffle is planned
-    once and shared across consumers.
+    once and shared across consumers. Returns ``(group_col, out_col,
+    n_rows, bucket_min, bucket_max)``, one row per non-empty tile.
 
     ``percentiles`` (r16): ``[(out_name, p), ...]`` additionally
     computes the EXACT interpolated percentile per group — the same
@@ -353,31 +265,6 @@ def grouped_ntile_stats_from_cells(
     )
 
 
-def grouped_median_element(
-    df: DataFrame, group_col: str, value_col: str, out_col: str = "med"
-) -> DataFrame:
-    """EXACT element-pick median per group — the value at rank
-    ceil(n/2) under ascending ``value_col`` order — via the two-level
-    aggregated plan: per-(group, value) counts first, then a window
-    over THAT table (rows bounded by distinct values per group, not
-    group size). An element pick, not an interpolation, so the result
-    is one of the input values and hash-matches any engine bit-for-bit
-    (the KLL-anchor trick); and no task ever sorts a group's raw
-    membership (the grouped_ntile lesson — a 20M-row group costs the
-    same as a 50-row one when values repeat).
-
-    ``value_col`` must be non-NULL: engines disagree on where NULLs
-    sort (Spark ASC puts them first, DuckDB last), so a NULL-bearing
-    column would shift every rank — filter or coalesce upstream (the
-    grouped_ntile null-safe-key lesson, in sort-position form).
-
-    Returns one row per group: ``(group_col, out_col, n)``."""
-    cnt = df.groupBy(group_col, value_col).agg(F.count("*").alias("__c"))
-    return grouped_median_element_cells(
-        cnt, group_col, value_col, "__c", out_col
-    )
-
-
 def grouped_median_element_cells(
     cells: DataFrame,
     group_col: str,
@@ -385,16 +272,23 @@ def grouped_median_element_cells(
     cnt_col: str,
     out_col: str = "med",
 ) -> DataFrame:
-    """:func:`grouped_median_element` over an ALREADY-AGGREGATED
-    per-(group, value) count table — the two-level plan's second level
-    alone. Callers that already hold the cells (e.g. q_corr_stats,
-    which derives median, MAD, and the outlier count from ONE cell
-    table) skip re-scanning and re-aggregating the raw rows; the rank
-    identity is unchanged, so the picked element is bit-identical to
-    running the raw-row form (pinned in tests/test_prefix_sum.py).
+    """EXACT element-pick median per group — the value at rank
+    ceil(n/2) under ascending ``value_col`` order — over an
+    ALREADY-AGGREGATED per-(group, value) count table: the window runs
+    over the cells (rows bounded by distinct values per group, not
+    group size), so no task ever sorts a group's raw membership. An
+    element pick, not an interpolation, so the result is one of the
+    input values and hash-matches any engine bit-for-bit (the
+    KLL-anchor trick). The reference form of
+    :func:`grouped_robust_stats_cells`' median and MAD picks.
 
     ``cells`` must hold each (group, value) at most once (a groupBy
-    output does); multiplicity rides in ``cnt_col``."""
+    output does); multiplicity rides in ``cnt_col``. ``value_col``
+    must be non-NULL: engines disagree on where NULLs sort (Spark ASC
+    puts them first, DuckDB last), so a NULL-bearing column would shift
+    every rank — filter or coalesce upstream.
+
+    Returns one row per group: ``(group_col, out_col, n)``."""
     w_cum = W.partitionBy(group_col).orderBy(value_col)
     w_all = W.partitionBy(group_col)
     cum = cells.select(
@@ -435,7 +329,7 @@ def grouped_robust_stats_cells(
     bit-identical to the branch form (same picks, same integer
     arithmetic) — pinned in tests/test_prefix_sum.py.
 
-    ``value_col`` must be non-NULL (the grouped_median_element
+    ``value_col`` must be non-NULL (the grouped_median_element_cells
     contract). Returns ``(group_col, med, mad, n_outliers)``."""
     w_all = W.partitionBy(group_col)
     target = F.expr("(__n + 1) DIV 2")
@@ -501,13 +395,14 @@ def grouped_topn(
     prunes again after, so a hot group with billions of rows ships at
     most n * map_tasks rows through the shuffle.
 
-    This is the measured OPPOSITE of the grouped_ntile situation: a
+    This is the measured OPPOSITE of the NTILE situation: a
     hand-rolled salted two-level rewrite was built, A/B'd at a forced
     500k-row single hot group, and DELETED — it shuffled the full
     corpus on (group, salt) where the native plan prunes map-side
     first (0.8 s vs 0.3 s warm, and the gap widens with data). NTILE
-    still needs :func:`grouped_ntile` because rank-limit pushdown
-    only exists for rank-like functions with a ``rank <= k`` filter.
+    still needs :func:`grouped_ntile_stats_from_cells` because
+    rank-limit pushdown only exists for rank-like functions with a
+    ``rank <= k`` filter.
     ``tests/test_plans.py`` pins the Partial WindowGroupLimit so a
     regression (e.g. the filter drifting away from the window) is
     caught.

@@ -90,8 +90,9 @@ def save_spatial_partitioned(
 
     One directory per occupied cell (``cell_0=…/cell_1=…/``). This is
     the ingest-time layout choice for spatial workloads — the analog of
-    ``operators/layout.save_bucketed`` for equi-join keys: pay one pass
-    now so every later cutout reads only the cells it overlaps. Keep
+    the bucketed layout (``operators/layout.py``) for equi-join keys:
+    pay one pass now so every later cutout reads only the cells it
+    overlaps. Keep
     ``ncells`` coarse (8-32 per axis): partition count is ``ncells**d``
     and parquet wants large files; fine-grained selectivity comes from
     row-group min/max on the coordinate columns inside each cell.

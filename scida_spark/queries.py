@@ -722,11 +722,12 @@ def q_percentiles(spark, sf_dir):
         F.col("l_returnflag").isNotNull()
     )
     # r15 rewrite (guide §1.2 "change the distributed algorithm"; was
-    # grouped_ntile's two-level per-row ranking): every output column
+    # a two-level per-row NTILE ranking): every output column
     # is a pure function of the (returnflag, quantity) cell counts —
     # quartile counts are rank-interval overlaps, lo/hi are bucket
     # min/max over overlapping cells (operators/prefix_sum.py::
-    # grouped_ntile_stats, pinned row-identical to the per-row NTILE).
+    # grouped_ntile_stats_from_cells, pinned row-identical to the
+    # native per-row NTILE).
     # r16: the exact interpolated percentiles are now CLOSED-FORM
     # window expressions over the SAME windowed cells (bit-identical
     # to percentile(l_quantity, p, __cnt) — pinned in
@@ -862,7 +863,7 @@ def q_corr_stats(spark, sf_dir):
     outlier count (the classic heavy-tail-safe data-cleaning screen;
     moment-based stddev is itself dragged by the outliers it should
     flag). Element picks hash-match bit-for-bit (no interpolation,
-    no rounding), via operators/prefix_sum.py::grouped_median_element:
+    no rounding), via operators/prefix_sum.py::grouped_median_element_cells:
     per-(group, value) counts first, window over the aggregated table
     only — no task ever sorts a group's raw rows, so a 20M-row group
     costs the same as the ~50 distinct quantities it holds.

@@ -2331,9 +2331,10 @@ def text_train_eval_split(spark, sf_dir):
     md5 buckets and the hash match proves bit-for-bit reproducibility.
 
     ``in_mix`` certifies the corpus-composition operator
-    (``domain_mix``): documents are thinned toward the target language
-    mixture en:4 de:2 es:2 fr:1 zh:1 (downsample-only, scaled so the
-    most constrained language keeps 100 %). Thresholds are INTEGER
+    (``mix_thresholds`` + ``in_mix_column``): documents are thinned
+    toward the target language mixture en:4 de:2 es:2 fr:1 zh:1
+    (downsample-only, scaled so the most constrained language keeps
+    100 %). Thresholds are INTEGER
     arithmetic — floor(w_d*c_m*2^32/(w_m*c_d)) — so the oracle's
     64-bit integer division reproduces them exactly; per-language
     counts are the one tiny driver-side aggregate (5 rows). All
@@ -3569,7 +3570,7 @@ def sketch_distinct_rollup(spark, sf_dir):
     # functions/metrics.py::auc_exact) — tie-corrected Mann-Whitney
     # AUC of the heuristic quality score at separating English docs,
     # computed over the per-DISTINCT-score aggregated table (the
-    # grouped_median_element shape; scores bucket to floor(score*64)
+    # grouped_median_element_cells shape; scores bucket to floor(score*64)
     # so the window side stays bounded for continuous scores). The
     # doubled-midrank rank sum is pure integer/DECIMAL arithmetic with
     # ONE final division, so the oracle's identical formula reproduces
@@ -4631,9 +4632,8 @@ def sim_topk(spark, sf_dir):
     # sq8 (r10): per-dimension scalar quantization. Bounds are trained
     # ONCE per corpus (one map-side-combined 2*dim-expression aggregate,
     # memoized by content fingerprint — at real scale this is an
-    # ingest-time statistic persisted next to the codes, the
-    # vector_index_ingest pattern) and shared by the recall-cert path
-    # and the sq8c code-certification rows below.
+    # ingest-time statistic persisted next to the codes) and shared by
+    # the recall-cert path and the sq8c code-certification rows below.
     sq8_lo, sq8_hi = _ingest_stat(
         sf_dir, "embeddings", "sq8_bounds", lambda: SIM.sq8_bounds(emb, 64)
     )
@@ -6047,9 +6047,7 @@ def text_quality_lang(spark, sf_dir):
     # Buckets rank on the DECIMAL-rounded nll (deterministic, the
     # value both engines already hash-match) with doc_id tiebreak;
     # per-(lang, bucket) doc counts and exact DECIMAL nll sums are
-    # value-checked. Scale: one window per language; a giant stratum
-    # routes through grouped_ntile's two-level plan (the q_percentiles
-    # path).
+    # value-checked. Scale: one window per language.
     nll_b = (
         LM.score_nll(docs, model)
         .join(docs.select("doc_id", "lang"), "doc_id")
@@ -6212,8 +6210,7 @@ def text_quality_lang(spark, sf_dir):
     )
 
     # packing (r8): greedy first-fit sequence packing with an EXPLICIT
-    # oracle-reproducible domain (doc_id % 8; the production
-    # pack_sequences uses Spark's repartition hash, same kernel). One
+    # oracle-reproducible domain (doc_id % 8). One
     # row per packed sequence — k2 lists member doc ids, so the oracle's
     # recursive-CTE replay of the sequential greedy certifies every
     # membership decision, budget seal, and oversize singleton.
@@ -7415,7 +7412,7 @@ def dedup_cc_clusters(spark, sf_dir):
     with hot-shingle df-cap (shingles with document frequency > 256 are
     excluded from candidate generation — each would contribute O(df²)
     join rows — and candidates are verified against the FULL shingle
-    sets, so values stay exact; see ngram_jaccard_pairs for the
+    sets, so values stay exact; see ngram_jaccard_pairs_from_shingles for the
     completeness contract); MinHash LSH (dedup_signature_pairs) is the
     100 TB candidate path. CC rounds are O(log diameter) with
     localCheckpoint-bounded lineage."""

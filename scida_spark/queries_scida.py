@@ -27,7 +27,6 @@ from scida_spark.streaming import storefs
 from scida_spark.tables import table, table_fingerprint
 from scida_spark.session import local_df
 
-SENT = C.SENTINEL
 GROUP_CUTOFF = 1000  # orders with key < cutoff are "halos"; the rest is the unbound tail
 
 
@@ -90,18 +89,6 @@ def scida_offsets_cumsum(spark, sf_dir):
         F.col("GroupLen").alias("group_len"),
         F.col("offset"),
     )
-
-
-_GROUPID_ORACLE = f"""
-    WITH li AS (
-      SELECT l_orderkey,
-             ROW_NUMBER() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS uid
-      FROM lineitem)
-    SELECT CAST(uid AS BIGINT) AS uid,
-           CAST(CASE WHEN l_orderkey < {GROUP_CUTOFF} THEN l_orderkey
-                     ELSE 9223372036854775807 END AS BIGINT) AS group_id
-    FROM li
-    """
 
 
 def scida_groupid_searchsorted(spark, sf_dir):
@@ -450,7 +437,7 @@ def _spatial_pts(spark, sf_dir, zorder: bool, ncells=10):
 )
 def scida_grouped_bucketed(spark, sf_dir):
     """Per-group aggregation AND fact-fact join over the BUCKETED
-    ingest layout (operators/layout.py::save_bucketed — the Spark form
+    ingest layout (operators/layout.py — the Spark form
     of the reference's contiguous-by-halo file layout): lineitem and
     orders are each written once clustered by orderkey, after which
     BOTH the groupBy and the lineitem⋈orders join run with NO shuffle

@@ -39,8 +39,7 @@ from the reference (a replayed batch that already wrote its histogram
 re-decides against the same reference it originally saw, then
 re-overwrites identical data). The first batch bootstraps: with an
 empty reference there is nothing to drift from, so it is admitted and
-seeds the store. Compaction folds the reference partials via
-``streaming/storefs`` (crash-safe) and is a fixed point.
+seeds the store.
 
 Net-new surface (no reference counterpart; SURVEY §2.7).
 """
@@ -61,7 +60,6 @@ __all__ = [
     "drift_gated_ingest",
     "read_drift_reports",
     "read_reference_hist",
-    "compact_drift_hist",
 ]
 
 REPORT_SCHEMA = (
@@ -226,17 +224,3 @@ def read_drift_reports(spark: SparkSession, report_dir: str) -> DataFrame:
     """Full report history (facet, psi, kl, n_batch, admitted,
     batch_id) — 'when did the corpus start drifting' is one query."""
     return spark.read.option("basePath", report_dir).parquet(report_dir)
-
-
-def compact_drift_hist(spark: SparkSession, hist_dir: str) -> int:
-    """Fold the reference-histogram partials to one base partial
-    (sum monoid — a fixed point for every future admit decision).
-    Crash-safe via ``streaming/storefs``; single-writer under
-    ``storefs.maintenance_lock``."""
-    return storekit.compact_monoid_store(
-        spark,
-        hist_dir,
-        lambda: storekit.read_partials(spark, hist_dir)
-        .groupBy("facet", "bucket")
-        .agg(F.sum("c").alias("c")),
-    )

@@ -32,7 +32,7 @@ Layout (the postings-store conventions):
   (within-batch + new-vs-history): the ACCUMULATED answer; serving is
   a partial read + distinct, never a recompute.
 * ``deletes/batch_id=N/`` — tombstoned doc ids (the shared takedown
-  contract): masked at every read, applied physically at compaction.
+  contract): masked at every read.
 
 Incremental == batch, exactly: winnowing is a pure per-document
 content function, so the union over batches of (within-batch pairs +
@@ -66,7 +66,6 @@ __all__ = [
     "read_esub_pairs",
     "read_esub_anchors",
     "delete_esub_docs",
-    "compact_esub_index",
     "esub_probe",
     "esub_store_meta",
 ]
@@ -303,45 +302,9 @@ def delete_esub_docs(
     id_col: str = "doc_id",
 ) -> None:
     """Tombstone docs (the shared takedown contract): their pairs and
-    anchors stop serving immediately; compaction applies the bytes."""
+    anchors stop serving immediately (masked at every read)."""
     storekit.write_tombstones(
         spark, index_dir, ids, batch_id, id_col=id_col, out_col="doc"
-    )
-
-
-def compact_esub_index(spark: SparkSession, index_dir: str) -> int:
-    """Fold anchors + pairs to one base partial each, applying
-    outstanding tombstones, through the kit's single storefs
-    transaction. Serving afterwards is bit-identical (append monoid) —
-    a fixed point."""
-
-    def _anchors(df, dels):
-        df = df.drop("batch_id")
-        if dels is not None:
-            df = df.join(F.broadcast(dels), "doc", "left_anti")
-        return df
-
-    def _pairs(df, dels):
-        df = df.drop("batch_id").distinct()
-        if dels is not None:
-            d = F.broadcast(dels)
-            df = df.join(
-                d.select(F.col("doc").alias("doc_a")), "doc_a", "left_anti"
-            ).join(
-                d.select(F.col("doc").alias("doc_b")), "doc_b", "left_anti"
-            )
-        return df
-
-    return storekit.compact_store(
-        spark,
-        index_dir,
-        [
-            storekit.Substore("anchors", _anchors, partition_by="h_bucket"),
-            storekit.Substore("pairs", _pairs),
-        ],
-        read_dels=lambda s: storekit.read_tombstones(
-            s, index_dir, out_col="doc"
-        ),
     )
 
 

@@ -341,75 +341,3 @@ def incremental_dedup_ingest(
     )
 
 
-def vector_index_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    *,
-    index_dir: str,
-    checkpoint_dir: str,
-    m: int = 8,
-    nbits: int = 6,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    available_now: bool = True,
-):
-    """Streaming embedding ingest into a persistent PQ index: the
-    vector-side twin of :func:`incremental_dedup_ingest`.
-
-    The FIRST batch bootstraps the codebooks (per-subspace k-means on
-    its vectors) and persists them; every batch — including the first —
-    is then encoded ONCE with those codebooks and appended as
-    ``index_dir/codes/batch_id=N`` (m bytes/vector) alongside the raw
-    vectors (``index_dir/vectors/batch_id=N``, shortlist re-rank only).
-    Queries run :func:`scida_spark.functions.similarity.
-    pq_topk_from_encoded` over the accumulated codes — encoding cost is
-    paid exactly once per vector, at ingest, never per query batch.
-
-    Codebooks are never retrained on later batches: retraining would
-    silently invalidate every previously-written code (the same
-    must-not-vary contract as the minhash index's num_perm/bands/seed).
-    Writes are idempotent per batch_id directory.
-    """
-    import numpy as np
-
-    from scida_spark.functions.similarity import (
-        load_pq_codebooks,
-        pq_encode,
-        save_pq_codebooks,
-        train_pq_codebooks,
-    )
-
-    cb_path = os.path.join(index_dir, "codebooks")
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        if batch.isEmpty():
-            return
-        if storefs.isdir(cb_path):
-            cb = load_pq_codebooks(sess, cb_path)
-        else:
-            sample = np.stack(
-                [
-                    np.asarray(r["v"], dtype=np.float64)
-                    for r in batch.select(
-                        F.col(vec_col).cast("array<double>").alias("v")
-                    )
-                    .limit(max((1 << nbits) * 64, 1024))
-                    .collect()
-                ]
-            )
-            cb = train_pq_codebooks(sample, m=m, nbits=nbits, seed=seed)
-            save_pq_codebooks(sess, cb, cb_path)
-        pq_encode(batch, cb, id_col=id_col, vec_col=vec_col).write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/codes/batch_id={batch_id}")
-        batch.select(id_col, vec_col).write.mode("overwrite").parquet(
-            f"{index_dir}/vectors/batch_id={batch_id}"
-        )
-
-    return storekit.run_file_ingest(
-        spark, input_dir, schema, process, checkpoint_dir,
-        available_now=available_now, max_files_per_trigger=1,
-    )

@@ -54,15 +54,6 @@ tombstones: deleted rows drop from the folded base, stats are
 re-derived from the surviving doclen, and the tombstone store empties
 — compaction remains a serve fixed point.
 
-POSITIONAL postings (r12): ``with_positions=True`` at ingest makes
-each posting carry the sorted 1-based token-position array (recorded
-in ``_meta.json``) — ``phrase_docs_from_store`` then serves exact
-phrase queries straight from the index with counts bit-identical to
-the batch ``phrase_occurrences`` operator, reading only the phrase
-terms' buckets. Ranked serving ignores the extra column; compaction
-and tombstones apply unchanged (the positions array rides the same
-append-monoid rows).
-
 Net-new surface (no reference counterpart — the reference has no text
 or streaming support; SURVEY §2.7).
 """
@@ -94,8 +85,6 @@ __all__ = [
     "compact_postings",
     "store_meta",
     "delete_docs",
-    "phrase_docs_from_store",
-    "min_cover_span_from_store",
     "read_deletes",
     "read_forward",
     "rm3_topk_from_store",
@@ -112,7 +101,6 @@ def _ensure_meta(
     n_buckets: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    with_positions: bool = False,
     with_forward: bool = False,
 ) -> None:
     """Persist the store's sharding parameter at ingest time (r11
@@ -123,18 +111,16 @@ def _ensure_meta(
     describing; a writer re-opening an existing store with a different
     n_buckets is refused (a mixed-shard store is unreadable). EVERY
     ingest parameter is validated on re-open (r12 ADVICE #2):
-    appending e.g. with_positions=False partials to a positional store
-    yields a mixed-schema store whose phrase serving silently drops
-    docs (parquet schema is sampled). Mechanics shared with the other
-    stores via :func:`scida_spark.streaming.storekit.ensure_meta`
-    (r14)."""
+    appending e.g. with_forward=False partials to a forward store
+    yields a store whose feedback fetch silently misses docs. Mechanics
+    shared with the other stores via
+    :func:`scida_spark.streaming.storekit.ensure_meta` (r14)."""
     storekit.ensure_meta(
         store_dir,
         {
             "n_buckets": int(n_buckets),
             "id_col": id_col,
             "text_col": text_col,
-            "with_positions": bool(with_positions),
             "with_forward": bool(with_forward),
         },
         "postings store",
@@ -184,26 +170,16 @@ def _index_partials(
     id_col: str,
     text_col: str,
     n_buckets: int,
-    with_positions: bool = False,
 ):
     """(postings, doclen, stats) partials of one micro-batch — one
-    tokenization, three consumers (the caller persists the batch).
-    With ``with_positions`` each posting also carries the SORTED
-    1-based token-position array (the classic positional posting list
-    — what phrase queries need to run from the index without ever
-    re-reading text)."""
+    tokenization, three consumers (the caller persists the batch)."""
     toks = batch_df.select(
         F.col(id_col),
-        F.posexplode(TX.tokens(F.col(text_col))).alias("pos0", "tok"),
+        F.explode(TX.tokens(F.col(text_col))).alias("tok"),
     )
-    aggs = [F.count("*").alias("tf")]
-    if with_positions:
-        aggs.append(
-            F.sort_array(F.collect_list(F.col("pos0") + 1)).alias("positions")
-        )
     postings = (
         toks.groupBy(id_col, "tok")
-        .agg(*aggs)
+        .agg(F.count("*").alias("tf"))
         .withColumn(
             "tok_bucket",
             (F.crc32(F.col("tok").cast("binary")) % F.lit(n_buckets)).cast(
@@ -226,29 +202,23 @@ def postings_writer(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = DEFAULT_BUCKETS,
-    with_positions: bool = False,
     with_forward: bool = False,
 ):
     """Per-batch writer maintaining the index substores — composable
     under ``streaming/rollup.py::incremental_multi_store_ingest`` (ONE
     readStream pass can maintain the retrieval index alongside
-    rollup/freq/reservoir stores). ``with_positions`` makes the
-    postings POSITIONAL (phrase queries become servable from the
-    store; ~proportionally larger postings — the standard trade).
-    ``with_forward`` additionally maintains a FORWARD substore — the
-    same (doc, term, tf) rows re-sharded by ``doc_bucket`` — so
+    rollup/freq/reservoir stores). ``with_forward`` additionally
+    maintains a FORWARD substore — the same (doc, term, tf) rows
+    re-sharded by ``doc_bucket`` — so
     per-document term vectors are fetchable with partition pruning
     (what relevance feedback needs: :func:`rm3_topk_from_store`
     reads only the feedback docs' buckets instead of scanning every
     token shard). Roughly doubles postings bytes; flag-gated."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        _ensure_meta(
-            store_dir, n_buckets, id_col, text_col, with_positions,
-            with_forward,
-        )
+        _ensure_meta(store_dir, n_buckets, id_col, text_col, with_forward)
         postings, doclen, stats = _index_partials(
-            batch_df, id_col, text_col, n_buckets, with_positions
+            batch_df, id_col, text_col, n_buckets
         )
         postings.write.mode("overwrite").partitionBy("tok_bucket").parquet(
             os.path.join(store_dir, "postings", f"batch_id={batch_id}")
@@ -286,7 +256,6 @@ def incremental_postings_ingest(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = DEFAULT_BUCKETS,
-    with_positions: bool = False,
     with_forward: bool = False,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
@@ -296,7 +265,7 @@ def incremental_postings_ingest(
     StreamingQuery. The micro-batch is persisted once and feeds all
     substores (the one-pass multi-store rule)."""
     writer_fn = postings_writer(
-        store_dir, id_col, text_col, n_buckets, with_positions, with_forward
+        store_dir, id_col, text_col, n_buckets, with_forward
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -646,182 +615,6 @@ def ql_topk_from_store(
     return ql_topk_from_index(
         spark, postings, dl, cs, queries, k=k, mu=mu, id_col=id_col
     )
-
-
-def phrase_docs_from_store(
-    spark: SparkSession,
-    store_dir: str,
-    phrases: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Exact phrase matching served from a POSITIONAL store (ingested
-    with ``with_positions=True``) — (phrase_id, id, phrase, n_occ > 0)
-    with counts bit-identical to the batch
-    ``functions/retrieval.py::phrase_occurrences`` over the same
-    corpus: an occurrence is a position p of the first term with
-    p + j in positions(term_j) for every later term, which is exactly
-    the batch operator's sliding window.
-
-    The 100 TB path phrase search needs: the scan touches ONLY the
-    phrase terms' tok_bucket partitions (posting-list sharding), one
-    bounded groupBy assembles each candidate doc's term->positions
-    map (docs holding ALL the phrase's distinct terms survive — the
-    conjunctive prefilter), and the adjacency check is a map-side
-    array fold. History is never re-tokenized; tombstones mask as in
-    ranked serving."""
-    if not store_meta(store_dir).get("with_positions"):
-        raise ValueError(
-            f"postings store {store_dir} was ingested without positions; "
-            "phrase serving needs postings_writer(with_positions=True)"
-        )
-    dels = read_deletes(spark, store_dir, id_col)
-    outs = []
-    for pid, ptext in phrases:
-        w = ptext.strip().split()
-        terms = sorted(set(w))
-        p = read_postings(spark, store_dir, terms, n_buckets).select(
-            F.col(id_col), "tok", "positions"
-        )
-        if dels is not None:
-            p = p.join(F.broadcast(dels), id_col, "left_anti")
-        g = (
-            p.groupBy(id_col)
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct("tok", "positions"))
-                ).alias("m"),
-                F.count_distinct(F.col("tok")).alias("nt"),
-            )
-            .filter(F.col("nt") == len(terms))
-        )
-
-        def _mk_adjacent(ws):
-            # single-arg lambda (pyspark passes (value, index) to
-            # TWO-parameter callables — a default arg counts)
-            def _adjacent(pp):
-                cond = F.lit(True)
-                for j in range(1, len(ws)):
-                    cond = cond & F.array_contains(
-                        F.element_at(F.col("m"), F.lit(ws[j])), pp + j
-                    )
-                return cond
-
-            return _adjacent
-
-        occ = F.size(
-            F.filter(F.element_at(F.col("m"), F.lit(w[0])), _mk_adjacent(w))
-        )
-        outs.append(
-            g.select(
-                F.lit(pid).alias("phrase_id"),
-                F.col(id_col),
-                F.lit(ptext).alias("phrase"),
-                occ.cast("long").alias("n_occ"),
-            ).filter(F.col("n_occ") > 0)
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out
-
-
-def min_cover_span_from_store(
-    spark: SparkSession,
-    store_dir: str,
-    queries: list[tuple[int, str]],
-    id_col: str = "doc_id",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Minimal cover span per (query, doc) from a POSITIONAL store:
-    the length of the smallest token window containing at least one
-    occurrence of EVERY distinct query term — the classic proximity
-    feature (Clarke et al.'s shortest-substring relevance; also the
-    snippet-selection window). One row (query_id, id, span) per doc
-    holding all the query's terms; span == number of distinct terms
-    means they appear exactly adjacent (in some order).
-
-    Same serve shape as phrase matching: bucket-pruned postings scan,
-    conjunctive all-terms groupBy, then a per-candidate fold — the
-    textbook sweep over the MERGED sorted (position, term) list
-    keeping the last position seen per term; every array is bounded
-    by the doc's query-term occurrences (the bounded-array HOF rule:
-    per-candidate folds are fine, per-corpus-token lambdas are not).
-    Tombstones mask as in ranked serving."""
-    if not store_meta(store_dir).get("with_positions"):
-        raise ValueError(
-            f"postings store {store_dir} was ingested without positions; "
-            "span serving needs postings_writer(with_positions=True)"
-        )
-    dels = read_deletes(spark, store_dir, id_col)
-    outs = []
-    for qid, qtext in queries:
-        terms = sorted(set(qtext.strip().split()))
-        k = len(terms)
-        p = read_postings(spark, store_dir, terms, n_buckets).select(
-            F.col(id_col), "tok", "positions"
-        )
-        if dels is not None:
-            p = p.join(F.broadcast(dels), id_col, "left_anti")
-        # term -> dense index via the sorted literal order, then one
-        # merged sorted (pos, term_idx) event list per candidate doc.
-        # F.array of lits, not a rendered SQL string — a term holding
-        # a quote/backslash must not break the expression (r12 ADVICE
-        # #5); the array is query-bounded, so no py4j-chatter concern.
-        tidx = F.array_position(
-            F.array(*[F.lit(t) for t in terms]),
-            F.col("tok"),
-        ).cast("int")
-        ev = p.select(
-            F.col(id_col),
-            F.transform(
-                "positions",
-                lambda pos: F.struct(
-                    pos.alias("pos"), (tidx - 1).alias("t")
-                ),
-            ).alias("_ev"),
-        )
-        g = (
-            ev.groupBy(id_col)
-            .agg(
-                F.array_sort(F.flatten(F.collect_list("_ev"))).alias("evs"),
-                F.count("*").alias("nt"),
-            )
-            .filter(F.col("nt") == k)
-        )
-        # sweep: last[t] := pos; when all seen, best = min(best,
-        # pos - min(last) + 1). Integer arithmetic only.
-        big = 1 << 30
-        init = F.struct(
-            F.array_repeat(F.lit(-1), k).alias("last"),
-            F.lit(big).alias("best"),
-        )
-
-        def _step(acc, e):
-            last2 = F.transform(
-                F.sequence(F.lit(0), F.lit(k - 1)),
-                lambda j: F.when(j == e["t"], e["pos"]).otherwise(
-                    F.element_at(acc["last"], (j + 1).cast("int"))
-                ),
-            )
-            cand = e["pos"] - F.array_min(last2) + 1
-            best2 = F.when(
-                ~F.array_contains(last2, -1) & (cand < acc["best"]), cand
-            ).otherwise(acc["best"])
-            return F.struct(last2.alias("last"), best2.alias("best"))
-
-        span = F.aggregate("evs", init, _step)["best"]
-        outs.append(
-            g.select(
-                F.lit(int(qid)).alias("query_id"),
-                F.col(id_col),
-                span.cast("int").alias("span"),
-            ).filter(F.col("span") < big)
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out
 
 
 def compact_postings(spark: SparkSession, store_dir: str) -> int:

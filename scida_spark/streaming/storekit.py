@@ -60,8 +60,8 @@ def ensure_meta(
     on any mismatch (appending e.g. differently-sharded partials makes
     a store silently unreadable — the postings ``_ensure_meta`` rule,
     r12 ADVICE #2). ``before_write`` runs only on first creation,
-    BEFORE the meta commit (e.g. persisting centroid/codebook
-    artifacts the meta describes — a crash in between leaves no meta,
+    BEFORE the meta commit (e.g. persisting the centroid artifact
+    the meta describes — a crash in between leaves no meta,
     so the store reads as uncreated, never half-created). Returns True
     iff the meta was created by this call."""
     storefs.makedirs(store_dir)

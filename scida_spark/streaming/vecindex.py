@@ -74,9 +74,7 @@ __all__ = [
     "delete_vectors",
     "read_vector_deletes",
     "ivf_topk_from_store",
-    "ivfpq_topk_from_store",
     "compact_vector_store",
-    "rebuild_vector_store",
     "vector_store_meta",
 ]
 
@@ -87,37 +85,26 @@ def create_vector_store(
     spark: SparkSession,
     store_dir: str,
     centroids: "np.ndarray",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebooks: "np.ndarray | None" = None,
 ) -> None:
     """Initialize the store: persist the centroid matrix (the
     quantizer every writer/reader shares) and the self-describing
-    meta. With ``codebooks`` the store is IVF-PQ: each ingested
-    vector also carries its m-byte PQ code, and
-    :func:`ivfpq_topk_from_store` serves the compressed ADC + exact
-    re-rank path. Re-creating over an existing store with different
+    meta. Re-creating over an existing store with different
     parameters is refused — a mixed-quantizer store serves garbage
     silently (the postings ``_ensure_meta`` rule)."""
-    from scida_spark.functions.similarity import save_pq_codebooks
 
     def _persist_artifacts():
         # runs only on first creation, BEFORE the meta commit: a crash
         # in between leaves no meta, so the store reads as uncreated,
         # never half-created
         save_ivf_index(spark, centroids, os.path.join(store_dir, "centroids"))
-        if codebooks is not None:
-            save_pq_codebooks(spark, codebooks, os.path.join(store_dir, "pq"))
 
     storekit.ensure_meta(
         store_dir,
         {
-            "id_col": id_col,
-            "vec_col": vec_col,
+            "id_col": "vec_id",
+            "vec_col": "embedding",
             "n_lists": int(centroids.shape[0]),
             "dim": int(centroids.shape[1]),
-            "pq_m": int(codebooks.shape[0]) if codebooks is not None else 0,
-            "pq_ksub": int(codebooks.shape[1]) if codebooks is not None else 0,
         },
         "vector store",
         before_write=_persist_artifacts,
@@ -153,16 +140,6 @@ def vector_index_writer(store_dir: str):
         meta = vector_store_meta(store_dir)
         if "cent" not in cache:
             cache["cent"] = _load_centroids(spark, store_dir)
-            if meta.get("pq_m"):
-                from scida_spark.functions.similarity import (
-                    load_pq_codebooks,
-                    pq_code_udf,
-                )
-
-                cache["enc"] = pq_code_udf(
-                    spark.sparkContext,
-                    load_pq_codebooks(spark, os.path.join(store_dir, "pq")),
-                )
         assigned = ivf_assign(
             batch_df,
             cache["cent"],
@@ -174,13 +151,6 @@ def vector_index_writer(store_dir: str):
             "v",
             F.element_at("lists", 1).alias("list_id"),
         )
-        if "enc" in cache:
-            # PQ store: one extra Arrow-batched kernel over the SAME
-            # in-memory batch adds the m-byte code column (bit-identical
-            # to pq_encode — the shared kernel)
-            assigned = assigned.select(
-                "vec_id", "v", cache["enc"](F.col("v")).alias("code"), "list_id"
-            )
         assigned.write.mode("overwrite").partitionBy("list_id").parquet(
             os.path.join(store_dir, "vectors", f"batch_id={batch_id}")
         )
@@ -226,10 +196,7 @@ def read_vectors(
     ):
         # created-but-never-ingested store: an empty index serves an
         # empty result, not a missing-path crash
-        schema = "vec_id long, v array<double>, list_id int"
-        if vector_store_meta(store_dir).get("pq_m"):
-            schema = "vec_id long, v array<double>, code binary, list_id int"
-        return local_df(spark, [], schema)
+        return local_df(spark, [], "vec_id long, v array<double>, list_id int")
     v = spark.read.option("basePath", root).parquet(root)
     if lists is not None:
         v = v.filter(F.col("list_id").isin([int(x) for x in lists]))
@@ -321,174 +288,6 @@ def ivf_topk_from_store(
     w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), "cand_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "cand_id", "sim", F.col("rank").cast("int").alias("rank")
-        )
-    )
-
-
-def rebuild_vector_store(
-    spark: SparkSession,
-    old_store: str,
-    new_store: str,
-    nlist: int | None = None,
-) -> int:
-    """Blue/green quantizer refresh — the operation a long-lived index
-    eventually needs: as the corpus drifts, the ingest-time centroids
-    stop partitioning it well and probe recall decays. Retrains the
-    quantizer on the CURRENT live contents (tombstones applied),
-    builds a FRESH store at ``new_store`` (one already-compacted base
-    partial of new assignments), and leaves ``old_store`` untouched —
-    the caller flips its serving pointer when ready and retires the
-    old path. No in-place mutation, so there is no crash window where
-    new centroids serve against old list assignments (which would
-    silently collapse recall); a half-built ``new_store`` is simply
-    re-run. Writers must be restarted against the new store (the
-    per-writer centroid cache is load-once by design). Returns the
-    number of live vectors reindexed."""
-    from scida_spark.functions.similarity import build_ivf_index
-
-    meta = vector_store_meta(old_store)
-    id_col = meta.get("id_col", "vec_id")
-    vec_col = meta.get("vec_col", "embedding")
-    live = read_vectors(spark, old_store).select(
-        F.col("vec_id").alias(id_col), F.col("v").alias(vec_col)
-    ).localCheckpoint(eager=True)
-    n = live.count()
-    if n == 0:
-        # never-ingested or fully-tombstoned store: there is nothing
-        # to train a quantizer on — refuse loudly instead of crashing
-        # inside k-means (and leave no half-built new_store behind)
-        raise ValueError(
-            f"vector store {old_store} has no live vectors to rebuild "
-            "from (empty or fully deleted); create a fresh store with "
-            "new centroids instead"
-        )
-    cent = build_ivf_index(
-        live, nlist=nlist, id_col=id_col, vec_col=vec_col, n_vectors=n
-    )
-    cbs = None
-    if meta.get("pq_m"):
-        # PQ store: the codebooks are refreshed on the same live
-        # sample convention as training (ksub derives nbits)
-        from scida_spark.functions.similarity import train_pq_codebooks
-
-        nbits = max(1, int(meta["pq_ksub"] - 1).bit_length())
-        cap = max(int(meta["pq_ksub"]) * 64, 1024)
-        rows = (
-            live.select(F.col(vec_col).cast("array<double>").alias("v"))
-            .filter(F.col(id_col) % 7 == 0)
-            .limit(cap)
-            .collect()
-        )
-        if not rows:
-            # a small or oddly-keyed live set can miss the 1-in-7
-            # sample entirely — fall back to the full (capped) live set
-            # rather than crashing codebook training on zero vectors.
-            # Ordered by id so the refreshed codebooks are reproducible
-            # across runs/partitionings (TakeOrderedAndProject).
-            rows = (
-                live.orderBy(id_col)
-                .limit(cap)
-                .select(F.col(vec_col).cast("array<double>").alias("v"))
-                .collect()
-            )
-        sample = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows])
-        cbs = train_pq_codebooks(sample, m=int(meta["pq_m"]), nbits=nbits)
-    create_vector_store(
-        spark, new_store, cent, id_col=id_col, vec_col=vec_col, codebooks=cbs
-    )
-    vector_index_writer(new_store)(live, -1)  # one compacted base partial
-    return n
-
-
-def ivfpq_topk_from_store(
-    spark: SparkSession,
-    store_dir: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    refine: int = 4,
-    id_col: str | None = None,
-    vec_col: str | None = None,
-) -> DataFrame:
-    """IVF-PQ top-k served from the store — the full FAISS serving
-    shape over the incrementally maintained index: probes and the ADC
-    LUT are built driver-side against the persisted quantizer +
-    codebooks (:func:`~scida_spark.functions.similarity.
-    ivfpq_query_tables`), the compressed scan reads ONLY the probed
-    ``list_id`` partitions' (vec_id, code) columns — column pruning
-    skips the raw vectors entirely for the scan — through the SAME
-    kernel as the batch path
-    (:func:`~scida_spark.functions.similarity.ivfpq_scan_kernel`,
-    deterministic under ADC ties), and the exact re-rank reads only
-    shortlist members' true vectors back from the same partitions.
-    Bit-identical to a batch ``ivfpq_topk(live_corpus, queries,
-    centroids=same, codebooks=same)``."""
-    from scida_spark.functions.similarity import (
-        cosine_batch as _cb,
-        ivfpq_query_tables,
-        ivfpq_scan_kernel,
-        load_pq_codebooks,
-    )
-
-    meta = vector_store_meta(store_dir)
-    if not meta.get("pq_m"):
-        raise ValueError(
-            f"vector store {store_dir} was created without codebooks; "
-            "ivfpq_topk_from_store needs a PQ store "
-            "(create_vector_store(..., codebooks=...))"
-        )
-    id_col = id_col or meta.get("id_col", "vec_id")
-    vec_col = vec_col or meta.get("vec_col", "embedding")
-    cent = _load_centroids(spark, store_dir)
-    codebooks = load_pq_codebooks(spark, os.path.join(store_dir, "pq"))
-    mq = codebooks.shape[0]
-    qrows = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).collect()
-    if not qrows:
-        return local_df(spark, 
-            [], "query_id long, cand_id long, sim double, rank int"
-        )
-    qids, probes, probe_union, lut = ivfpq_query_tables(
-        qrows, cent, codebooks, nprobe
-    )
-    b = spark.sparkContext.broadcast(
-        (qids, lut, [set(int(x) for x in row) for row in probes])
-    )
-    shortlist_n = k * refine
-    probed = read_vectors(spark, store_dir, lists=probe_union)
-    local_top = probed.select("vec_id", "code", "list_id").mapInPandas(
-        ivfpq_scan_kernel(b, mq, shortlist_n),
-        schema="query_id long, cand_id long, asim double",
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("asim"), F.asc("cand_id"))
-    shortlist = (
-        local_top.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= shortlist_n)
-        .select("query_id", "cand_id")
-    )
-    cand_vecs = probed.join(
-        shortlist.select(F.col("cand_id").alias("vec_id")).distinct(),
-        "vec_id",
-        "left_semi",
-    ).select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-    qdf = local_df(spark, 
-        [(int(r["qid"]), list(r["v"])) for r in qrows],
-        "query_id long, qv array<double>",
-    )
-    rer = (
-        shortlist.join(F.broadcast(qdf), "query_id")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .join(cand_vecs, "cand_id")
-        .withColumn("sim", _cb(F.col("qv"), F.col("cv")))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cand_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
         .filter(F.col("rank") <= k)
         .select(
             "query_id", "cand_id", "sim", F.col("rank").cast("int").alias("rank")

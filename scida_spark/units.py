@@ -25,8 +25,6 @@ import math
 import warnings
 from dataclasses import dataclass, field
 
-BASE_DIMS = ("length", "mass", "time", "angle", "temperature", "dimensionless")
-
 
 @dataclass(frozen=True)
 class Unit:

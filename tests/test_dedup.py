@@ -1,5 +1,7 @@
 """Dedup operators vs exact ground truth computed in plain Python."""
 
+import hashlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -29,6 +31,27 @@ def _jaccard(a, b):
     return len(sa & sb) / len(sa | sb)
 
 
+def _py_simhash(text):
+    """Majority-bit fold over blake2b-64 token hashes, as a signed int64."""
+    toks = text.strip().split(" ")
+    counts = [0] * 64
+    for t in toks:
+        h = int.from_bytes(hashlib.blake2b(t.encode(), digest_size=8).digest(), "big")
+        for b in range(64):
+            counts[b] += (h >> b) & 1
+    v = sum(1 << b for b in range(64) if 2 * counts[b] > len(toks))
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+def _sh_table(df, n=3):
+    """The materialized (doc, sh) shingle table the pair operators take."""
+    return D.shingle_hash_table(df, "doc_id", "text", n).localCheckpoint(eager=True)
+
+
+def _simhashes(df):
+    return D.signature_table(df, "doc_id", "text").select("doc", "simhash")
+
+
 @pytest.fixture(scope="module")
 def docs_df(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
@@ -44,7 +67,7 @@ def test_exact_dedup(spark, docs_df):
 def test_ngram_jaccard_exact(spark, docs_df):
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(docs_df, "doc_id", "text", n=3, threshold=0.3).collect()
+        for r in D.ngram_jaccard_pairs_from_shingles(_sh_table(docs_df), threshold=0.3).collect()
     }
     expected = {}
     for i, (ia, ta) in enumerate(DOCS):
@@ -60,8 +83,8 @@ def test_ngram_jaccard_exact(spark, docs_df):
 def test_minhash_lsh_finds_near_dups(spark, docs_df):
     pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in D.minhash_dedup_pairs(
-            docs_df, "doc_id", "text", n=3, num_perm=64, bands=16, threshold=0.3
+        for r in D.minhash_dedup_pairs_from_shingles(
+            _sh_table(docs_df), num_perm=64, bands=16, threshold=0.3
         ).collect()
     }
     # exact dups must always be found (identical signatures); verified
@@ -78,13 +101,13 @@ def test_minhash_lsh_finds_near_dups(spark, docs_df):
 
 
 def test_simhash_identical_and_near(spark, docs_df):
-    sigs = {r["doc"]: r["simhash"] for r in D.simhash_signatures(docs_df, "doc_id", "text").collect()}
+    sigs = {r["doc"]: r["simhash"] for r in _simhashes(docs_df).collect()}
     assert sigs[0] == sigs[1]  # identical text → identical signature
     assert sigs[3] == sigs[4]
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
         for r in D.simhash_near_pairs(
-            D.simhash_signatures(docs_df, "doc_id", "text"), max_hamming=10
+            _simhashes(docs_df), max_hamming=10
         ).collect()
     }
     assert pairs[(0, 1)] == 0
@@ -92,18 +115,16 @@ def test_simhash_identical_and_near(spark, docs_df):
 
 
 def test_signature_table_matches_standalone_kernels(spark, docs_df):
-    """The combined one-scan kernel must agree with the standalone ones:
-    simhash values EXACTLY (same token hashing), and shingle sets up to
-    the hash family — set SIZES and all pairwise intersection sizes
-    (hence Jaccard values) identical to shingle_hash_table's."""
+    """The combined one-scan kernel must agree with the standalone
+    definitions: simhash values EXACTLY (a plain-Python majority-bit
+    fold over the same token hashes), and shingle sets up to the hash
+    family — set SIZES and all pairwise intersection sizes (hence
+    Jaccard values) identical to shingle_hash_table's."""
     combined = {
         r["doc"]: (set(r["sh"]), r["simhash"])
         for r in D.signature_table(docs_df, "doc_id", "text", n=3).collect()
     }
-    simhash = {
-        r["doc"]: r["simhash"]
-        for r in D.simhash_signatures(docs_df, "doc_id", "text").collect()
-    }
+    simhash = {d: _py_simhash(t) for d, t in DOCS}
     assert {d: s for d, (_, s) in combined.items()} == simhash
     legacy = {
         r["doc"]: set(r["sh"])
@@ -121,8 +142,9 @@ def test_signature_table_matches_standalone_kernels(spark, docs_df):
 
 
 def test_minhash_from_signature_table_same_pairs(spark, docs_df):
-    """The shared-scan minhash path reports the same verified pairs with
-    the same exact-Jaccard scores as the standalone pipeline."""
+    """MinHash over the shared-scan signature table reports the same
+    verified pairs with the same exact-Jaccard scores as over
+    shingle_hash_table's string-hashed shingles."""
     sig = D.signature_table(docs_df, "doc_id", "text", n=3).localCheckpoint(eager=True)
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
@@ -132,8 +154,8 @@ def test_minhash_from_signature_table_same_pairs(spark, docs_df):
     }
     want = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.minhash_dedup_pairs(
-            docs_df, "doc_id", "text", n=3, num_perm=64, bands=16, threshold=0.3
+        for r in D.minhash_dedup_pairs_from_shingles(
+            _sh_table(docs_df), num_perm=64, bands=16, threshold=0.3
         ).collect()
     }
     # LSH candidate sets may differ between hash families; the VERIFIED
@@ -199,7 +221,7 @@ def test_simhash_exact_match_blocking_d0(spark, docs_df):
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
         for r in D.simhash_near_pairs(
-            D.simhash_signatures(docs_df, "doc_id", "text"), max_hamming=0
+            _simhashes(docs_df), max_hamming=0
         ).collect()
     }
     assert pairs == {(0, 1): 0, (3, 4): 0}
@@ -214,7 +236,9 @@ def test_ngram_hot_shingle_cap_warns(spark):
         "doc_id long, text string",
     )
     with pytest.warns(UserWarning, match="hot shingles"):
-        D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.1, max_df=3).collect()
+        D.ngram_jaccard_pairs_from_shingles(
+            _sh_table(docs), threshold=0.1, max_df=3
+        ).collect()
 
 
 def test_minhash_signature_deterministic(spark, docs_df):
@@ -371,7 +395,8 @@ def test_collapse_expand_equals_direct_simhash_pairs(spark):
 
 
 def test_ngram_jaccard_collapse_exact_equals_direct(spark):
-    """collapse_exact=True returns the identical pair set on a
+    """Jaccard pairs over one representative per distinct text, expanded
+    through the replica-clique map, equal the direct pair set on a
     replica-heavy corpus (incl. the within-clique 1.0 pairs and the
     shingle-less-clique exclusion)."""
     rows = []
@@ -387,13 +412,24 @@ def test_ngram_jaccard_collapse_exact_equals_direct(spark):
             did += 3
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     direct = sorted(
-        map(tuple, D.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.2).collect())
+        map(tuple, D.ngram_jaccard_pairs_from_shingles(_sh_table(docs), 0.2).collect())
     )
+    clique = D.exact_clique_map(docs, "doc_id", "text").localCheckpoint(eager=True)
+    reps = docs.join(
+        clique.filter(F.col("doc") == F.col("rep")).select(F.col("doc").alias("doc_id")),
+        "doc_id",
+        "left_semi",
+    )
+    shr = _sh_table(reps)
     collapsed = sorted(
         map(
             tuple,
-            D.ngram_jaccard_pairs(
-                docs, "doc_id", "text", 3, 0.2, collapse_exact=True
+            D.expand_rep_pairs(
+                D.ngram_jaccard_pairs_from_shingles(shr, 0.2),
+                clique,
+                "jaccard",
+                self_score=1.0,
+                self_reps=shr.filter(F.size("sh") > 0).select("doc"),
             ).collect(),
         )
     )
@@ -480,8 +516,6 @@ def test_jaccard_prefix_complete_vs_brute(spark):
     two thresholds."""
     import random
 
-    from scida_spark.functions.dedup import jaccard_pairs_prefix
-
     rng = random.Random(11)
     vocab = [f"w{k}" for k in range(30)]
     docs = []
@@ -496,8 +530,8 @@ def test_jaccard_prefix_complete_vs_brute(spark):
     for t in (0.4, 0.7):
         got = {
             (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in jaccard_pairs_prefix(
-                df, "doc_id", "text", n=3, threshold=t
+            for r in D.jaccard_pairs_prefix_from_shingles(
+                _sh_table(df), threshold=t
             ).collect()
         }
         want = _brute_jaccard(docs, 3, t)
@@ -510,11 +544,6 @@ def test_jaccard_prefix_finds_hot_only_pairs(spark):
     """The pair whose every shared shingle is HOT — the documented
     blind spot of the df-capped inverted index — is found by the
     prefix join (its completeness needs no df carve-out)."""
-    from scida_spark.functions.dedup import (
-        jaccard_pairs_prefix,
-        ngram_jaccard_pairs,
-    )
-
     hot = "alpha beta gamma delta epsilon zeta eta theta "  # shared by everyone
     docs = [(k, hot + f"uniq{k} pad{k}") for k in range(12)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
@@ -525,13 +554,13 @@ def test_jaccard_prefix_finds_hot_only_pairs(spark):
         warnings.simplefilter("ignore")
         capped = {
             (r["doc_a"], r["doc_b"])
-            for r in ngram_jaccard_pairs(
-                df, "doc_id", "text", n=3, threshold=t, max_df=4
+            for r in D.ngram_jaccard_pairs_from_shingles(
+                _sh_table(df), threshold=t, max_df=4
             ).collect()
         }
     prefix = {
         (r["doc_a"], r["doc_b"])
-        for r in jaccard_pairs_prefix(df, "doc_id", "text", n=3, threshold=t).collect()
+        for r in D.jaccard_pairs_prefix_from_shingles(_sh_table(df), threshold=t).collect()
     }
     want = set(_brute_jaccard(docs, 3, t))
     assert prefix == want
@@ -539,12 +568,10 @@ def test_jaccard_prefix_finds_hot_only_pairs(spark):
 
 
 def test_jaccard_prefix_no_cartesian_plan(spark):
-    from scida_spark.functions.dedup import jaccard_pairs_prefix
-
     df = spark.createDataFrame(
         [(k, f"a b c d e f g h{k}") for k in range(10)], "doc_id long, text string"
     )
-    plan = jaccard_pairs_prefix(df, "doc_id", "text")._jdf.queryExecution(
+    plan = D.jaccard_pairs_prefix_from_shingles(_sh_table(df))._jdf.queryExecution(
     ).executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
@@ -831,16 +858,11 @@ def test_label_propagation_randomized_vs_simulation(spark):
 
 
 def test_containment_pairs_quote_detection(spark):
-    """ngram_containment_pairs (r12): a short excerpt inside a long doc
+    """ngram_containment_pairs_from_shingles (r12): a short excerpt inside a long doc
     scores containment ~1 while its Jaccard stays below any dedup
     threshold (the asymmetry the operator exists for); values match a
     brute-force shingle-set recomputation; both directions reported
     independently; layout-independent."""
-    from scida_spark.functions.dedup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
-
     long_words = [f"w{i}" for i in range(60)]
     quote = long_words[20:26]  # 6 words -> 4 3-gram shingles, all in long
     rows = [
@@ -852,24 +874,24 @@ def test_containment_pairs_quote_detection(spark):
 
     got = {
         (r["src_doc"], r["dst_doc"]): r["containment"]
-        for r in ngram_containment_pairs(df, "doc_id", "text", threshold=0.9).collect()
+        for r in D.ngram_containment_pairs_from_shingles(_sh_table(df), threshold=0.9).collect()
     }
     # every shingle of doc 1 appears in doc 0 -> containment exactly 1.0
     assert got == {(1, 0): 1.0}
     # the reverse direction is tiny (4/58) and correctly NOT reported
     lo = {
         (r["src_doc"], r["dst_doc"]): r["containment"]
-        for r in ngram_containment_pairs(df, "doc_id", "text", threshold=0.01).collect()
+        for r in D.ngram_containment_pairs_from_shingles(_sh_table(df), threshold=0.01).collect()
     }
     assert lo[(1, 0)] == 1.0 and abs(lo[(0, 1)] - 4 / 58) < 1e-12
     # Jaccard is blind to the same pair at any realistic threshold
-    j = ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.2)
+    j = D.ngram_jaccard_pairs_from_shingles(_sh_table(df), threshold=0.2)
     assert j.count() == 0
     # layout independence
     again = {
         (r["src_doc"], r["dst_doc"]): r["containment"]
-        for r in ngram_containment_pairs(
-            df.repartition(5), "doc_id", "text", threshold=0.01
+        for r in D.ngram_containment_pairs_from_shingles(
+            _sh_table(df.repartition(5)), threshold=0.01
         ).collect()
     }
     assert again == lo
@@ -881,8 +903,6 @@ def test_containment_pairs_hot_shingle_verify_path(spark):
     shingle, and warns about the carve-out."""
     import warnings
 
-    from scida_spark.functions.dedup import ngram_containment_pairs
-
     # 10 docs share the hot phrase; docs 0/1 also share a cold tail
     hot = "aa bb cc dd"
     rows = [(i, hot) for i in range(2, 12)]
@@ -892,8 +912,8 @@ def test_containment_pairs_hot_shingle_verify_path(spark):
         warnings.simplefilter("always")
         got = {
             (r["src_doc"], r["dst_doc"]): round(r["containment"], 6)
-            for r in ngram_containment_pairs(
-                df, "doc_id", "text", threshold=0.99, max_df=3
+            for r in D.ngram_containment_pairs_from_shingles(
+                _sh_table(df), threshold=0.99, max_df=3
             ).collect()
         }
         assert any("hot shingles" in str(x.message) for x in w)

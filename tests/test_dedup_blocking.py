@@ -25,6 +25,11 @@ from pyspark.sql import functions as F
 from scida_spark.functions import dedup as D
 
 
+def _sh_table(df):
+    """The materialized (doc, sh) 3-gram shingle table the pair operators take."""
+    return D.shingle_hash_table(df, "doc_id", "text", 3).localCheckpoint(eager=True)
+
+
 # --------------------------------------------------------------------------
 # SimHash completeness (property-style, seeded)
 # --------------------------------------------------------------------------
@@ -107,7 +112,7 @@ def test_simhash_blocking_nondegenerate_on_real_docs(spark):
     sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     n = docs.count()
-    sigs = D.simhash_signatures(docs, "doc_id", "text")
+    sigs = D.signature_table(docs, "doc_id", "text").select("doc", "simhash")
     cands = (
         D.simhash_candidate_pairs(sigs, max_hamming=3)
         .select("doc_a", "doc_b")
@@ -160,8 +165,8 @@ def test_minhash_recall_at_threshold_band(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     found = {
         (r["doc_a"], r["doc_b"])
-        for r in D.minhash_dedup_pairs(
-            df, "doc_id", "text", n=3, num_perm=128, bands=64, threshold=0.2
+        for r in D.minhash_dedup_pairs_from_shingles(
+            _sh_table(df), num_perm=128, bands=64, threshold=0.2
         ).collect()
     }
     # precision: the exact-Jaccard verify step guarantees no pair below
@@ -189,28 +194,28 @@ def test_ngram_df_cap_bounds_candidates_on_boilerplate(spark):
         (i, boiler + " " + " ".join(f"u{rng.randint(0, 10**9)}" for _ in range(20)))
         for i in range(300)
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sh = _sh_table(spark.createDataFrame(rows, "doc_id long, text string"))
     # the reported pairs agree (none qualify at 0.5 here); the cap
     # WARNS about the excluded hot shingles — assert it, don't leak it
     with pytest.warns(UserWarning, match="hot shingles"):
         assert (
-            D.ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.5, max_df=16).count() == 0
+            D.ngram_jaccard_pairs_from_shingles(sh, 0.5, max_df=16).count() == 0
         )
-    assert D.ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.5, max_df=None).count() == 0
+    assert D.ngram_jaccard_pairs_from_shingles(sh, 0.5, max_df=None).count() == 0
 
 
 def test_ngram_df_cap_preserves_results(spark):
     """Capped vs uncapped results identical on a normal near-dup corpus
     (every qualifying pair shares at least one cool shingle)."""
     rows, truth = _mk_banded_corpus(seed=7, nbase=30)
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sh = _sh_table(spark.createDataFrame(rows, "doc_id long, text string"))
     capped = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.2, max_df=256).collect()
+        for r in D.ngram_jaccard_pairs_from_shingles(sh, 0.2, max_df=256).collect()
     }
     uncapped = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.2, max_df=None).collect()
+        for r in D.ngram_jaccard_pairs_from_shingles(sh, 0.2, max_df=None).collect()
     }
     assert capped == uncapped
     assert set(capped) == set(truth)

@@ -103,15 +103,15 @@ def test_dsir_stratified_quota_exact_and_deterministic(spark):
     assert got == got2
 
 
-def test_dsir_global_quota_via_grouped_ntile(spark):
+def test_dsir_global_quota_via_running_count(spark):
     # the module docstring's scale path for a single GLOBAL quota:
-    # route the score rank through grouped_ntile's two-level plan
-    # (operators/prefix_sum.py) instead of a one-partition window.
-    # Top-20% = ntile(5) == 1 ordered by score DESC — realized by
-    # ranking on the NEGATED score (ntile orders ascending), with
+    # rank with the two-level running count (operators/prefix_sum.py::
+    # global_running_sum) instead of a one-partition window. Top-20%
+    # = running count <= 8 ordered by score DESC — realized by ranking
+    # on the NEGATED score (the running sum orders ascending), with
     # doc_id as the deterministic tiebreak.
     from scida_spark.functions.dsir import dsir_log_weights
-    from scida_spark.operators.prefix_sum import grouped_ntile
+    from scida_spark.operators.prefix_sum import global_running_sum
 
     rows = [
         (i, "the cat sat on mat " + ("zz " * (i % 4)), i % 2 == 0)
@@ -119,10 +119,10 @@ def test_dsir_global_quota_via_grouped_ntile(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, tgt boolean")
     scored = dsir_log_weights(docs, "doc_id", "text", F.col("tgt")).withColumn(
-        "_g", F.lit(1)
+        "_one", F.lit(1)
     ).withColumn("_neg", -F.col("score"))
-    nt = grouped_ntile(scored, 5, "_g", "_neg", "doc_id")
-    kept = {r["doc_id"] for r in nt.filter(F.col("ntile") == 1).collect()}
+    ranked = global_running_sum(scored, "_one", "_neg", "doc_id", out_col="_r")
+    kept = {r["doc_id"] for r in ranked.filter(F.col("_r") <= 8).collect()}
     # must equal the single-window reference selection (40/5 = 8 docs)
     from pyspark.sql.window import Window as W
 

@@ -49,7 +49,8 @@ def test_pipeline_composes_end_to_end(spark, corpus):
     assert 100 not in ids2 and 0 in ids2
 
     # 3) near-dup pairs → CC → drop non-canonical members
-    pairs = D.ngram_jaccard_pairs(kept2, "doc_id", "text", n=3, threshold=0.5)
+    sh = D.shingle_hash_table(kept2, "doc_id", "text", 3).localCheckpoint(eager=True)
+    pairs = D.ngram_jaccard_pairs_from_shingles(sh, threshold=0.5)
     cc = D.connected_components(pairs.select("doc_a", "doc_b"))
     dupes = cc.filter(F.col("cluster_id") != F.col("node")).select(
         F.col("node").alias("doc_id")
@@ -114,11 +115,13 @@ def test_pipeline_composes_end_to_end(spark, corpus):
     # 9) learn a BPE tokenizer ON the cleaned corpus, encode, and pack
     # sequences by the REAL learned token counts — tokenizer feeds packer
     from scida_spark.functions.bpe import bpe_encode, learn_bpe, word_counts
-    from scida_spark.functions.packing import pack_sequences
+    from scida_spark.functions.packing import pack_sequences_by
 
     merges = learn_bpe(word_counts(kept3), n_merges=50)
     enc = bpe_encode(kept3, merges)
-    packed = pack_sequences(enc, "doc_id", "n_bpe_tokens", budget=64)
+    packed = pack_sequences_by(
+        enc.withColumn("_dom", F.col("doc_id") % 4), "doc_id", "n_bpe_tokens", 64, "_dom"
+    )
     packed_rows = packed.collect()
     all_docs = {d for r in packed_rows for d in r["doc_ids"]}
     assert all_docs == {r["doc_id"] for r in kept3.collect()}  # every doc packed once

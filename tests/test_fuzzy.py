@@ -1,5 +1,5 @@
-"""Fuzzy edit-distance pairs: completeness vs a brute-force oracle,
-exact distances, short-string path coverage."""
+"""Fuzzy edit-distance pairs (PassJoin segment blocking): completeness
+vs a brute-force oracle, exact distances, short-string path coverage."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from scida_spark.functions.fuzzy import fuzzy_pairs
+from scida_spark.functions.fuzzy import fuzzy_pairs_segment
 
 
 def _brute(spark, df, d):
@@ -51,31 +51,30 @@ def test_fuzzy_pairs_complete_vs_bruteforce(spark, d):
     df = spark.createDataFrame(_corpus(), "id long, t string")
     got = {
         (r["id_a"], r["id_b"], r["distance"])
-        for r in fuzzy_pairs(df, "id", "t", max_distance=d).collect()
+        for r in fuzzy_pairs_segment(df, "id", "t", max_distance=d).collect()
     }
     assert got == _brute(spark, df, d)
 
 
 def test_fuzzy_pairs_short_strings_covered(spark):
-    # All-short corpus (len <= q-1+d*q+d): exercises the length-window
-    # path exclusively, including len < q strings.
+    # All-short corpus: strings of every length up to d+2, including
+    # ones too short to split into d+1 segments.
     rows = [(1, "a"), (2, "b"), (3, "ab"), (4, "ba"), (5, "abc"), (6, "abcd"), (7, "")]
     df = spark.createDataFrame(rows, "id long, t string")
     got = {
         (r["id_a"], r["id_b"], r["distance"])
-        for r in fuzzy_pairs(df, "id", "t", max_distance=2).collect()
+        for r in fuzzy_pairs_segment(df, "id", "t", max_distance=2).collect()
     }
     assert got == _brute(spark, df, 2)
 
 
 def test_fuzzy_pairs_mixed_lengths_cross_boundary(spark):
-    # A long string paired with a short one across the short_cut
-    # boundary must be found via the short side's upward window.
+    # Pairs across a length difference of up to d must be found.
     rows = [(1, "abcdefgh"), (2, "abcdefg"), (3, "abcdefghij"), (4, "zzzzzzzz")]
     df = spark.createDataFrame(rows, "id long, t string")
     got = {
         (r["id_a"], r["id_b"])
-        for r in fuzzy_pairs(df, "id", "t", max_distance=2, q=3).collect()
+        for r in fuzzy_pairs_segment(df, "id", "t", max_distance=2).collect()
     }
     assert (1, 2) in got and (1, 3) in got
     assert not any(4 in p for p in got)
@@ -85,7 +84,7 @@ def test_fuzzy_pairs_no_cartesian_in_long_path(spark):
     df = spark.createDataFrame(
         [(i, f"abcdefghij{i:04d}") for i in range(200)], "id long, t string"
     )
-    out = fuzzy_pairs(df, "id", "t", max_distance=1)
+    out = fuzzy_pairs_segment(df, "id", "t", max_distance=1)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan[:1500]
     assert "BroadcastNestedLoopJoin" not in plan, plan[:1500]
@@ -102,15 +101,9 @@ def test_fuzzy_pairs_no_cartesian_in_long_path(spark):
     assert out.count() == n_brute
 
 
-def test_max_df_cap_is_complete_on_hot_gram_corpus(spark):
-    """A stop-gram shared by every string would fan the inverted index
-    out to df^2; capping it must not lose a single true pair — the cap
-    loosens the count bound by least(hot_a, hot_b) and re-routes
-    saturation cases through the length window (cost, not recall)."""
-    import random
-
-    from scida_spark.functions.fuzzy import fuzzy_pairs
-
+def test_hot_run_corpus_is_complete(spark):
+    """A stop-run shared by every string (hot q-grams, hot leading
+    segments) must not lose a single true pair."""
     rng = random.Random(9)
     stop = "zzzzzzzz"          # 8-char run: many hot 3-grams per string
     rows = []
@@ -122,26 +115,16 @@ def test_max_df_cap_is_complete_on_hot_gram_corpus(spark):
     df = spark.createDataFrame(rows, "id long, t string")
     full = {
         (r["id_a"], r["id_b"], r["distance"])
-        for r in fuzzy_pairs(df, "id", "t", max_distance=2, q=3).collect()
+        for r in fuzzy_pairs_segment(df, "id", "t", max_distance=2).collect()
     }
-    capped = {
-        (r["id_a"], r["id_b"], r["distance"])
-        for r in fuzzy_pairs(
-            df, "id", "t", max_distance=2, q=3, max_df=10
-        ).collect()
-    }
-    assert capped == full
+    assert full == _brute(spark, df, 2)
     assert {(3, 1000), (7, 1001)} <= {(x, y) for x, y, _ in full}
 
 
-def test_max_df_cap_reroutes_saturated_strings(spark):
-    """Strings whose pruning margin is wiped out by hot grams must
-    still find their pairs (via the length-window path), including
-    against strong partners both longer AND shorter."""
-    from scida_spark.functions.fuzzy import fuzzy_pairs
-
-    # with q=3, d=1: short_cut = 2+3+1 = 6
-    hot = "aaaaaaaaaa"  # len 10 > short_cut, but all its 3-grams are hot
+def test_single_char_strings_pair_both_ways(spark):
+    """Strings made of one repeated character must still find their
+    pairs, against partners both longer AND shorter."""
+    hot = "aaaaaaaaaa"
     rows = [
         (0, hot),
         (1, hot + "b"),          # distance 1, longer partner
@@ -152,9 +135,7 @@ def test_max_df_cap_reroutes_saturated_strings(spark):
     df = spark.createDataFrame(rows, "id long, t string")
     got = {
         (r["id_a"], r["id_b"]): r["distance"]
-        for r in fuzzy_pairs(
-            df, "id", "t", max_distance=1, q=3, max_df=2
-        ).collect()
+        for r in fuzzy_pairs_segment(df, "id", "t", max_distance=1).collect()
     }
     assert got == {(0, 1): 1, (0, 2): 1, (0, 4): 0, (1, 4): 1, (2, 4): 1}
 
@@ -166,8 +147,6 @@ def test_max_df_cap_reroutes_saturated_strings(spark):
 
 @pytest.mark.parametrize("d", [1, 2, 3])
 def test_segment_complete_vs_bruteforce(spark, d):
-    from scida_spark.functions.fuzzy import fuzzy_pairs_segment
-
     df = spark.createDataFrame(_corpus(seed=11), "id long, t string")
     got = {
         (r["id_a"], r["id_b"], r["distance"])
@@ -179,8 +158,6 @@ def test_segment_complete_vs_bruteforce(spark, d):
 def test_segment_tiny_and_empty_strings(spark):
     """Strings shorter than d+1 chars (including '') cannot be
     segment-indexed — the length-window fallback must still pair them."""
-    from scida_spark.functions.fuzzy import fuzzy_pairs_segment
-
     rows = [(0, ""), (1, "a"), (2, "ab"), (3, "ba"), (4, "abcd"), (5, "abcde")]
     df = spark.createDataFrame(rows, "id long, t string")
     for d in (1, 2):
@@ -191,11 +168,9 @@ def test_segment_tiny_and_empty_strings(spark):
         assert got == _brute(spark, df, d), d
 
 
-def test_segment_matches_qgram_on_uniform_keys(spark):
-    """The two blocking schemes are interchangeable: identical answers
-    on a fixed-length prefix corpus (the dedup_signature_pairs shape)."""
-    from scida_spark.functions.fuzzy import fuzzy_pairs_segment
-
+def test_segment_exact_on_uniform_keys(spark):
+    """Exact answers on a fixed-length small-alphabet prefix corpus
+    (the dedup_signature_pairs shape, where q-gram blocking degrades)."""
     rng = random.Random(3)
     words = ["key", "agg", "row", "scan", "slow", "fast"]
     rows = [
@@ -207,16 +182,10 @@ def test_segment_matches_qgram_on_uniform_keys(spark):
         (r["id_a"], r["id_b"], r["distance"])
         for r in fuzzy_pairs_segment(df, "id", "t", max_distance=2).collect()
     }
-    qg = {
-        (r["id_a"], r["id_b"], r["distance"])
-        for r in fuzzy_pairs(df, "id", "t", max_distance=2, q=5).collect()
-    }
-    assert seg == qg == _brute(spark, df, 2)
+    assert seg == _brute(spark, df, 2)
 
 
 def test_segment_d0_equality_join(spark):
-    from scida_spark.functions.fuzzy import fuzzy_pairs_segment
-
     rows = [(0, "aa"), (1, "aa"), (2, "ab"), (3, "aa")]
     df = spark.createDataFrame(rows, "id long, t string")
     got = {
@@ -227,8 +196,6 @@ def test_segment_d0_equality_join(spark):
 
 
 def test_segment_no_cartesian(spark):
-    from scida_spark.functions.fuzzy import fuzzy_pairs_segment
-
     df = spark.createDataFrame([(0, "abcdefgh")], "id long, t string")
     plan = (
         fuzzy_pairs_segment(df, "id", "t", max_distance=2)

@@ -6,7 +6,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from scida_spark.operators.layout import read_bucketed, save_bucketed
+from scida_spark.operators.layout import read_bucketed
+
+
+def _save_bucketed(df, table_name, sort_cols):
+    """Write ``df`` as a parquet table in 8 buckets on GroupID."""
+    df.write.bucketBy(8, "GroupID").sortBy(*sort_cols).mode("overwrite").format(
+        "parquet"
+    ).saveAsTable(table_name)
 
 
 @pytest.fixture(scope="module")
@@ -18,8 +25,7 @@ def bucketed(spark, tmp_path_factory):
         F.col("id").alias("uid"),
         (F.col("id") * 0.5).alias("mass"),
     )
-    save_bucketed(df, "t_parts_bucketed", "GroupID", num_buckets=8,
-                  sort_cols=["GroupID", "uid"])
+    _save_bucketed(df, "t_parts_bucketed", ["GroupID", "uid"])
     yield "t_parts_bucketed"
     spark.sql("DROP TABLE IF EXISTS t_parts_bucketed")
 
@@ -67,8 +73,7 @@ def test_two_table_bucketed_join_no_exchange(spark, bucketed):
     halos = spark.range(0, 500).select(
         F.col("id").alias("GroupID"), (F.col("id") * 10.0).alias("GroupMass")
     )
-    save_bucketed(halos, "t_halos_bucketed", "GroupID", num_buckets=8,
-                  sort_cols=["GroupID"])
+    _save_bucketed(halos, "t_halos_bucketed", ["GroupID"])
     try:
         t = read_bucketed(spark, bucketed)
         h = read_bucketed(spark, "t_halos_bucketed")

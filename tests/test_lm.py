@@ -76,18 +76,6 @@ def test_score_ordering_sanity(docs_df):
     assert nll[3] == min(nll.values())  # 'the the the the'
 
 
-def test_nll_filter_keeps_low_perplexity(docs_df):
-    model = lm.train_unigram_lm(docs_df, vocab_size=4)
-    nll = {r["doc_id"]: r["nll"] for r in lm.score_nll(docs_df, model).collect()}
-    cut = sorted(nll.values())[2]  # keep the best 3
-    kept = lm.nll_filter(docs_df, model, max_nll=cut)
-    assert sorted(r["doc_id"] for r in kept.collect()) == sorted(
-        d for d, v in nll.items() if v <= cut
-    )
-    # survivors keep original columns
-    assert set(kept.columns) == {"doc_id", "text"}
-
-
 def test_sampled_training_deterministic(docs_df):
     """sample_fraction uses the content-hash rule: same model on every
     call, and trained on a strict subset of the corpus tokens."""
@@ -110,21 +98,6 @@ def test_empty_token_edge(spark):
     assert rows[0]["n_tokens"] == 1
     assert rows[0]["n_oov"] == 0  # '' is in-vocab here
     assert math.isfinite(rows[0]["nll"])
-
-
-def test_save_load_roundtrip_identical_scores(docs_df, spark, tmp_path):
-    from scida_spark.functions.lm import load_unigram_lm, save_unigram_lm
-
-    model = lm.train_unigram_lm(docs_df, vocab_size=4)
-    path = str(tmp_path / "lm_model")
-    save_unigram_lm(spark, model, path)
-    loaded = load_unigram_lm(spark, path)
-    assert loaded.counts == model.counts
-    assert loaded.n_total == model.n_total
-    assert loaded.vocab_size == model.vocab_size
-    orig = sorted((r["doc_id"], r["nll"]) for r in lm.score_nll(docs_df, model).collect())
-    re = sorted((r["doc_id"], r["nll"]) for r in lm.score_nll(docs_df, loaded).collect())
-    assert orig == re  # bit-identical: integer state only
 
 
 # ---------------------------------------------------------------------------
@@ -190,5 +163,3 @@ def test_bigram_short_docs_dropped(spark):
     m = train_bigram_lm(docs, vocab_size=4)
     rows = score_nll2(docs, m).collect()
     assert [r["doc_id"] for r in rows] == [0]
-
-

@@ -39,16 +39,6 @@ def test_extract_features_deterministic(media):
     assert rows[5].fake_mean_pixel == pytest.approx(sum(digest) / len(digest))
 
 
-def test_resize_rewrites_payload_and_meta(media):
-    out = M.resize_images(media, 8, 4)  # 32-byte target
-    rows = out.collect()
-    assert all(len(bytes(r.payload)) == 32 for r in rows)
-    assert all((r.meta.width, r.meta.height, r.meta.n_bytes) == (8, 4, 32) for r in rows)
-    # Truncation is deterministic: prefix of the original payload.
-    r = out.filter(F.col("media_id") == 4).first()
-    assert bytes(r.payload) == ("payload number 4 " * 5).encode()[:32]
-
-
 def test_decode_stub_raises():
     with pytest.raises(NotImplementedError, match="PIL"):
         M.decode_image(b"\x89PNG")

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from scida_spark.functions.packing import pack_sequences
+from scida_spark.functions.packing import pack_sequences_by
 
 
 def _docs(spark, n=2000, seed_mod=97):
@@ -15,9 +15,17 @@ def _docs(spark, n=2000, seed_mod=97):
     )
 
 
+def _pack(docs, budget, domains):
+    """Pack with ``doc_id % domains`` as the packing domain."""
+    return pack_sequences_by(
+        docs.withColumn("_dom", F.col("doc_id") % domains),
+        "doc_id", "n_tokens", budget, "_dom",
+    )
+
+
 def test_every_doc_packed_exactly_once(spark):
     docs = _docs(spark)
-    packed = pack_sequences(docs, "doc_id", "n_tokens", budget=512, num_partitions=8)
+    packed = _pack(docs, 512, 8)
     exploded = packed.select(F.explode("doc_ids").alias("doc_id"))
     assert exploded.count() == 2000
     assert exploded.distinct().count() == 2000
@@ -25,7 +33,7 @@ def test_every_doc_packed_exactly_once(spark):
 
 def test_budget_respected_and_counts_consistent(spark):
     docs = _docs(spark)
-    packed = pack_sequences(docs, "doc_id", "n_tokens", budget=512, num_partitions=8)
+    packed = _pack(docs, 512, 8)
     bad = packed.filter((F.col("total_tokens") > 512) & ~F.col("oversize"))
     assert bad.count() == 0
     # total_tokens must equal the sum of member docs' token counts.
@@ -44,7 +52,7 @@ def test_oversize_docs_are_singletons(spark):
     docs = spark.createDataFrame(
         [(1, 100), (2, 9000), (3, 120), (4, 50)], "doc_id long, n_tokens long"
     )
-    packed = pack_sequences(docs, "doc_id", "n_tokens", budget=512, num_partitions=2)
+    packed = _pack(docs, 512, 2)
     over = packed.filter(F.col("oversize")).collect()
     assert len(over) == 1
     assert over[0]["doc_ids"] == [2] and over[0]["total_tokens"] == 9000
@@ -57,8 +65,8 @@ def test_oversize_docs_are_singletons(spark):
 
 def test_packing_deterministic(spark):
     docs = _docs(spark, n=1500)
-    a = pack_sequences(docs, "doc_id", "n_tokens", budget=256, num_partitions=4)
-    b = pack_sequences(docs, "doc_id", "n_tokens", budget=256, num_partitions=4)
+    a = _pack(docs, 256, 4)
+    b = _pack(docs, 256, 4)
     ar = sorted((r.seq_id, tuple(r.doc_ids)) for r in a.collect())
     br = sorted((r.seq_id, tuple(r.doc_ids)) for r in b.collect())
     assert ar == br
@@ -69,8 +77,6 @@ def test_pack_sequences_by_explicit_domain(spark):
     group with the same kernel invariants: every doc in exactly one
     sequence, budget respected unless oversize, seq_id anchored to the
     domain's min id."""
-    from scida_spark.functions.packing import pack_sequences_by
-
     docs = spark.createDataFrame(
         [(i, i % 3, 100 + (i * 37) % 400) for i in range(40)] + [(99, 0, 9000)],
         "doc_id long, dom int, ntok long",

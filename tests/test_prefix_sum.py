@@ -92,80 +92,8 @@ def test_bucketed_uid_identical(spark):
         assert got == base
 
 
-def test_grouped_ntile_matches_native_window(spark):
-    """grouped_ntile reproduces NTILE(k) OVER (PARTITION BY g ORDER BY
-    bucket, tiebreaks) row-for-row, including the uneven-split rule, on
-    randomized data with heavy bucket ties."""
-    import random
-
-    from pyspark.sql.window import Window as W
-
-    from scida_spark.operators.prefix_sum import grouped_ntile
-
-    rng = random.Random(4)
-    rows = [
-        (i, rng.choice(["a", "b", "c"]), rng.randint(1, 7))
-        for i in range(997)  # prime: every (group, k) hits the uneven split
-    ]
-    df = spark.createDataFrame(rows, "id long, g string, v int")
-    for k in (2, 4, 5):
-        w = W.partitionBy("g").orderBy("v", "id")
-        native = {
-            (r["g"], r["id"]): r["t"]
-            for r in df.select("g", "id", F.ntile(k).over(w).alias("t")).collect()
-        }
-        got = {
-            (r["g"], r["id"]): r["ntile"]
-            for r in grouped_ntile(df, k, "g", "v", "id").collect()
-        }
-        assert got == native, k
-
-
-def test_grouped_ntile_no_coarse_group_window(spark):
-    """Plan contract: no window partitioned ONLY by the coarse group —
-    every WindowExec partitions at least at (group, bucket) grain (the
-    offsets window runs over the small aggregated side)."""
-    from scida_spark.operators.prefix_sum import grouped_ntile
-
-    df = spark.createDataFrame([(1, "a", 2)], "id long, g string, v int")
-    out = grouped_ntile(df, 4, "g", "v", "id")
-    p = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    import re
-
-    for m in re.finditer(r"Arguments: \[row_number\(\).*partitionBy=\[([^\]]*)\]", p):
-        assert "v" in m.group(1)
-
-
-def test_grouped_ntile_null_keys_match_native(spark):
-    """NULL group/bucket values must survive: native NTILE partitions
-    and sorts NULLs like any other value, so the internal joins use
-    null-safe equality (a plain equi-join would drop those rows)."""
-    from pyspark.sql.window import Window as W
-
-    from scida_spark.operators.prefix_sum import grouped_ntile
-
-    rows = [
-        (0, None, 1), (1, None, None), (2, "a", None), (3, "a", 2),
-        (4, "a", 2), (5, None, 3), (6, "b", 1), (7, None, None),
-    ]
-    df = spark.createDataFrame(rows, "id long, g string, v int")
-    w = W.partitionBy("g").orderBy("v", "id")
-    native = {
-        (r["g"], r["id"]): r["t"]
-        for r in df.select("g", "id", F.ntile(3).over(w).alias("t")).collect()
-    }
-    got = {
-        (r["g"], r["id"]): r["ntile"]
-        for r in grouped_ntile(df, 3, "g", "v", "id").collect()
-    }
-    assert got == native
-    assert len(got) == len(rows)
-
-
 def test_grouped_median_element_exact_and_layout_free(spark):
-    from scida_spark.operators.prefix_sum import grouped_median_element
+    from scida_spark.operators.prefix_sum import grouped_median_element_cells
 
     import statistics
 
@@ -178,8 +106,9 @@ def test_grouped_median_element_exact_and_layout_free(spark):
     for parts in (1, 7):
         got = {
             r["g"]: (r["med"], r["n"])
-            for r in grouped_median_element(
-                df.repartition(parts), "g", "v"
+            for r in grouped_median_element_cells(
+                df.repartition(parts).groupBy("g", "v").agg(F.count("*").alias("c")),
+                "g", "v", "c",
             ).collect()
         }
         assert got == {"a": (3.0, 5), "b": (4.0, 4), "c": (7.0, 1)}
@@ -188,17 +117,14 @@ def test_grouped_median_element_exact_and_layout_free(spark):
 
 
 def test_grouped_median_element_cells_matches_raw_rows(spark):
-    """The weighted-cells variant (q_corr_stats' one-cell-table path)
-    picks the BIT-IDENTICAL element as the raw-row form on a randomized
-    corpus with heavy ties, and the derived MAD/outlier identities
-    (deviation cells with summed counts) match a per-row computation."""
+    """The weighted-cells pick equals the rank-ceil(n/2) element of the
+    raw rows (``statistics.median_low``) on a randomized corpus with
+    heavy ties, and the derived MAD/outlier identities (deviation cells
+    with summed counts) match a per-row computation."""
     import random
     import statistics
 
-    from scida_spark.operators.prefix_sum import (
-        grouped_median_element,
-        grouped_median_element_cells,
-    )
+    from scida_spark.operators.prefix_sum import grouped_median_element_cells
 
     rng = random.Random(150)
     rows = [
@@ -207,9 +133,11 @@ def test_grouped_median_element_cells_matches_raw_rows(spark):
     ]
     df = spark.createDataFrame(rows, "g string, v double")
     cells = df.groupBy("g", "v").agg(F.count("*").alias("c"))
+    raw_by_g: dict[str, list[float]] = {}
+    for g, v in rows:
+        raw_by_g.setdefault(g, []).append(v)
     raw = {
-        (r["g"], r["med"], r["n"])
-        for r in grouped_median_element(df, "g", "v").collect()
+        (g, statistics.median_low(vs), len(vs)) for g, vs in raw_by_g.items()
     }
     via_cells = {
         (r["g"], r["med"], r["n"])
@@ -372,16 +300,13 @@ def test_grouped_topn_plans_partial_window_group_limit(spark):
 
 
 def test_grouped_ntile_stats_matches_per_row_aggregate(spark):
-    """grouped_ntile_stats (closed-form cell-overlap, r15) reproduces
-    the per-(group, tile) count / bucket-min / bucket-max of the
-    per-row grouped_ntile output bit-for-bit on randomized data with
+    """grouped_ntile_stats_from_cells (closed-form cell-overlap, r15)
+    reproduces the per-(group, tile) count / bucket-min / bucket-max of
+    the native per-row NTILE window bit-for-bit on randomized data with
     heavy ties, for several k including n < k and NULL keys."""
     import random
 
-    from scida_spark.operators.prefix_sum import (
-        grouped_ntile,
-        grouped_ntile_stats,
-    )
+    from scida_spark.operators.prefix_sum import grouped_ntile_stats_from_cells
 
     rng = random.Random(7)
     rows = [
@@ -389,9 +314,11 @@ def test_grouped_ntile_stats_matches_per_row_aggregate(spark):
         for i in range(499)
     ] + [(1000, "solo", 9)]  # 1-row group: n < k
     df = spark.createDataFrame(rows, "id long, g string, v int")
+    cells = df.groupBy("g", "v").agg(F.count("*").alias("__cnt"))
+    w = W.partitionBy("g").orderBy("v", "id")
     for k in (2, 4, 7):
         per_row = (
-            grouped_ntile(df, k, "g", "v", "id", out_col="t")
+            df.withColumn("t", F.ntile(k).over(w))
             .groupBy("g", "t")
             .agg(
                 F.count("*").alias("n_rows"),
@@ -405,7 +332,9 @@ def test_grouped_ntile_stats_matches_per_row_aggregate(spark):
         }
         got = {
             (r["g"], r["t"]): (r["n_rows"], r["bucket_min"], r["bucket_max"])
-            for r in grouped_ntile_stats(df, k, "g", "v", out_col="t").collect()
+            for r in grouped_ntile_stats_from_cells(
+                cells, k, "g", "v", out_col="t"
+            ).collect()
         }
         assert got == base, k
 
@@ -461,10 +390,12 @@ def test_grouped_ntile_stats_no_raw_row_shuffle(spark):
     raw rows — the only window inputs are the aggregated cells (no
     row_number at all; the raw table is touched once by the cell
     groupBy)."""
-    from scida_spark.operators.prefix_sum import grouped_ntile_stats
+    from scida_spark.operators.prefix_sum import grouped_ntile_stats_from_cells
 
     df = spark.createDataFrame([(1, "a", 2)], "id long, g string, v int")
-    out = grouped_ntile_stats(df, 4, "g", "v")
+    out = grouped_ntile_stats_from_cells(
+        df.groupBy("g", "v").agg(F.count("*").alias("__cnt")), 4, "g", "v"
+    )
     p = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )

@@ -43,7 +43,8 @@ def test_minhash_short_docs_produce_no_signature(spark):
     assert [r.doc for r in sigs.collect()] == [3]
     # Short docs therefore generate no LSH candidates (no quadratic
     # sentinel-collision blow-up).
-    pairs = D.minhash_dedup_pairs(df, "doc_id", "text", n=3)
+    sh = D.shingle_hash_table(df, "doc_id", "text", 3).localCheckpoint(eager=True)
+    pairs = D.minhash_dedup_pairs_from_shingles(sh)
     assert pairs.count() == 0
 
 

@@ -74,15 +74,23 @@ def test_mix_thresholds_missing_weight_raises():
         mix_thresholds({"a": 10, "b": 10}, {"a": 1})
 
 
-def test_domain_mix_hits_target_proportions(spark):
-    from scida_spark.functions.sampling import domain_mix
+def _domain_mix(df, weights, salt):
+    """Thin ``df`` to the ``weights`` domain mixture: per-domain counts,
+    integer thresholds, then the map-only membership filter."""
+    from scida_spark.functions.sampling import in_mix_column, mix_thresholds
 
+    counts = {r[0]: r[1] for r in df.groupBy("domain").count().collect()}
+    thr = mix_thresholds(counts, weights)
+    return df.filter(in_mix_column(F.col("doc_id"), F.col("domain"), thr, salt))
+
+
+def test_domain_mix_hits_target_proportions(spark):
     df = spark.range(0, 20_000).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") % 10 < 8, "web").otherwise("code").alias("domain"),
     )
     # web:16k, code:4k; target 1:1 → code constrains, web thins to 4k.
-    out = domain_mix(df, "doc_id", "domain", {"web": 1, "code": 1}, salt="t")
+    out = _domain_mix(df, {"web": 1, "code": 1}, salt="t")
     got = {r[0]: r[1] for r in out.groupBy("domain").count().collect()}
     assert got["code"] == 4000
     # Hash thinning is binomial around the exact threshold: 16k rows at
@@ -91,18 +99,16 @@ def test_domain_mix_hits_target_proportions(spark):
 
 
 def test_domain_mix_deterministic_and_nested(spark):
-    from scida_spark.functions.sampling import domain_mix
-
     df = spark.range(0, 5_000).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") % 4 < 3, "big").otherwise("small").alias("domain"),
     )
-    a = {r[0] for r in domain_mix(df, "doc_id", "domain", {"big": 1, "small": 1}, salt="s").select("doc_id").collect()}
-    b = {r[0] for r in domain_mix(df, "doc_id", "domain", {"big": 1, "small": 1}, salt="s").select("doc_id").collect()}
+    a = {r[0] for r in _domain_mix(df, {"big": 1, "small": 1}, salt="s").select("doc_id").collect()}
+    b = {r[0] for r in _domain_mix(df, {"big": 1, "small": 1}, salt="s").select("doc_id").collect()}
     assert a == b
     # A tighter mix (small upweighted → big thinned harder) at the SAME
     # salt selects a SUBSET of big's rows (nested composition).
-    c = {r[0] for r in domain_mix(df, "doc_id", "domain", {"big": 1, "small": 3}, salt="s").filter(F.col("domain") == "big").select("doc_id").collect()}
+    c = {r[0] for r in _domain_mix(df, {"big": 1, "small": 3}, salt="s").filter(F.col("domain") == "big").select("doc_id").collect()}
     assert c <= {x for x in a}
 
 
@@ -244,7 +250,8 @@ def test_cluster_split_composes_with_neardup_reps(spark):
     # family (not just byte-identical texts) lands in one split.
     from scida_spark.functions.dedup import (
         connected_components,
-        minhash_dedup_pairs,
+        minhash_dedup_pairs_from_shingles,
+        shingle_hash_table,
     )
     from scida_spark.functions.sampling import cluster_hash_split
 
@@ -266,7 +273,8 @@ def test_cluster_split_composes_with_neardup_reps(spark):
             nid += 1
     df = spark.createDataFrame(rows, "doc_id long, text string")
     # bands=32 (2 rows/band): detection prob ~1 at the planted Jaccard
-    pairs = minhash_dedup_pairs(df, "doc_id", "text", threshold=0.3, bands=32)
+    sh = shingle_hash_table(df, "doc_id", "text").localCheckpoint(eager=True)
+    pairs = minhash_dedup_pairs_from_shingles(sh, threshold=0.3, bands=32)
     cc = connected_components(pairs).withColumnRenamed("node", "doc_id")
     keyed = df.join(cc, "doc_id", "left").withColumn(
         "ckey", F.coalesce(F.col("cluster_id"), F.col("doc_id")).cast("string")

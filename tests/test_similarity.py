@@ -344,36 +344,6 @@ def test_pq_topk_recall_and_determinism(spark, sf_dir):
             assert abs(r["sim"] - bf[key]) < 1e-9
 
 
-def test_pq_codebooks_roundtrip(spark, sf_dir, tmp_path):
-    import numpy as np
-
-    from scida_spark.functions.similarity import (
-        load_pq_codebooks,
-        pq_topk,
-        save_pq_codebooks,
-        train_pq_codebooks,
-    )
-    from scida_spark.tables import table
-    from pyspark.sql import functions as F
-
-    emb = table(spark, sf_dir, "embeddings")
-    sample = np.stack(
-        [np.asarray(r["v"]) for r in emb.selectExpr(
-            "cast(embedding as array<double>) as v").limit(256).collect()]
-    )
-    cb = train_pq_codebooks(sample, m=8, nbits=4)
-    path = str(tmp_path / "pq_index")
-    save_pq_codebooks(spark, cb, path)
-    cb2 = load_pq_codebooks(spark, path)
-    assert np.array_equal(cb, cb2)
-    q = emb.filter(F.col("vec_id") < 3)
-    r1 = sorted((r["query_id"], r["cand_id"]) for r in
-                pq_topk(emb, q, k=5, codebooks=cb).collect())
-    r2 = sorted((r["query_id"], r["cand_id"]) for r in
-                pq_topk(emb, q, k=5, codebooks=cb2).collect())
-    assert r1 == r2
-
-
 def test_semantic_dedup_clustered_matches_exact_on_clustered_data(spark):
     """On well-separated clusters (every near-dup group lives in one
     cell), SemDeDup's within-cell dedup equals the exact kernel's

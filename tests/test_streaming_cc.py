@@ -68,13 +68,15 @@ def _batch_cc_reference(spark, docs, threshold=0.3):
     operator, the honest equivalence for a probabilistic blocker."""
     from scida_spark.functions.dedup import (
         connected_components,
-        minhash_dedup_pairs,
+        minhash_dedup_pairs_from_shingles,
+        shingle_hash_table,
     )
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    near = minhash_dedup_pairs(
-        df, "doc_id", "text", n=3, num_perm=64, bands=32, threshold=threshold
+    sh = shingle_hash_table(df, "doc_id", "text", 3).localCheckpoint(eager=True)
+    near = minhash_dedup_pairs_from_shingles(
+        sh, num_perm=64, bands=32, threshold=threshold
     ).select("doc_a", "doc_b")
     dig = df.select("doc_id", F.md5("text").alias("d"))
     reps = dig.groupBy("d").agg(F.min("doc_id").alias("doc_a"))

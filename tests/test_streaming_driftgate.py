@@ -1,7 +1,7 @@
 """Streaming distribution-drift gate (streaming/driftgate.py): a
 planted-shift batch must quarantine, steady batches admit, the
-reference histogram holds exactly the accepted rows' counts, replays
-re-decide identically, and compaction is a fixed point."""
+reference histogram holds exactly the accepted rows' counts, and replays
+re-decide identically."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from scida_spark.functions.drift import psi_kl
 from scida_spark.streaming.driftgate import (
-    compact_drift_hist,
     drift_gate_writer,
     drift_gated_ingest,
     read_drift_reports,
@@ -173,45 +172,6 @@ def test_replay_is_idempotent(spark, dirs):
     )
     assert ref_before == ref_after  # no double count
     assert spark.read.parquet(dirs["admit"]).count() == 600
-
-
-def test_compaction_fixed_point_for_decisions(spark, dirs):
-    w = _mk_writer(dirs)
-    for k in range(3):
-        w(
-            spark.createDataFrame(
-                [(i, "en", 10 + i % 40) for i in range(k * 200, k * 200 + 200)],
-                SCHEMA,
-            ),
-            k,
-        )
-    before = sorted(
-        (r["facet"], r["bucket"], r["c"])
-        for r in read_reference_hist(spark, dirs["hist"])
-        .groupBy("facet", "bucket")
-        .agg(F.sum("c").alias("c"))
-        .collect()
-    )
-    assert compact_drift_hist(spark, dirs["hist"]) == 3
-    after = sorted(
-        (r["facet"], r["bucket"], r["c"])
-        for r in read_reference_hist(spark, dirs["hist"])
-        .groupBy("facet", "bucket")
-        .agg(F.sum("c").alias("c"))
-        .collect()
-    )
-    assert before == after
-    assert compact_drift_hist(spark, dirs["hist"]) == 0
-    # the NEXT admit decision reads the compacted reference identically:
-    # a steady batch still admits
-    w(
-        spark.createDataFrame(
-            [(i, "en", 10 + i % 40) for i in range(600, 800)], SCHEMA
-        ),
-        3,
-    )
-    rep = read_drift_reports(spark, dirs["report"])
-    assert rep.filter(F.col("batch_id") == 3).first()["admitted"] is True
 
 
 def test_driftgate_composes_with_multi_store_ingest(spark, dirs):

@@ -1,7 +1,7 @@
 """Incremental exact-substring index (streaming/esubindex.py):
 incremental == batch bitwise, replay idempotence, takedown masking,
-compaction fixed point, meta validation — the postings-store contract
-matrix applied to the first store built entirely on storekit."""
+meta validation — the postings-store contract matrix applied to the
+first store built entirely on storekit."""
 
 import os
 import random
@@ -11,7 +11,6 @@ import pytest
 
 from scida_spark.functions.dedup import exact_substring_pairs
 from scida_spark.streaming.esubindex import (
-    compact_esub_index,
     delete_esub_docs,
     incremental_esub_ingest,
     read_esub_pairs,
@@ -100,7 +99,7 @@ def test_replay_idempotent(spark, dirs):
     assert _pairs(read_esub_pairs(spark, dirs["index"])) == first
 
 
-def test_takedown_masks_and_compaction_applies(spark, dirs):
+def test_takedown_masks(spark, dirs):
     _ingest(spark, dirs)
     before = _pairs(read_esub_pairs(spark, dirs["index"]))
     assert (2, 100) in before
@@ -108,22 +107,6 @@ def test_takedown_masks_and_compaction_applies(spark, dirs):
     masked = _pairs(read_esub_pairs(spark, dirs["index"]))
     assert (2, 100) not in masked
     assert masked == [p for p in before if 2 not in p]
-    # physical purge: one txn folds anchors+pairs and clears tombstones
-    assert compact_esub_index(spark, dirs["index"]) == 3
-    for sub in ("anchors", "pairs"):
-        assert sorted(
-            d
-            for d in os.listdir(os.path.join(dirs["index"], sub))
-            if d.startswith("batch_id=")
-        ) == ["batch_id=-1"]
-    assert not any(
-        d.startswith("batch_id=")
-        for d in os.listdir(os.path.join(dirs["index"], "deletes"))
-    )
-    assert _pairs(read_esub_pairs(spark, dirs["index"])) == masked
-    # fixed point: a second compaction with nothing to fold is a no-op
-    assert compact_esub_index(spark, dirs["index"]) == 0
-    assert _pairs(read_esub_pairs(spark, dirs["index"])) == masked
 
 
 def test_meta_validated_on_reopen(spark, dirs):
@@ -175,57 +158,10 @@ def test_esub_probe_targeted_serve(spark, dirs):
     assert (9000, 4) not in got2
 
 
-def test_compaction_crash_mid_apply_heals_on_read(spark, dirs, monkeypatch):
-    """Kit-level crash window on the NEW store: die after the anchors
-    substore's _finish (pairs still staged, tombstones not cleared) —
-    the next read replays the whole txn via recover_store and the
-    served pair set is exactly the masked truth (the postings-store
-    crash contract, inherited through storekit with zero
-    esubindex-specific recovery code)."""
-    from scida_spark.streaming import storefs
-
-    _ingest(spark, dirs)
-    before = _pairs(read_esub_pairs(spark, dirs["index"]))
-    delete_esub_docs(spark, dirs["index"], [2], batch_id=50)
-    want = [p for p in before if 2 not in p]
-
-    real_finish = storefs._finish
-    calls = {"n": 0}
-
-    def flaky(root, folded):
-        calls["n"] += 1
-        if calls["n"] > 1:
-            raise RuntimeError("simulated crash mid-apply")
-        real_finish(root, folded)
-
-    monkeypatch.setattr(storefs, "_finish", flaky)
-    with pytest.raises(RuntimeError, match="mid-apply"):
-        compact_esub_index(spark, dirs["index"])
-    monkeypatch.setattr(storefs, "_finish", real_finish)
-    # the partial-apply window exists: anchors folded, pairs still
-    # batch partials, txn manifest pending
-    assert storefs.list_batches(os.path.join(dirs["index"], "anchors")) == []
-    assert storefs.list_batches(os.path.join(dirs["index"], "pairs")) == [
-        "batch_id=0",
-        "batch_id=1",
-        "batch_id=2",
-    ]
-    assert os.path.isfile(
-        os.path.join(dirs["index"], storefs.TXN_MANIFEST)
-    )
-    # the next read heals the WHOLE transaction first
-    assert _pairs(read_esub_pairs(spark, dirs["index"])) == want
-    assert not os.path.isfile(
-        os.path.join(dirs["index"], storefs.TXN_MANIFEST)
-    )
-    assert storefs.list_batches(os.path.join(dirs["index"], "pairs")) == []
-
-
 def test_esub_lifecycle_on_object_backend(spark, dirs):
     """The UNCHANGED kit-built exact-substring store runs its whole
     lifecycle — 3-wave streaming ingest (incremental == batch),
-    takedown tombstones, transactional compaction fixed point, online
-    probe — with every storefs call under the index root routed
+    takedown tombstones, online probe — with every storefs call under the index root routed
     through the rename-free object backend (r15: the storekit port
     contract on the newest store)."""
     from scida_spark.streaming import storefs
@@ -237,12 +173,10 @@ def test_esub_lifecycle_on_object_backend(spark, dirs):
         _ingest(spark, dirs)
         got = _pairs(read_esub_pairs(spark, dirs["index"]))
         assert got == _batch_pairs(spark, DOCS)
-        # takedown + compaction on object semantics
+        # takedown on object semantics
         delete_esub_docs(spark, dirs["index"], [100], batch_id=70)
         masked = _pairs(read_esub_pairs(spark, dirs["index"]))
         assert (2, 100) not in masked
-        compact_esub_index(spark, dirs["index"])
-        assert _pairs(read_esub_pairs(spark, dirs["index"])) == masked
         # online probe still prunes/serves correctly
         probe = spark.createDataFrame(
             [(900, _rnd(12) + BASE[4][30:110] + _rnd(12))], SCHEMA

@@ -150,103 +150,36 @@ def test_ingest_batch_writes_idempotent(spark, dirs):
 
 
 # --------------------------------------------------------------------------
-# Vector index ingest
+# Compacting a batch-fragmented vector index
 # --------------------------------------------------------------------------
 
 
-def test_vector_index_ingest_accumulates_and_queries(spark, tmp_path):
-    import numpy as np
-
-    from scida_spark.functions.similarity import (
-        load_pq_codebooks,
-        pq_topk_from_encoded,
-    )
-    from scida_spark.streaming.ingest import vector_index_ingest
-
-    rng = np.random.RandomState(3)
-    in_dir = tmp_path / "vin"
-    in_dir.mkdir()
-    idx = str(tmp_path / "vidx")
-    ck = str(tmp_path / "vck")
-    schema = "vec_id long, embedding array<double>"
-
-    def wave(path, ids):
-        vecs = rng.standard_normal((len(ids), 16))
-        pd.DataFrame(
-            {"vec_id": ids, "embedding": [list(map(float, v)) for v in vecs]}
-        ).to_parquet(path)
-
-    wave(f"{in_dir}/w1.parquet", list(range(0, 120)))
-    q = vector_index_ingest(
-        spark, str(in_dir), schema, index_dir=idx, checkpoint_dir=ck,
-        m=4, nbits=4,
-    )
-    q.awaitTermination(120)
-    wave(f"{in_dir}/w2.parquet", list(range(120, 260)))
-    q = vector_index_ingest(
-        spark, str(in_dir), schema, index_dir=idx, checkpoint_dir=ck,
-        m=4, nbits=4,
-    )
-    q.awaitTermination(120)
-
-    codes = spark.read.parquet(f"{idx}/codes")
-    vecs = spark.read.parquet(f"{idx}/vectors")
-    # Every ingested vector encoded exactly once, m bytes each.
-    assert codes.count() == 260
-    assert codes.select("vec_id").distinct().count() == 260
-    assert all(len(r["code"]) == 4 for r in codes.limit(10).collect())
-    # Query the ACCUMULATED index: results must equal encoding the full
-    # corpus fresh with the SAME persisted codebooks (cross-batch
-    # consistency — codebooks were trained once, on wave 1).
-    cb = load_pq_codebooks(spark, f"{idx}/codebooks")
-    queries = vecs.filter(F.col("vec_id") < 3)
-    got = sorted(
-        (r["query_id"], r["cand_id"])
-        for r in pq_topk_from_encoded(codes, vecs, cb, queries, k=5).collect()
-    )
-    from scida_spark.functions.similarity import pq_encode
-
-    fresh = pq_encode(vecs, cb)
-    want = sorted(
-        (r["query_id"], r["cand_id"])
-        for r in pq_topk_from_encoded(fresh, vecs, cb, queries, k=5).collect()
-    )
-    assert got == want and len(got) == 15
-
-
 def test_vector_index_compaction_preserves_query_results(spark, tmp_path):
-    """The full index lifecycle: stream waves in, COMPACT the
-    batch-fragmented code/vector dirs (operators/maintenance.py), and
-    query the compacted index — results must be identical to querying
-    the fragmented one."""
+    """Write PQ codes and vectors as per-batch fragments, COMPACT the
+    fragmented code/vector dirs (operators/maintenance.py), and query
+    the compacted index — results must be identical to querying the
+    fragmented one."""
     import numpy as np
 
     from scida_spark.functions.similarity import (
-        load_pq_codebooks,
+        pq_encode,
         pq_topk_from_encoded,
+        train_pq_codebooks,
     )
     from scida_spark.operators.maintenance import compact_parquet, dir_stats
-    from scida_spark.streaming.ingest import vector_index_ingest
 
     rng = np.random.RandomState(11)
-    in_dir = tmp_path / "vin"
-    in_dir.mkdir()
     idx = str(tmp_path / "vidx")
-    ck = str(tmp_path / "vck")
-    schema = "vec_id long, embedding array<double>"
-    for w in range(3):
-        ids = list(range(w * 80, (w + 1) * 80))
-        vecs = rng.standard_normal((len(ids), 16))
-        pd.DataFrame(
-            {"vec_id": ids, "embedding": [list(map(float, v)) for v in vecs]}
-        ).to_parquet(f"{in_dir}/w{w}.parquet")
-        q = vector_index_ingest(
-            spark, str(in_dir), schema, index_dir=idx, checkpoint_dir=ck,
-            m=4, nbits=4,
+    waves = [rng.standard_normal((80, 16)) for _ in range(3)]
+    cb = train_pq_codebooks(waves[0], m=4, nbits=4)
+    for w, vecs in enumerate(waves):
+        batch = spark.createDataFrame(
+            [(w * 80 + i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<double>",
         )
-        q.awaitTermination(120)
+        pq_encode(batch, cb).write.parquet(f"{idx}/codes/batch_id={w}")
+        batch.write.parquet(f"{idx}/vectors/batch_id={w}")
 
-    cb = load_pq_codebooks(spark, f"{idx}/codebooks")
     codes = spark.read.parquet(f"{idx}/codes").select("vec_id", "code")
     vecs_df = spark.read.parquet(f"{idx}/vectors").select("vec_id", "embedding")
     queries = vecs_df.filter(F.col("vec_id") < 3)

@@ -571,134 +571,6 @@ def test_tombstone_on_compacted_store(spark, dirs):
     ) == want
 
 
-def test_positional_store_phrase_serve_equals_batch(spark, dirs):
-    """Positional postings (r12): phrase counts served from the store
-    must equal the batch phrase_occurrences operator EXACTLY, survive
-    compaction, respect tombstones, and refuse non-positional stores."""
-    from scida_spark.functions.retrieval import phrase_occurrences
-    from scida_spark.streaming.postings import (
-        delete_docs,
-        phrase_docs_from_store,
-        postings_writer,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, TEXTS[i % len(TEXTS)]) for i in range(36)], SCHEMA
-    )
-    w = postings_writer(dirs["store"], with_positions=True)
-    w(docs.filter(F.col("doc_id") < 18), 0)
-    w(docs.filter(F.col("doc_id") >= 18), 1)
-
-    phrases = [
-        ("p0", "the dup"),        # bigram with a repeated-word context
-        ("p1", "scan scan"),      # overlapping self-bigram
-        ("p2", "sort merge join"),  # trigram
-        ("p3", "hash"),           # single term: occ = tf
-        ("p4", "zz qq"),          # zero-hit
-    ]
-
-    def _rows_p(df):
-        return sorted(
-            (r["phrase_id"], r["doc_id"], r["phrase"], r["n_occ"])
-            for r in df.collect()
-        )
-
-    want = _rows_p(phrase_occurrences(docs, phrases))
-    got = _rows_p(phrase_docs_from_store(spark, dirs["store"], phrases))
-    assert got == want and len(got) > 0
-
-    # compaction keeps positional postings a fixed point
-    assert compact_postings(spark, dirs["store"]) == 2
-    assert _rows_p(phrase_docs_from_store(spark, dirs["store"], phrases)) == want
-
-    # tombstones mask phrase serving too
-    gone = sorted({d for _pid, d, _ph, _n in want})[:2]
-    delete_docs(spark, dirs["store"], gone, 0)
-    want2 = _rows_p(
-        phrase_occurrences(docs.filter(~F.col("doc_id").isin(gone)), phrases)
-    )
-    assert _rows_p(phrase_docs_from_store(spark, dirs["store"], phrases)) == want2
-
-    # ranked serving still works off the positional store (tf carried)
-    assert (
-        bm25_topk_from_store(spark, dirs["store"], QUERIES, k=5).count() > 0
-    )
-
-
-def test_phrase_serve_requires_positions(spark, dirs):
-    from scida_spark.streaming.postings import (
-        phrase_docs_from_store,
-        postings_writer,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, TEXTS[i % len(TEXTS)]) for i in range(10)], SCHEMA
-    )
-    postings_writer(dirs["store"])(docs, 0)  # no positions
-    with pytest.raises(ValueError, match="without positions"):
-        phrase_docs_from_store(spark, dirs["store"], [("p0", "hash join")])
-
-
-def test_min_cover_span_matches_brute_force(spark, dirs):
-    """min_cover_span_from_store (r12): spans equal a pure-Python
-    brute-force over every token window, for single- and multi-term
-    queries, incl. repeated terms in the doc; docs missing a term emit
-    nothing; tombstones respected."""
-    from scida_spark.streaming.postings import (
-        delete_docs,
-        min_cover_span_from_store,
-        postings_writer,
-    )
-
-    texts = [
-        "a x x b",            # cover(a,b) = 4
-        "b a",                # cover(a,b) = 2 (order-free)
-        "a x b x x a b",      # best window is the tail 'a b' = 2
-        "a a a",              # no b -> no row for (a,b)
-        "q w e r t",          # cover(q,t) = 5
-    ]
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    w = postings_writer(dirs["store"], with_positions=True)
-    w(docs, 0)
-
-    def brute(tokens, terms):
-        best = None
-        n = len(tokens)
-        for i in range(n):
-            for j in range(i, n):
-                win = tokens[i : j + 1]
-                if all(t in win for t in terms):
-                    sp = j - i + 1
-                    best = sp if best is None else min(best, sp)
-        return best
-
-    queries = [(0, "a b"), (1, "q t"), (2, "a"), (3, "zz")]
-    got = {
-        (r["query_id"], r["doc_id"]): r["span"]
-        for r in min_cover_span_from_store(spark, dirs["store"], queries).collect()
-    }
-    want = {}
-    for qid, q in queries:
-        terms = sorted(set(q.split()))
-        for d, tx in enumerate(texts):
-            b = brute(tx.split(" "), terms)
-            if b is not None:
-                want[(qid, d)] = b
-    assert got == want
-    assert got[(0, 0)] == 4 and got[(0, 1)] == 2 and got[(0, 2)] == 2
-    assert (0, 3) not in got  # missing term -> conjunctive filter drops
-
-    # tombstone masks span serving too
-    delete_docs(spark, dirs["store"], [0], 0)
-    got2 = {
-        (r["query_id"], r["doc_id"]): r["span"]
-        for r in min_cover_span_from_store(spark, dirs["store"], queries).collect()
-    }
-    assert (0, 0) not in got2 and got2[(0, 1)] == 2
-
-
 # ---------------------------------------------------------------------------
 # r13: store-level transactions, single-writer lock, stats contract
 # ---------------------------------------------------------------------------
@@ -849,45 +721,23 @@ def test_corpus_stats_live_contract_with_tombstones(spark, dirs):
 
 def test_meta_validates_every_ingest_param_on_reopen(spark, dirs):
     """r12 ADVICE #2: re-opening a store with a different
-    with_positions / id_col / text_col must be refused — a mixed-
-    schema store silently breaks phrase serving."""
+    with_forward / id_col / text_col must be refused — a mixed store
+    silently breaks serving."""
     from scida_spark.streaming.postings import postings_writer
 
     docs = spark.createDataFrame(
         [(i, TEXTS[i % len(TEXTS)]) for i in range(5)], SCHEMA
     )
-    postings_writer(dirs["store"], with_positions=True)(docs, 0)
+    postings_writer(dirs["store"], with_forward=True)(docs, 0)
 
-    with pytest.raises(ValueError, match="with_positions"):
-        postings_writer(dirs["store"], with_positions=False)(docs, 1)
+    with pytest.raises(ValueError, match="with_forward"):
+        postings_writer(dirs["store"], with_forward=False)(docs, 1)
     with pytest.raises(ValueError, match="id_col"):
-        postings_writer(dirs["store"], id_col="uid", with_positions=True)(
+        postings_writer(dirs["store"], id_col="uid", with_forward=True)(
             docs.withColumnRenamed("doc_id", "uid"), 1
         )
     # identical params keep appending fine
-    postings_writer(dirs["store"], with_positions=True)(docs, 1)
-
-
-def test_span_serving_tolerates_quote_terms(spark, dirs):
-    """r12 ADVICE #5: a query term holding a single quote must not be
-    rendered into raw SQL (parse crash) — and must actually match."""
-    from scida_spark.streaming.postings import (
-        min_cover_span_from_store,
-        postings_writer,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "i don't match sql injection don't"), (1, "no apostrophes here")],
-        SCHEMA,
-    )
-    postings_writer(dirs["store"], with_positions=True)(docs, 0)
-    got = {
-        (r["query_id"], r["doc_id"]): r["span"]
-        for r in min_cover_span_from_store(
-            spark, dirs["store"], [(0, "don't match")]
-        ).collect()
-    }
-    assert got == {(0, 0): 2}
+    postings_writer(dirs["store"], with_forward=True)(docs, 1)
 
 
 # --------------------------------------------------------------------------

@@ -240,45 +240,6 @@ def test_empty_store_serves_empty(spark, store):
     assert got.columns == ["query_id", "cand_id", "sim", "rank"]
 
 
-def test_rebuild_blue_green(spark, store, tmp_path):
-    """Quantizer refresh: rebuild retrains on the LIVE contents
-    (tombstones applied) into a FRESH store with one compacted base
-    partial; the new store serves == batch ivf_topk over the live
-    corpus with the NEW quantizer; the old store is untouched."""
-    from scida_spark.streaming.vecindex import rebuild_vector_store
-
-    sdir, emb, cent = store
-    w = vector_index_writer(sdir)
-    w(emb, 0)
-    dead = list(range(0, 120, 9))
-    delete_vectors(spark, sdir, dead, batch_id=10)
-    new = str(tmp_path / "vstore2")
-    n = rebuild_vector_store(spark, sdir, new, nlist=6)
-    assert n == 120 - len(dead)
-    # one already-compacted base partial, no tombstones
-    assert sorted(
-        d for d in os.listdir(os.path.join(new, "vectors"))
-        if d.startswith("batch_id=")
-    ) == ["batch_id=-1"]
-    # the new store's PERSISTED quantizer is the ground truth (k-means
-    # training samples in scan order, so an independently-built matrix
-    # over a differently-laid-out frame may legitimately differ);
-    # serve must equal a batch rebuild under that same quantizer
-    from scida_spark.functions.similarity import load_ivf_index
-
-    live = emb.filter(~F.col("vec_id").isin(dead))
-    cent2 = load_ivf_index(spark, os.path.join(new, "centroids"))
-    assert cent2.shape[0] == 6
-    q = emb.filter(F.col("vec_id") < 4)
-    served = ivf_topk_from_store(spark, new, q, k=5, nprobe=NP)
-    batch = ivf_topk(live, q, k=5, centroids=cent2, nprobe=NP)
-    assert _topk_set(served) == _topk_set(batch)
-    # old store still serves its own (masked) truth
-    old = ivf_topk_from_store(spark, sdir, q, k=5, nprobe=NP)
-    assert _topk_set(old) == _topk_set(
-        ivf_topk(live, q, k=5, centroids=cent, nprobe=NP)
-    )
-
 
 def test_hybrid_rrf_from_both_stores(spark, store, tmp_path):
     """Hybrid retrieval SERVED end-to-end from the two incrementally
@@ -328,130 +289,6 @@ def test_hybrid_rrf_from_both_stores(spark, store, tmp_path):
         for r in hybrid_b.collect()
     )
     assert got == want and len(got) > 0
-
-
-def test_pq_store_serves_ivfpq_equal_to_batch(spark, tmp_path):
-    """IVF-PQ from the store: a PQ store's served top-k is
-    bit-identical to batch ivfpq_topk under the same persisted
-    artifacts, deletes mask, compaction is a fixed point, and a
-    non-PQ store refuses the PQ serve loudly."""
-    import numpy as np
-
-    from scida_spark.functions.similarity import (
-        ivfpq_topk,
-        train_pq_codebooks,
-    )
-    from scida_spark.streaming.vecindex import ivfpq_topk_from_store
-
-    rng = np.random.RandomState(17)
-    rows = [(i, [float(x) for x in rng.normal(0, 1, 16)]) for i in range(240)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cent = build_ivf_index(emb, nlist=6)
-    sample = np.stack(
-        [np.asarray(r["embedding"]) for r in emb.orderBy("vec_id").collect()]
-    )
-    cbs = train_pq_codebooks(sample, m=8, nbits=4)
-    sdir = str(tmp_path / "pqstore")
-    create_vector_store(spark, sdir, cent, codebooks=cbs)
-    w = vector_index_writer(sdir)
-    for k, (lo, hi) in enumerate([(0, 80), (80, 160), (160, 240)]):
-        w(emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)), k)
-
-    q = emb.filter(F.col("vec_id") < 3)
-    served = ivfpq_topk_from_store(spark, sdir, q, k=5, nprobe=3, refine=8)
-    batch = ivfpq_topk(
-        emb, q, k=5, nprobe=3, refine=8, centroids=cent, codebooks=cbs
-    )
-    assert _topk_set(served) == _topk_set(batch)
-
-    # deletes mask through the compressed path too
-    dead = list(range(0, 240, 13))
-    delete_vectors(spark, sdir, dead, batch_id=50)
-    served_d = ivfpq_topk_from_store(spark, sdir, q, k=5, nprobe=3, refine=8)
-    live = emb.filter(~F.col("vec_id").isin(dead))
-    batch_d = ivfpq_topk(
-        live, q, k=5, nprobe=3, refine=8, centroids=cent, codebooks=cbs
-    )
-    assert _topk_set(served_d) == _topk_set(batch_d)
-    assert not ({r["cand_id"] for r in served_d.collect()} & set(dead))
-
-    # compaction: fixed point, code column survives the fold
-    assert compact_vector_store(spark, sdir) == 3
-    served_c = ivfpq_topk_from_store(spark, sdir, q, k=5, nprobe=3, refine=8)
-    assert _topk_set(served_c) == _topk_set(batch_d)
-
-    # PQ rebuild carries the codebooks (new store serves the PQ path)
-    from scida_spark.streaming.vecindex import rebuild_vector_store
-
-    new = str(tmp_path / "pqstore2")
-    assert rebuild_vector_store(spark, sdir, new, nlist=6) == 240 - len(dead)
-    assert ivfpq_topk_from_store(spark, new, q, k=5, nprobe=3).count() > 0
-
-    # a plain store refuses the PQ serve loudly
-    plain = str(tmp_path / "plain")
-    create_vector_store(spark, plain, cent)
-    with pytest.raises(ValueError, match="without codebooks"):
-        ivfpq_topk_from_store(spark, plain, q, k=5)
-
-
-def test_rebuild_refuses_empty_live_store(spark, store, tmp_path):
-    """A never-ingested (or fully tombstoned) store has nothing to
-    train a quantizer on: rebuild raises cleanly and leaves no
-    half-built new store behind."""
-    from scida_spark.streaming.vecindex import (
-        create_vector_store,
-        rebuild_vector_store,
-    )
-
-    sdir0, emb, cent = store
-    empty = str(tmp_path / "vempty")
-    create_vector_store(spark, empty, cent)
-    new = str(tmp_path / "vnew")
-    with pytest.raises(ValueError, match="no live vectors"):
-        rebuild_vector_store(spark, empty, new)
-    assert not os.path.isdir(os.path.join(new, "vectors"))
-
-    # fully-tombstoned: ingest then delete everything
-    full = str(tmp_path / "vfull")
-    create_vector_store(spark, full, cent)
-    vector_index_writer(full)(emb, 0)
-    delete_vectors(
-        spark, full, [r["vec_id"] for r in emb.select("vec_id").collect()], 1
-    )
-    with pytest.raises(ValueError, match="no live vectors"):
-        rebuild_vector_store(spark, full, str(tmp_path / "vnew2"))
-
-
-def test_pq_rebuild_sample_fallback_when_mod7_misses(spark, tmp_path):
-    """PQ codebook refresh falls back to the full capped live set when
-    the 1-in-7 id sample is empty (small or oddly-keyed stores)."""
-    import numpy as np
-
-    from scida_spark.functions.similarity import train_pq_codebooks
-    from scida_spark.streaming.vecindex import rebuild_vector_store
-
-    rng = np.random.RandomState(3)
-    # ids 1..6 and 8..13: none divisible by 7
-    ids = [i for i in range(1, 14) if i % 7 != 0]
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in rng.normal(0, 1, 16)]) for i in ids],
-        "vec_id long, embedding array<double>",
-    )
-    cent = build_ivf_index(emb, nlist=2)
-    sample = np.stack(
-        [np.asarray(r["embedding"]) for r in emb.orderBy("vec_id").collect()]
-    )
-    cbs = train_pq_codebooks(sample, m=8, nbits=2)
-    sdir = str(tmp_path / "pqsmall")
-    create_vector_store(spark, sdir, cent, codebooks=cbs)
-    vector_index_writer(sdir)(emb, 0)
-    new = str(tmp_path / "pqsmall2")
-    assert rebuild_vector_store(spark, sdir, new, nlist=2) == len(ids)
-    # new store is a working PQ store
-    from scida_spark.streaming.vecindex import ivfpq_topk_from_store
-
-    q = emb.filter(F.col("vec_id") <= 2)
-    assert ivfpq_topk_from_store(spark, new, q, k=3, nprobe=2).count() > 0
 
 
 def test_mmr_diversifies_served_candidates(spark, store):

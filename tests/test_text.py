@@ -23,7 +23,15 @@ def test_token_count(spark, docs):
 
 
 def test_stopword_hits_and_langid(spark, docs):
-    out = {r["doc_id"]: r["lang"] for r in docs.select("doc_id", TX.lang_id(F.col("text")).alias("lang")).collect()}
+    toks = docs.select("doc_id", TX.tokens(F.col("text")).alias("_t"))
+    scores = {
+        lang: TX.stopword_hits_from_tokens(F.col("_t"), sw)
+        for lang, sw in TX.LANG_STOPWORDS.items()
+    }
+    out = {
+        r["doc_id"]: r["lang"]
+        for r in toks.select("doc_id", TX.lang_id_from_scores(scores).alias("lang")).collect()
+    }
     assert out[0] == "en"
     assert out[1] == "de"
     assert out[2] == "en"  # zero hits everywhere → tie-break picks en

@@ -9,8 +9,15 @@ from scida_spark.functions.urls import (
     canonicalize_url,
     registered_domain,
     url_host,
-    url_registered_domain,
+    with_url_columns,
 )
+
+
+def _composed_domain(url):
+    """The registered domain as one composed Column ('' when scheme-less)."""
+    return F.when(url_host(url) == "", F.lit("")).otherwise(
+        registered_domain(url_host(url))
+    )
 
 # (raw, canonical, registered_domain) — one case per contract rule.
 CASES = [
@@ -81,9 +88,7 @@ def test_canonicalize_url_pinned(spark, urls_df):
 def test_url_registered_domain_pinned(spark, urls_df):
     got = {
         r["id"]: r["d"]
-        for r in urls_df.select(
-            "id", url_registered_domain(F.col("url")).alias("d")
-        ).collect()
+        for r in with_url_columns(urls_df, "url", domain_col="d").collect()
     }
     assert got == {i: d for i, (_raw, _c, d) in enumerate(CASES)}
 
@@ -99,9 +104,8 @@ def test_canonicalize_idempotent(spark, urls_df):
 
 def test_null_url_stays_null(spark):
     df = spark.createDataFrame([(1, None)], "id long, url string")
-    row = df.select(
-        canonicalize_url(F.col("url")).alias("c"),
-        url_registered_domain(F.col("url")).alias("d"),
+    row = with_url_columns(df, "url", domain_col="d").select(
+        canonicalize_url(F.col("url")).alias("c"), "d"
     ).collect()[0]
     assert row["c"] is None and row["d"] is None
 
@@ -164,8 +168,6 @@ def test_with_url_columns_matches_composed_semantics(spark, urls_df):
     the composed Column form's values — host, registered domain, and
     canonical URL — on every contract case, including scheme-less
     input ('' for host AND domain)."""
-    from scida_spark.functions.urls import with_url_columns
-
     staged = {
         r["id"]: (r["url_host"], r["url_domain"], r["canon"])
         for r in with_url_columns(urls_df, "url", canonical_col="canon")
@@ -176,7 +178,7 @@ def test_with_url_columns_matches_composed_semantics(spark, urls_df):
         for r in urls_df.select(
             "id",
             url_host(F.col("url")).alias("h"),
-            url_registered_domain(F.col("url")).alias("d"),
+            _composed_domain(F.col("url")).alias("d"),
             canonicalize_url(F.col("url")).alias("c"),
         ).collect()
     }
@@ -194,15 +196,13 @@ def test_with_url_columns_plan_stages_host(spark, urls_df):
     (measured 8 vs 64; the composed form's duplication is what blew
     janino's 64 KB method limit and forced the interpreter at x100 —
     SCALE.md). Still map-only: zero Exchange."""
-    from scida_spark.functions.urls import with_url_columns
-
     marker = "^([^:]*)"  # the _canonical_host host-extract regex
     staged_plan = (
         with_url_columns(urls_df, "url", canonical_col="canon")
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     composed_plan = (
-        urls_df.select(url_registered_domain(F.col("url")).alias("d"))
+        urls_df.select(_composed_domain(F.col("url")).alias("d"))
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert staged_plan.count("Project") >= 2, staged_plan
@@ -218,8 +218,6 @@ def test_with_url_columns_plan_stages_host(spark, urls_df):
 
 
 def test_with_url_columns_refuses_name_clash(spark, urls_df):
-    from scida_spark.functions.urls import with_url_columns
-
     with pytest.raises(ValueError, match="already exist"):
         with_url_columns(
             urls_df.withColumn("url_domain", F.lit("x")), "url"
