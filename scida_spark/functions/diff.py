@@ -8,7 +8,7 @@ bytes, not object identity), then a facet rollup of the four statuses.
 
 Scale: the join shuffles both sides on the id — co-locate via
 bucketing when diffing the same table lineage repeatedly
-(operators/layout.py); the digest is computed map-side, so the
+(``bucketBy``, as in ``queries_scida._bucketed_cached``); the digest is computed map-side, so the
 shuffled payload is (id, 16-byte digest, facet), never the content.
 The summary is one groupBy over the statused rows. Deterministic:
 status is a pure function of the two versions.

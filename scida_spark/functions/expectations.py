@@ -40,11 +40,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-REPORT_SCHEMA = (
-    "check string, observed double, bound double, passed boolean, n long"
-)
-
-
 def not_null(col: str, min_fraction: float = 1.0) -> dict:
     return {"kind": "not_null", "col": col, "bound": float(min_fraction)}
 

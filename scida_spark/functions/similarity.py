@@ -763,11 +763,17 @@ def train_pq_codebooks(
     )
 
 
-def pq_code_udf(sc, codebooks: np.ndarray):
-    """The PQ-encode kernel of :func:`pq_encode` as an Arrow-batched
-    UDF over an ``array<double>`` column (broadcast codebooks)."""
+def pq_encode(
+    embeddings: DataFrame,
+    codebooks: np.ndarray,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(vec_id, code binary) — each vector compressed to m bytes (one
+    subquantizer id per byte; nbits ≤ 8). One narrow Pandas-UDF pass
+    over broadcast codebooks; no shuffle."""
     m, ksub, dsub = codebooks.shape
-    bcast = sc.broadcast(codebooks)
+    bcast = embeddings.sparkSession.sparkContext.broadcast(codebooks)
 
     @F.pandas_udf("binary")
     def _enc(vecs: pd.Series) -> pd.Series:
@@ -788,19 +794,6 @@ def pq_code_udf(sc, codebooks: np.ndarray):
             codes[:, i] = d2.argmin(axis=1).astype(np.uint8)
         return pd.Series([c.tobytes() for c in codes])
 
-    return _enc
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, code binary) — each vector compressed to m bytes (one
-    subquantizer id per byte; nbits ≤ 8). One narrow Pandas-UDF pass
-    over broadcast codebooks; no shuffle."""
-    _enc = pq_code_udf(embeddings.sparkSession.sparkContext, codebooks)
     return embeddings.select(
         F.col(id_col).alias("vec_id"),
         _enc(F.col(vec_col).cast("array<double>")).alias("code"),

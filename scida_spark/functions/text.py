@@ -1,5 +1,5 @@
-"""Text analysis: tokenization, quality scoring, language ID, PII
-redaction, repetition and Unicode normalization.
+"""Text analysis: tokenization, quality scoring, language ID,
+repetition and Unicode normalization.
 
 Hot-path logic is JVM-side Column expressions (split / filter /
 transform / size) so it stays inside whole-stage codegen; only what
@@ -101,30 +101,6 @@ def bpe_tokens(text: Column) -> Column:
     merges (each digit its own token, punctuation separated). Identical
     regex semantics in Spark and DuckDB (verified), so oracle-able."""
     return F.regexp_extract_all(text, F.lit(BPE_ISH_PATTERN), 0)
-
-
-# --------------------------------------------------------------------------
-# Text cleaning (pre-training corpus hygiene)
-# --------------------------------------------------------------------------
-# All pure Column expressions: whole-stage codegen, zero shuffle.
-# Patterns are Java regex (executed JVM-side by regexp_replace).
-
-_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_URL_RE = r"(?:https?://|www\.)[^\s]+"
-_IPV4_RE = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"
-_PHONE_RE = r"\+?\d[\d\s().-]{7,}\d"
-
-
-def redact_pii(text: Column) -> Column:
-    """Replace emails, URLs, IPv4 addresses, and phone-like digit runs
-    with typed placeholder tokens. Order matters: URLs before phones
-    (URLs can contain long digit runs), emails before URLs (an email's
-    domain must not be half-eaten by the URL rule)."""
-    out = F.regexp_replace(text, _EMAIL_RE, "<EMAIL>")
-    out = F.regexp_replace(out, _URL_RE, "<URL>")
-    out = F.regexp_replace(out, _IPV4_RE, "<IP>")
-    out = F.regexp_replace(out, _PHONE_RE, "<PHONE>")
-    return out
 
 
 def repetition_kernel(texts) -> "tuple[np.ndarray, np.ndarray]":

@@ -90,7 +90,8 @@ def save_spatial_partitioned(
 
     One directory per occupied cell (``cell_0=…/cell_1=…/``). This is
     the ingest-time layout choice for spatial workloads — the analog of
-    the bucketed layout (``operators/layout.py``) for equi-join keys:
+    the bucketed layout (``queries_scida._bucketed_cached``) for
+    equi-join keys:
     pay one pass now so every later cutout reads only the cells it
     overlaps. Keep
     ``ncells`` coarse (8-32 per axis): partition count is ``ncells**d``

@@ -290,8 +290,8 @@ def _vecindex_cert_store(spark, emb, sf_dir: str, n_vectors: int):
         delete_vectors,
         incremental_vector_ingest,
         ivf_topk_from_store,
-        vector_store_meta,
     )
+    from scida_spark.streaming.storekit import store_meta
 
     def build(base):
         vstore = os.path.join(base, "store")
@@ -318,7 +318,7 @@ def _vecindex_cert_store(spark, emb, sf_dir: str, n_vectors: int):
             raise AssertionError(
                 f"vector ingest: expected 3 micro-batch partials, got {_nb}"
             )
-        vmeta = vector_store_meta(vstore)
+        vmeta = store_meta(vstore)
         qv = emb.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
         # Build-time equivalences, asserted BEFORE the store commits (a
         # failure leaves no store → loud rebuild, never a silently bad
@@ -3159,11 +3159,7 @@ def sketch_distinct_rollup(spark, sf_dir):
     # pins it against a plain GROUP BY over events; compact-then-merge
     # must serve the identical view (checked driver-side, folded into
     # within_tol together with the HLL distinct bound).
-    from scida_spark.streaming.rollup import (
-        compact_rollup,
-        incremental_rollup_ingest,
-        read_rollup,
-    )
+    from scida_spark.streaming.rollup import compact_rollup, read_rollup
 
     rbase = storefs.scratch("rollup")
     rinp = os.path.join(rbase, "input")

@@ -437,8 +437,9 @@ def _spatial_pts(spark, sf_dir, zorder: bool, ncells=10):
 )
 def scida_grouped_bucketed(spark, sf_dir):
     """Per-group aggregation AND fact-fact join over the BUCKETED
-    ingest layout (operators/layout.py — the Spark form
-    of the reference's contiguous-by-halo file layout): lineitem and
+    ingest layout (the Spark form of the reference's
+    contiguous-by-halo file layout, written by _bucketed_cached and
+    read back with ``spark.table``): lineitem and
     orders are each written once clustered by orderkey, after which
     BOTH the groupBy and the lineitem⋈orders join run with NO shuffle
     exchange (bucketing metadata proves co-location to the planner;
@@ -450,8 +451,6 @@ def scida_grouped_bucketed(spark, sf_dir):
     operation or co-keyed join — the 100 TB posture for catalog-keyed
     analytics, where the orders-side shuffle of a repeated fact-fact
     join is the dominant avoidable cost."""
-    from scida_spark.operators.layout import read_bucketed
-
     ltbl = _bucketed_cached(
         spark, sf_dir, "lineitem",
         ["l_orderkey", "l_linenumber", "l_quantity"],
@@ -461,13 +460,13 @@ def scida_grouped_bucketed(spark, sf_dir):
         spark, sf_dir, "orders", ["o_orderkey", "o_totalprice"],
         "o_orderkey", ["o_orderkey"],
     )
-    b = read_bucketed(spark, ltbl)
+    b = spark.table(ltbl)
     agg = b.groupBy(F.col("l_orderkey").alias("groupid")).agg(
         F.count("*").alias("n"),
         dsum(F.col("l_quantity"), "sum_qty"),
         F.min("l_linenumber").alias("min_line"),
     )
-    o = read_bucketed(spark, otbl)
+    o = spark.table(otbl)
     return agg.join(
         o, agg["groupid"] == o["o_orderkey"], "inner"
     ).select(

@@ -40,6 +40,14 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _ARROW_CONF_LOCK = threading.Lock()
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory in whole GiB, at least 1g and at most 64g.
+    The driver heap grows lazily up to its cap, so a cap above the host's
+    memory lets a long session's JVM be killed by the OOM killer."""
+    half = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // 2**30
+    return f"{min(max(half, 1), 64)}g"
+
+
 def get_spark(
     app_name: str = "scida_spark",
     master: str | None = None,
@@ -69,7 +77,10 @@ def get_spark(
         # measured at sf0.1, smaller splits change nothing once the JVM
         # is warm (per-query planning overhead dominates, not scan
         # parallelism), and at real scale 128 MB is the right split size.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # localCheckpoint blocks (the shared-scan pattern: clique maps,

@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 
 from scida_spark.functions.dedup import winnow_anchors
 from scida_spark.session import local_df
-from scida_spark.streaming import storefs, storekit
+from scida_spark.streaming import storekit
 
 __all__ = [
     "esub_index_writer",
@@ -67,14 +67,9 @@ __all__ = [
     "read_esub_anchors",
     "delete_esub_docs",
     "esub_probe",
-    "esub_store_meta",
 ]
 
 DEFAULT_BUCKETS = 16
-
-
-def esub_store_meta(store_dir: str) -> dict:
-    return storekit.store_meta(store_dir)
 
 
 def _anchor_table(
@@ -262,7 +257,7 @@ def read_esub_anchors(
     before the first write. ``before_batch`` implements the replay
     guard; tombstoned docs are masked by default."""
     root = os.path.join(index_dir, "anchors")
-    if not storefs.isdir(root):
+    if not os.path.isdir(root):
         return None
     try:
         df = storekit.read_partials(spark, root)
@@ -330,7 +325,7 @@ def esub_probe(
     (probe_id, doc) distinct — probe ids need not be disjoint from
     ingested ids (a re-submitted id simply reports its other copies;
     self-matches by id are excluded)."""
-    meta = esub_store_meta(index_dir)
+    meta = storekit.store_meta(index_dir)
     if not meta:
         raise FileNotFoundError(
             f"exact-substring index {index_dir} has no meta; ingest "

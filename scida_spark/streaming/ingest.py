@@ -67,7 +67,7 @@ def _read_index_part(
     stops suppressing future near-duplicates immediately, before any
     compaction."""
     path = os.path.join(root, part)
-    if not storefs.isdir(path):
+    if not os.path.isdir(path):
         return None
     try:
         df = spark.read.parquet(path)
@@ -161,8 +161,6 @@ def compact_dedup_index(
     compaction finishes the job — the tombstones are cleared only by
     the index commit, so they always outlive the purge. Returns the
     max number of batch partials folded across substores."""
-    from scida_spark.streaming import storefs
-
     def _purge_corpus(dels):
         # store-specific pre-stage under the same lock: physically
         # purge tombstoned docs from the corpus sink FIRST, as that
@@ -173,7 +171,7 @@ def compact_dedup_index(
             return
         storefs.recover_pending(corpus_dir)
         cb = storefs.list_batches(corpus_dir)
-        if storefs.isdir(os.path.join(corpus_dir, storefs.BASE_DIR)):
+        if os.path.isdir(os.path.join(corpus_dir, storefs.BASE_DIR)):
             cb = cb + [storefs.BASE_DIR]
         if not cb:
             return

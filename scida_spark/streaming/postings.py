@@ -83,7 +83,6 @@ __all__ = [
     "bm25_topk_from_store",
     "ql_topk_from_store",
     "compact_postings",
-    "store_meta",
     "delete_docs",
     "read_deletes",
     "read_forward",
@@ -92,8 +91,6 @@ __all__ = [
 ]
 
 DEFAULT_BUCKETS = 16
-
-META_FILE = "_meta.json"
 
 
 def _ensure_meta(
@@ -127,17 +124,12 @@ def _ensure_meta(
     )
 
 
-def store_meta(store_dir: str) -> dict:
-    """The store's persisted parameters ({} for a pre-meta store)."""
-    return storekit.store_meta(store_dir)
-
-
 def _resolve_buckets(store_dir: str, n_buckets: int | None) -> int:
     """Reader-side n_buckets: the store's own meta wins; an explicit
     caller value is VALIDATED against it (a mismatch would silently
     mis-prune — raise instead); only a meta-less legacy store trusts
     the caller / default."""
-    have = store_meta(store_dir).get("n_buckets")
+    have = storekit.store_meta(store_dir).get("n_buckets")
     if have is not None:
         if n_buckets is not None and int(n_buckets) != int(have):
             raise ValueError(
@@ -325,7 +317,7 @@ def read_forward(
     without ``with_forward`` — there is nothing to read (scanning the
     token-sharded postings for a doc would touch EVERY shard, the
     exact cost this substore exists to avoid)."""
-    meta = store_meta(store_dir)
+    meta = storekit.store_meta(store_dir)
     if not meta.get("with_forward"):
         raise ValueError(
             f"postings store {store_dir} was written without "
@@ -394,7 +386,7 @@ def rm3_topk_from_store(
         weighted_ql_topk_from_index,
     )
 
-    meta = store_meta(store_dir)
+    meta = storekit.store_meta(store_dir)
     if not meta.get("with_forward"):
         # fail FAST and uniformly — not only on queries that happen to
         # find feedback docs
@@ -503,7 +495,7 @@ def read_corpus_stats(
     )
     n, tot = int(row["n"] or 0), int(row["tot"] or 0)
     if apply_deletes:
-        id_col = store_meta(store_dir).get("id_col", "doc_id")
+        id_col = storekit.store_meta(store_dir).get("id_col", "doc_id")
         dels = read_deletes(spark, store_dir, id_col)
         if dels is not None:
             dn, dt = _deleted_stats(spark, store_dir, dels, id_col)
@@ -638,7 +630,7 @@ def compact_postings(spark: SparkSession, store_dir: str) -> int:
     :func:`scida_spark.streaming.storekit.compact_store` (shared by
     the vector and near-dup-signature stores); this function only
     supplies the substore specs."""
-    meta = store_meta(store_dir)
+    meta = storekit.store_meta(store_dir)
     id_col = meta.get("id_col", "doc_id")
 
     def _mask(df, dels):

@@ -45,39 +45,6 @@ def _partial(batch_df: DataFrame, key_cols: list[str], sum_col: str,
     )
 
 
-def incremental_rollup_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    *,
-    store_dir: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    sum_col: str,
-    distinct_col: str,
-    lgk: int = 12,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Watch ``input_dir`` for new parquet files and maintain the
-    partial store; returns the StreamingQuery. Partials land under
-    ``store_dir/batch_id=N/`` (idempotent overwrite per batch).
-    ``max_files_per_trigger`` bounds each micro-batch's file count
-    (availableNow otherwise folds the whole backlog into one batch)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        part = _partial(batch_df, key_cols, sum_col, distinct_col, lgk)
-        part.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_id={batch_id}")
-        )
-
-    return storekit.run_file_ingest(
-        spark, input_dir, schema, process, checkpoint_dir,
-        available_now=available_now,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-
-
 def read_rollup(
     spark: SparkSession, store_dir: str, key_cols: list[str]
 ) -> DataFrame:
@@ -191,9 +158,8 @@ def rollup_writer(
     distinct_col: str,
     lgk: int = 12,
 ):
-    """Per-batch writer for the count/sum/HLL rollup store (the
-    ``incremental_rollup_ingest`` partial), composable under
-    :func:`incremental_multi_store_ingest`."""
+    """Per-batch writer for the count/sum/HLL rollup store, composable
+    under :func:`incremental_multi_store_ingest`."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         _partial(batch_df, key_cols, sum_col, distinct_col, lgk).write.mode(

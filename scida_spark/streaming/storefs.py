@@ -8,19 +8,10 @@ reservoir stores in ``streaming/rollup.py``, and the span index in
 ``streaming/ingest.py``) keep per-micro-batch partials as
 ``batch_id=N`` parquet directories under a store root, and their
 compactions fold those partials into one base partial ``batch_id=-1``.
-The fold's directory shuffle (list / delete / rename) runs DRIVER-SIDE
-through a pluggable BACKEND (r15): :class:`LocalBackend` (``os`` /
-``shutil`` — a local or NFS-mounted store directory: this sandbox, a
-single-node deployment, a posix-mounted checkpoint volume) is the
-default; :mod:`scida_spark.streaming.objstore` implements the same
-verb set on the five object-store primitives (no directory rename, no
-links — the promote becomes overwrite-copy + commit marker + source
-delete with the same replay-safety), registered per path prefix via
-:func:`register_backend`. No store touches the filesystem except
-through here — the backend-parametrized crash matrix in
-``tests/test_streaming_postings.py`` proves the port claim; an HDFS
-port is the same exercise against ``fs.listStatus`` / ``fs.delete`` /
-``fs.rename`` via ``spark._jvm``.
+Stores are local-filesystem only: the fold's directory shuffle
+(list / delete / rename) runs DRIVER-SIDE through ``os`` / ``shutil``
+on a local or posix-mounted store directory, and Spark reads and
+writes the partials at the same local paths.
 
 CRASH SAFETY: a compaction that deletes batch partials before the
 compacted base is in place can lose data. :func:`promote_compacted`
@@ -117,105 +108,8 @@ __all__ = [
     "code_digest",
     "derived_store",
     "scratch",
-    "LocalBackend",
-    "backend_for",
-    "register_backend",
-    "unregister_backend",
 ]
 
-
-class LocalBackend:
-    """The POSIX filesystem backend — the module's historical behavior
-    verbatim. Every filesystem verb the store contract needs, in one
-    object, so a second backend (object storage — no directory rename,
-    no hard links; see :mod:`scida_spark.streaming.objstore`)
-    re-implements ONLY these verbs and every store ports at once (the
-    storekit's stated portability contract, proven by the
-    backend-parametrized crash matrix in tests/test_streaming_
-    postings.py)."""
-
-    def listdir(self, path: str) -> list[str]:
-        return os.listdir(path)
-
-    def isdir(self, path: str) -> bool:
-        return os.path.isdir(path)
-
-    def isfile(self, path: str) -> bool:
-        return os.path.isfile(path)
-
-    def makedirs(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
-
-    def rmtree(self, path: str) -> None:
-        shutil.rmtree(path, ignore_errors=True)
-
-    def remove(self, path: str) -> None:
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(path)
-
-    def read_bytes(self, path: str) -> bytes:
-        with open(path, "rb") as f:
-            return f.read()
-
-    def put_atomic(self, path: str, data: bytes) -> None:
-        """Atomic single-file publish (tmp + rename). Object stores
-        get this for free — a PUT is atomic per object."""
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
-
-    def replace_dir(self, src: str, dst: str) -> None:
-        """Replace ``dst`` with ``src`` (both directories). Local FS:
-        delete-then-rename — atomic enough because the caller's
-        manifest makes any crash replayable. The object backend
-        emulates this rename-free (overwrite-copy + commit marker +
-        source delete), with the SAME replay-safety contract: calling
-        again after a crash at ANY point converges to dst == src."""
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)
-        os.replace(src, dst)
-
-    def lock_acquire(self, path: str, data: bytes) -> bool:
-        """Atomically create ``path`` with ``data`` iff absent (the
-        single-writer lock publish). Local FS: link(2). Object stores:
-        conditional PUT (If-None-Match)."""
-        tmp = f"{path}.{os.getpid()}.tmp"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        try:
-            os.link(tmp, path)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.remove(tmp)
-
-
-_LOCAL = LocalBackend()
-# (prefix, backend) — longest-prefix match; anything unmatched is local.
-_BACKENDS: list[tuple[str, object]] = []
-
-
-def register_backend(prefix: str, backend) -> None:
-    """Route every storefs call whose path starts with ``prefix``
-    through ``backend`` (test harnesses and deployments mount an
-    object-store emulation this way; stores themselves never know)."""
-    _BACKENDS.append((os.path.abspath(prefix), backend))
-    _BACKENDS.sort(key=lambda t: -len(t[0]))
-
-
-def unregister_backend(prefix: str) -> None:
-    p = os.path.abspath(prefix)
-    _BACKENDS[:] = [t for t in _BACKENDS if t[0] != p]
-
-
-def backend_for(path: str):
-    ap = os.path.abspath(path)
-    for prefix, b in _BACKENDS:
-        if ap == prefix or ap.startswith(prefix + os.sep):
-            return b
-    return _LOCAL
 
 TMP_DIR = "_compact_tmp"
 MANIFEST = "_compact_manifest.json"
@@ -224,23 +118,33 @@ LOCK_FILE = "_maintenance.lock"
 BASE_DIR = "batch_id=-1"
 
 
-def isdir(path: str) -> bool:
-    """Backend-routed existence probe (object stores: any key under
-    the prefix). Store modules use THESE instead of ``os.path`` so the
-    object-storage port genuinely re-implements only this module."""
-    return backend_for(path).isdir(path)
+def _remove(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
-def isfile(path: str) -> bool:
-    return backend_for(path).isfile(path)
+def _replace_dir(src: str, dst: str) -> None:
+    """Replace directory ``dst`` with ``src``: delete, then rename —
+    atomic enough because the caller's manifest makes any crash
+    replayable."""
+    if os.path.isdir(dst):
+        shutil.rmtree(dst)
+    os.replace(src, dst)
 
 
-def listdir(path: str) -> list[str]:
-    return backend_for(path).listdir(path)
-
-
-def makedirs(path: str) -> None:
-    backend_for(path).makedirs(path)
+def _lock_acquire(path: str, data: bytes) -> bool:
+    """Atomically create ``path`` with ``data`` iff absent (the
+    single-writer lock publish, via link(2))."""
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "wb") as f:
+        f.write(data)
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.remove(tmp)
 
 
 def list_batches(root: str) -> list[str]:
@@ -248,7 +152,7 @@ def list_batches(root: str) -> list[str]:
     deterministic manifests)."""
     return sorted(
         d
-        for d in backend_for(root).listdir(root)
+        for d in os.listdir(root)
         if d.startswith("batch_id=") and d != BASE_DIR
     )
 
@@ -260,13 +164,17 @@ def scratch_dir(root: str) -> str:
 
 
 def write_json_atomic(path: str, obj) -> None:
-    """Atomic publish so readers never observe a torn file (local FS:
-    tmp + rename; object store: one PUT)."""
-    backend_for(path).put_atomic(path, json.dumps(obj).encode())
+    """Atomic publish (tmp + ``os.replace``) so readers never observe
+    a torn file."""
+    tmp = path + ".tmp"
+    with open(tmp, "wb") as f:
+        f.write(json.dumps(obj).encode())
+    os.replace(tmp, path)
 
 
 def read_json(path: str):
-    return json.loads(backend_for(path).read_bytes(path))
+    with open(path, "rb") as f:
+        return json.load(f)
 
 
 def _pid_alive(pid: int) -> bool:
@@ -413,7 +321,7 @@ def _live_lock(root: str) -> bool:
     heal BEFORE taking the lock."""
     for d in (root, os.path.dirname(os.path.abspath(root))):
         path = os.path.join(d, LOCK_FILE)
-        if backend_for(path).isfile(path) and _pid_alive(_lock_owner(path)):
+        if os.path.isfile(path) and _pid_alive(_lock_owner(path)):
             return True
     return False
 
@@ -429,12 +337,11 @@ def maintenance_lock(root: str):
     This is the module contract's SINGLE-WRITER enforcement point:
     every ``compact_*`` entry wraps its whole fold in this context,
     so a reader can only ever heal state whose owner is dead."""
-    fs = backend_for(root)
-    fs.makedirs(root)
+    os.makedirs(root, exist_ok=True)
     path = os.path.join(root, LOCK_FILE)
     payload = json.dumps({"pid": os.getpid()}).encode()
     for _ in range(2):  # one retry after stealing a dead lock
-        if fs.lock_acquire(path, payload):  # atomic create-with-content
+        if _lock_acquire(path, payload):  # atomic create-with-content
             break
         pid = _lock_owner(path)
         if pid != os.getpid() and _pid_alive(pid):
@@ -442,33 +349,32 @@ def maintenance_lock(root: str):
                 f"maintenance on {root} already running "
                 f"(live pid {pid}); single-writer contract"
             )
-        fs.remove(path)  # dead owner — steal
+        _remove(path)  # dead owner — steal
     else:  # pragma: no cover - pathological create/steal race
         raise RuntimeError(f"could not acquire maintenance lock on {root}")
     try:
         yield
     finally:
-        fs.remove(path)
+        _remove(path)
 
 
 def _finish(root: str, folded: list[str]) -> None:
     """Steps 3-5: delete folded partials, promote the scratch fold to
     the base partial, clear the manifest. Idempotent — every delete
     tolerates 'already gone', so replaying after a crash is safe."""
-    fs = backend_for(root)
     tmp = scratch_dir(root)
     for d in folded:
-        fs.rmtree(os.path.join(root, d))
-    if fs.isdir(tmp):
-        fs.replace_dir(tmp, os.path.join(root, BASE_DIR))
-    fs.remove(os.path.join(root, MANIFEST))
+        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    if os.path.isdir(tmp):
+        _replace_dir(tmp, os.path.join(root, BASE_DIR))
+    _remove(os.path.join(root, MANIFEST))
 
 
 def promote_compacted(root: str, folded: list[str]) -> None:
     """Crash-safely swap the fold written at :func:`scratch_dir` in as
     the new ``batch_id=-1``, retiring the ``folded`` batch dirs. The
     manifest write is the commit point (see module docstring)."""
-    if not backend_for(root).isdir(scratch_dir(root)):  # pragma: no cover - misuse
+    if not os.path.isdir(scratch_dir(root)):  # pragma: no cover - misuse
         raise FileNotFoundError(
             f"promote_compacted: no {TMP_DIR} under {root}; write the "
             "compacted base there first"
@@ -486,20 +392,19 @@ def recover_pending(root: str) -> bool:
     are the maintainer's working state, not a crash), and a parent
     store-level transaction is healed first so a multi-substore fold
     never recovers one substore out of step with its siblings."""
-    fs = backend_for(root)
-    if not fs.isdir(root):
+    if not os.path.isdir(root):
         return False
     # a store-level txn (parent) supersedes any per-substore state
     recover_store(os.path.dirname(os.path.abspath(root)))
     manifest = os.path.join(root, MANIFEST)
     tmp = scratch_dir(root)
-    if not fs.isfile(manifest) and not fs.isdir(tmp):
+    if not os.path.isfile(manifest) and not os.path.isdir(tmp):
         return False
     if _live_lock(root):
         # a live maintainer owns this state — hands off (r12 ADVICE:
         # a reader deleting the compactor's scratch fails its promote)
         return False
-    if fs.isfile(manifest):
+    if os.path.isfile(manifest):
         # Past the commit point: the scratch fold (if still present)
         # is authoritative for the listed batches — replay steps 3-5.
         folded = read_json(manifest).get("folded", [])
@@ -508,7 +413,7 @@ def recover_pending(root: str) -> bool:
     # Crashed before the commit point: the store is intact and the
     # scratch fold may be torn — drop it; the next compaction
     # simply redoes the fold.
-    fs.rmtree(tmp)
+    shutil.rmtree(tmp, ignore_errors=True)
     return True
 
 
@@ -516,13 +421,12 @@ def _apply_txn(store_root: str, plan: dict) -> None:
     """Replay a store-level transaction plan: finish every substore
     fold, then clear the listed auxiliary batch dirs (tombstones).
     Every step is idempotent, so replaying after any crash is safe."""
-    fs = backend_for(store_root)
     for fold in plan.get("folds", []):
         _finish(os.path.join(store_root, fold["sub"]), fold["folded"])
     for aux in plan.get("clear", []):
         for d in aux.get("batches", []):
-            fs.rmtree(os.path.join(store_root, aux["sub"], d))
-    fs.remove(os.path.join(store_root, TXN_MANIFEST))
+            shutil.rmtree(os.path.join(store_root, aux["sub"], d), ignore_errors=True)
+    _remove(os.path.join(store_root, TXN_MANIFEST))
 
 
 def promote_txn(
@@ -540,7 +444,7 @@ def promote_txn(
     so no crash can leave e.g. a tombstone-applied doclen next to
     pre-delete stats partials."""
     for sub, _ in folds:
-        if not backend_for(store_root).isdir(  # pragma: no cover - misuse
+        if not os.path.isdir(  # pragma: no cover - misuse
             scratch_dir(os.path.join(store_root, sub))
         ):
             raise FileNotFoundError(
@@ -560,7 +464,7 @@ def recover_store(store_root: str) -> bool:
     :func:`promote_txn` twin of :func:`recover_pending`). No-op and
     False if no transaction is pending or a LIVE maintainer owns it."""
     manifest = os.path.join(store_root, TXN_MANIFEST)
-    if not backend_for(store_root).isfile(manifest):
+    if not os.path.isfile(manifest):
         return False
     if _live_lock(store_root):
         return False

@@ -10,9 +10,8 @@ conventions: ``batch_id=N`` partials, a ``batch_id=-1`` base,
 scratch + manifest promotion, a store-level transaction for
 multi-substore folds, tombstones under ``deletes/``, and the
 single-writer maintenance lock. This module extracts that lifecycle
-once, so the NEXT store (and an object-storage port, which only has
-to re-implement ``storefs``) is a substore spec + a fold function,
-not 300 new lines:
+once, so the NEXT store is a substore spec + a fold function, not 300
+new lines:
 
 * :func:`ensure_meta` — write-once ``_meta.json`` with re-open
   validation (every ingest parameter checked; a mismatched writer is
@@ -64,9 +63,9 @@ def ensure_meta(
     the meta describes — a crash in between leaves no meta,
     so the store reads as uncreated, never half-created). Returns True
     iff the meta was created by this call."""
-    storefs.makedirs(store_dir)
+    os.makedirs(store_dir, exist_ok=True)
     path = os.path.join(store_dir, META_FILE)
-    if storefs.isfile(path):
+    if os.path.isfile(path):
         have = storefs.read_json(path)
         diffs = {
             k: (have.get(k), v)
@@ -90,7 +89,7 @@ def ensure_meta(
 def store_meta(store_dir: str) -> dict:
     """The store's persisted parameters ({} for a pre-meta store)."""
     path = os.path.join(store_dir, META_FILE)
-    return storefs.read_json(path) if storefs.isfile(path) else {}
+    return storefs.read_json(path) if os.path.isfile(path) else {}
 
 
 def write_tombstones(
@@ -132,10 +131,10 @@ def read_tombstones(
     when no deletes are pending. Heals an interrupted compaction
     first (no-op under a live maintainer's lock)."""
     root = os.path.join(store_dir, sub)
-    if not storefs.isdir(root):
+    if not os.path.isdir(root):
         return None
     storefs.recover_pending(root)
-    if not any(d.startswith("batch_id=") for d in storefs.listdir(root)):
+    if not any(d.startswith("batch_id=") for d in os.listdir(root)):
         return None
     return (
         spark.read.option("basePath", root)
@@ -250,7 +249,7 @@ def compact_store(
     storefs.recover_store(store_dir)
     for s in substores:
         p = os.path.join(store_dir, s.name)
-        if storefs.isdir(p):
+        if os.path.isdir(p):
             storefs.recover_pending(p)
     with storefs.maintenance_lock(store_dir):
         dels = read_dels(spark)
@@ -259,11 +258,11 @@ def compact_store(
         folds: list[tuple[str, list[str]]] = []
         for s in substores:
             root = os.path.join(store_dir, s.name)
-            if not storefs.isdir(root):
+            if not os.path.isdir(root):
                 continue
             batches = storefs.list_batches(root)
             if not batches:
-                if dels is None or not storefs.isdir(
+                if dels is None or not os.path.isdir(
                     os.path.join(root, storefs.BASE_DIR)
                 ):
                     continue
@@ -278,7 +277,7 @@ def compact_store(
         clear: list[tuple[str, list[str]]] = []
         if dels is not None:
             droot = os.path.join(store_dir, deletes_sub)
-            if storefs.isdir(droot):
+            if os.path.isdir(droot):
                 clear.append((deletes_sub, storefs.list_batches(droot)))
         if folds or clear:
             storefs.promote_txn(store_dir, folds, clear)
@@ -309,7 +308,7 @@ def compact_monoid_store(
     storefs.recover_pending(store_dir)
     with storefs.maintenance_lock(store_dir):
         batches = storefs.list_batches(store_dir)
-        if absorb_base and storefs.isdir(
+        if absorb_base and os.path.isdir(
             os.path.join(store_dir, storefs.BASE_DIR)
         ):
             batches = batches + [storefs.BASE_DIR]

@@ -75,10 +75,7 @@ __all__ = [
     "read_vector_deletes",
     "ivf_topk_from_store",
     "compact_vector_store",
-    "vector_store_meta",
 ]
-
-META_FILE = "_meta.json"
 
 
 def create_vector_store(
@@ -112,14 +109,10 @@ def create_vector_store(
     )
 
 
-def vector_store_meta(store_dir: str) -> dict:
-    return storekit.store_meta(store_dir)
-
-
 def _load_centroids(spark: SparkSession, store_dir: str) -> "np.ndarray":
-    if not storefs.isfile(os.path.join(store_dir, META_FILE)):
+    if not os.path.isfile(os.path.join(store_dir, storekit.META_FILE)):
         raise FileNotFoundError(
-            f"vector store {store_dir} has no {META_FILE}; call "
+            f"vector store {store_dir} has no {storekit.META_FILE}; call "
             "create_vector_store first (the quantizer must exist before "
             "any ingest or serve)"
         )
@@ -137,7 +130,7 @@ def vector_index_writer(store_dir: str):
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        meta = vector_store_meta(store_dir)
+        meta = storekit.store_meta(store_dir)
         if "cent" not in cache:
             cache["cent"] = _load_centroids(spark, store_dir)
         assigned = ivf_assign(
@@ -191,8 +184,8 @@ def read_vectors(
     pruned subset)."""
     root = os.path.join(store_dir, "vectors")
     storefs.recover_pending(root)
-    if not storefs.isdir(root) or not any(
-        d.startswith("batch_id=") for d in storefs.listdir(root)
+    if not os.path.isdir(root) or not any(
+        d.startswith("batch_id=") for d in os.listdir(root)
     ):
         # created-but-never-ingested store: an empty index serves an
         # empty result, not a missing-path crash
@@ -201,7 +194,7 @@ def read_vectors(
     if lists is not None:
         v = v.filter(F.col("list_id").isin([int(x) for x in lists]))
     if apply_deletes:
-        id_col = vector_store_meta(store_dir).get("id_col", "vec_id")
+        id_col = storekit.store_meta(store_dir).get("id_col", "vec_id")
         dels = read_vector_deletes(spark, store_dir, id_col)
         if dels is not None:
             v = v.join(F.broadcast(dels), "vec_id", "left_anti")
@@ -218,7 +211,7 @@ def delete_vectors(
     iterable of ints) as ``deletes/batch_id=N`` — O(deletes) written,
     nothing rewritten; idempotent overwrite (the postings r12
     convention)."""
-    id_col = vector_store_meta(store_dir).get("id_col", "vec_id")
+    id_col = storekit.store_meta(store_dir).get("id_col", "vec_id")
     storekit.write_tombstones(
         spark, store_dir, ids, batch_id, id_col=id_col, out_col="vec_id"
     )
@@ -246,7 +239,7 @@ def ivf_topk_from_store(
     ``list_id`` partitions, so the served result is bit-identical to a
     batch ``ivf_topk(live_corpus, queries, centroids=same,
     nprobe=same)``."""
-    meta = vector_store_meta(store_dir)
+    meta = storekit.store_meta(store_dir)
     id_col = id_col or meta.get("id_col", "vec_id")
     vec_col = vec_col or meta.get("vec_col", "embedding")
     cent = _load_centroids(spark, store_dir)

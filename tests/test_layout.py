@@ -6,8 +6,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from scida_spark.operators.layout import read_bucketed
-
 
 def _save_bucketed(df, table_name, sort_cols):
     """Write ``df`` as a parquet table in 8 buckets on GroupID."""
@@ -35,7 +33,7 @@ def _executed_plan(df) -> str:
 
 
 def test_groupby_on_bucket_key_has_no_exchange(spark, bucketed):
-    t = read_bucketed(spark, bucketed)
+    t = spark.table(bucketed)
     agg = t.groupBy("GroupID").agg(F.sum("mass").alias("m"))
     assert agg.count() == 500
     plan = _executed_plan(agg)
@@ -43,7 +41,7 @@ def test_groupby_on_bucket_key_has_no_exchange(spark, bucketed):
 
 
 def test_self_join_on_bucket_key_has_no_exchange(spark, bucketed):
-    t = read_bucketed(spark, bucketed)
+    t = spark.table(bucketed)
     a = t.groupBy("GroupID").agg(F.sum("mass").alias("ma"))
     b = t.groupBy("GroupID").agg(F.count("*").alias("n"))
     j = a.join(b, "GroupID")
@@ -56,7 +54,7 @@ def test_self_join_on_bucket_key_has_no_exchange(spark, bucketed):
 
 
 def test_values_identical_to_unbucketed(spark, bucketed):
-    t = read_bucketed(spark, bucketed)
+    t = spark.table(bucketed)
     df = spark.range(0, 10000).select(
         (F.col("id") % 500).alias("GroupID"), (F.col("id") * 0.5).alias("mass")
     )
@@ -75,8 +73,8 @@ def test_two_table_bucketed_join_no_exchange(spark, bucketed):
     )
     _save_bucketed(halos, "t_halos_bucketed", ["GroupID"])
     try:
-        t = read_bucketed(spark, bucketed)
-        h = read_bucketed(spark, "t_halos_bucketed")
+        t = spark.table(bucketed)
+        h = spark.table("t_halos_bucketed")
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:

@@ -5,10 +5,6 @@
   everything-arrow) and any input partitioning, the anchor set is
   identical on corpora with mixed doc lengths, ties, and multi-byte
   text.
-* objstore replace_dir: converges from a crash after ANY prefix of
-  its primitive operations (delete/copy/put/marker) — the replay
-  always ends with dst == src-content and src empty, never losing an
-  object.
 * PNG: encode→decode roundtrips bit-exact on randomized shapes and
   per-image random filter sequences (beyond the fixed parametrized
   cases).
@@ -79,72 +75,6 @@ def test_winnow_astral_plane_utf8_equivalence(spark):
         ).collect()
     }
     assert cg == ar and cg
-
-
-def test_objstore_replace_dir_converges_from_any_crash_prefix(tmp_path):
-    """Exhaustive crash-injection over the rename-free promote: run
-    replace_dir with a store that dies after exactly N primitive
-    mutations, for every N up to completion; after each crash, replay
-    on a healthy store. Final state must ALWAYS be dst == the staged
-    content, src prefix empty — no interleaving loses or duplicates an
-    object."""
-    import shutil
-
-    from scida_spark.streaming.objstore import FakeObjectStore, ObjectBackend
-
-    class Dying(FakeObjectStore):
-        def __init__(self, root, budget):
-            super().__init__(root)
-            self.budget = budget
-
-        def _spend(self):
-            if self.budget <= 0:
-                raise RuntimeError("injected crash")
-            self.budget -= 1
-
-        def put(self, key, data, if_none_match=False):
-            self._spend()
-            return super().put(key, data, if_none_match)
-
-        def delete(self, key):
-            self._spend()
-            super().delete(key)
-
-        def copy(self, src_key, dst_key):
-            self._spend()
-            super().copy(src_key, dst_key)
-
-    root = str(tmp_path / "o")
-    content = {f"tmp/p{i}": b"new%d" % i for i in range(4)}
-
-    n = 0
-    while True:
-        shutil.rmtree(root, ignore_errors=True)
-        st = Dying(root, n)
-        be = ObjectBackend(st, root)
-        for k, v in content.items():
-            FakeObjectStore.put(st, k, v)  # stage without budget spend
-        FakeObjectStore.put(st, "base/stale", b"old")
-        crashed = False
-        try:
-            be.replace_dir(f"{root}/tmp", f"{root}/base")
-        except RuntimeError:
-            crashed = True
-        if crashed:
-            healthy = ObjectBackend(FakeObjectStore(root), root)
-            healthy.replace_dir(f"{root}/tmp", f"{root}/base")
-        got = {
-            k: healthy.store.get(k) if crashed else st.get(k)
-            for k in (healthy.store if crashed else st).list_prefix("base")
-        }
-        assert got == {
-            "base/" + k.split("/", 1)[1]: v for k, v in content.items()
-        }, n
-        assert (healthy.store if crashed else st).list_prefix("tmp") == [], n
-        if not crashed:
-            break
-        n += 1
-    assert n >= 8  # the injection actually walked through real prefixes
 
 
 def test_png_roundtrip_randomized():

@@ -159,3 +159,16 @@ def test_local_df_arrow_conf_is_safe_across_threads(spark, monkeypatch):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
+
+
+def test_default_driver_memory_is_half_of_physical(monkeypatch):
+    from scida_spark import session
+
+    page = 4096
+    sizes = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": 16 * 2**30 // page}
+    monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+    assert session._default_driver_memory() == "8g"
+    sizes["SC_PHYS_PAGES"] = 2**30 // page  # 1 GiB host: floor of 1g
+    assert session._default_driver_memory() == "1g"
+    sizes["SC_PHYS_PAGES"] = 512 * 2**30 // page  # large host: 64g cap
+    assert session._default_driver_memory() == "64g"

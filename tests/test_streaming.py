@@ -149,8 +149,9 @@ def test_stream_stream_join_matches_batch(spark, events_stream):
 
 def test_session_window_stream_drops_watermark_late_rows(spark, tmp_path):
     """VERDICT r2 #9: an end-to-end Structured Streaming run of
-    session_window fed OUT-OF-ORDER events through the custom npystream
-    source, asserting the watermark drops the late row.
+    session_window fed OUT-OF-ORDER events through a parquet file
+    stream (one file per micro-batch), asserting the watermark drops
+    the late row.
 
     Timeline (seconds, gap=30min=1800s, watermark=30min):
       batch 1: user 7 at t=1000 and t=5000  → watermark after: 3200
@@ -160,24 +161,21 @@ def test_session_window_stream_drops_watermark_late_rows(spark, tmp_path):
     Expected emitted sessions: start=1000 with n=1 (the late t=500 row
     neither created a session nor merged into this one), and
     start=5000 with n=2."""
-    import numpy as np
-
-    from scida_spark.sources.npy_stream import register as register_npystream
+    import pandas as pd
 
     src = tmp_path / "sessions_src"
     src.mkdir()
 
-    def write(ts_list, uid_list):
-        np.save(src / "TsSec.npy", np.array(ts_list, dtype=np.float64))
-        np.save(src / "UserId.npy", np.array(uid_list, dtype=np.int64))
+    def write(name, ts_list):
+        pd.DataFrame(
+            {"TsSec": [float(t) for t in ts_list], "UserId": [7] * len(ts_list)}
+        ).to_parquet(src / f"{name}.parquet")
 
-    write([1000.0, 5000.0], [7, 7])
-    register_npystream(spark)
+    write("b1", [1000, 5000])
     stream = (
-        spark.readStream.format("npystream")
-        .option("path", str(src))
-        .option("rows_per_batch", 10)
-        .load()
+        spark.readStream.schema("TsSec double, UserId long")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
         .select(
             F.col("TsSec").cast("timestamp").alias("ts"),
             F.col("UserId").alias("user_id"),
@@ -192,9 +190,9 @@ def test_session_window_stream_drops_watermark_late_rows(spark, tmp_path):
     )
     try:
         q.processAllAvailable()  # batch 1 → watermark 3200
-        write([1000.0, 5000.0, 5100.0, 500.0], [7, 7, 7, 7])
+        write("b2", [5100, 500])
         q.processAllAvailable()  # batch 2: 5100 on time, 500 late
-        write([1000.0, 5000.0, 5100.0, 500.0, 12000.0], [7, 7, 7, 7, 7])
+        write("b3", [12000])
         q.processAllAvailable()  # batch 3 closes the 5000-session
     finally:
         q.stop()

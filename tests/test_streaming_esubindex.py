@@ -156,36 +156,3 @@ def test_esub_probe_targeted_serve(spark, dirs):
         for r in esub_probe(spark, dirs["index"], probes).collect()
     }
     assert (9000, 4) not in got2
-
-
-def test_esub_lifecycle_on_object_backend(spark, dirs):
-    """The UNCHANGED kit-built exact-substring store runs its whole
-    lifecycle — 3-wave streaming ingest (incremental == batch),
-    takedown tombstones, online probe — with every storefs call under the index root routed
-    through the rename-free object backend (r15: the storekit port
-    contract on the newest store)."""
-    from scida_spark.streaming import storefs
-    from scida_spark.streaming.esubindex import esub_probe
-    from scida_spark.streaming.objstore import mount_fake_object_store
-
-    store, _ = mount_fake_object_store(dirs["index"])
-    try:
-        _ingest(spark, dirs)
-        got = _pairs(read_esub_pairs(spark, dirs["index"]))
-        assert got == _batch_pairs(spark, DOCS)
-        # takedown on object semantics
-        delete_esub_docs(spark, dirs["index"], [100], batch_id=70)
-        masked = _pairs(read_esub_pairs(spark, dirs["index"]))
-        assert (2, 100) not in masked
-        # online probe still prunes/serves correctly
-        probe = spark.createDataFrame(
-            [(900, _rnd(12) + BASE[4][30:110] + _rnd(12))], SCHEMA
-        )
-        hits = {
-            (r["probe_id"], r["doc"])
-            for r in esub_probe(spark, dirs["index"], probe).collect()
-        }
-        assert (900, 4) in hits
-        assert store.renames_used == 0
-    finally:
-        storefs.unregister_backend(dirs["index"])

@@ -199,11 +199,8 @@ def test_meta_n_buckets_persisted_and_validated(spark, dirs):
     written to _meta.json at ingest, readers resolve it from there, and
     a conflicting explicit value (reader or appending writer) raises
     instead of silently pruning / sharding the wrong buckets."""
-    from scida_spark.streaming.postings import (
-        postings_writer,
-        read_postings,
-        store_meta,
-    )
+    from scida_spark.streaming.postings import postings_writer, read_postings
+    from scida_spark.streaming.storekit import store_meta
 
     docs = spark.createDataFrame(
         [(i, TEXTS[i % len(TEXTS)]) for i in range(25)], SCHEMA
@@ -224,31 +221,9 @@ def test_meta_n_buckets_persisted_and_validated(spark, dirs):
         postings_writer(dirs["store"], n_buckets=16)(docs, 1)
 
 
-@pytest.fixture(params=["local", "object"])
-def fs_backend(request, tmp_path):
-    """Run a test's storefs traffic on the local-FS backend and again
-    on the rename-free object-store emulation mounted over the same
-    tmp dir (r15, closes r14 VERDICT next #4: the storekit port
-    contract, proven parametrically)."""
-    if request.param == "local":
-        yield "local"
-        return
-    from scida_spark.streaming import storefs
-    from scida_spark.streaming.objstore import mount_fake_object_store
-
-    store, _ = mount_fake_object_store(str(tmp_path))
-    try:
-        yield "object"
-        assert store.renames_used == 0  # no directory move ever leaked
-    finally:
-        storefs.unregister_backend(str(tmp_path))
-
-
-def test_storefs_crash_recovery_states(tmp_path, fs_backend):
+def test_storefs_crash_recovery_states(tmp_path):
     """recover_pending repairs every interruption point of the
-    scratch → manifest → delete → promote sequence (r11 ADVICE #2) —
-    on BOTH backends: POSIX rename semantics and the five-primitive
-    object store (overwrite-copy + marker + delete promote)."""
+    scratch → manifest → delete → promote sequence (r11 ADVICE #2)."""
     import shutil
 
     from scida_spark.streaming import storefs
@@ -318,131 +293,10 @@ def test_storefs_crash_recovery_states(tmp_path, fs_backend):
     assert not storefs.recover_pending(root)
 
 
-def test_objstore_replace_dir_crash_windows(tmp_path):
-    """The object backend's rename-free promote (overwrite-copy +
-    commit marker + source delete) converges from a crash at EVERY
-    window: mid-copy (no marker — dst partial), post-marker mid-delete
-    (src partial but dst complete). The mid-delete window is exactly
-    where a naive copy-then-delete loses data if replayed from the
-    top."""
-    from scida_spark.streaming.objstore import FakeObjectStore, ObjectBackend
-
-    def mk():
-        import shutil
-
-        shutil.rmtree(tmp_path / "o", ignore_errors=True)
-        st = FakeObjectStore(str(tmp_path / "o"))
-        be = ObjectBackend(st, str(tmp_path / "o"))
-        for i in range(3):
-            st.put(f"tmp/part{i}.parquet", b"new%d" % i)
-        st.put("base/old.parquet", b"stale")
-        return st, be
-
-    src = str(tmp_path / "o" / "tmp")
-    dst = str(tmp_path / "o" / "base")
-
-    # clean run
-    st, be = mk()
-    be.replace_dir(src, dst)
-    assert st.list_prefix("base") == [
-        "base/part0.parquet", "base/part1.parquet", "base/part2.parquet"
-    ]
-    assert st.list_prefix("tmp") == []
-
-    # crash mid-copy: only one object copied, stale dst partially
-    # cleared, no marker — replay must fully rebuild dst from src
-    st, be = mk()
-    be.rmtree(dst)
-    st.copy("tmp/part1.parquet", "base/part1.parquet")
-    be.replace_dir(src, dst)  # the replay
-    assert st.list_prefix("base") == [
-        "base/part0.parquet", "base/part1.parquet", "base/part2.parquet"
-    ]
-    assert st.list_prefix("tmp") == []
-
-    # crash post-marker mid-delete: copy complete, marker present,
-    # one src object already deleted — replay must NOT recopy the
-    # now-partial src over the complete dst
-    st, be = mk()
-    be.rmtree(dst)
-    for i in range(3):
-        st.copy(f"tmp/part{i}.parquet", f"base/part{i}.parquet")
-    st.put("tmp/_MOVE_OK", b"")
-    st.delete("tmp/part0.parquet")
-    be.replace_dir(src, dst)  # the replay
-    assert st.list_prefix("base") == [
-        "base/part0.parquet", "base/part1.parquet", "base/part2.parquet"
-    ]
-    assert st.get("base/part0.parquet") == b"new0"
-    assert st.list_prefix("tmp") == []
-
-
-def test_object_backend_full_store_lifecycle(spark, dirs):
-    """The UNCHANGED postings store modules run their whole lifecycle
-    — 2-wave streaming ingest, serve == batch bitwise, transactional
-    compaction, serve fixed point, crash healing — with every storefs
-    call under the store root routed through the five-primitive
-    object backend (r15: the storekit port contract, end-to-end)."""
-    from scida_spark.streaming import storefs
-    from scida_spark.streaming.objstore import mount_fake_object_store
-
-    store, _ = mount_fake_object_store(dirs["store"])
-    try:
-        _wave(os.path.join(dirs["input"], "w0.parquet"), 0, 30)
-        _ingest(spark, dirs)
-        _wave(os.path.join(dirs["input"], "w1.parquet"), 30, 60)
-        _ingest(spark, dirs)
-        corpus = spark.createDataFrame(
-            [
-                (i, TEXTS[i % len(TEXTS)] + (" extra" if i % 4 == 0 else ""))
-                for i in range(60)
-            ],
-            SCHEMA,
-        )
-        expect = _rows(bm25_topk(corpus, QUERIES, k=5))
-        assert (
-            _rows(bm25_topk_from_store(spark, dirs["store"], QUERIES, k=5))
-            == expect
-        )
-        compact_postings(spark, dirs["store"])
-        assert (
-            storefs.list_batches(os.path.join(dirs["store"], "postings"))
-            == []
-        )
-        assert (
-            _rows(bm25_topk_from_store(spark, dirs["store"], QUERIES, k=5))
-            == expect
-        )
-        assert store.renames_used == 0
-    finally:
-        storefs.unregister_backend(dirs["store"])
-
-
-@pytest.fixture(params=["local", "object"])
-def bdirs(request, dirs):
-    """`dirs` with the store root optionally mounted on the rename-free
-    object backend — the crash-heal tests run on BOTH backends (r15:
-    the crash windows are where the backends genuinely differ)."""
-    if request.param == "local":
-        yield dirs
-        return
-    from scida_spark.streaming import storefs
-    from scida_spark.streaming.objstore import mount_fake_object_store
-
-    store, _ = mount_fake_object_store(dirs["store"])
-    try:
-        yield dirs
-        assert store.renames_used == 0
-    finally:
-        storefs.unregister_backend(dirs["store"])
-
-
-def test_compaction_crash_heals_on_next_read(spark, bdirs, monkeypatch):
+def test_compaction_crash_heals_on_next_read(spark, dirs, monkeypatch):
     """A compaction killed right after its commit point must not lose
     (or double-count) any postings: the next store READ self-heals via
-    recover_pending and serves the identical rankings. Parametrized
-    over the POSIX and object-store backends."""
-    dirs = bdirs
+    recover_pending and serves the identical rankings."""
     from scida_spark.streaming import storefs
     from scida_spark.streaming.postings import postings_writer
 
@@ -577,15 +431,14 @@ def test_tombstone_on_compacted_store(spark, dirs):
 
 
 def test_txn_crash_between_substores_heals_consistently(
-    spark, bdirs, monkeypatch
+    spark, dirs, monkeypatch
 ):
     """The r12 ADVICE #3 window: a compaction that died after applying
     tombstones to doclen but before rewriting stats left
     read_corpus_stats overcounting. r13's single-txn commit makes that
     impossible — kill the apply after the FIRST substore fold and the
     next READ replays the WHOLE plan (all three folds + the tombstone
-    clear) before serving. Parametrized over both backends."""
-    dirs = bdirs
+    clear) before serving."""
     from scida_spark.streaming import storefs
     from scida_spark.streaming.postings import (
         delete_docs,

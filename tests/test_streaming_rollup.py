@@ -14,8 +14,9 @@ from pyspark.sql import functions as F
 
 from scida_spark.streaming.rollup import (
     compact_rollup,
-    incremental_rollup_ingest,
+    incremental_multi_store_ingest,
     read_rollup,
+    rollup_writer,
 )
 
 SCHEMA = "event_id long, event_type string, user_id long, value double"
@@ -39,15 +40,12 @@ def _wave(path: str, start: int, n: int, types=("click", "view")) -> None:
 
 
 def _run(spark, dirs):
-    q = incremental_rollup_ingest(
+    q = incremental_multi_store_ingest(
         spark,
         dirs["input"],
         SCHEMA,
-        store_dir=dirs["store"],
         checkpoint_dir=dirs["ckpt"],
-        key_cols=["event_type"],
-        sum_col="value",
-        distinct_col="user_id",
+        writers=[rollup_writer(dirs["store"], ["event_type"], "value", "user_id")],
     )
     q.awaitTermination(120)
     assert not q.isActive
@@ -123,10 +121,7 @@ def test_replayed_batch_is_idempotent(spark, dirs):
 
 
 def _run_res(spark, dirs, k=4):
-    from scida_spark.streaming.rollup import (
-        incremental_multi_store_ingest,
-        reservoir_writer,
-    )
+    from scida_spark.streaming.rollup import reservoir_writer
 
     q = incremental_multi_store_ingest(
         spark,
@@ -200,12 +195,7 @@ def test_multi_store_ingest_one_pass_feeds_both(spark, dirs):
     """incremental_multi_store_ingest: ONE streaming pass writes both
     the rollup and reservoir partials; each served view equals its
     single-ingest / batch truth exactly."""
-    from scida_spark.streaming.rollup import (
-        incremental_multi_store_ingest,
-        read_reservoir,
-        reservoir_writer,
-        rollup_writer,
-    )
+    from scida_spark.streaming.rollup import read_reservoir, reservoir_writer
 
     _wave(os.path.join(dirs["input"], "w1.parquet"), 0, 40)
     _wave(os.path.join(dirs["input"], "w2.parquet"), 40, 25,

@@ -1,30 +1,9 @@
-"""Text cleaning: PII redaction and corpus-wide frequency-based line
-dedup (hot_lines / remove_hot_lines)."""
+"""Text cleaning: corpus-wide frequency-based line dedup (hot_lines /
+remove_hot_lines)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from scida_spark.functions import text as T
-
-
-def test_redact_pii_each_kind(spark):
-    cases = {
-        "mail me at bob.smith+x@example.co.uk today": "mail me at <EMAIL> today",
-        "see https://ex.com/a?b=1 and www.foo.org/x": "see <URL> and <URL>",
-        "host 192.168.0.1 down": "host <IP> down",
-        "call +1 (555) 123-4567 now": "call <PHONE> now",
-    }
-    for src, want in cases.items():
-        df = spark.createDataFrame([(src,)], "text string")
-        got = df.select(T.redact_pii(F.col("text")).alias("c")).first()["c"]
-        assert got == want, (src, got)
-
-
-def test_email_not_eaten_by_url_rule(spark):
-    df = spark.createDataFrame([("a@b.com www.b.com",)], "text string")
-    got = df.select(T.redact_pii(F.col("text")).alias("c")).first()["c"]
-    assert got == "<EMAIL> <URL>"
 
 
 # --------------------------------------------------------------------------
