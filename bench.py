@@ -1,7 +1,7 @@
 """Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"sf": ..., "runs": 3, "agg": "median", ..., "queries": {name: sec}}
+"sf": ..., "runs": 5, "agg": "median", ..., "queries": {name: sec}}
 ("queries" is deliberately the LAST key — the driver keeps the tail
 of an overlong line).
 
@@ -64,78 +64,22 @@ HEADLINE = [
 ]
 
 
-# Composite slots (one registry entry = UNION of several attested
-# sections) and their discriminator column. Filtering the slot's
-# DataFrame on a literal section value lets Catalyst push the predicate
-# into every union branch, constant-fold the non-matching branches to
-# Filter(false), and prune them (PropagateEmptyRelation) — so the
-# per-section wall time measures ONLY that branch's subtree, making
-# cross-round regressions attributable per operator instead of per
-# slot (the r7 merged-slot comparability gap). Sections whose values
-# carry a ':'-suffixed instance (e.g. 'hll:click') are grouped by
-# family prefix.
-SECTIONED = {
-    "sim_topk": "method",
-    "stream_batch_windows": "kind",
-    "sketch_distinct_rollup": "section",
-    "scida_groupid_assign": "method",
-    "dedup_signature_pairs": "method",
-    "scida_grouped": "variant",
-    "scida_histograms": "kind",
-    # r9: the multimodal slot gained certification sections (phash,
-    # audiofp), and — like the sim_topk / minhash_recall certs — their
-    # verdicts are lazy 1-row aggregates, so each section's number
-    # isolates that modality's encode->hash->block pipeline.
-    # (dedup_cleaned_corpus also gained a cert section but stays out
-    # of the bench: it is a CC-fixed-cost correctness artifact, not an
-    # operator hot path.)
-    "multimodal_features": "section",
-}
-
-
 def _section_timings(spark, reg, sf_dir, names, errors):
-    """One timed pass per section of each composite slot (single run:
-    these are attribution numbers, not the headline medians).
-
-    The slot's fn() is called exactly ONCE per slot (r10 fix: it used
-    to be called afresh per section probe, so slots with eager Python
-    construction — streaming re-feeds, stats collects, cert writes —
-    re-billed that fixed cost into EVERY section and the attribution
-    numbers overstated marginal cost several-fold, e.g. scd2 read
-    31.4 s against a 7.77 s slot median). Section probes now filter
-    the one cached lazy DataFrame, so each number is that branch's
-    pure execution marginal; the one-time eager construction is
-    reported separately as __construct."""
-    from pyspark.sql import functions as F
-
+    """One timed ``count()`` per section of each composite slot in
+    ``names`` (a single run: these are attribution numbers, not the
+    headline medians). The slot's sections are built once, by the
+    registry's ``sections``, and each section's own DataFrame is
+    counted, so a number covers exactly that section's plan."""
     out: dict[str, dict[str, float]] = {}
-    for name, col in SECTIONED.items():
-        if name not in names or name in errors:
+    for name in names:
+        if reg[name].sections is None or name in errors:
             continue
         try:
-            fams = sorted(
-                r["f"]
-                for r in reg[name]
-                .fn(spark, "/root/testdata/sf0.001")
-                .select(F.substring_index(F.col(col), ":", 1).alias("f"))
-                .distinct()
-                .collect()
-            )
             secs = {}
-            # Slot CONSTRUCTION alone (eager stats collects, cert
-            # writes, streaming re-feeds) — paid once here; the
-            # section probes below reuse this lazy DataFrame.
-            t0 = time.perf_counter()
-            slot_df = reg[name].fn(spark, sf_dir)
-            secs["__construct"] = round(time.perf_counter() - t0, 4)
-            for fam in fams:
+            for sec, df in reg[name].sections(spark, sf_dir).items():
                 t0 = time.perf_counter()
-                (
-                    slot_df
-                    .filter(F.substring_index(F.col(col), ":", 1) == fam)
-                    .count()
-                )
-                secs[fam] = round(time.perf_counter() - t0, 4)
+                df.count()
+                secs[sec] = round(time.perf_counter() - t0, 4)
             out[name] = secs
         except Exception:  # noqa: BLE001 — attribution is best-effort
             continue
@@ -226,9 +170,9 @@ def main() -> None:
     # this script.
     side = {
         "contention_spread_per_query": per_spread,
-        # Single-run per-section wall times for composite slots
-        # (union-branch pruning via the discriminator column) —
-        # attribution only; medians in "queries" remain the headline.
+        # Single-run per-section wall times for composite slots (each
+        # section's own DataFrame counted) — attribution only; medians
+        # in "queries" remain the headline.
         "sections": sections,
     }
     write_side_file(

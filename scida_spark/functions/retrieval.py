@@ -221,7 +221,7 @@ def bm25_topk_from_index(
     # query-term-filtered shuffle, cheap — instead of pinning the whole
     # result with persist + localCheckpoint at construction time, which
     # made every caller pay the full BM25 cost even when its plan was
-    # later pruned away, e.g. by bench's per-section filters).
+    # later pruned away).
     df_rows = {
         r["tok"]: int(r["df"])
         for r in postings.groupBy("tok")

@@ -15,7 +15,7 @@ from scida_spark.functions import dedup as D
 from scida_spark.functions import multimodal as M
 from scida_spark.functions import similarity as SIM
 from scida_spark.functions import text as TX
-from scida_spark.queries import DEC, dsum, query
+from scida_spark.queries import DEC, composite, dsum, query
 from scida_spark.tables import table, table_fingerprint
 from scida_spark.session import local_df
 from scida_spark.streaming import storefs
@@ -110,15 +110,16 @@ _SLOT_DF_MEMO: dict = {}
 
 
 def _memo_slot(*tables: str):
-    """Memoize a registry slot's CONSTRUCTED DataFrame per
+    """Memoize a registry slot's CONSTRUCTED DataFrame (a composite
+    slot's section dict, whose union ``composite`` then reuses) per
     (SparkSession, sf_dir, input-table content fingerprints) — r14,
     closes r13 VERDICT #1. A composite slot like sim_topk is a pure
-    function of its input tables, but building its 24-branch union
+    function of its input tables, but building its sections
     costs ~10k py4j round trips (~9-14 s of driver-side Python at
     sf0.1 — ~60% of the recorded slot median, and a CONSTANT: the same
     chatter at 100 TB). A serving tier constructs the plan once and
-    executes it many times; the bench's 5 samples and the section
-    probes now do the same. The memo holds the lazy plan object only
+    executes it many times; the bench's 5 samples and its section
+    timings now do the same. The memo holds the lazy plan object only
     — nothing is collected at construction, the first execution still
     runs the full distributed plan, and the driver's oracle (one call
     per process) is unaffected. Keyed by content fingerprint so
@@ -594,7 +595,7 @@ def _fs_oracle_section() -> str:
     """
 
 
-@query(
+@composite(
     "dedup_signature_pairs",
     """
     WITH tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS w
@@ -787,9 +788,9 @@ def dedup_signature_pairs(spark, sf_dir):
     sizes = clique.groupBy("rep").agg(F.count("*").alias("sz"))
     # The recall verdict is computed LAZILY inside the plan (two 1-row
     # aggregates cross-joined) — no eager .first() jobs at slot
-    # construction, so bench's per-section filter on `method` prunes
-    # the whole exact-baseline + banding subtree out of the simhash
-    # and fuzzy sections (same rewrite as sim_topk's ANN certs).
+    # construction, so only the minhash_recall section runs the
+    # exact-baseline + banding subtree (same rewrite as sim_topk's ANN
+    # certs).
     stats_df = (
         exact.join(cands, ["doc_a", "doc_b"], "left")
         .join(sizes.select(F.col("rep").alias("doc_a"), F.col("sz").alias("_sa")), "doc_a")
@@ -985,8 +986,8 @@ def dedup_signature_pairs(spark, sf_dir):
     # shingle_hash_table's blake2b-of-string ids — mixing the two
     # families would silently produce zero excerpt↔source candidates.
     # lazy checkpoint: materializes on first use and is shared within
-    # one execution, but slot CONSTRUCTION runs no job and bench's
-    # per-section probes on other methods never pay the excerpt kernel
+    # one execution, but slot CONSTRUCTION runs no job and the other
+    # methods' sections never pay the excerpt kernel
     ex_sig = (
         D.signature_table(ex8, "doc_id", "text", n=3)
         .select("doc", "sh")
@@ -1195,19 +1196,20 @@ def dedup_signature_pairs(spark, sf_dir):
                 F.lit(1.0).alias("score"),
             )
         )
-    return (
-        sh.unionAll(cert)
-        .unionAll(fz)
-        .unionAll(pp)
-        .unionAll(lk)
-        .unionAll(ct)
-        .unionAll(esub)
-        .unionAll(esubs)
-        .unionAll(esubp)
-    )
+    return {
+        "simhash": sh,
+        "minhash_recall": cert,
+        "fuzzy": fz,
+        "ppjoin": pp,
+        "linkage": lk,
+        "containment": ct,
+        "esub": esub,
+        "esubs": esubs,
+        "esubp": esubp,
+    }
 
 
-@query(
+@composite(
     "dedup_contamination",
     """
     WITH tok AS (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
@@ -1473,11 +1475,12 @@ def dedup_contamination(spark, sf_dir):
         F.col("_nc").cast("long").alias("n"),
         F.col("shares_chunk").alias("flag"),
     )
-    return (
-        contam.unionAll(span_rows)
-        .unionAll(esubcut_rows)
-        .unionAll(cdc_rows)
-    )
+    return {
+        "contam": contam,
+        "span": span_rows,
+        "esubcut": esubcut_rows,
+        "cdc": cdc_rows,
+    }
 
 
 @query(
@@ -1528,7 +1531,7 @@ def dedup_keep_first_latest(spark, sf_dir):
     )
 
 
-@query(
+@composite(
     "stream_dedup_keys",
     """
     SELECT 'stream' AS section, CAST(user_id AS VARCHAR) AS k1, event_type AS k2
@@ -2159,17 +2162,18 @@ def stream_dedup_keys(spark, sf_dir):
         gate_route_rows = (
             rows if gate_route_rows is None else gate_route_rows.unionAll(rows)
         )
-    return (
-        stream_rows.unionAll(ingest_rows)
-        .unionAll(takedown_rows)
-        .unionAll(takedown2_rows)
-        .unionAll(ingest2_rows)
-        .unionAll(gate_report_rows)
-        .unionAll(gate_route_rows)
-        .unionAll(cc_rows)
-        .unionAll(driftgate_report_rows)
-        .unionAll(driftgate_route_rows)
-    )
+    return {
+        "stream": stream_rows,
+        "ingest": ingest_rows,
+        "takedown": takedown_rows,
+        "takedown2": takedown2_rows,
+        "ingest2": ingest2_rows,
+        "gate_report": gate_report_rows,
+        "gate_route": gate_route_rows,
+        "cclabel": cc_rows,
+        "driftgate_report": driftgate_report_rows,
+        "driftgate_route": driftgate_route_rows,
+    }
 
 
 def _split_thresholds_r6() -> list[int]:
@@ -2492,11 +2496,11 @@ def text_train_eval_split(spark, sf_dir):
     )
 
 
-@query(
+@composite(
     "sketch_distinct_rollup",
     """
     -- outer wrapper (r12): the engine leads every union branch with a
-    -- literal section column (bench-attribution pruning); the oracle
+    -- literal section column (one value per section); the oracle
     -- derives the identical value from the kind prefix (one special
     -- case: kll_p50/kll_p95 share the 'kll' branch).
     SELECT CASE WHEN kind LIKE 'kll_%' THEN 'kll'
@@ -3657,36 +3661,32 @@ def sketch_distinct_rollup(spark, sf_dir):
         (F.col("n_users") <= F.col("cohort_size")).alias("within_tol"),
     )
 
-    # Each branch leads with a LITERAL section column (r12): bench's
-    # per-section probes filter on it, and a literal predicate
-    # constant-folds to false inside non-matching branches so
-    # PropagateEmptyRelation prunes them — the per-section numbers are
-    # then TRUE branch marginals. (Filtering on the data-dependent
-    # `kind` prefix could not prune concat(lit, col) branches, so every
-    # r11 probe silently executed nearly the whole 16-section union —
-    # the "scd2 = 6.99 s" reading was the shared union cost, not scd2;
-    # see SCALE.md.)
-    def _sec(name, rows):
-        return rows.select(F.lit(name).alias("section"), "*")
-
-    return (
-        _sec("hll", hll_rows)
-        .unionAll(_sec("kll", kll_rows))
-        .unionAll(_sec("theta", theta_rows))
-        .unionAll(_sec("facet", facet_rows))
-        .unionAll(_sec("rollup", rollup_rows))
-        .unionAll(_sec("res", res_rows))
-        .unionAll(_sec("freq", freq_rows))
-        .unionAll(_sec("cms", cms_rows))
-        .unionAll(_sec("dq", dq_rows))
-        .unionAll(_sec("diff", diff_rows))
-        .unionAll(_sec("scd2", scd2_rows))
-        .unionAll(_sec("drift", drift_rows))
-        .unionAll(_sec("auc", auc_rows))
-        .unionAll(_sec("iso", iso_rows))
-        .unionAll(_sec("funnel", funnel_rows))
-        .unionAll(_sec("cohort", cohort_rows))
-    )
+    # Each section's rows lead with a LITERAL ``section`` column (the
+    # oracle emits the same literal), so a reader of the slot's result
+    # tells the sections apart without parsing the data-dependent
+    # ``kind`` prefix.
+    sections = {
+        "hll": hll_rows,
+        "kll": kll_rows,
+        "theta": theta_rows,
+        "facet": facet_rows,
+        "rollup": rollup_rows,
+        "res": res_rows,
+        "freq": freq_rows,
+        "cms": cms_rows,
+        "dq": dq_rows,
+        "diff": diff_rows,
+        "scd2": scd2_rows,
+        "drift": drift_rows,
+        "auc": auc_rows,
+        "iso": iso_rows,
+        "funnel": funnel_rows,
+        "cohort": cohort_rows,
+    }
+    return {
+        name: rows.select(F.lit(name).alias("section"), "*")
+        for name, rows in sections.items()
+    }
 
 
 @query(
@@ -3808,7 +3808,7 @@ _COSINE_ORACLE = """
     """
 
 
-@query(
+@composite(
     "sim_neardup_pairs",
     """
     WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -3930,7 +3930,7 @@ def sim_neardup_pairs(spark, sf_dir):
         F.col("cluster").cast("long").alias("id_b"),
         F.col("dist2").cast("double").alias("sim_r"),
     )
-    return pairs.unionAll(km)
+    return {"pairs": pairs, "kmeans": km}
 
 
 # Mean-recall floors for the ANN certification rows: conservative
@@ -4308,34 +4308,26 @@ _MMR_K = 5
 _MMR_LAM = 0.7
 
 
-@query(
+def _cert_oracle(method: str) -> str:
+    """Oracle row of a sim_topk certification section: the slot emits
+    one placeholder row per method whose ``ok`` verdict it computes,
+    and the oracle pins that verdict TRUE."""
+    return f"""
+    SELECT '{method}' AS method, CAST(-1 AS BIGINT) AS query_id,
+           CAST(-1 AS BIGINT) AS cand_id, CAST(0.0 AS DOUBLE) AS sim_r,
+           CAST(0 AS INT) AS rank, TRUE AS ok"""
+
+
+@composite(
     "sim_topk",
     _COSINE_ORACLE.replace(
         "SELECT query_id, cand_id, ROUND(sim, 6) AS sim_r, rank",
         "SELECT 'exact' AS method, query_id, cand_id, ROUND(sim, 6) AS sim_r, rank,\n"
         "           TRUE AS ok",
     )
+    + "\n    UNION ALL"
+    + "\n    UNION ALL".join(_cert_oracle(m) for m in _ANN_RECALL_FLOORS)
     + """
-    UNION ALL
-    SELECT 'lsh' AS method, CAST(-1 AS BIGINT) AS query_id,
-           CAST(-1 AS BIGINT) AS cand_id, CAST(0.0 AS DOUBLE) AS sim_r,
-           CAST(0 AS INT) AS rank, TRUE AS ok
-    UNION ALL
-    SELECT 'ivf' AS method, CAST(-1 AS BIGINT) AS query_id,
-           CAST(-1 AS BIGINT) AS cand_id, CAST(0.0 AS DOUBLE) AS sim_r,
-           CAST(0 AS INT) AS rank, TRUE AS ok
-    UNION ALL
-    SELECT 'pq' AS method, CAST(-1 AS BIGINT) AS query_id,
-           CAST(-1 AS BIGINT) AS cand_id, CAST(0.0 AS DOUBLE) AS sim_r,
-           CAST(0 AS INT) AS rank, TRUE AS ok
-    UNION ALL
-    SELECT 'sq8' AS method, CAST(-1 AS BIGINT) AS query_id,
-           CAST(-1 AS BIGINT) AS cand_id, CAST(0.0 AS DOUBLE) AS sim_r,
-           CAST(0 AS INT) AS rank, TRUE AS ok
-    UNION ALL
-    SELECT 'ivfpq' AS method, CAST(-1 AS BIGINT) AS query_id,
-           CAST(-1 AS BIGINT) AS cand_id, CAST(0.0 AS DOUBLE) AS sim_r,
-           CAST(0 AS INT) AS rank, TRUE AS ok
     UNION ALL
     -- sq8c: every SQ8 code value-certified. Codes are
     -- clamp(floor(((v-lo)*255)/(hi-lo))) over per-dim corpus min/max;
@@ -4402,16 +4394,10 @@ _MMR_LAM = 0.7
     # so its oracle IS the rm3 oracle — the bm25s/qls convention.
     + "\n    UNION ALL\n"
     + _RM3_ORACLE_SECTION.replace("'rm3'", "'rm3s'")
-    + """
-    UNION ALL
-    SELECT 'idxcompact' AS method, CAST(-1 AS BIGINT) AS query_id,
-           CAST(-1 AS BIGINT) AS cand_id, CAST(0.0 AS DOUBLE) AS sim_r,
-           CAST(0 AS INT) AS rank, TRUE AS ok
-    UNION ALL
-    SELECT 'ivfs' AS method, CAST(-1 AS BIGINT) AS query_id,
-           CAST(-1 AS BIGINT) AS cand_id, CAST(0.0 AS DOUBLE) AS sim_r,
-           CAST(0 AS INT) AS rank, TRUE AS ok
-    """
+    + "\n    UNION ALL"
+    + _cert_oracle("idxcompact")
+    + "\n    UNION ALL"
+    + _cert_oracle("ivfs")
     + """
     UNION ALL
     SELECT 'knn' AS method, query_id, CAST(pred AS BIGINT) AS cand_id,
@@ -4678,7 +4664,7 @@ def sim_topk(spark, sf_dir):
             centroids=_ivf_cent, codebooks=_pq_books,
         ),
     }
-    cert_dfs = []
+    cert = {}
     ex_pairs = exact.select("query_id", "cand_id")
     for method, res in ann.items():
         hits = res.select("query_id", "cand_id").join(
@@ -4687,9 +4673,8 @@ def sim_topk(spark, sf_dir):
         # recall@10 per query = |ann ∩ exact| / |exact|; the mean
         # across queries is compared to the pinned floor LAZILY inside
         # the plan (a 1-row aggregate per method) — no driver collect
-        # at construction, so bench's per-section filter on `method`
-        # prunes the other methods' whole subtrees instead of paying
-        # three eager recall jobs in every section.
+        # at construction, so building the slot pays no recall job and
+        # each method's section executes only its own verdict.
         per_q = (
             ex_pairs.groupBy("query_id")
             .agg(F.count("*").alias("n_exact"))
@@ -4702,22 +4687,17 @@ def sim_topk(spark, sf_dir):
                 (F.coalesce("n_hit", F.lit(0)) / F.col("n_exact")).alias("recall")
             )
         )
-        cert_dfs.append(
-            per_q.agg(F.avg("recall").alias("_mr")).select(
-                F.lit(method).alias("method"),
-                F.lit(-1).cast("long").alias("query_id"),
-                F.lit(-1).cast("long").alias("cand_id"),
-                F.lit(0.0).alias("sim_r"),
-                F.lit(0).alias("rank"),
-                (
-                    F.coalesce(F.col("_mr"), F.lit(0.0))
-                    >= F.lit(_ANN_RECALL_FLOORS[method])
-                ).alias("ok"),
-            )
+        cert[method] = per_q.agg(F.avg("recall").alias("_mr")).select(
+            F.lit(method).alias("method"),
+            F.lit(-1).cast("long").alias("query_id"),
+            F.lit(-1).cast("long").alias("cand_id"),
+            F.lit(0.0).alias("sim_r"),
+            F.lit(0).alias("rank"),
+            (
+                F.coalesce(F.col("_mr"), F.lit(0.0))
+                >= F.lit(_ANN_RECALL_FLOORS[method])
+            ).alias("ok"),
         )
-    cert_rows = cert_dfs[0]
-    for _cd in cert_dfs[1:]:
-        cert_rows = cert_rows.unionAll(_cd)
     from scida_spark.functions.retrieval import (
         bm25_topk,
         query_likelihood_topk,
@@ -4741,7 +4721,7 @@ def sim_topk(spark, sf_dir):
     # LAZY checkpoints (r13): bm25_raw and ql_raw each feed TWO
     # consumers (their own section + rrf's fusion) — without the
     # checkpoint the full-slot run scans the corpus postings 2x per
-    # ranker (the rrf section probe measured 7.26 s at sf0.1, almost
+    # ranker (the rrf section measured 7.26 s at sf0.1, almost
     # all re-derivation). The results are queries x k rows.
     bm25_raw = bm25_topk(
         docs, _BM25_QUERIES, k=10, k1=_BM25_K1, b=_BM25_B, corpus_stats=_cs
@@ -5221,24 +5201,25 @@ def sim_topk(spark, sf_dir):
     ireval_rows = ireval_parts[0]
     for _p in ireval_parts[1:]:
         ireval_rows = ireval_rows.unionAll(_p)
-    return (
-        ex_rows.unionAll(cert_rows)
-        .unionAll(bm25)
-        .unionAll(ql_rows)
-        .unionAll(rrf_rows)
-        .unionAll(rm3_rows)
-        .unionAll(bm25s_rows)
-        .unionAll(qls_rows)
-        .unionAll(rm3s_rows)
-        .unionAll(idxcompact_rows)
-        .unionAll(ivfs_rows)
-        .unionAll(knn_rows)
-        .unionAll(hn_rows)
-        .unionAll(srp_rows)
-        .unionAll(sq8c_rows)
-        .unionAll(mmr_rows)
-        .unionAll(ireval_rows)
-    )
+    return {
+        "exact": ex_rows,
+        **cert,
+        "bm25": bm25,
+        "ql": ql_rows,
+        "rrf": rrf_rows,
+        "rm3": rm3_rows,
+        "bm25s": bm25s_rows,
+        "qls": qls_rows,
+        "rm3s": rm3s_rows,
+        "idxcompact": idxcompact_rows,
+        "ivfs": ivfs_rows,
+        "knn": knn_rows,
+        "hardneg": hn_rows,
+        "srp": srp_rows,
+        "sq8c": sq8c_rows,
+        "mmr": mmr_rows,
+        "ireval": ireval_rows,
+    }
 
 
 # --------------------------------------------------------------------------
@@ -5670,7 +5651,7 @@ def _url_oracle_section() -> str:
     """
 
 
-@query(
+@composite(
     "text_quality_lang",
     f"""
     WITH t AS (
@@ -6663,33 +6644,34 @@ def text_quality_lang(spark, sf_dir):
         F.col("c_ab").alias("n"),
         F.col("pmi").alias("sum_score"),
     )
-    return (
-        q.unionAll(lid)
-        .unionAll(lm_rows)
-        .unionAll(lm2_rows)
-        .unionAll(ccnet_rows)
-        .unionAll(ld_rows)
-        .unionAll(bpe_rt)
-        .unionAll(bpe_ct)
-        .unionAll(bpe_lit)
-        .unionAll(exp_rows)
-        .unionAll(pk_rows)
-        .unionAll(cmp_rows)
-        .unionAll(ch_rows)
-        .unionAll(tfidf_rows)
-        .unionAll(tp_seq_rows)
-        .unionAll(tp_shard_rows)
-        .unionAll(pii_lit)
-        .unionAll(pii_corpus)
-        .unionAll(url_lits)
-        .unionAll(urldom_lits)
-        .unionAll(urlcorp_rows)
-        .unionAll(urldom_corp)
-        .unionAll(domcap_rows)
-        .unionAll(uninorm_rows)
-        .unionAll(phrase_rows)
-        .unionAll(colloc_rows)
-    )
+    return {
+        "quality": q,
+        "lang_id": lid,
+        "lm_nll": lm_rows,
+        "lm2_nll": lm2_rows,
+        "ccnet": ccnet_rows,
+        "line_dedup": ld_rows,
+        "bpe_rt": bpe_rt,
+        "bpe_ct": bpe_ct,
+        "bpe_lit": bpe_lit,
+        "export": exp_rows,
+        "packing": pk_rows,
+        "compact": cmp_rows,
+        "chunk": ch_rows,
+        "tfidf": tfidf_rows,
+        "tokpack_seq": tp_seq_rows,
+        "tokpack_shard": tp_shard_rows,
+        "pii_lit": pii_lit,
+        "pii_corpus": pii_corpus,
+        "url": url_lits,
+        "urldom_lit": urldom_lits,
+        "urlcorp": urlcorp_rows,
+        "urldom_corp": urldom_corp,
+        "domcap": domcap_rows,
+        "uninorm": uninorm_rows,
+        "phrase": phrase_rows,
+        "colloc": colloc_rows,
+    }
 
 
 @query(
@@ -6742,7 +6724,7 @@ def text_repetition_filter(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-@query(
+@composite(
     "multimodal_features",
     """
     SELECT 'features' AS section, CAST(doc_id AS BIGINT) AS media_id,
@@ -6907,8 +6889,8 @@ def multimodal_features(spark, sf_dir):
     # as the sim_topk / minhash_recall certs): pair-set == planted-set
     # is "symmetric difference is empty" (exceptAll both ways), and the
     # three counts (docs, pairs, mismatches) combine via union + max —
-    # no driver collect at construction, so bench's per-section filter
-    # isolates each modality's encode->hash->block pipeline.
+    # no driver collect at construction, so each modality's section
+    # runs only its own encode->hash->block pipeline.
     def _lazy_cert(section: str, found_df):
         # pair-set == planted-set via SIGNED-COUNT aggregation (r15,
         # same rewrite as sim_topk's idxcompact): the old exceptAll
@@ -6956,12 +6938,12 @@ def multimodal_features(spark, sf_dir):
             F.lit("").alias("fingerprint"),
         )
 
-    cert = (
-        _lazy_cert("phash", pairs_df)
-        .unionAll(_lazy_cert("phash_png", png_pairs_df))
-        .unionAll(_lazy_cert("audiofp", apairs_df))
-    )
-    return base_rows.unionAll(cert)
+    return {
+        "features": base_rows,
+        "phash": _lazy_cert("phash", pairs_df),
+        "phash_png": _lazy_cert("phash_png", png_pairs_df),
+        "audiofp": _lazy_cert("audiofp", apairs_df),
+    }
 
 
 # --------------------------------------------------------------------------
@@ -7002,7 +6984,7 @@ def stream_session_windows(spark, sf_dir):
     )
 
 
-@query(
+@composite(
     "stream_batch_windows",
     """
     SELECT 'tumbling' AS kind,
@@ -7265,9 +7247,15 @@ def stream_batch_windows(spark, sf_dir):
         F.col("rolling_sum").cast("double").alias("sum_value"),
     )
 
-    return tum.unionAll(sli).unionAll(ses).unionAll(rs_rows).unionAll(
-        ff_rows
-    ).unionAll(ip_rows).unionAll(anom_rows)
+    return {
+        "tumbling": tum,
+        "sliding": sli,
+        "session": ses,
+        "resample": rs_rows,
+        "ffill": ff_rows,
+        "interp": ip_rows,
+        "anom": anom_rows,
+    }
 
 
 @query(
@@ -7509,7 +7497,7 @@ def dedup_cc_clusters(spark, sf_dir):
     )
 
 
-@query(
+@composite(
     "dedup_cleaned_corpus",
     """
     WITH RECURSIVE sh AS (
@@ -7750,6 +7738,6 @@ def dedup_cleaned_corpus(spark, sf_dir):
         ],
         "section string, id long, meta string",
     )
-    return text_rows.unionAll(sem_rows).unionAll(cert)
+    return {"text": text_rows, "semantic": sem_rows, "clustered": cert}
 
 

@@ -21,7 +21,7 @@ from scida_spark.operators import catalog as C
 from scida_spark.operators import histogram as H
 from scida_spark.operators import spatial as S
 from scida_spark.operators.uid import with_uid_by_order
-from scida_spark.queries import DEC, dsum, query
+from scida_spark.queries import DEC, composite, dsum, query
 from scida_spark.queries_pipeline import _memo_slot
 from scida_spark.streaming import storefs
 from scida_spark.tables import table, table_fingerprint
@@ -118,7 +118,7 @@ def scida_groupid_rangejoin(spark, sf_dir):
     return out.select("uid", F.col("GroupID").alias("group_id"))
 
 
-@query(
+@composite(
     "scida_groupid_assign",
     f"""
     WITH li AS (
@@ -156,7 +156,7 @@ def scida_groupid_assign(spark, sf_dir):
     b = scida_groupid_rangejoin(spark, sf_dir).select(
         F.lit("rangejoin").alias("method"), "uid", "group_id"
     )
-    return a.unionAll(b)
+    return {"searchsorted": a, "rangejoin": b}
 
 
 @query(
@@ -559,7 +559,7 @@ _PBC_LAYOUT_ORACLE = "\nUNION ALL\n".join(
 )
 
 
-@query("scida_pbc_cutout_layouts", _PBC_LAYOUT_ORACLE)
+@composite("scida_pbc_cutout_layouts", _PBC_LAYOUT_ORACLE)
 def scida_pbc_cutout_layouts(spark, sf_dir):
     """The PBC cutout over BOTH ingest-time spatial layouts in one
     driver-attested result (merged r7 slots scida_pbc_cutout_pruned +
@@ -584,10 +584,10 @@ def scida_pbc_cutout_layouts(spark, sf_dir):
     zorder = scida_zorder_cutout(spark, sf_dir).select(
         F.lit("zorder").alias("layout"), "n_inside", "sum_x", "sum_y"
     )
-    return cells.unionAll(zorder)
+    return {"cells": cells, "zorder": zorder}
 
 
-@query(
+@composite(
     "scida_histograms",
     """
     SELECT '2d' AS kind,
@@ -641,7 +641,7 @@ def scida_histograms(spark, sf_dir):
         F.col("count"),
         F.col("weight_sum").cast("double").alias("weight_sum"),
     )
-    return h2.unionAll(h1)
+    return {"2d": h2, "1d": h1}
 
 
 def _code_mass_to_msun() -> float:
@@ -833,7 +833,7 @@ def scida_grouped_fluent(spark, sf_dir):
     )
 
 
-@query(
+@composite(
     "scida_grouped",
     f"""
     SELECT 'fluent' AS variant, CAST(l_orderkey AS BIGINT) AS GroupID,
@@ -875,7 +875,7 @@ def scida_grouped(spark, sf_dir):
         F.col("price_range").cast("double").alias("agg2"),
         F.lit(0.0).alias("agg3"),
     )
-    return fl.unionAll(ap)
+    return {"fluent": fl, "apply": ap}
 
 
 @query(

@@ -1,5 +1,6 @@
 """bench.py's side file is best-effort: a failed write must not stop
-the contract line from printing."""
+the contract line from printing. Its section timings list exactly the
+sections the registry gives for each composite slot."""
 
 import json
 
@@ -18,3 +19,19 @@ def test_unserialisable_value_does_not_raise(tmp_path):
 
 def test_unwritable_path_does_not_raise(tmp_path):
     bench.write_side_file({}, str(tmp_path / "missing" / "s.json"))
+
+
+def test_section_timer_reports_each_section_of_a_composite():
+    from types import SimpleNamespace
+
+    class Rows:
+        def count(self):
+            return 0
+
+    reg = {
+        "two": SimpleNamespace(sections=lambda spark, sf: {"first": Rows(), "second": Rows()}),
+        "plain": SimpleNamespace(sections=None),
+    }
+    got = bench._section_timings(None, reg, "sf", ["two", "plain"], {})
+    assert list(got) == ["two"]
+    assert list(got["two"]) == ["first", "second"]

@@ -1,20 +1,20 @@
 """Every top-level def and constant in ``scida_spark/`` is reached from a non-test root.
 
-The roots are the ``@query`` registry slots, every module-level statement
-of the package (imports, module docstrings and constants excluded),
-``bench.py``, ``__spark_entry__.py``, ``tools/`` and ``perfbench/`` (its
-tests excluded). Names resolve by module. A bare name reaches its own
-module's def of that name, or what an import in that module bound the name
-to; ``M.f``, where ``M`` denotes a module, reaches ``f`` in ``M``; an
-attribute on any other object reaches no top-level def, because a method is
-reached with its class. An import binds a name but reaches nothing by
-itself. A string reaches only when it is exactly the dotted path of a module
-inside the package (``"scida_spark._pydaemon"``): then it reaches every def
-in that module. So a def that only a docstring or ``__all__`` names is
-unreached. A constant is a top-level assignment to a plain name; its
-right-hand side reaches names only when the constant itself is reached,
-and dunders (``__all__``, ``__version__``) are roots. A reached class
-reaches its whole body and its subclasses (``DatasetType`` registers
+The roots are the ``@query`` and ``@composite`` registry slots, every
+module-level statement of the package (imports, module docstrings and
+constants excluded), ``bench.py``, ``__spark_entry__.py``, ``tools/`` and
+``perfbench/`` (its tests excluded). Names resolve by module. A bare name
+reaches its own module's def of that name, or what an import in that module
+bound the name to; ``M.f``, where ``M`` denotes a module, reaches ``f`` in
+``M``; an attribute on any other object reaches no top-level def, because a
+method is reached with its class. An import binds a name but reaches
+nothing by itself. A string reaches only when it is exactly the dotted path
+of a module inside the package (``"scida_spark._pydaemon"``): then it
+reaches every def in that module. So a def that only a docstring or
+``__all__`` names is unreached. A constant is a top-level assignment to a
+plain name; its right-hand side reaches names only when the constant itself
+is reached, and dunders (``__all__``, ``__version__``) are roots. A reached
+class reaches its whole body and its subclasses (``DatasetType`` registers
 subclasses as they are defined). Imports anywhere in a module bind for the
 whole module, so the walk still over-approximates what is live: a def it
 misses is called by nothing but tests.
@@ -72,7 +72,7 @@ def _root_files(repo: Path) -> list[Path]:
 
 def _is_query_slot(node) -> bool:
     return any(
-        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "query"
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id in ("query", "composite")
         for d in node.decorator_list
     )
 

@@ -113,7 +113,7 @@ def test_histogram_inexact_width_clips_to_last_bin(spark):
     assert got[2] == 2
 
 
-def test_memo_slot_caches_and_invalidates(spark, tmp_path):
+def test_memo_slot_caches_and_invalidates(spark, tmp_path, monkeypatch):
     """r14: _memo_slot returns the SAME lazy DataFrame per (session,
     sf_dir, content fingerprint) and invalidates when the input
     table's files change (driver-regenerated testdata)."""
@@ -143,3 +143,21 @@ def test_memo_slot_caches_and_invalidates(spark, tmp_path):
     os.utime(p)
     c = slot(spark, str(sf))
     assert c is not a and len(calls) == 2
+
+    # A memoised composite: the memo hands back the same section dict,
+    # and the registry then returns the same union object, so a warm
+    # serve does not rebuild the union.
+    from scida_spark import queries
+
+    monkeypatch.setattr(queries, "_REGISTRY", {})
+
+    @queries.composite("memo_composite", None)
+    @_memo_slot("documents")
+    def comp(spark, sf_dir):
+        calls.append(sf_dir)
+        return {"a": spark.range(2), "b": spark.range(3)}
+
+    u = comp(spark, str(sf))
+    assert comp(spark, str(sf)) is u and len(calls) == 3 and u.count() == 5
+    sections = queries._REGISTRY["memo_composite"].sections
+    assert sections(spark, str(sf)) is sections(spark, str(sf))

@@ -1,13 +1,15 @@
 """Local replica of the driver's correctness gate: run every queries()
 entry on Spark and its oracle_sql() on DuckDB over the same parquet,
 compare row count, column names, and values (order-insensitive).
+Every PASS and ok? line ends with ``sha256=<16 hex>`` of the normalized
+Spark result, so two trees can be compared slot by slot.
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
-import math
+import hashlib
 import sys
 import time
 
@@ -32,6 +34,12 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
         if df[c].dtype == object:
             df[c] = df[c].astype(str)
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+
+
+def result_hash(df: pd.DataFrame) -> str:
+    """First 16 hex digits of the sha256 of ``normalize(df)`` as CSV:
+    independent of row and column order."""
+    return hashlib.sha256(normalize(df).to_csv(index=False).encode()).hexdigest()[:16]
 
 
 def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
@@ -87,7 +95,7 @@ def main() -> int:
             failures += 1
             continue
         if name not in oracles:
-            print(f"ok?   {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s)")
+            print(f"ok?   {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s) sha256={result_hash(sdf)}")
             if len(sdf) == 0:
                 print(f"      WARNING: zero rows")
             continue
@@ -104,7 +112,7 @@ def main() -> int:
             for i in issues:
                 print(f"      {i}")
         else:
-            print(f"PASS  {name} ({len(sdf)} rows, {time.time()-t0:.1f}s)")
+            print(f"PASS  {name} ({len(sdf)} rows, {time.time()-t0:.1f}s) sha256={result_hash(sdf)}")
     print(f"\n{failures} failures")
     return 1 if failures else 0
 

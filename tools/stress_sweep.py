@@ -11,12 +11,16 @@ protocol from SCALE.md: sequential per-slot repeats confound JIT/page
 group; a reaper thread cancels the group at the cap so one pathological
 slot cannot eat the sweep budget (cancelled slots report ``CAPPED``).
 
-Emits one JSON line per (slot, pass) and a final summary line.
+Emits one JSON line per (slot, pass) and a final ``SUMMARY`` line:
+per slot, every pass's result plus the min and median wall over the
+warm passes (pass >= 1). The min is the noise-robust number on a shared
+host (contention only ever adds time).
 """
 
 from __future__ import annotations
 
 import json
+import statistics
 import sys
 import threading
 import time
@@ -83,7 +87,15 @@ def main() -> None:
             finally:
                 done.set()
                 sc.setJobGroup("", "")
-    print("SUMMARY " + json.dumps(results), flush=True)
+    summary = {}
+    for name, r in results.items():
+        warm = [x for x in r[1:] if isinstance(x, float)]
+        summary[name] = {
+            "passes": r,
+            "warm_min": min(warm, default=None),
+            "warm_median": statistics.median(warm) if warm else None,
+        }
+    print("SUMMARY " + json.dumps(summary), flush=True)
 
 
 if __name__ == "__main__":
