@@ -9,7 +9,25 @@ Public surface:
   * ``operators`` / ``functions`` / ``streaming`` subpackages
 """
 
+import sys
+
 from scida_spark.session import ensure_session_defaults, get_spark
+
+# In a Python worker forked from a Spark daemon, install the stat-checked
+# zipimport invalidation (see _pydaemon.py). This covers the Python Data
+# Source planner workers, which Spark forks from the stock pyspark.daemon
+# and which import this package when they unpickle an npy or zarr source.
+# The guard reads __main__ rather than PYTHON_WORKER_FACTORY_SECRET: only
+# daemon-forked workers are reused across calls, where the patch pays,
+# and the variable also leaks into processes a worker spawns. The
+# driver's __main__ is never a daemon, so its zipimport stays stock.
+if getattr(getattr(sys.modules.get("__main__"), "__spec__", None), "name", None) in (
+    "pyspark.daemon",
+    "scida_spark._pydaemon",
+):
+    from scida_spark import _pydaemon
+
+    _pydaemon.install()
 
 __all__ = ["get_spark", "ensure_session_defaults", "load", "Dataset"]
 __version__ = "0.1.0"

@@ -1,11 +1,20 @@
-"""PySpark worker daemon for ``get_spark`` sessions.
+"""PySpark worker daemon for ``get_spark`` sessions, and the
+stat-checked ``zipimporter.invalidate_caches`` it installs.
 
 Spark starts it as ``python -m scida_spark._pydaemon`` (the session
 sets ``spark.python.daemon.module``). It installs the stat-checked
 ``zipimporter.invalidate_caches`` below in the daemon process and then
 runs the stock ``pyspark.daemon.manager()``, so every worker the daemon
-forks inherits the patch. Nothing here runs on import, so the driver
-process's ``zipimport`` is never touched. Uses only the stdlib.
+forks inherits the patch.
+
+``install()`` is idempotent and has a second caller: importing the
+``scida_spark`` package inside a worker forked from a daemon (stock
+``pyspark.daemon`` included) installs it there. That covers the Python
+Data Source planner workers, which Spark always starts from the stock
+``pyspark.daemon`` whatever ``spark.python.daemon.module`` says, and
+the workers of a session not built by ``get_spark``. Nothing here runs
+on import, so the driver process's ``zipimport`` is never touched.
+Uses only the stdlib.
 """
 
 from __future__ import annotations
@@ -51,8 +60,9 @@ def stat_checked(original):
 
 
 def install() -> bool:
-    """Patch ``zipimport.zipimporter.invalidate_caches`` in THIS process.
-    Returns whether it patched.
+    """Patch ``zipimport.zipimporter.invalidate_caches`` in THIS process,
+    once: a second call leaves the patch in place. Returns whether the
+    process's ``zipimport`` is stat-checked after the call.
 
     PySpark's worker calls ``importlib.invalidate_caches()`` once per task
     (``pyspark/worker_util.py::setup_spark_files``). Before CPython 3.13
@@ -67,7 +77,10 @@ def install() -> bool:
     if sys.version_info >= (3, 13):
         return False
     cls = zipimport.zipimporter
-    cls.invalidate_caches = stat_checked(cls.invalidate_caches)
+    # Told by the wrapper's name, not by a module flag: the daemon runs
+    # this file as __main__, and the package import loads a second copy.
+    if cls.invalidate_caches.__qualname__ != "stat_checked.<locals>.invalidate_caches":
+        cls.invalidate_caches = stat_checked(cls.invalidate_caches)
     return True
 
 

@@ -20,6 +20,18 @@ PySpark's per-task ``importlib.invalidate_caches()`` makes each of a
 worker's 16 zipimporters re-read its whole archive directory: 160-240
 ms per task measured on a 4-core host, which took a traced benchmark's
 gas read to 11-14 s of worker start-up against 2-4 s of run time.
+
+The Python Data Source planner workers (schema lookup, filter pushdown
+and read planning for the npy and zarr sources) always start from the
+stock ``pyspark.daemon``: Spark starts planners with its hard-coded
+default daemon module, whatever ``spark.python.daemon.module`` says.
+Importing the ``scida_spark`` package inside any daemon-forked worker
+installs the same patch (see ``scida_spark/__init__.py``), and a planner
+imports it when it unpickles a source, so every later call in that
+reused worker is stat-checked. A traced benchmark run of 10 uid-range
+selections per pass (4-core host) spent 2.1 s per pass in Catalyst
+planning before and 0.37 s after. The same hook patches the workers of
+a session not built by ``get_spark`` once they import ``scida_spark``.
 """
 
 from __future__ import annotations
@@ -120,9 +132,14 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     runtime-mutable SQL confs.
 
     ``spark.python.daemon.module`` is a static conf, so this cannot set
-    it: an externally-created session keeps stock PySpark workers, which
-    re-read their zip archives on every Python task (see get_spark and
-    scida_spark/_pydaemon.py). Results are the same either way.
+    it: an externally-created session keeps stock PySpark workers. A
+    worker that imports ``scida_spark`` (to unpickle a closure or a Data
+    Source) patches itself on import and stops re-reading its zip
+    archives on every Python call from then on; one that never imports
+    it keeps the re-read (see scida_spark/_pydaemon.py). The planner
+    workers run on the stock daemon in every session, ``get_spark``'s
+    included, and are covered the same way. Results are the same either
+    way.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -13,6 +13,8 @@ import time
 import zipfile
 import zipimport
 
+import pytest
+
 from scida_spark import _pydaemon
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -24,13 +26,11 @@ def _write_zip(path, modules: dict[str, str]) -> None:
             z.writestr(f"{name}.py", src)
 
 
-def test_stat_checked_invalidation_rereads_only_a_changed_zip(tmp_path, monkeypatch):
+def _assert_rereads_only_a_changed_zip(tmp_path, monkeypatch):
+    """With the stat-checked invalidation installed: one read per call
+    until stamped, one read after a rewrite, none while unchanged."""
     zpath = str(tmp_path / "mods.zip")
     _write_zip(zpath, {"scida_zt_a": "X = 1\n"})
-    monkeypatch.setattr(
-        zipimport.zipimporter, "invalidate_caches",
-        _pydaemon.stat_checked(zipimport.zipimporter.invalidate_caches),
-    )
     reads: list[str] = []
     real_read = zipimport._read_directory
 
@@ -59,6 +59,27 @@ def test_stat_checked_invalidation_rereads_only_a_changed_zip(tmp_path, monkeypa
         zipimport._zip_directory_cache.pop(zpath, None)
 
 
+def test_stat_checked_invalidation_rereads_only_a_changed_zip(tmp_path, monkeypatch):
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        _pydaemon.stat_checked(zipimport.zipimporter.invalidate_caches),
+    )
+    _assert_rereads_only_a_changed_zip(tmp_path, monkeypatch)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="install() patches nothing")
+def test_install_twice_patches_once(tmp_path, monkeypatch):
+    """The daemon and the package import both call install(): the second
+    call keeps the first wrapper, so a rewritten zip is re-read once."""
+    original = zipimport.zipimporter.invalidate_caches
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", original)
+    assert _pydaemon.install() is True
+    first = zipimport.zipimporter.invalidate_caches
+    assert _pydaemon.install() is True
+    assert zipimport.zipimporter.invalidate_caches is first
+    _assert_rereads_only_a_changed_zip(tmp_path, monkeypatch)
+
+
 def test_daemon_patches_nothing_from_python_3_13(monkeypatch):
     original = zipimport.zipimporter.invalidate_caches
     monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", original)
@@ -81,6 +102,40 @@ def test_get_spark_workers_run_under_the_daemon(spark):
     assert got == [("scida_spark._pydaemon",
                     patched if sys.version_info < (3, 13) else stock)]
     # The driver's own zipimport is never patched.
+    assert zipimport.zipimporter.invalidate_caches.__qualname__ == stock
+
+
+def test_data_source_planner_workers_are_stat_checked(spark):
+    """Spark forks the Python Data Source planner workers from the stock
+    pyspark.daemon, whatever spark.python.daemon.module says; importing
+    scida_spark there (as unpickling an npy or zarr source does) installs
+    the stat-checked invalidation. schema() runs in such a worker (the
+    create_data_source planner) and reports what it sees as its one
+    field's name."""
+    from pyspark.sql.datasource import DataSource
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    class PlannerProbe(DataSource):
+        @classmethod
+        def name(cls):
+            return "scida_planner_probe"
+
+        def schema(self):
+            import sys as _sys
+            import zipimport as _zipimport
+
+            import scida_spark  # noqa: F401 — the import under test
+
+            seen = (_sys.modules["__main__"].__spec__.name,
+                    _zipimport.zipimporter.invalidate_caches.__qualname__)
+            return StructType([StructField("|".join(seen), StringType())])
+
+    spark.dataSource.register(PlannerProbe)
+    (field,) = spark.read.format("scida_planner_probe").load().columns
+    stock = "zipimporter.invalidate_caches"
+    patched = "stat_checked.<locals>.invalidate_caches"
+    assert field.split("|") == ["pyspark.daemon",
+                                patched if sys.version_info < (3, 13) else stock]
     assert zipimport.zipimporter.invalidate_caches.__qualname__ == stock
 
 
